@@ -68,7 +68,11 @@ def keep_ge(df: DataFrame, score_col: str, threshold: float) -> DataFrame:
     ``score_col`` must be the LAST column (all call sites emit it last);
     the generator output re-appends it there, preserving the schema.
     """
-    assert df.columns[-1] == score_col
+    if df.columns[-1] != score_col:
+        raise ValueError(
+            f"keep_ge: score column {score_col!r} must be the last column, "
+            f"got columns {df.columns}"
+        )
     others = [c for c in df.columns if c != score_col]
     return df.select(
         *others,
@@ -601,6 +605,17 @@ def star_labels(
     )
 
 
+def _cluster_table(sf_dir: str, threshold: float, n: int):
+    from olap_sus_spark.operators import index_store as ix
+
+    return ix.SrcTable(
+        cluster_index_path(sf_dir, threshold, n),
+        sf_dir,
+        "documents",
+        {"clusters": (("cluster_id",), 4), "hubs": (("block",), 4)},
+    )
+
+
 def load_or_build_cluster_index(
     spark,
     sf_dir: str,
@@ -610,10 +625,10 @@ def load_or_build_cluster_index(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Return the (doc_id, cluster_id) near-dup cluster map for the corpus
-    at ``sf_dir``, building + persisting it on first use — the maintained-
-    index contract shared with the ANN tables (similarity.py): location-
-    keyed path, per-part-file manifest for staleness (mismatch → safe full
-    rebuild), staged build, atomic promotion.
+    at ``sf_dir``, building + persisting it on first use — a per-file
+    maintained table on index_store.SrcTable (location-keyed path,
+    per-part-file manifest for staleness, mismatch → safe full staged
+    rebuild).
 
     Connected components is the single most expensive computation in the
     dedup family; serving queries (keep-best corpus selection, membership
@@ -629,28 +644,13 @@ def load_or_build_cluster_index(
     needs: a new doc either verifies against its block's existing hub
     (joining that cluster) or founds a new block (becoming its hub).  See
     :func:`refresh_cluster_index`."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from olap_sus_spark.operators.index_store import (
-        compact_manifest,
-        corpus_files,
-        index_root,
-        manifest_is_current,
-        read_manifest,
-        staging_path,
-        sweep_stale_staging,
-        write_manifest,
-    )
-    from olap_sus_spark.operators.similarity import _retire_and_promote, _serve_retry
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
+    from olap_sus_spark.operators import index_store as ix
 
-    path = cluster_index_path(sf_dir, threshold, n)
-    current = corpus_files(sf_dir, "documents")
-    man = read_manifest(path)
-    if not manifest_is_current(man, current):
-        sweep_stale_staging()
+    t = _cluster_table(sf_dir, threshold, n)
+
+    def build(staging: str) -> dict:
         g = _grams_blocks(docs, n, id_col)
         if _SRC not in g.columns:
             # a docs view without source-file provenance still maintains
@@ -681,30 +681,18 @@ def load_or_build_cluster_index(
             .alias("cluster_id"),
             F.col(_SRC),
         )
-        os.makedirs(index_root(), exist_ok=True)
-        staging = staging_path(path)
-        os.makedirs(staging, exist_ok=True)
-        write_sorted_partitioned(
-            clusters, os.path.join(staging, "clusters"), _SRC, ["cluster_id"], files=4
-        )
-        write_sorted_partitioned(
-            hub_rows, os.path.join(staging, "hubs"), _SRC, ["block"], files=4
-        )
+        t.write(staging, "clusters", clusters)
+        t.write(staging, "hubs", hub_rows)
         max_id = g.agg(F.max(id_col)).first()[0]
         g.unpersist()
-        write_manifest(
-            staging,
-            {
-                **compact_manifest(man, current),
-                "max_doc_id": None if max_id is None else int(max_id),
-                "threshold": threshold,
-                "n": n,
-            },
-        )
-        _retire_and_promote(staging, path, current, ("clusters", "hubs"))
-    return _serve_retry(spark, os.path.join(path, "clusters")).select(
-        id_col, "cluster_id"
-    )
+        return {
+            "max_doc_id": None if max_id is None else int(max_id),
+            "threshold": threshold,
+            "n": n,
+        }
+
+    t.load_or_build(build)
+    return ix.serve(spark, t.path, "clusters").select(id_col, "cluster_id")
 
 
 def refresh_cluster_index(
@@ -740,73 +728,47 @@ def refresh_cluster_index(
 
     from pyspark.sql import functions as F
 
-    from olap_sus_spark.operators.index_store import (
-        compact_manifest,
-        corpus_file_paths,
-        corpus_files,
-        manifest_diff,
-        read_manifest,
-        write_manifest,
-    )
-    from olap_sus_spark.operators.similarity import _serve_retry
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
+    from olap_sus_spark.operators import index_store as ix
 
-    path = cluster_index_path(sf_dir, threshold, n)
-    cpath = os.path.join(path, "clusters")
-    hpath = os.path.join(path, "hubs")
+    t = _cluster_table(sf_dir, threshold, n)
 
-    def _full() -> DataFrame:
-        return load_or_build_cluster_index(
-            spark, sf_dir, docs_of(spark, None), threshold, n, id_col
-        )
-
-    man = read_manifest(path)
-    current = corpus_files(sf_dir, "documents")
-    if man is None or not (os.path.exists(cpath) and os.path.exists(hpath)):
-        return _full()
-    added, changed, removed = manifest_diff(man, current)
-    if changed or removed:
-        return _full()
-    if added:
-        new_docs = docs_of(spark, corpus_file_paths(sf_dir, "documents", added))
-        g = _grams_blocks(new_docs, n, id_col)
+    def step(man: dict, d) -> dict | None:
+        if d.changed or d.removed:
+            return None
+        g = _grams_blocks(docs_of(spark, t.file_paths(d.added)), n, id_col)
         if _SRC not in g.columns:
             raise ValueError(
                 "refresh_cluster_index needs per-row src provenance: docs_of "
                 "must tag rows with the source part file (see augmented_docs_of)"
             )
         g = g.persist()
-        min_new = g.agg(F.min(id_col)).first()[0]
-        if min_new is None:
-            g.unpersist()
-            write_manifest(path, {**man, **compact_manifest(man, current)})
-            return _serve_retry(spark, cpath).select(id_col, "cluster_id")
-        if man["max_doc_id"] is not None and min_new <= man["max_doc_id"]:
-            # an id at or below the existing range could displace a hub and
-            # re-center its star — not expressible as an append; rebuild
-            g.unpersist()
-            return _full()
-        hubs_old = spark.read.parquet(hpath).select(
-            "block", "hub_id", F.col("grams_h").alias("hub_grams")
-        )
-        m = g.join(hubs_old, "block", "left")
-        matched = m.filter(F.col("hub_id").isNotNull()).select(
-            F.col(id_col),
-            F.when(
-                jaccard_of("grams_h", "hub_grams") >= threshold, F.col("hub_id")
-            ).otherwise(F.col(id_col)).alias("cluster_id"),
-            F.col(_SRC),
-        )
-        # blocks new to the corpus: the batch's smallest id founds the hub
-        fresh = m.filter(F.col("hub_id").isNull()).drop("hub_id", "hub_grams")
-        new_hubs = fresh.groupBy("block").agg(F.min(id_col).alias("hub_id"))
-        fresh = fresh.join(new_hubs, "block")
-        hub_grams = fresh.filter(F.col(id_col) == F.col("hub_id")).select(
-            F.col("block"), F.col("grams_h").alias("hub_grams")
-        )
-        fresh_labeled = (
-            fresh.join(hub_grams, "block")
-            .select(
+        try:
+            min_new = g.agg(F.min(id_col)).first()[0]
+            if min_new is None:
+                return {}
+            if man["max_doc_id"] is not None and min_new <= man["max_doc_id"]:
+                # an id at or below the existing range could displace a hub
+                # and re-center its star — not expressible as an append
+                return None
+            hubs_old = spark.read.parquet(os.path.join(t.path, "hubs")).select(
+                "block", "hub_id", F.col("grams_h").alias("hub_grams")
+            )
+            m = g.join(hubs_old, "block", "left")
+            matched = m.filter(F.col("hub_id").isNotNull()).select(
+                F.col(id_col),
+                F.when(
+                    jaccard_of("grams_h", "hub_grams") >= threshold, F.col("hub_id")
+                ).otherwise(F.col(id_col)).alias("cluster_id"),
+                F.col(_SRC),
+            )
+            # blocks new to the corpus: the batch's smallest id founds the hub
+            fresh = m.filter(F.col("hub_id").isNull()).drop("hub_id", "hub_grams")
+            new_hubs = fresh.groupBy("block").agg(F.min(id_col).alias("hub_id"))
+            fresh = fresh.join(new_hubs, "block")
+            hub_grams = fresh.filter(F.col(id_col) == F.col("hub_id")).select(
+                F.col("block"), F.col("grams_h").alias("hub_grams")
+            )
+            fresh_labeled = fresh.join(hub_grams, "block").select(
                 F.col(id_col),
                 F.when(F.col(id_col) == F.col("hub_id"), F.col(id_col))
                 .when(
@@ -816,24 +778,22 @@ def refresh_cluster_index(
                 .alias("cluster_id"),
                 F.col(_SRC),
             )
-        )
-        new_hub_rows = fresh.filter(F.col(id_col) == F.col("hub_id")).select(
-            "block", "hub_id", "grams_h", _SRC
-        )
-        write_sorted_partitioned(
-            matched.unionByName(fresh_labeled), cpath, _SRC, ["cluster_id"],
-            files=4, dynamic=True,
-        )
-        write_sorted_partitioned(
-            new_hub_rows, hpath, _SRC, ["block"], files=4, dynamic=True
-        )
-        max_new = g.agg(F.max(id_col)).first()[0]
-        g.unpersist()
-        write_manifest(
-            path,
-            {**man, **compact_manifest(man, current), "max_doc_id": int(max_new)},
-        )
-    return _serve_retry(spark, cpath).select(id_col, "cluster_id")
+            new_hub_rows = fresh.filter(F.col(id_col) == F.col("hub_id")).select(
+                "block", "hub_id", "grams_h", _SRC
+            )
+            t.write(t.path, "clusters", matched.unionByName(fresh_labeled), d.added)
+            t.write(t.path, "hubs", new_hub_rows, d.added)
+            return {"max_doc_id": int(g.agg(F.max(id_col)).first()[0])}
+        finally:
+            g.unpersist()
+
+    t.refresh(
+        step,
+        lambda: load_or_build_cluster_index(
+            spark, sf_dir, docs_of(spark, None), threshold, n, id_col
+        ),
+    )
+    return ix.serve(spark, t.path, "clusters").select(id_col, "cluster_id")
 
 
 def dedup_clusters(

@@ -273,9 +273,15 @@ def build_fact_obitos(
     # expands client-side to one py4j round trip per element — 2×|dimCausa|
     # calls per fact build.  lit_ints_auto preserves the old element-type
     # inference (INT while every key fits int32).
-    causa_map = F.map_from_arrays(
-        lit_strings([r.codigo_cid10 for r in causa_rows]),
-        lit_ints_auto([r.chave_causa for r in causa_rows]),
+    causa_map = (
+        F.map_from_arrays(
+            lit_strings([r.codigo_cid10 for r in causa_rows]),
+            lit_ints_auto([r.chave_causa for r in causa_rows]),
+        )
+        if causa_rows
+        # sentinel-only dimCausa: an empty literal array has no element
+        # type, so serve a typed empty map — every cause maps to key 0
+        else F.create_map().cast("map<string,int>")
     )
     keyed = F.transform(
         causes_array(),

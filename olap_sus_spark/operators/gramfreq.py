@@ -6,10 +6,9 @@ The exact-substring-dedup family (Lee et al. 2022) needs, per token
 queries (``dedup_cross_doc_ngrams`` / ``dedup_cross_doc_scrub``) pay a
 corpus-sized tokenize + hash + per-doc-distinct + global groupBy on every
 call.  At 100 TB that global gram-frequency pass is a corpus-version-level
-batch job, not a query — so it follows the same maintained-partials
-contract as the KMV/CMS/histogram tables (operators/index_store.py:
-corpus-manifest staleness, staged build + atomic promotion, per-``src``
-dynamic-partition-overwrite refresh):
+batch job, not a query — so it is a per-file maintained table on
+operators/index_store.SrcTable (corpus-manifest staleness, staged build +
+publish, per-``src`` partition refresh):
 
 - ``grams/`` — per corpus part file: ``(src, gram, n_docs)`` where ``gram``
   is the 60-bit md5 hash of a sliding token 5-gram over the AUGMENTED view
@@ -37,7 +36,6 @@ from olap_sus_spark.operators import index_store as ix
 from olap_sus_spark.operators import text as tx
 
 _ALGO_VERSION = "gramfreq-v1"
-_SRC = "src"
 NGRAM_N = 5  # must match queries/text_pipeline._CROSS_NGRAM_N
 
 # Per-view doc_id offsets for the footer-stat doc-locality guard: a view
@@ -79,11 +77,6 @@ def _view_of(docs_of, view: str | None) -> str:
     return view if view is not None else ("aug" if docs_of is None else "plain")
 
 
-def _with_src(df: DataFrame) -> DataFrame:
-    # Evaluated at the scan, before any exchange (index_store contract).
-    return df.withColumn(_SRC, F.element_at(F.split(F.input_file_name(), "/"), -1))
-
-
 def _partials_frame(docs: DataFrame) -> DataFrame:
     """(src, gram, n_docs) for a documents frame in the caller's chosen
     corpus view: distinct docs per 60-bit-hashed sliding 5-gram, within
@@ -98,11 +91,11 @@ def _partials_frame(docs: DataFrame) -> DataFrame:
     Shuffle cost is unchanged in the common case: after the per-row
     ``array_distinct``, (src, doc_id, gram) rows are already unique when
     doc_ids are, so the extra distinct level collapses nothing."""
-    if _SRC not in docs.columns:
-        docs = _with_src(docs)
+    if ix.SRC not in docs.columns:
+        docs = ix.with_src(docs)
     return (
         docs.select(
-            _SRC,
+            ix.SRC,
             "doc_id",
             F.explode(
                 F.array_distinct(
@@ -113,7 +106,7 @@ def _partials_frame(docs: DataFrame) -> DataFrame:
                 )
             ).alias("gram"),
         )
-        .groupBy(_SRC, "gram")
+        .groupBy(ix.SRC, "gram")
         .agg(F.count_distinct(F.col("doc_id")).cast("bigint").alias("n_docs"))
     )
 
@@ -140,7 +133,7 @@ def _degraded_partials(docs: DataFrame) -> DataFrame:
     ).distinct()
     return dg.groupBy("gram").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    ).select(F.lit(_DEGRADED_SRC).alias(_SRC), "gram", "n_docs")
+    ).select(F.lit(_DEGRADED_SRC).alias(ix.SRC), "gram", "n_docs")
 
 
 def _expanded_intervals(
@@ -204,12 +197,31 @@ def _augmented_docs_of(sf_dir: str):
 
     def docs_of(spark: SparkSession, paths: list[str] | None) -> DataFrame:
         if paths is None:
-            docs = _with_src(load_table(spark, sf_dir, "documents"))
+            docs = ix.with_src(load_table(spark, sf_dir, "documents"))
         else:
-            docs = _with_src(spark.read.parquet(*paths))
+            docs = ix.with_src(spark.read.parquet(*paths))
         return _augment(spread_compute(docs))
 
     return docs_of
+
+
+def _freq_table(sf_dir: str, table: str, view: str) -> ix.SrcTable:
+    return ix.SrcTable(
+        gram_freq_path(sf_dir, table, view), sf_dir, table, {"grams": (("gram",), 4)}
+    )
+
+
+def _doc_local(docs: DataFrame) -> bool:
+    """Exact cross-FILE doc-locality check: the per-src fold (count_distinct
+    doc_id within src) is exact iff no doc_id lives in two part files —
+    intra-file duplicate rows are harmless, so distinct (src, doc_id)
+    tuples must equal distinct doc_ids."""
+    d = docs if ix.SRC in docs.columns else ix.with_src(docs)
+    n, nd = d.agg(
+        F.count_distinct(F.col(ix.SRC), F.col("doc_id")),
+        F.count_distinct(F.col("doc_id")),
+    ).first()
+    return n == nd
 
 
 def load_or_build_gram_freq(
@@ -228,49 +240,27 @@ def load_or_build_gram_freq(
     harmless — the partials count distinct docs, r10).  Every rebuild
     verifies it at runtime: per-file doc_id [min,max] footer stats,
     view-expanded, pairwise disjoint → proven for free; otherwise one
-    exact Spark check (distinct (src, doc_id) == distinct doc_id over
-    the view); a genuine violation degrades to the
-    single-partition globally-deduplicated build (``src=__degraded__``) —
-    served frequencies stay correct, maintenance degrades to
-    rebuild-on-change.  The verdict (ranges + degraded flag) is stamped
-    into the manifest for the refresh-time guard."""
+    exact Spark check (:func:`_doc_local`); a genuine violation degrades
+    to the single-partition globally-deduplicated build
+    (``src=__degraded__``) — served frequencies stay correct, maintenance
+    degrades to rebuild-on-change.  The verdict (ranges + degraded flag)
+    is stamped into the manifest for the refresh-time guard."""
     view = _view_of(docs_of, view)
     docs_of = docs_of or _augmented_docs_of(sf_dir)
-    path = gram_freq_path(sf_dir, table, view)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if not ix.manifest_is_current(man, current):
-        ix.sweep_stale_staging()
-        os.makedirs(ix.index_root(), exist_ok=True)
+    t = _freq_table(sf_dir, table, view)
+
+    def build(staging: str) -> dict:
         docs = docs_of(spark, None)
         ranges = ix.corpus_id_ranges(sf_dir, table, "doc_id")
         ivs = _expanded_intervals(ranges, view)
-        degraded = False
-        if ivs is None or not _intervals_disjoint(ivs):
-            # exact cross-FILE check: the per-src fold (count_distinct
-            # doc_id within src) is exact iff no doc_id lives in two part
-            # files — intra-file duplicate rows are harmless, so distinct
-            # (src, doc_id) tuples must equal distinct doc_ids
-            d = docs if _SRC in docs.columns else _with_src(docs)
-            n, nd = d.agg(
-                F.count_distinct(F.col(_SRC), F.col("doc_id")),
-                F.count_distinct(F.col("doc_id")),
-            ).first()
-            degraded = n != nd
+        proven = ivs is not None and _intervals_disjoint(ivs)
+        degraded = not proven and not _doc_local(docs)
         partials = _degraded_partials(docs) if degraded else _partials_frame(docs)
-        staging = ix.staging_path(path)
-        from olap_sus_spark.sources.sinks import write_sorted_partitioned
+        t.write(staging, "grams", partials)
+        return {"doc_ranges": ranges, "degraded": degraded}
 
-        write_sorted_partitioned(
-            partials, os.path.join(staging, "grams"), _SRC, ["gram"], files=4,
-            dynamic=False,
-        )
-        manifest = ix.compact_manifest(man, current)
-        manifest["doc_ranges"] = ranges
-        manifest["degraded"] = degraded
-        ix.write_manifest(staging, manifest)
-        _retire_and_promote(staging, path, current)
-    return _serve(spark, path)
+    t.load_or_build(build)
+    return _serve(spark, t.path)
 
 
 def refresh_gram_freq(
@@ -281,40 +271,21 @@ def refresh_gram_freq(
     view: str | None = None,
 ) -> DataFrame:
     """Incremental maintenance: re-gram ONLY the part files added or
-    rewritten since the last manifest and dynamic-partition-overwrite
-    their ``src=`` partitions — O(ingested files), never O(corpus).
-    Removed part files (or a never-built index) fall back to the full
-    staged build.
-
-    A rewritten (changed) source whose re-gram yields ZERO rows — e.g. an
-    RTBF rewrite that purged every >=5-token doc of the file — is not
-    reachable by dynamic overwrite (no partition in the output), so its
-    old ``src=`` partition is dropped explicitly before the manifest is
-    stamped; the partials are persisted across write+probe so the stale
-    files are grammed exactly once.
-
-    SINGLE REFRESHER ASSUMED per index directory: like inverted.py, the
-    refresh dynamic-overwrites live ``src=`` partitions in place, so two
-    concurrent refreshes of the SAME corpus+view can interleave clear/
-    commit phases inside one partition.  Both in-repo callers satisfy
-    this: the streaming ingest loop is serialized per checkpoint by
-    Structured Streaming itself, and the query path only ever
-    load_or_builds (staged + atomic promote, race-safe).  Concurrent
-    refresh+build / build+build stay safe via _retire_and_promote."""
+    rewritten since the last manifest and overwrite their ``src=``
+    partitions — O(ingested files), never O(corpus).  Removed part files,
+    a degraded index (or a never-built one) fall back to the full staged
+    build.  Single refresher per index directory (index_store.SrcTable):
+    the streaming ingest loop is serialized per checkpoint by Structured
+    Streaming itself, and the query path only ever load_or_builds."""
     view = _view_of(docs_of, view)
     docs_of = docs_of or _augmented_docs_of(sf_dir)
-    path = gram_freq_path(sf_dir, table, view)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if man is None:
-        return load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
-    added, changed, removed = ix.manifest_diff(man, current)
-    if removed or man.get("degraded"):
-        # shrunk corpus, or an index already in degraded (non-per-src)
-        # mode: per-partition overwrite can't express either — rebuild
-        return load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
-    stale = sorted(added + changed)
-    if stale:
+    t = _freq_table(sf_dir, table, view)
+
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.removed or man.get("degraded"):
+            # shrunk corpus, or an index already in degraded (non-per-src)
+            # mode: per-partition overwrite can't express either — rebuild
+            return None
         # doc-locality guard, refresh side (two cheap halves):
         #  (a) batch-vs-old: the stale files' view-expanded footer ranges
         #      must not overlap the non-stale signed files' — old-vs-old
@@ -322,65 +293,36 @@ def refresh_gram_freq(
         #      unique; staged corpora routinely interleave ids across
         #      files, and re-proving global pairwise disjointness here
         #      forced a full rebuild on every ingest — r9 probe);
-        #  (b) batch-internal: one O(batch) cross-file check over the
-        #      stale files' view — distinct (src, doc_id) == distinct
-        #      doc_id (intra-file duplicate rows are harmless since the
-        #      partials count distinct docs, r10).
+        #  (b) batch-internal: one O(batch) exact check (_doc_local) over
+        #      the stale files' view.
         # Anything unprovable (missing stats/ranges, overlap, duplicate)
         # falls back to the full staged rebuild, whose exact corpus-wide
         # check decides per-src vs degraded.
-        stale_set = set(stale)
         old_ranges = man.get("doc_ranges")
-        new_ranges = ix.corpus_id_ranges(sf_dir, table, "doc_id", stale)
-        guard_ok = False
-        if isinstance(old_ranges, dict):
-            old_only = {
-                n: r
-                for n, r in old_ranges.items()
-                if n in current and n not in stale_set
-            }
-            if set(old_only) == {n for n in current if n not in stale_set}:
-                old_ivs = _expanded_intervals(old_only, view)
-                new_ivs = _expanded_intervals(new_ranges, view)
-                guard_ok = (
-                    old_ivs is not None
-                    and new_ivs is not None
-                    and _intervals_between_disjoint(new_ivs, old_ivs)
-                )
-        if not guard_ok:
-            return load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
-        paths = ix.corpus_file_paths(sf_dir, table, stale)
-        batch = docs_of(spark, paths)
-        b = batch if _SRC in batch.columns else _with_src(batch)
-        n, ndist = b.agg(
-            F.count_distinct(F.col(_SRC), F.col("doc_id")),
-            F.count_distinct(F.col("doc_id")),
-        ).first()
-        if n != ndist:
-            return load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
-        ranges = {
-            **{k: v for k, v in old_ranges.items() if k in current},
-            **new_ranges,
-        }
-        partials = _partials_frame(batch).persist()
-        from olap_sus_spark.sources.sinks import write_sorted_partitioned
+        new_ranges = ix.corpus_id_ranges(sf_dir, table, "doc_id", d.stale)
+        if not isinstance(old_ranges, dict):
+            return None
+        kept = set(d.files) - set(d.stale)
+        old_ivs = _expanded_intervals(
+            {n: r for n, r in old_ranges.items() if n in kept}, view
+        )
+        new_ivs = _expanded_intervals(new_ranges, view)
+        if (
+            not kept <= set(old_ranges)
+            or old_ivs is None
+            or new_ivs is None
+            or not _intervals_between_disjoint(new_ivs, old_ivs)
+        ):
+            return None
+        batch = docs_of(spark, t.file_paths(d.stale))
+        if not _doc_local(batch):
+            return None
+        t.write(t.path, "grams", _partials_frame(batch), d.stale)
+        ranges = {k: v for k, v in old_ranges.items() if k in d.files}
+        return {"doc_ranges": {**ranges, **new_ranges}, "degraded": False}
 
-        try:
-            write_sorted_partitioned(
-                partials, os.path.join(path, "grams"), _SRC, ["gram"], files=4,
-                dynamic=True,
-            )
-            written = {r[0] for r in partials.select(_SRC).distinct().collect()}
-        finally:
-            partials.unpersist()
-        orphaned = set(stale) - written
-        if orphaned:
-            ix.drop_src_partitions(os.path.join(path, "grams"), orphaned)
-        manifest = ix.compact_manifest(man, current)
-        manifest["doc_ranges"] = ranges
-        manifest["degraded"] = False
-        ix.write_manifest(path, manifest)
-    return _serve(spark, path)
+    t.refresh(step, lambda: load_or_build_gram_freq(spark, sf_dir, table, docs_of, view))
+    return _serve(spark, t.path)
 
 
 def shared_grams(
@@ -438,6 +380,12 @@ def _write_rollup_tables(rolled: DataFrame, root: str) -> None:
         rolled.unpersist()
 
 
+def _rollup_table(sf_dir: str, table: str, view: str) -> ix.SrcTable:
+    return ix.SrcTable(
+        rollup_path(sf_dir, table, view), sf_dir, table, {}, flat=("rollup", "cut")
+    )
+
+
 def load_or_build_gram_rollup(
     spark: SparkSession,
     sf_dir: str,
@@ -449,25 +397,20 @@ def load_or_build_gram_rollup(
     on first use / staleness.  Inherits the partials' degraded flag so a
     doc-locality violation keeps forcing re-folds instead of merges."""
     view = _view_of(docs_of, view)
-    path = rollup_path(sf_dir, table, view)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if not ix.manifest_is_current(man, current):
+    t = _rollup_table(sf_dir, table, view)
+
+    def build(staging: str) -> dict:
         partials = load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
         gman = ix.read_manifest(gram_freq_path(sf_dir, table, view)) or {}
         rolled = partials.groupBy("gram").agg(
             F.sum("n_docs").cast("bigint").alias("n_docs")
         )
-        ix.sweep_stale_staging()
-        os.makedirs(ix.index_root(), exist_ok=True)
-        staging = ix.staging_path(path)
         _write_rollup_tables(rolled, staging)
-        manifest = ix.compact_manifest(man, current)
-        manifest["degraded"] = bool(gman.get("degraded"))
-        manifest["levels"] = []  # a fresh sorted base carries no deltas
-        ix.write_manifest(staging, manifest)
-        _retire_and_promote(staging, path, current, components=("rollup", "cut"))
-    return _serve_rollup(spark, path)
+        # a fresh sorted base carries no deltas
+        return {"degraded": bool(gman.get("degraded")), "levels": []}
+
+    t.load_or_build(build)
+    return _serve_rollup(spark, t.path)
 
 
 # --- LSM delta levels for the rollup/cut (r10, VERDICT r09 #4) ------------
@@ -530,9 +473,7 @@ def _merged_rollup(spark: SparkSession, path: str, man: dict | None) -> DataFram
     deltas (bounded by levels × ingest size) broadcast onto it, brand-new
     grams come from the tiny delta⟕hit anti-join, and grams folded to zero
     drop out."""
-    base = _serve_component(
-        spark, path, "rollup", "gram bigint, n_docs bigint"
-    ).select(
+    base = ix.serve(spark, path, "rollup", "gram bigint, n_docs bigint").select(
         F.col("gram").cast("bigint").alias("gram"),
         F.col("n_docs").cast("bigint").alias("n_docs"),
     )
@@ -558,7 +499,7 @@ def _merged_rollup(spark: SparkSession, path: str, man: dict | None) -> DataFram
 
 
 def _merged_cut(spark: SparkSession, path: str, man: dict | None) -> DataFrame:
-    base = _serve_component(spark, path, "cut", "gram bigint").select(
+    base = ix.serve(spark, path, "cut", "gram bigint").select(
         F.col("gram").cast("bigint").alias("gram")
     )
     levels = _levels_of(man)
@@ -594,7 +535,7 @@ def _capture_partials(spark: SparkSession, gpath: str, srcs: list[str]) -> str:
     tmp = tempfile.mkdtemp(prefix="spark_graft_gram_olddelta_")
     (
         spark.read.parquet(os.path.join(gpath, "grams"))
-        .filter(F.col(_SRC).isin(sorted(srcs)))
+        .filter(F.col(ix.SRC).isin(sorted(srcs)))
         .select("gram", F.col("n_docs").cast("bigint").alias("n_docs"))
         .write.mode("overwrite")
         .parquet(tmp)
@@ -623,36 +564,32 @@ def refresh_gram_rollup(
     overwritten) re-fold from the refreshed partials.  Same
     single-refresher assumption as :func:`refresh_gram_freq`."""
     import shutil
+    import uuid
 
     view = _view_of(docs_of, view)
-    path = rollup_path(sf_dir, table, view)
+    t = _rollup_table(sf_dir, table, view)
+    path = t.path
     gpath = gram_freq_path(sf_dir, table, view)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if man is None or man.get("degraded"):
-        refresh_gram_freq(spark, sf_dir, table, docs_of, view)
-        return load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
-    added, changed, removed = ix.manifest_diff(man, current)
-    if removed:
-        refresh_gram_freq(spark, sf_dir, table, docs_of, view)
-        return load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
-    old_delta_tmp = None
-    if changed:
-        if not _manifests_aligned(man, ix.read_manifest(gpath)):
-            refresh_gram_freq(spark, sf_dir, table, docs_of, view)
-            return load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
-        old_delta_tmp = _capture_partials(spark, gpath, changed)
-    try:
-        refresh_gram_freq(spark, sf_dir, table, docs_of, view)
-        if (ix.read_manifest(gpath) or {}).get("degraded"):
-            return load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
-        stale = sorted(added + changed)
-        if stale:
-            import uuid
 
+    def rebuild() -> None:
+        refresh_gram_freq(spark, sf_dir, table, docs_of, view)
+        load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
+
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.removed or man.get("degraded"):
+            return None
+        old_delta_tmp = None
+        if d.changed:
+            if not _manifests_aligned(man, ix.read_manifest(gpath)):
+                return None
+            old_delta_tmp = _capture_partials(spark, gpath, d.changed)
+        try:
+            refresh_gram_freq(spark, sf_dir, table, docs_of, view)
+            if (ix.read_manifest(gpath) or {}).get("degraded"):
+                return None
             delta = (
                 spark.read.parquet(os.path.join(gpath, "grams"))
-                .filter(F.col(_SRC).isin(stale))
+                .filter(F.col(ix.SRC).isin(d.stale))
                 .select("gram", F.col("n_docs").cast("bigint").alias("n_docs"))
             )
             if old_delta_tmp is not None:
@@ -669,136 +606,116 @@ def refresh_gram_rollup(
                 .filter(F.col("d") != 0)
                 .persist()
             )
-            levels = _levels_of(man)
             try:
-                n_dd = dd.count()
-                if n_dd == 0:
-                    # net no-op (a rewrite re-grammed identically): stamp
-                    # the manifest current, no level, no rewrite
-                    manifest = ix.compact_manifest(man, current)
-                    manifest["degraded"] = False
-                    manifest["levels"] = levels
-                    ix.write_manifest(path, manifest)
-                    return _serve_rollup(spark, path)
-                small = n_dd <= 1_000_000
-                if small and len(levels) < _ROLLUP_MAX_LEVELS:
-                    # LSM fast path (r10): append ONE bounded delta level —
-                    # the base rollup/cut are not rewritten at all.  The
-                    # only base-sized work is one scan-only broadcast-semi
-                    # to fetch the dd grams' old base counts for the cut-
-                    # crossing computation; everything written is O(dd).
-                    name = f"L{len(levels):03d}_{uuid.uuid4().hex[:8]}"
-                    base = _serve_component(
-                        spark, path, "rollup", "gram bigint, n_docs bigint"
-                    ).select(
-                        F.col("gram").cast("bigint").alias("gram"),
-                        F.col("n_docs").cast("bigint").alias("n_docs"),
-                    )
-                    parts = [
-                        base.join(
-                            F.broadcast(dd.select("gram")), "gram", "left_semi"
-                        ).select("gram", F.col("n_docs").alias("v"))
-                    ]
-                    if levels:
-                        parts.append(
-                            _read_levels(spark, path, "rdelta", levels)
-                            .join(
-                                F.broadcast(dd.select("gram")),
-                                "gram",
-                                "left_semi",
-                            )
-                            .select("gram", F.col("d").cast("bigint").alias("v"))
-                        )
-                    old_tot = parts[0]
-                    for p in parts[1:]:
-                        old_tot = old_tot.unionByName(p)
-                    old_tot = old_tot.groupBy("gram").agg(
-                        F.sum("v").cast("bigint").alias("old_n")
-                    )
-                    x = (
-                        dd.join(old_tot, "gram", "left")
-                        .select(
-                            "gram",
-                            "d",
-                            F.coalesce(F.col("old_n"), F.lit(0))
-                            .cast("bigint")
-                            .alias("old_n"),
-                        )
-                        .withColumn("new_n", F.col("old_n") + F.col("d"))
-                    )
-                    cut_delta = x.filter(
-                        ((F.col("old_n") < 2) & (F.col("new_n") >= 2))
-                        | ((F.col("old_n") >= 2) & (F.col("new_n") < 2))
-                    ).select(
-                        "gram",
-                        F.when(F.col("new_n") >= 2, F.lit(1))
-                        .otherwise(F.lit(-1))
-                        .cast("int")
-                        .alias("op"),
-                    )
-                    _write_level(
-                        dd.select("gram", F.col("d").cast("bigint").alias("d")),
-                        path,
-                        "rdelta",
-                        name,
-                    )
-                    _write_level(cut_delta, path, "cdelta", name)
-                    manifest = ix.compact_manifest(man, current)
-                    manifest["degraded"] = False
-                    manifest["levels"] = levels + [name]
-                    ix.write_manifest(path, manifest)
-                    _gc_orphan_levels(path, manifest["levels"])
-                else:
-                    # fold (level cap reached, or a backfill-sized delta):
-                    # base + all levels + dd -> a fresh sorted base with no
-                    # deltas.  When dd broadcasts, the merge keeps the old
-                    # base SCAN-ONLY (BHJ update + tiny anti for brand-new
-                    # grams); the remaining big shuffle is the sorted
-                    # rewrite itself — now paid once per _ROLLUP_MAX_LEVELS
-                    # refreshes instead of every refresh.
-                    old = _merged_rollup(spark, path, man)
-                    if small:
-                        updated = old.join(F.broadcast(dd), "gram", "left").select(
-                            "gram",
-                            (F.col("n_docs") + F.coalesce(F.col("d"), F.lit(0)))
-                            .cast("bigint")
-                            .alias("n_docs"),
-                        )
-                        old_hit = old.join(
-                            F.broadcast(dd.select("gram")), "gram", "left_semi"
-                        )
-                        fresh = dd.join(old_hit, "gram", "left_anti").select(
-                            "gram", F.col("d").cast("bigint").alias("n_docs")
-                        )
-                        merged = updated.unionByName(fresh).filter(
-                            F.col("n_docs") > 0
-                        )
-                    else:
-                        merged = (
-                            old.unionByName(
-                                dd.select("gram", F.col("d").alias("n_docs"))
-                            )
-                            .groupBy("gram")
-                            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-                            .filter(F.col("n_docs") > 0)
-                        )
-                    staging = ix.staging_path(path)
-                    _write_rollup_tables(merged, staging)
-                    manifest = ix.compact_manifest(man, current)
-                    manifest["degraded"] = False
-                    manifest["levels"] = []
-                    ix.write_manifest(staging, manifest)
-                    # the merge read the OLD rollup: promote must replace it
-                    # even though it exists — retire-then-promote, never skip
-                    _retire_and_promote(
-                        staging, path, None, components=("rollup", "cut")
-                    )
+                return _fold_delta(spark, path, man, d.files, dd, uuid.uuid4().hex[:8])
             finally:
                 dd.unpersist()
-        return _serve_rollup(spark, path)
-    finally:
-        if old_delta_tmp is not None:
-            shutil.rmtree(old_delta_tmp, ignore_errors=True)
+        finally:
+            if old_delta_tmp is not None:
+                shutil.rmtree(old_delta_tmp, ignore_errors=True)
+
+    t.refresh(step, rebuild)
+    return _serve_rollup(spark, path)
+
+
+def _fold_delta(
+    spark: SparkSession, path: str, man: dict, files: dict, dd: DataFrame, tag: str
+) -> dict:
+    """Apply the net per-gram delta ``dd`` (gram, d) to the rollup at
+    ``path``; returns the manifest keys of the new state."""
+    levels = _levels_of(man)
+    n_dd = dd.count()
+    if n_dd == 0:
+        # net no-op (a rewrite re-grammed identically): stamp the manifest
+        # current, no level, no rewrite
+        return {"degraded": False, "levels": levels}
+    small = n_dd <= 1_000_000
+    if small and len(levels) < _ROLLUP_MAX_LEVELS:
+        # LSM fast path (r10): append ONE bounded delta level — the base
+        # rollup/cut are not rewritten at all.  The only base-sized work is
+        # one scan-only broadcast-semi to fetch the dd grams' old base
+        # counts for the cut-crossing computation; everything written is
+        # O(dd).
+        name = f"L{len(levels):03d}_{tag}"
+        base = ix.serve(spark, path, "rollup", "gram bigint, n_docs bigint").select(
+            F.col("gram").cast("bigint").alias("gram"),
+            F.col("n_docs").cast("bigint").alias("n_docs"),
+        )
+        old_tot = base.join(
+            F.broadcast(dd.select("gram")), "gram", "left_semi"
+        ).select("gram", F.col("n_docs").alias("v"))
+        if levels:
+            old_tot = old_tot.unionByName(
+                _read_levels(spark, path, "rdelta", levels)
+                .join(F.broadcast(dd.select("gram")), "gram", "left_semi")
+                .select("gram", F.col("d").cast("bigint").alias("v"))
+            )
+        old_tot = old_tot.groupBy("gram").agg(
+            F.sum("v").cast("bigint").alias("old_n")
+        )
+        x = (
+            dd.join(old_tot, "gram", "left")
+            .select(
+                "gram",
+                "d",
+                F.coalesce(F.col("old_n"), F.lit(0)).cast("bigint").alias("old_n"),
+            )
+            .withColumn("new_n", F.col("old_n") + F.col("d"))
+        )
+        cut_delta = x.filter(
+            ((F.col("old_n") < 2) & (F.col("new_n") >= 2))
+            | ((F.col("old_n") >= 2) & (F.col("new_n") < 2))
+        ).select(
+            "gram",
+            F.when(F.col("new_n") >= 2, F.lit(1))
+            .otherwise(F.lit(-1))
+            .cast("int")
+            .alias("op"),
+        )
+        _write_level(
+            dd.select("gram", F.col("d").cast("bigint").alias("d")),
+            path,
+            "rdelta",
+            name,
+        )
+        _write_level(cut_delta, path, "cdelta", name)
+        # unlisted level dirs are crash orphans; the new list keeps every
+        # level a reader of the old manifest can still be folding
+        _gc_orphan_levels(path, levels + [name])
+        return {"degraded": False, "levels": levels + [name]}
+    # fold (level cap reached, or a backfill-sized delta): base + all
+    # levels + dd -> a fresh sorted base with no deltas.  When dd
+    # broadcasts, the merge keeps the old base SCAN-ONLY (BHJ update + tiny
+    # anti for brand-new grams); the remaining big shuffle is the sorted
+    # rewrite itself — paid once per _ROLLUP_MAX_LEVELS refreshes.
+    old = _merged_rollup(spark, path, man)
+    if small:
+        updated = old.join(F.broadcast(dd), "gram", "left").select(
+            "gram",
+            (F.col("n_docs") + F.coalesce(F.col("d"), F.lit(0)))
+            .cast("bigint")
+            .alias("n_docs"),
+        )
+        old_hit = old.join(F.broadcast(dd.select("gram")), "gram", "left_semi")
+        fresh = dd.join(old_hit, "gram", "left_anti").select(
+            "gram", F.col("d").cast("bigint").alias("n_docs")
+        )
+        merged = updated.unionByName(fresh).filter(F.col("n_docs") > 0)
+    else:
+        merged = (
+            old.unionByName(dd.select("gram", F.col("d").alias("n_docs")))
+            .groupBy("gram")
+            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
+            .filter(F.col("n_docs") > 0)
+        )
+    keys = {"degraded": False, "levels": []}
+    staging = ix.staging_path(path)
+    _write_rollup_tables(merged, staging)
+    ix.write_manifest(staging, {**ix.compact_manifest(man, files), **keys})
+    # the merge read the OLD rollup: publish must replace it even though it
+    # exists — retire-then-promote, never skip
+    ix.publish(staging, path)
+    return keys
 
 
 def shared_grams_cut(
@@ -893,11 +810,11 @@ def _scrub_frame(docs: DataFrame, shared: DataFrame, src_col=None) -> DataFrame:
     whose oracle the maintained table shares).  ``src_col`` overrides the
     provenance column (degraded mode writes one pseudo-partition)."""
     n = NGRAM_N
-    if src_col is None and _SRC not in docs.columns:
-        docs = _with_src(docs)
-    src = F.lit(src_col) if src_col is not None else F.col(_SRC)
+    if src_col is None and ix.SRC not in docs.columns:
+        docs = ix.with_src(docs)
+    src = F.lit(src_col) if src_col is not None else F.col(ix.SRC)
     toks = docs.select(
-        src.alias(_SRC), "doc_id", tx.tokens(F.col("text")).alias("t")
+        src.alias(ix.SRC), "doc_id", tx.tokens(F.col("text")).alias("t")
     )
     grams = (
         toks.select(
@@ -913,15 +830,12 @@ def _scrub_frame(docs: DataFrame, shared: DataFrame, src_col=None) -> DataFrame:
         "doc_id",
         F.explode(F.sequence(F.col("pos"), F.col("pos") + n - 1)).alias("cpos"),
     )
-    return scrub_assemble(toks, covered, extra=(_SRC,))
+    return scrub_assemble(toks, covered, extra=(ix.SRC,))
 
 
-def _write_scrub(frame: DataFrame, root: str, dynamic: bool) -> None:
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
-
-    write_sorted_partitioned(
-        frame, os.path.join(root, "docs"), _SRC, ["doc_id"], files=4,
-        dynamic=dynamic,
+def _scrub_table(sf_dir: str, table: str, view: str) -> ix.SrcTable:
+    return ix.SrcTable(
+        scrub_path(sf_dir, table, view), sf_dir, table, {"docs": (("doc_id",), 4)}
     )
 
 
@@ -940,10 +854,9 @@ def load_or_build_gram_scrub(
     tokens by doc_id corpus-wide."""
     view = _view_of(docs_of, view)
     docs_of_r = docs_of or _augmented_docs_of(sf_dir)
-    path = scrub_path(sf_dir, table, view)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if not ix.manifest_is_current(man, current):
+    t = _scrub_table(sf_dir, table, view)
+
+    def build(staging: str) -> dict:
         load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
         degraded = bool(
             (ix.read_manifest(gram_freq_path(sf_dir, table, view)) or {}).get(
@@ -951,19 +864,14 @@ def load_or_build_gram_scrub(
             )
         )
         shared = shared_grams_cut(spark, sf_dir, table, docs_of, view)
-        docs = docs_of_r(spark, None)
         frame = _scrub_frame(
-            docs, shared, src_col=_DEGRADED_SRC if degraded else None
+            docs_of_r(spark, None), shared, src_col=_DEGRADED_SRC if degraded else None
         )
-        ix.sweep_stale_staging()
-        os.makedirs(ix.index_root(), exist_ok=True)
-        staging = ix.staging_path(path)
-        _write_scrub(frame, staging, dynamic=False)
-        manifest = ix.compact_manifest(man, current)
-        manifest["degraded"] = degraded
-        ix.write_manifest(staging, manifest)
-        _retire_and_promote(staging, path, current, components=("docs",))
-    return _serve_scrub(spark, path)
+        t.write(staging, "docs", frame)
+        return {"degraded": degraded}
+
+    t.load_or_build(build)
+    return _serve_scrub(spark, t.path)
 
 
 def refresh_gram_scrub(
@@ -987,104 +895,86 @@ def refresh_gram_scrub(
 
     view = _view_of(docs_of, view)
     docs_of_r = docs_of or _augmented_docs_of(sf_dir)
-    path = scrub_path(sf_dir, table, view)
+    t = _scrub_table(sf_dir, table, view)
     gpath = gram_freq_path(sf_dir, table, view)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if man is None or man.get("degraded"):
-        return load_or_build_gram_scrub(spark, sf_dir, table, docs_of, view)
-    added, changed, removed = ix.manifest_diff(man, current)
-    if removed:
-        return load_or_build_gram_scrub(spark, sf_dir, table, docs_of, view)
-    stale = sorted(added + changed)
-    if not stale:
-        return _serve_scrub(spark, path)
-    old_delta_tmp = None
-    if changed:
-        if not _manifests_aligned(man, ix.read_manifest(gpath)):
-            return load_or_build_gram_scrub(spark, sf_dir, table, docs_of, view)
-        old_delta_tmp = _capture_partials(spark, gpath, changed)
-    try:
-        rollup = refresh_gram_rollup(spark, sf_dir, table, docs_of, view)
-        if (ix.read_manifest(gpath) or {}).get("degraded"):
-            return load_or_build_gram_scrub(spark, sf_dir, table, docs_of, view)
-        partials = spark.read.parquet(os.path.join(gpath, "grams"))
-        nd = (
-            partials.filter(F.col(_SRC).isin(stale))
-            .groupBy("gram")
-            .agg(F.sum("n_docs").cast("bigint").alias("nd"))
-        )
-        if old_delta_tmp is not None:
-            od = (
-                spark.read.parquet(old_delta_tmp)
+
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.removed or man.get("degraded"):
+            return None
+        old_delta_tmp = None
+        if d.changed:
+            if not _manifests_aligned(man, ix.read_manifest(gpath)):
+                return None
+            old_delta_tmp = _capture_partials(spark, gpath, d.changed)
+        try:
+            rollup = refresh_gram_rollup(spark, sf_dir, table, docs_of, view)
+            if (ix.read_manifest(gpath) or {}).get("degraded"):
+                return None
+            partials = spark.read.parquet(os.path.join(gpath, "grams"))
+            nd = (
+                partials.filter(F.col(ix.SRC).isin(d.stale))
                 .groupBy("gram")
-                .agg(F.sum("n_docs").cast("bigint").alias("od"))
+                .agg(F.sum("n_docs").cast("bigint").alias("nd"))
             )
-            cand = nd.join(od, "gram", "full")
-        else:
-            cand = nd.withColumn("od", F.lit(None).cast("bigint"))
-        # candidate grams are bounded by the stale files' gram count; keep
-        # the big rollup SCAN-ONLY: broadcast-semi it down to the
-        # candidates, then join the two small sides (vs an SMJ that would
-        # exchange the whole rollup per refresh)
-        cand = cand.persist()
-        try:
-            small = cand.count() <= 1_000_000
-            small_rollup = (
-                rollup.join(F.broadcast(cand.select("gram")), "gram", "left_semi")
-                if small
-                else rollup
-            )
-            j = cand.join(small_rollup, "gram", "left")
-            new_total = F.coalesce(F.col("n_docs"), F.lit(0))
-            old_total = (
-                new_total - F.coalesce(F.col("nd"), F.lit(0))
-                + F.coalesce(F.col("od"), F.lit(0))
-            )
-            flipped = j.filter(
-                (old_total >= 2) != (new_total >= 2)
-            ).select("gram")
-            flipped = F.broadcast(flipped) if small else flipped
-            affected = {
-                r[0]
-                for r in partials.join(flipped, "gram", "left_semi")
-                .select(_SRC)
-                .distinct()
-                .collect()
-            } - set(stale)
+            if old_delta_tmp is not None:
+                od = (
+                    spark.read.parquet(old_delta_tmp)
+                    .groupBy("gram")
+                    .agg(F.sum("n_docs").cast("bigint").alias("od"))
+                )
+                cand = nd.join(od, "gram", "full")
+            else:
+                cand = nd.withColumn("od", F.lit(None).cast("bigint"))
+            # candidate grams are bounded by the stale files' gram count;
+            # keep the big rollup SCAN-ONLY: broadcast-semi it down to the
+            # candidates, then join the two small sides (vs an SMJ that
+            # would exchange the whole rollup per refresh)
+            cand = cand.persist()
+            try:
+                small = cand.count() <= 1_000_000
+                small_rollup = (
+                    rollup.join(F.broadcast(cand.select("gram")), "gram", "left_semi")
+                    if small
+                    else rollup
+                )
+                j = cand.join(small_rollup, "gram", "left")
+                new_total = F.coalesce(F.col("n_docs"), F.lit(0))
+                old_total = (
+                    new_total - F.coalesce(F.col("nd"), F.lit(0))
+                    + F.coalesce(F.col("od"), F.lit(0))
+                )
+                flipped = j.filter(
+                    (old_total >= 2) != (new_total >= 2)
+                ).select("gram")
+                flipped = F.broadcast(flipped) if small else flipped
+                affected = {
+                    r[0]
+                    for r in partials.join(flipped, "gram", "left_semi")
+                    .select(ix.SRC)
+                    .distinct()
+                    .collect()
+                }
+            finally:
+                cand.unpersist()
+            scope = sorted(set(d.stale) | affected)
+            shared = shared_grams_cut(spark, sf_dir, table, docs_of, view)
+            frame = _scrub_frame(docs_of_r(spark, t.file_paths(scope)), shared)
+            t.write(t.path, "docs", frame, scope)
+            return {"degraded": False}
         finally:
-            cand.unpersist()
-        scope = sorted(set(stale) | affected)
-        shared = shared_grams_cut(spark, sf_dir, table, docs_of, view)
-        frame = _scrub_frame(
-            docs_of_r(spark, ix.corpus_file_paths(sf_dir, table, scope)), shared
-        ).persist()
-        try:
-            _write_scrub(frame, path, dynamic=True)
-            written = {r[0] for r in frame.select(_SRC).distinct().collect()}
-        finally:
-            frame.unpersist()
-        orphaned = set(scope) - written
-        if orphaned:
-            # a changed file whose docs all vanished: its scrub partition
-            # is unreachable by dynamic overwrite — drop it explicitly
-            ix.drop_src_partitions(os.path.join(path, "docs"), orphaned)
-        manifest = ix.compact_manifest(man, current)
-        manifest["degraded"] = False
-        ix.write_manifest(path, manifest)
-        return _serve_scrub(spark, path)
-    finally:
-        if old_delta_tmp is not None:
-            shutil.rmtree(old_delta_tmp, ignore_errors=True)
+            if old_delta_tmp is not None:
+                shutil.rmtree(old_delta_tmp, ignore_errors=True)
+
+    t.refresh(step, lambda: load_or_build_gram_scrub(spark, sf_dir, table, docs_of, view))
+    return _serve_scrub(spark, t.path)
 
 
 def _serve_scrub(spark: SparkSession, path: str) -> DataFrame:
-    return _serve_component(
+    return ix.serve(
         spark,
         path,
         "docs",
         "doc_id bigint, n_tokens int, n_removed int, scrubbed_text string",
-        partitioned=True,
     ).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("n_tokens").cast("int").alias("n_tokens"),
@@ -1097,90 +987,9 @@ def _serve_rollup(spark: SparkSession, path: str) -> DataFrame:
     return _merged_rollup(spark, path, ix.read_manifest(path))
 
 
-def _serve_component(
-    spark: SparkSession,
-    path: str,
-    component: str,
-    empty_schema: str,
-    partitioned: bool = False,
-) -> DataFrame:
-    """``partitioned`` components (the src=-partitioned scrub docs) keep
-    their data under ``src=`` subdirectories, so emptiness is the ABSENCE
-    of src= dirs (same rule as ``_serve``) — a top-level ``*.parquet``
-    scan would read a populated table as empty and mask real read errors
-    (corrupt file, crashed-overwrite leftovers) as valid zero-row
-    results.  Unpartitioned components (rollup/cut) keep the flat
-    ``*.parquet`` check."""
-    import time
-
-    comp = os.path.join(path, component)
-    for _ in range(100):
-        try:
-            return spark.read.parquet(comp)
-        except Exception:
-            if os.path.exists(path):
-                if os.path.isdir(comp) and not any(
-                    e.name.startswith("src=")
-                    if partitioned
-                    else e.name.endswith(".parquet")
-                    for e in os.scandir(comp)
-                ):
-                    return spark.createDataFrame([], empty_schema)
-                raise
-            time.sleep(0.05)
-    raise FileNotFoundError(path)
-
-
 def _serve(spark: SparkSession, path: str) -> DataFrame:
-    import time
-
-    grams = os.path.join(path, "grams")
-    for _ in range(100):
-        try:
-            return spark.read.parquet(grams).select(
-                "gram", F.col("n_docs").cast("bigint").alias("n_docs")
-            )
-        except Exception:
-            if os.path.exists(path):
-                if os.path.isdir(grams) and not any(
-                    e.name.startswith("src=") for e in os.scandir(grams)
-                ):
-                    # every src partition dropped (e.g. RTBF purged the
-                    # whole corpus): a valid EMPTY index, not an error
-                    return spark.createDataFrame([], "gram bigint, n_docs bigint")
-                raise
-            time.sleep(0.05)
-    raise FileNotFoundError(path)
-
-
-def _retire_and_promote(
-    staging: str,
-    path: str,
-    current_files: dict | None = None,
-    components: tuple[str, ...] = ("grams",),
-) -> None:
-    """Retire→promote with the concurrent-winner check (same contract as
-    operators/inverted.py — see that docstring for the race reasoning).
-    ``current_files=None`` skips the winner check and always replaces —
-    required when the staging was DERIVED from the live copy (the rollup
-    merge), where keeping the live dir would drop the merge."""
-    import shutil
-
-    if current_files is not None and os.path.exists(path):
-        man = ix.read_manifest(path)
-        if ix.manifest_is_current(man, current_files) and all(
-            os.path.exists(os.path.join(path, c)) for c in components
-        ):
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-    if os.path.exists(path):
-        tomb = ix.staging_path(path) + ".stale"
-        try:
-            os.rename(path, tomb)
-        except OSError:
-            tomb = None
-        ix.promote(staging, path)
-        if tomb is not None:
-            shutil.rmtree(tomb, ignore_errors=True)
-    else:
-        ix.promote(staging, path)
+    # every src partition dropped (e.g. RTBF purged the whole corpus) is a
+    # valid EMPTY index, not an error
+    return ix.serve(spark, path, "grams", "gram bigint, n_docs bigint").select(
+        "gram", F.col("n_docs").cast("bigint").alias("n_docs")
+    )

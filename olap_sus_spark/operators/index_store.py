@@ -1,23 +1,30 @@
-"""Maintained-index persistence machinery, shared by every index family
-(ANN: SRP bucket / IVF assignment tables in operators/similarity.py;
-near-dup: the cluster map in operators/dedup.py).
+"""Maintained-table lifecycle, shared by every maintained table in the
+engine: the per-file (``src=``) corpus indexes (SRP/IVF/semantic in
+operators/similarity.py, the cluster map in operators/dedup.py, the
+inverted index, the gram chain, the quality histogram) and the
+month-partitioned (``mes_dt=``) fact summaries of operators/maintained.py.
 
 Real deployments build an index ONCE per corpus version and amortize it
 over every query; only the probe sits on the serving path.  The contract
 here:
 
-- **Corpus-stamped keys** (:func:`corpus_stamp`): the index directory name
-  hashes the corpus file identity (per part-file name/size/mtime) plus an
-  algorithm version, so a changed corpus or a changed build algorithm
-  silently invalidates instead of silently reusing.
-- **Staged build + atomic promotion** (:func:`staging_path`,
-  :func:`promote`): builds land in a per-process staging dir renamed into
-  place in one atomic step — a crash mid-build can never leave a directory
-  that existence-checks mistake for a complete index.
-- **Never delete a live destination** (:func:`promote`): an existing
-  destination can only exist via a completed rename, so the race loser
-  discards its own (equivalent) staging copy rather than opening a
-  reader-sees-no-index window.
+- **Corpus-stamped keys** (:func:`corpus_stamp`, :func:`corpus_files`):
+  a table carries the identity of the corpus files it was built from, so
+  a changed corpus or a changed build algorithm invalidates instead of
+  silently reusing.
+- **Staged build + one publish** (:func:`staging_path`, :func:`publish`):
+  builds land in a per-process staging dir; publishing retires the live
+  copy aside, renames staging into place and drops the retired copy — a
+  crash mid-build never leaves a directory that existence checks mistake
+  for a complete table.  A concurrent builder that already landed a
+  current copy wins: our equivalent staging is discarded instead.
+- **One bounded-retry read** (:func:`serve`): readers retry through a
+  concurrent publish's two-rename window and fail at once on anything
+  else.
+- **One per-file maintenance driver** (:class:`SrcTable`): manifest read,
+  staleness test, staged full build, added/changed/removed diff, orphan
+  partition drop and manifest write; families supply only their frame
+  builders and exactness guards.
 - **Age-gated staging sweep** (:func:`sweep_stale_staging`): abandoned
   staging dirs from crashed builds are reaped only past an age threshold —
   a live build's staging is minutes old at most.
@@ -26,6 +33,9 @@ here:
 from __future__ import annotations
 
 import os
+import shutil
+import time
+from typing import Callable, NamedTuple
 
 
 def index_root() -> str:
@@ -295,7 +305,6 @@ def drop_src_partitions(component_root: str, srcs: set[str]) -> None:
     are UTF-8 byte sequences — %C3%A9 is one 'é', so decode with
     urllib.parse.unquote, never per-byte chr(), or multi-byte names
     mismatch and the stale partition is kept forever)."""
-    import shutil
     from urllib.parse import unquote
 
     try:
@@ -335,13 +344,11 @@ def compact_src_partitions(
     lives OUTSIDE the component root (a sibling dir), so partition
     discovery on the live root never sees half-written copies; each
     partition is committed by the sinks retire→promote rename pair.  Same
-    SINGLE-MAINTAINER assumption as the refresh paths (gramfreq/inverted
-    docstrings): a concurrent reader can race one partition's rename
-    window exactly as it can race a dynamic partition overwrite.  Rows are
+    SINGLE-MAINTAINER assumption as :meth:`SrcTable.refresh`: a concurrent
+    reader can race one partition's rename window exactly as it can race a
+    dynamic partition overwrite.  Rows are
     re-sorted on ``sort_cols`` so the compacted file keeps the range-
     sorted layout (footer min/max stay selective)."""
-    import shutil
-
     from olap_sus_spark.sources.sinks import _swap_in
 
     out: dict[str, int] = {}
@@ -391,9 +398,6 @@ def sweep_stale_staging(max_age_sec: float = 3600.0) -> None:
     """Reap staging dirs abandoned by crashed builds.  A live build's
     staging is at most minutes old, so anything past ``max_age_sec`` is a
     leak; the rename-race loser already cleans its own copy up."""
-    import shutil
-    import time
-
     root = index_root()
     try:
         entries = list(os.scandir(root))
@@ -416,8 +420,6 @@ def promote(staging: str, path: str) -> None:
     concurrent builder won the race over the same corpus — deleting it would
     open a window where a reader finds no index at all.  The loser just
     discards its (equivalent) staging copy."""
-    import shutil
-
     if os.path.exists(path):  # lost the race — keep the live index untouched
         shutil.rmtree(staging, ignore_errors=True)
         return
@@ -428,3 +430,215 @@ def promote(staging: str, path: str) -> None:
             shutil.rmtree(staging, ignore_errors=True)
         else:
             raise
+
+
+def publish(
+    staging: str, path: str, is_current: Callable[[], bool] | None = None
+) -> None:
+    """Replace the live table at ``path`` with the fully-built ``staging``
+    copy: rename the live directory aside, rename staging into place, drop
+    the aside copy.
+
+    ``is_current`` re-checks the live copy immediately BEFORE retiring it:
+    when a concurrent builder already landed a current, complete copy,
+    retiring it would pull files out from under its readers' in-flight
+    scans and buy nothing, so our equivalent staging is discarded instead.
+    ``None`` always replaces — for staging DERIVED from the live copy (a
+    merge, a refreshed month), where keeping the live copy would drop the
+    change.  The retire rename must not assume it wins: a concurrent
+    retirer may have moved the live copy first, and we fall through to
+    :func:`promote`, which discards our copy if the winner's is live.  A
+    promote that fails for any other reason renames the retired copy back
+    before the error propagates: a failed publish leaves the old table,
+    never no table."""
+    if is_current is not None and os.path.exists(path) and is_current():
+        shutil.rmtree(staging, ignore_errors=True)
+        return
+    tomb = staging.rstrip("/") + ".stale"
+    try:
+        os.rename(path, tomb)
+    except OSError:
+        tomb = None  # nothing live, or a concurrent retire won
+    try:
+        promote(staging, path)
+    except OSError:
+        if tomb is not None:
+            try:
+                os.rename(tomb, path)
+            except OSError:
+                if os.path.exists(path):  # a winner landed meanwhile
+                    shutil.rmtree(tomb, ignore_errors=True)
+                # else: the tomb holds the only copy — leave it on disk
+        raise
+    if tomb is not None:
+        shutil.rmtree(tomb, ignore_errors=True)
+
+
+def _holds_no_data(path: str) -> bool:
+    """A directory with no entry Spark would read (``_``/``.``-prefixed
+    names are hidden: _SUCCESS, checksums) — neither data files nor
+    partition directories."""
+    try:
+        return not any(
+            not e.name.startswith(("_", ".")) for e in os.scandir(path)
+        )
+    except OSError:
+        return False
+
+
+def serve(spark, path: str, component: str = "", empty_schema: str | None = None):
+    """Read ``path``/``component`` through a concurrent :func:`publish`:
+    while the table root is absent (the two renames between retire and
+    promote take microseconds) the read is retried, bounded; once the root
+    exists, a failing read raises at once.  With ``empty_schema``, a
+    component that holds no data (every ``src=`` partition dropped, e.g.
+    an RTBF purge of the whole corpus) serves a typed empty frame — judged
+    by the absence of any visible entry, so a populated table whose read
+    fails (corrupt file, crashed-overwrite leftovers) still raises."""
+    target = os.path.join(path, component) if component else path
+    for _ in range(100):
+        try:
+            return spark.read.parquet(target)
+        except Exception:
+            if os.path.exists(path):
+                if empty_schema is not None and _holds_no_data(target):
+                    return spark.createDataFrame([], empty_schema)
+                raise
+            time.sleep(0.05)
+    raise FileNotFoundError(target)
+
+
+SRC = "src"  # partition column of the per-file tables: corpus part-file basename
+
+
+def with_src(df):
+    """Tag each row with the basename of the corpus part file it came from
+    — evaluated at the scan, before any exchange, so it survives every
+    repartition downstream."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(SRC, F.element_at(F.split(F.input_file_name(), "/"), -1))
+
+
+class Diff(NamedTuple):
+    """The corpus part files against a table's manifest."""
+
+    files: dict[str, list[int]]
+    added: list[str]
+    changed: list[str]
+    removed: list[str]
+
+    @property
+    def stale(self) -> list[str]:
+        return sorted(self.added + self.changed)
+
+
+class SrcTable:
+    """The per-file maintenance driver: one maintained table whose
+    components are ``src=``-partitioned over the part files of corpus
+    table ``table`` at ``sf_dir`` — a part file is the refresh unit.
+
+    ``parts`` maps each partitioned component (``""`` = the table root) to
+    its layout: (sort columns, files per partition) — range-sorted so
+    footer min/max stats keep pruning probes.  ``flat`` names the
+    unpartitioned components (codebooks, rollups) the family writes
+    itself.  The driver owns the manifest (read, staleness, diff, write),
+    the staged full build and its publish, and the orphan-partition drop;
+    a family supplies its frame builders and its exactness guards."""
+
+    def __init__(
+        self,
+        path: str,
+        sf_dir: str,
+        table: str,
+        parts: dict[str, tuple[tuple[str, ...], int]],
+        flat: tuple[str, ...] = (),
+    ):
+        self.path, self.sf_dir, self.table = path, sf_dir, table
+        self.parts, self.flat = parts, flat
+
+    def files(self) -> dict[str, list[int]]:
+        return corpus_files(self.sf_dir, self.table)
+
+    def file_paths(self, names: list[str]) -> list[str]:
+        return corpus_file_paths(self.sf_dir, self.table, names)
+
+    def _complete(self) -> bool:
+        return all(
+            os.path.exists(os.path.join(self.path, c))
+            for c in (*self.parts, *self.flat)
+        )
+
+    def is_current(self, files: dict[str, list[int]]) -> bool:
+        return manifest_is_current(read_manifest(self.path), files) and self._complete()
+
+    def write(self, root: str, component: str, frame, srcs=None) -> None:
+        """Write ``frame`` (carrying ``src``) as ``component`` under
+        ``root``.  ``srcs=None`` is a full build (static overwrite);
+        otherwise the write refreshes exactly the ``srcs`` units by dynamic
+        partition overwrite, and drops the partition of every unit the
+        frame holds no row for — dynamic overwrite only replaces partitions
+        PRESENT in the output, so a source whose recomputed rows are empty
+        (an RTBF rewrite that purged them all) would otherwise serve its
+        old rows forever while the manifest reads current."""
+        from olap_sus_spark.sources.sinks import write_sorted_partitioned
+
+        sort, n_files = self.parts[component]
+        dest = os.path.join(root, component) if component else root
+        if srcs is None:
+            write_sorted_partitioned(frame, dest, SRC, list(sort), files=n_files)
+            return
+        frame = frame.persist()
+        try:
+            write_sorted_partitioned(
+                frame, dest, SRC, list(sort), files=n_files, dynamic=True
+            )
+            written = {r[0] for r in frame.select(SRC).distinct().collect()}
+        finally:
+            frame.unpersist()
+        drop_src_partitions(dest, set(srcs) - written)
+
+    def load_or_build(self, build: Callable[[str], dict | None]) -> None:
+        """Full staged build when the manifest is stale or a component is
+        missing: ``build(staging)`` writes every component under
+        ``staging`` and returns the family's extra manifest keys; the
+        manifest lands in staging, then :func:`publish` swaps it in."""
+        files = self.files()
+        man = read_manifest(self.path)
+        if manifest_is_current(man, files) and self._complete():
+            return
+        sweep_stale_staging()
+        os.makedirs(index_root(), exist_ok=True)
+        staging = staging_path(self.path)
+        extra = build(staging) or {}
+        write_manifest(staging, {**compact_manifest(man, files), **extra})
+        publish(staging, self.path, lambda: self.is_current(files))
+
+    def refresh(
+        self,
+        step: Callable[[dict, Diff], dict | None],
+        rebuild: Callable[[], object],
+    ) -> None:
+        """Incremental maintenance: ``step(manifest, diff)`` rewrites the
+        stale units in place (through :meth:`write`) and returns the extra
+        manifest keys, or ``None`` when its exactness guard cannot prove
+        the refresh equal to a rebuild — then ``rebuild()`` runs the full
+        staged build.  A never-built or incomplete table rebuilds too.
+        Removed part files' partitions are dropped, then the manifest is
+        stamped current.  SINGLE REFRESHER per table: the step overwrites
+        live partitions in place."""
+        man = read_manifest(self.path)
+        if man is None or not self._complete():
+            rebuild()
+            return
+        files = self.files()
+        d = Diff(files, *manifest_diff(man, files))
+        if not (d.added or d.changed or d.removed):
+            return
+        extra = step(man, d)
+        if extra is None:
+            rebuild()
+            return
+        for c in self.parts:
+            drop_src_partitions(os.path.join(self.path, c), set(d.removed))
+        write_manifest(self.path, {**man, **compact_manifest(man, files), **extra})

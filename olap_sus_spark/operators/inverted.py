@@ -2,10 +2,9 @@
 retrieval (BM25 — queries/search.py scores over it).
 
 Reference parity note: the reference engine has no text-retrieval surface;
-this is part of the LLM-data-pipeline extension family, following the same
-maintained-index contract as the ANN/dedup indexes
-(operators/index_store.py: corpus-manifest staleness, staged build + atomic
-promotion, per-``src``-partition incremental refresh).
+this is part of the LLM-data-pipeline extension family, maintained through
+the per-file driver of operators/index_store.py (corpus-manifest
+staleness, staged build + publish, per-``src``-partition refresh).
 
 Two tables under one index directory:
 
@@ -36,13 +35,11 @@ oracle with ``bm25_search_topk``, which IS the maintained==recomputed proof.
 
 At 100 TB: the build is one tokenize+explode pass (the only corpus-sized
 job); a daily append re-tokenizes only the ingested part files and
-dynamic-partition-overwrites their ``src=`` partitions (O(ingest day));
+overwrites their ``src=`` partitions (O(ingest day));
 the probe reads footer-pruned postings for the query terms only.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,18 +47,11 @@ from pyspark.sql import functions as F
 from olap_sus_spark.operators import index_store as ix
 from olap_sus_spark.operators import text as tx
 
-_SRC = "src"
 _ALGO_VERSION = "inv2"  # inv2: positional postings (positions column)
 
 
 def inverted_index_path(sf_dir: str, table: str = "documents") -> str:
     return ix.index_path("inv", f"{_ALGO_VERSION}|{sf_dir}|{table}")
-
-
-def _with_src(df: DataFrame) -> DataFrame:
-    # Evaluated at the scan, before any exchange (same contract as the ANN
-    # index builders in operators/similarity.py).
-    return df.withColumn(_SRC, F.element_at(F.split(F.input_file_name(), "/"), -1))
 
 
 def _index_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -73,28 +63,28 @@ def _index_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     functionally dependent on doc_id.
     """
     toks = docs.filter(F.col("text").isNotNull()).select(
-        _SRC,
+        ix.SRC,
         "doc_id",
         tx.tokens("text").alias("ts"),
     )
     with_dl = toks.select(
-        _SRC, "doc_id", F.size("ts").cast("bigint").alias("dl"), "ts"
+        ix.SRC, "doc_id", F.size("ts").cast("bigint").alias("dl"), "ts"
     )
     postings = (
         with_dl.select(
-            _SRC, "doc_id", "dl", F.posexplode("ts").alias("pos", "term")
+            ix.SRC, "doc_id", "dl", F.posexplode("ts").alias("pos", "term")
         )
-        .groupBy(_SRC, "doc_id", "dl", "term")
+        .groupBy(ix.SRC, "doc_id", "dl", "term")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("tf"),
             F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias(
                 "positions"
             ),
         )
-        .select(_SRC, "doc_id", "term", "tf", "positions", "dl")
+        .select(ix.SRC, "doc_id", "term", "tf", "positions", "dl")
     )
     doc_stats = (
-        with_dl.groupBy(_SRC)
+        with_dl.groupBy(ix.SRC)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("dl").cast("bigint").alias("s_tokens"),
@@ -103,18 +93,12 @@ def _index_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return postings, doc_stats
 
 
-def _write_tables(
-    postings: DataFrame, doc_stats: DataFrame, root: str, dynamic: bool
-) -> None:
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
-
-    write_sorted_partitioned(
-        postings, os.path.join(root, "postings"), _SRC, ["term"], files=4,
-        dynamic=dynamic,
-    )
-    write_sorted_partitioned(
-        doc_stats, os.path.join(root, "docs"), _SRC, ["n_docs"], files=1,
-        dynamic=dynamic,
+def _table(sf_dir: str, table: str) -> ix.SrcTable:
+    return ix.SrcTable(
+        inverted_index_path(sf_dir, table),
+        sf_dir,
+        table,
+        {"postings": (("term",), 4), "docs": (("n_docs",), 1)},
     )
 
 
@@ -128,118 +112,49 @@ def load_or_build_inverted_index(
     silently serves stale postings."""
     from olap_sus_spark.catalog import load_table
 
-    path = inverted_index_path(sf_dir, table)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if not ix.manifest_is_current(man, current):
-        ix.sweep_stale_staging()
-        os.makedirs(ix.index_root(), exist_ok=True)
-        postings, doc_stats = _index_frames(_with_src(load_table(spark, sf_dir, table)))
-        staging = ix.staging_path(path)
-        _write_tables(postings, doc_stats, staging, dynamic=False)
-        ix.write_manifest(staging, ix.compact_manifest(man, current))
-        _retire_and_promote(staging, path, current, ("postings", "docs"))
-    return _serve(spark, path)
+    t = _table(sf_dir, table)
+
+    def build(staging: str) -> None:
+        postings, doc_stats = _index_frames(
+            ix.with_src(load_table(spark, sf_dir, table))
+        )
+        t.write(staging, "postings", postings)
+        t.write(staging, "docs", doc_stats)
+
+    t.load_or_build(build)
+    return _serve(spark, t.path)
 
 
 def refresh_inverted_index(
     spark: SparkSession, sf_dir: str, table: str = "documents"
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental maintenance: re-tokenize ONLY the corpus part files
-    added or rewritten since the last manifest and dynamic-partition-
-    overwrite their ``src=`` partitions — O(ingested files), never
-    O(corpus).  Postings and per-src stats are functions of a single part
-    file (a document lives entirely in one), so the refreshed index is
-    bit-identical to a fresh full build by construction.  Removed part
-    files (or a never-built index) fall back to the full staged build.
+    added or rewritten since the last manifest and overwrite their
+    ``src=`` partitions — O(ingested files), never O(corpus).  Postings
+    and per-src stats are functions of a single part file (a document
+    lives entirely in one), so the refreshed index is bit-identical to a
+    fresh full build by construction.  Removed part files (or a
+    never-built index) fall back to the full staged build."""
+    t = _table(sf_dir, table)
 
-    SINGLE REFRESHER ASSUMED per index directory (in-place dynamic
-    overwrite — see refresh_gram_freq's docstring for the race shape and
-    why both in-repo callers satisfy it)."""
-    path = inverted_index_path(sf_dir, table)
-    current = ix.corpus_files(sf_dir, table)
-    man = ix.read_manifest(path)
-    if man is None:
-        return load_or_build_inverted_index(spark, sf_dir, table)
-    added, changed, removed = ix.manifest_diff(man, current)
-    if removed:
-        # Shrunk corpus: per-partition overwrite cannot delete rows of a
-        # vanished src; rebuild from scratch (manifest mismatch forces it).
-        return load_or_build_inverted_index(spark, sf_dir, table)
-    stale = sorted(added + changed)
-    if stale:
-        paths = ix.corpus_file_paths(sf_dir, table, stale)
-        postings, doc_stats = _index_frames(_with_src(spark.read.parquet(*paths)))
-        # A changed source whose recomputed component is EMPTY (all its
-        # docs purged/NULL-texted by an RTBF rewrite) never appears in a
-        # dynamic overwrite's output — drop its old partition explicitly
-        # or it serves stale postings forever (per component: a file of
-        # zero-token docs has doc_stats rows but no postings).
-        postings = postings.persist()
-        doc_stats = doc_stats.persist()
-        try:
-            _write_tables(postings, doc_stats, path, dynamic=True)
-            for frame, comp in ((postings, "postings"), (doc_stats, "docs")):
-                written = {r[0] for r in frame.select(_SRC).distinct().collect()}
-                orphaned = set(stale) - written
-                if orphaned:
-                    ix.drop_src_partitions(os.path.join(path, comp), orphaned)
-        finally:
-            postings.unpersist()
-            doc_stats.unpersist()
-        ix.write_manifest(path, ix.compact_manifest(man, current))
-    return _serve(spark, path)
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.removed:
+            return None
+        postings, doc_stats = _index_frames(
+            ix.with_src(spark.read.parquet(*t.file_paths(d.stale)))
+        )
+        t.write(t.path, "postings", postings, d.stale)
+        t.write(t.path, "docs", doc_stats, d.stale)
+        return {}
+
+    t.refresh(step, lambda: load_or_build_inverted_index(spark, sf_dir, table))
+    return _serve(spark, t.path)
 
 
 def _serve(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    import time
-
-    for _ in range(100):
-        try:
-            return (
-                spark.read.parquet(os.path.join(path, "postings")).select(
-                    "doc_id", "term", "tf", "positions", "dl"
-                ),
-                spark.read.parquet(os.path.join(path, "docs")).select(
-                    "n_docs", "s_tokens"
-                ),
-            )
-        except Exception:
-            if os.path.exists(path):
-                raise
-            time.sleep(0.05)
-    raise FileNotFoundError(path)
-
-
-def _retire_and_promote(
-    staging: str,
-    path: str,
-    current_files: dict | None = None,
-    components: tuple[str, ...] = (),
-) -> None:
-    """Same retire→promote contract as the ANN indexes: never assume the
-    retire rename wins (a concurrent rebuilder over the same stale manifest
-    may have retired or re-promoted first); readers retry through the
-    two-rename window in :func:`_serve`.  ``current_files`` skips the
-    retire entirely when a concurrent builder already landed a CURRENT
-    copy (see similarity._retire_and_promote)."""
-    import shutil
-
-    if current_files is not None and os.path.exists(path):
-        man = ix.read_manifest(path)
-        if ix.manifest_is_current(man, current_files) and all(
-            os.path.exists(os.path.join(path, c)) for c in components
-        ):
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-    if os.path.exists(path):
-        tomb = ix.staging_path(path) + ".stale"
-        try:
-            os.rename(path, tomb)
-        except OSError:
-            tomb = None
-        ix.promote(staging, path)
-        if tomb is not None:
-            shutil.rmtree(tomb, ignore_errors=True)
-    else:
-        ix.promote(staging, path)
+    return (
+        ix.serve(spark, path, "postings").select(
+            "doc_id", "term", "tf", "positions", "dl"
+        ),
+        ix.serve(spark, path, "docs").select("n_docs", "s_tokens"),
+    )

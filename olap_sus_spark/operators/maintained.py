@@ -3,21 +3,19 @@ family that serves from per-day partials instead of the facts (KMV cube in
 queries/sketches.py, CMS grid in queries/cms.py; queries/incremental.py
 pioneered the pattern for the revenue rollup).
 
-The contract (proven by the incremental.py race probes and reused
-verbatim):
+The contract (the stamp-marker flavour of the operators/index_store.py
+lifecycle):
 
 - **Location-keyed path + stamp MARKER** — the table lives at a stable
   path and carries the corpus stamp in a marker file; a stamp-keyed path
   could never be refreshed incrementally.
-- **Staged build + atomic promotion**; stale marker → safe full rebuild
-  via retire-then-promote, where the retire rename must NOT assume it wins
-  (a concurrent rebuilder may have retired the path already — the loser
-  falls through to ``promote``, which discards its equivalent copy).
-- **Bounded read-retry** through a concurrent rebuilder's retire→promote
-  window (microseconds — two renames).
-- **Month-scoped dynamic-partition refresh** — re-derive ONLY the months
-  containing the ingested days and overwrite those ``mes_dt`` partitions
-  in place; idempotent.  A never-built table falls through to the full
+- **Staged build + index_store.publish**; a stale marker → safe full
+  rebuild, retire-then-promote.
+- **Bounded read-retry** (index_store.serve) through a concurrent
+  rebuilder's retire→promote window (microseconds — two renames).
+- **Month-scoped refresh** — re-derive ONLY the months containing the
+  ingested days and publish each staged ``mes_dt`` partition over its
+  live month; idempotent.  A never-built table falls through to the full
   staged build (a months-only partial must not masquerade as complete).
 
 ``build(months)`` returns the partial rows for the given months
@@ -110,6 +108,39 @@ def write_marker(path: str, stamp: str) -> None:
         f.write(stamp)
 
 
+def load_or_build_stamped(
+    spark: SparkSession, path: str, stamp: str, write: Callable[[str], None]
+) -> DataFrame:
+    """Serve the stamp-marked table at ``path``, first rebuilding it when
+    absent or stale: ``write(staging)`` writes the whole table, the marker
+    lands in staging, then index_store.publish swaps it in (a concurrent
+    builder's fresh copy wins)."""
+    from olap_sus_spark.operators.index_store import (
+        index_root,
+        publish,
+        serve,
+        staging_path,
+        sweep_stale_staging,
+    )
+
+    if not os.path.exists(path) or read_marker(path) != stamp:
+        sweep_stale_staging()
+        os.makedirs(index_root(), exist_ok=True)
+        staging = staging_path(path)
+        write(staging)
+        write_marker(staging, stamp)
+        publish(staging, path, lambda: read_marker(path) == stamp)
+    return serve(spark, path)
+
+
+def _write_months(
+    partials: DataFrame, dest: str, layout: Callable[[DataFrame], DataFrame] | None
+) -> None:
+    (layout or _one_file_per_month)(partials).write.partitionBy("mes_dt").mode(
+        "overwrite"
+    ).parquet(dest)
+
+
 def load_or_build_partials(
     spark: SparkSession,
     path: str,
@@ -124,51 +155,9 @@ def load_or_build_partials(
     maintained tables whose months are data-sized — e.g. the z-ordered
     fact layout, which needs a range exchange on (mes_dt, morton) so each
     month is written by MANY ordered tasks, not funneled into one."""
-    import shutil
-    import time
-
-    from olap_sus_spark.operators.index_store import (
-        index_root,
-        promote,
-        staging_path,
-        sweep_stale_staging,
+    return load_or_build_stamped(
+        spark, path, stamp, lambda staging: _write_months(build(None), staging, layout)
     )
-
-    if not os.path.exists(path) or read_marker(path) != stamp:
-        sweep_stale_staging()
-        os.makedirs(index_root(), exist_ok=True)
-        staging = staging_path(path)
-        (layout or _one_file_per_month)(build(None)).write.partitionBy("mes_dt").mode(
-            "overwrite"
-        ).parquet(staging)
-        write_marker(staging, stamp)
-        if os.path.exists(path) and read_marker(path) == stamp:
-            # A concurrent builder landed a FRESH copy while we were
-            # building (our absent-or-stale observation is seconds old).
-            # Retiring it would yank part files out from under the winner's
-            # in-flight scans — a real mid-scan FileNotFound found by
-            # tools/race_probe_maintained.py — and buy nothing: our staging
-            # is an equivalent copy, so discard it and serve the live one.
-            shutil.rmtree(staging, ignore_errors=True)
-        elif os.path.exists(path):
-            tomb = staging_path(path) + ".stale"
-            try:
-                os.rename(path, tomb)
-            except OSError:
-                tomb = None  # concurrent retire won; nothing of ours to reap
-            promote(staging, path)
-            if tomb is not None:
-                shutil.rmtree(tomb, ignore_errors=True)
-        else:
-            promote(staging, path)
-    for _ in range(100):
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            if os.path.exists(path):
-                raise
-            time.sleep(0.05)
-    return spark.read.parquet(path)
 
 
 def refresh_partials(
@@ -182,26 +171,24 @@ def refresh_partials(
     """Re-derive ONLY the months containing ``days`` (yyyy-MM-dd) and swap
     the refreshed month partitions in — O(day), never the fact history.
 
-    The refreshed months are STAGED to a per-process dir first and then
-    swapped partition-by-partition with the same retire-then-promote
-    choreography as the full rebuild (never delete a live directory; the
-    rename-race loser discards its equivalent copy).  An in-place
-    dynamic-partition overwrite instead deletes the live month's files
-    before committing the new ones — a concurrent cross-process reader
-    mid-scan of that month would hit FileNotFound outside the bounded
-    whole-path retry in :func:`load_or_build_partials`.  With the swap the
-    vulnerable window is the same two-renames-per-month microsecond window
-    every index family already runs.  Cross-process READERS of that window
-    may still see one transient FileNotFound mid-action; the contract is
-    retry-the-action (never partial or merged data — each month is whole
-    before and after the swap).  Concurrent refreshers are safe: the race
-    loser's month rename fails on the existing destination and its
-    equivalent copy is discarded (tools/race_probe_refresh.py races two
-    drivers through refresh+serve loops and pins raced == fresh-rebuild
-    with zero debris)."""
+    The refreshed months are STAGED to a per-process dir first and each is
+    then published over its live month (index_store.publish: never delete
+    a live directory; the rename-race loser discards its equivalent copy).
+    An in-place dynamic-partition overwrite instead deletes the live
+    month's files before committing the new ones — a concurrent
+    cross-process reader mid-scan of that month would hit FileNotFound
+    outside the bounded whole-path retry of index_store.serve.  With the
+    swap the vulnerable window is two renames per month.  Cross-process
+    READERS of that window may still see one transient FileNotFound
+    mid-action; the contract is retry-the-action (never partial or merged
+    data — each month is whole before and after the swap).  Concurrent
+    refreshers are safe (``python tools/race_probe.py`` races two drivers
+    through refresh+serve loops and pins raced == fresh rebuild with zero
+    debris)."""
     import shutil
 
     from olap_sus_spark.operators.index_store import (
+        publish,
         staging_path,
         sweep_stale_staging,
     )
@@ -212,57 +199,26 @@ def refresh_partials(
         return
     sweep_stale_staging()
     staging = staging_path(path)
-    (layout or _one_file_per_month)(build(months)).write.partitionBy("mes_dt").mode(
-        "overwrite"
-    ).parquet(staging)
-    degraded = False
+    degraded = keep = False
     try:
+        _write_months(build(months), staging, layout)
         for entry in sorted(os.listdir(staging)):
             if not entry.startswith("mes_dt="):
                 continue
             live = os.path.join(path, entry)
-            tomb = f"{staging}.{entry}.stale"  # .__build__ name → sweepable
-            if os.path.exists(live):
-                try:
-                    os.rename(live, tomb)
-                except OSError:
-                    tomb = None  # concurrent refresher retired it first
-            else:
-                tomb = None
             try:
-                os.rename(os.path.join(staging, entry), live)
+                publish(os.path.join(staging, entry), live)
             except OSError:
-                # concurrent refresher promoted its (equivalent) month copy
-                # between our retire and promote — keep the live one
-                pass
-            if tomb is not None:
-                if os.path.exists(live):
-                    shutil.rmtree(tomb, ignore_errors=True)
-                else:
-                    # The promote rename failed for a reason OTHER than a
-                    # concurrent winner (ENOENT on staging, permissions…)
-                    # AFTER we retired the live month: deleting the tomb
-                    # here would silently lose the partition.  Restore the
-                    # retired copy instead — the refresh degrades for this
-                    # month rather than losing data — and SKIP the marker
-                    # write below, so the stale stamp forces the next load
-                    # to rebuild instead of serving pre-refresh data as
-                    # current indefinitely.
-                    try:
-                        os.rename(tomb, live)
-                        degraded = True
-                    except OSError:
-                        if os.path.exists(live):
-                            # a concurrent winner landed the month between
-                            # our exists-check and the restore — the live
-                            # copy IS current; our retired copy is debris
-                            shutil.rmtree(tomb, ignore_errors=True)
-                        else:
-                            # restore itself failed with the month missing:
-                            # leave the tomb on disk (it holds the only
-                            # copy) and force a rebuild via the stale stamp
-                            degraded = True
+                # The promote failed for a reason OTHER than a concurrent
+                # winner; publish restored the retired month where it
+                # could.  Skip the marker write so the stale stamp forces
+                # the next load to rebuild instead of serving pre-refresh
+                # data as current; if the month is gone, the retired copy
+                # under staging is its only copy — keep it.
+                degraded = True
+                keep = keep or not os.path.exists(live)
         if not degraded:
             write_marker(path, stamp)
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        if not keep:
+            shutil.rmtree(staging, ignore_errors=True)

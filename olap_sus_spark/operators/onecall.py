@@ -37,9 +37,14 @@ _INT64_MAX = 2**63 - 1
 
 
 def sql_double(x: float) -> str:
+    """Bit-exact DOUBLE literal.  NaN and the infinities have no numeric
+    literal form, so they render as casts of Spark's own spellings (an
+    ``ann_mmr_diverse_topk`` cosine over a zero-norm query is NaN)."""
     x = float(x)
-    if x != x or x in (float("inf"), float("-inf")):
-        raise ValueError(f"non-finite double literal: {x!r}")
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
     return repr(x) + "D"
 
 

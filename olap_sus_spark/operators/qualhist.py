@@ -24,22 +24,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from olap_sus_spark.operators import index_store as ix
 from olap_sus_spark.operators import text as tx
-from olap_sus_spark.operators.index_store import (
-    compact_manifest,
-    corpus_file_paths,
-    corpus_files,
-    drop_src_partitions,
-    index_root,
-    manifest_diff,
-    manifest_is_current,
-    read_manifest,
-    staging_path,
-    sweep_stale_staging,
-    write_manifest,
-)
 
-_SRC = "src"
 _BINS = 1000
 _ALGO_VERSION = "v1"
 
@@ -50,11 +37,7 @@ def quality_hist_path(sf_dir: str) -> str:
     key = hashlib.md5(
         f"{_ALGO_VERSION}|{os.path.abspath(sf_dir)}|qualhist|{_BINS}".encode()
     ).hexdigest()[:16]
-    return os.path.join(index_root(), f"qhist_{key}")
-
-
-def _with_src(df: DataFrame) -> DataFrame:
-    return df.withColumn(_SRC, F.element_at(F.split(F.input_file_name(), "/"), -1))
+    return os.path.join(ix.index_root(), f"qhist_{key}")
 
 
 def q_bin(text_col) -> F.Column:
@@ -67,17 +50,15 @@ def q_bin(text_col) -> F.Column:
 def _partials(docs: DataFrame) -> DataFrame:
     """(src, source, q_bin, cnt) — one narrow map + one grouped count."""
     return (
-        docs.select(_SRC, "source", q_bin(F.col("text")).alias("q_bin"))
-        .groupBy(_SRC, "source", "q_bin")
+        docs.select(ix.SRC, "source", q_bin(F.col("text")).alias("q_bin"))
+        .groupBy(ix.SRC, "source", "q_bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def _write_partials(frame: DataFrame, root: str, dynamic: bool) -> None:
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
-
-    write_sorted_partitioned(
-        frame, root, _SRC, ["source", "q_bin"], files=1, dynamic=dynamic
+def _table(sf_dir: str) -> ix.SrcTable:
+    return ix.SrcTable(
+        quality_hist_path(sf_dir), sf_dir, "documents", {"": (("source", "q_bin"), 1)}
     )
 
 
@@ -86,23 +67,14 @@ def load_or_build_quality_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Staleness via the corpus manifest (the caller ingested without
     :func:`refresh_quality_hist`) triggers the safe full rebuild."""
     from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.operators.similarity import (
-        _retire_and_promote,
-        _serve_retry,
-    )
 
-    path = quality_hist_path(sf_dir)
-    current = corpus_files(sf_dir, table="documents")
-    man = read_manifest(path)
-    if not manifest_is_current(man, current):
-        sweep_stale_staging()
-        docs = _with_src(load_table(spark, sf_dir, "documents"))
-        os.makedirs(index_root(), exist_ok=True)
-        staging = staging_path(path)
-        _write_partials(_partials(docs), staging, dynamic=False)
-        write_manifest(staging, compact_manifest(man, current))
-        _retire_and_promote(staging, path, current)
-    return _serve_retry(spark, path).select(_SRC, "source", "q_bin", "cnt")
+    t = _table(sf_dir)
+    t.load_or_build(
+        lambda staging: t.write(
+            staging, "", _partials(ix.with_src(load_table(spark, sf_dir, "documents")))
+        )
+    )
+    return ix.serve(spark, t.path).select(ix.SRC, "source", "q_bin", "cnt")
 
 
 def refresh_quality_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,21 +82,13 @@ def refresh_quality_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     part files recompute exactly their own partials partitions; removed
     files drop theirs.  Additivity means there is no cross-file state and
     therefore no full-rebuild case at all — idempotent by construction."""
-    from olap_sus_spark.operators.similarity import _serve_retry
+    t = _table(sf_dir)
 
-    path = quality_hist_path(sf_dir)
-    man = read_manifest(path)
-    current = corpus_files(sf_dir, table="documents")
-    if man is None:
-        return load_or_build_quality_hist(spark, sf_dir)
-    added, changed, removed = manifest_diff(man, current)
-    if removed:
-        drop_src_partitions(path, set(removed))
-    touched = added + changed
-    if touched:
-        paths = corpus_file_paths(sf_dir, "documents", touched)
-        docs = _with_src(spark.read.parquet(*paths))
-        _write_partials(_partials(docs), path, dynamic=True)
-    if touched or removed:
-        write_manifest(path, compact_manifest(man, current))
-    return _serve_retry(spark, path).select(_SRC, "source", "q_bin", "cnt")
+    def step(man: dict, d: ix.Diff) -> dict:
+        if d.stale:
+            docs = ix.with_src(spark.read.parquet(*t.file_paths(d.stale)))
+            t.write(t.path, "", _partials(docs), d.stale)
+        return {}
+
+    t.refresh(step, lambda: load_or_build_quality_hist(spark, sf_dir))
+    return ix.serve(spark, t.path).select(ix.SRC, "source", "q_bin", "cnt")

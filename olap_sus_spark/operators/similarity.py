@@ -1130,48 +1130,18 @@ def lsh_topk(
 #
 # Real vector-search deployments build the index ONCE per corpus version and
 # amortize it over every query; only the probe is on the serving path.  The
-# helpers below persist the SRP bucket table / IVF assignment+centroid tables
-# as Parquet via the warehouse sink machinery (sources/sinks.py).
-#
-# Maintenance contract (the refresh_aggregate pattern from etl.py, applied
-# to indexes): the index path is keyed by corpus LOCATION + parameters —
-# never by a corpus content stamp, which would force a full rebuild on any
-# ingest — and staleness is tracked by a per-part-file MANIFEST inside the
-# table.  The index table is directory-partitioned by ``src`` (the corpus
-# part file each row came from), so:
-#
-# - ``refresh_*_index`` re-signs ONLY the part files added (or rewritten)
-#   since the manifest and dynamic-partition-overwrites exactly their
-#   ``src=`` partitions — an append-only 100 TB corpus pays one ingest-day
-#   of signature work per day, not a full re-signature pass;
-# - ``load_or_build_*`` serves when the manifest matches the corpus and
-#   falls back to the safe full staged rebuild when it doesn't (the caller
-#   ingested without refreshing — a maintained index must never silently
-#   serve stale rows);
-# - within each src partition, files stay range-sorted on the probe key
-#   ((t, bucket) / centroid_id) so footer min/max stats keep pruning.
-#
-# Deletions and in-place rewrites of old part files fall back to a full
-# rebuild (for SRP a rewrite is still partition-scoped — signatures are
-# per-vector); the IVF refresh additionally requires appended ids to stay
-# above the centroid range (otherwise the deterministic codebook itself
-# changes and every assignment must be redone).
+# SRP bucket table, the IVF assignment + centroid tables and the semantic-
+# dedup index below are per-file tables on index_store.SrcTable: location-
+# keyed path, per-part-file manifest, ``src=`` partitions refreshed in
+# O(ingested files), the safe full staged rebuild otherwise.  Within each
+# src partition files stay range-sorted on the probe key ((t, bucket) /
+# centroid_id) so footer min/max stats keep pruning.  What stays here are
+# the frame builders and the exactness guards: the SRP refresh keeps the
+# built bit width, the IVF refresh requires appended ids above the
+# codebook's, and removed part files force a full rebuild.
 
 
-from olap_sus_spark.operators.index_store import (
-    compact_manifest as _compact_manifest,
-    corpus_file_paths as _corpus_file_paths,
-    corpus_files as _corpus_files,
-    corpus_rows as _corpus_rows,
-    index_root as _index_root,
-    manifest_diff as _manifest_diff,
-    manifest_is_current as _manifest_is_current,
-    promote as _promote,
-    read_manifest as _read_manifest,
-    staging_path as _staging_path,
-    sweep_stale_staging as _sweep_stale_staging,
-    write_manifest as _write_manifest,
-)
+from olap_sus_spark.operators import index_store as ix
 
 # Bump when the signature/assignment ALGORITHM changes (plane construction,
 # hash family, bucket packing) OR the persisted physical schema changes:
@@ -1182,8 +1152,6 @@ from olap_sus_spark.operators.index_store import (
 #     (incremental refresh); serving columns unchanged.
 _INDEX_ALGO_VERSION = "v3"
 
-_SRC = "src"  # partition column: corpus part-file basename
-
 
 def srp_index_path(sf_dir: str, dim: int, n_tables: int, n_bits: int) -> str:
     import hashlib
@@ -1192,7 +1160,7 @@ def srp_index_path(sf_dir: str, dim: int, n_tables: int, n_bits: int) -> str:
         f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
         f"|{dim}|{n_tables}|{n_bits}".encode()
     ).hexdigest()[:16]
-    return os.path.join(_index_root(), f"srp_{key}")
+    return os.path.join(ix.index_root(), f"srp_{key}")
 
 
 def ivf_index_path(sf_dir: str, num_centroids: int) -> str:
@@ -1202,73 +1170,16 @@ def ivf_index_path(sf_dir: str, num_centroids: int) -> str:
         f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
         f"|ivf|{num_centroids}".encode()
     ).hexdigest()[:16]
-    return os.path.join(_index_root(), f"ivf_{key}")
+    return os.path.join(ix.index_root(), f"ivf_{key}")
 
 
-def _with_src(df: DataFrame) -> DataFrame:
-    """Tag each row with the basename of the parquet part file it came
-    from — evaluated at the scan (before any exchange), so it survives the
-    spread_compute repartition inside the signature pass."""
-    return df.withColumn(
-        _SRC, F.element_at(F.split(F.input_file_name(), "/"), -1)
+def _srp_table(sf_dir: str, dim: int, n_tables: int, n_bits: int) -> ix.SrcTable:
+    return ix.SrcTable(
+        srp_index_path(sf_dir, dim, n_tables, n_bits),
+        sf_dir,
+        "embeddings",
+        {"": (("t", "bucket"), 4)},
     )
-
-
-def _serve_retry(spark, path: str) -> DataFrame:
-    """Read with a bounded retry: a concurrent rebuilder's retire→promote
-    window (two renames, microseconds) can make the path vanish between a
-    freshness check and the read."""
-    import time
-
-    for _ in range(100):
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            if os.path.exists(path):
-                raise
-            time.sleep(0.05)
-    return spark.read.parquet(path)
-
-
-def _retire_and_promote(
-    staging: str,
-    path: str,
-    current_files: dict | None = None,
-    components: tuple[str, ...] = (),
-) -> None:
-    """Replace a live (stale) index with a fully-built staging copy.  The
-    retire rename must not assume it wins — a concurrent rebuilder over the
-    same stale manifest may have retired/re-promoted already; the loser
-    falls through to `promote`, which discards its equivalent copy if a
-    winner's is live (queries/incremental.py contract).  ``current_files``
-    re-checks freshness immediately BEFORE retiring: if a concurrent
-    builder already landed a copy whose manifest matches the current
-    corpus, retiring it would yank files out from under the winner's
-    in-flight scans (the race found by tools/race_probe_maintained.py) —
-    discard our equivalent staging instead."""
-    import shutil
-
-    if current_files is not None and os.path.exists(path):
-        man = _read_manifest(path)
-        if _manifest_is_current(man, current_files) and all(
-            os.path.exists(os.path.join(path, c)) for c in components
-        ):
-            # current AND complete (``components`` guards the detected-
-            # partial rebuild: its broken copy also carries a matching
-            # manifest and MUST still be replaced)
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-    if os.path.exists(path):
-        tomb = _staging_path(path) + ".stale"
-        try:
-            os.rename(path, tomb)
-        except OSError:
-            tomb = None  # concurrent retire won; nothing of ours to reap
-        _promote(staging, path)
-        if tomb is not None:
-            shutil.rmtree(tomb, ignore_errors=True)
-    else:
-        _promote(staging, path)
 
 
 def load_or_build_srp_index(
@@ -1292,33 +1203,25 @@ def load_or_build_srp_index(
     the corpus grows.  The registered parity queries pass an explicit 4 to
     match their fixed oracles."""
     from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
 
     if n_bits is None:
-        n_bits = auto_bits(_corpus_rows(sf_dir))
-    path = srp_index_path(sf_dir, dim, n_tables, n_bits)
-    current = _corpus_files(sf_dir)
-    man = _read_manifest(path)
-    if not _manifest_is_current(man, current):
-        _sweep_stale_staging()
-        emb = _with_src(load_table(spark, sf_dir, "embeddings"))
+        n_bits = auto_bits(ix.corpus_rows(sf_dir))
+    t = _srp_table(sf_dir, dim, n_tables, n_bits)
+
+    def build(staging: str) -> dict:
+        emb = ix.with_src(load_table(spark, sf_dir, "embeddings"))
         # Materialize the signature pass once: the range partitioner's
         # sampling job would otherwise execute the (compute-heavy)
         # signature expressions twice.
         b = srp_buckets(
-            emb, dim, n_tables, n_bits, id_col, vec_col, passthrough=(_SRC,)
+            emb, dim, n_tables, n_bits, id_col, vec_col, passthrough=(ix.SRC,)
         ).persist()
-        os.makedirs(_index_root(), exist_ok=True)
-        # Stage + atomic promotion: a crash mid-build must never leave a
-        # directory that existence/manifest checks mistake for an index.
-        staging = _staging_path(path)
-        write_sorted_partitioned(b, staging, _SRC, ["t", "bucket"], files=4)
+        t.write(staging, "", b)
         b.unpersist()
-        _write_manifest(
-            staging, {**_compact_manifest(man, current), "n_bits": n_bits}
-        )
-        _retire_and_promote(staging, path, current)
-    return _serve_retry(spark, path).select(id_col, vec_col, "t", "bucket")
+        return {"n_bits": n_bits}
+
+    t.load_or_build(build)
+    return ix.serve(spark, t.path).select(id_col, vec_col, "t", "bucket")
 
 
 def refresh_srp_index(
@@ -1331,86 +1234,56 @@ def refresh_srp_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Incremental index maintenance: re-sign ONLY the corpus part files
-    added or rewritten since the last manifest and dynamic-partition-
-    overwrite their ``src=`` partitions — cost is O(ingested files), never
-    O(corpus).  Signatures are per-vector, so the refreshed table is
-    bit-identical to a fresh full build by construction.  Removed part
-    files (or a never-built index) fall back to the full staged build.
+    added or rewritten since the last manifest and overwrite their
+    ``src=`` partitions — cost is O(ingested files), never O(corpus).
+    Signatures are per-vector, so the refreshed table is bit-identical to a
+    fresh full build by construction.  Removed part files (or a never-built
+    index) fall back to the full staged build.
 
     ``n_bits=None`` keeps the EXISTING index's bit width (from its
     manifest): signatures across partitions must come from one plane
     family — resizing for corpus growth is a full re-signature by nature
     and happens on the next full (re)build."""
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
-
-    man = None
     if n_bits is None:
         # peer at the auto-sized path first; fall back to auto sizing when
         # the index was never built (full build below picks the same width)
-        auto = auto_bits(_corpus_rows(sf_dir))
-        man = _read_manifest(srp_index_path(sf_dir, dim, n_tables, auto))
+        auto = auto_bits(ix.corpus_rows(sf_dir))
+        man = ix.read_manifest(srp_index_path(sf_dir, dim, n_tables, auto))
         n_bits = (man or {}).get("n_bits", auto)
-    path = srp_index_path(sf_dir, dim, n_tables, n_bits)
-    man = _read_manifest(path)
-    current = _corpus_files(sf_dir)
-    if man is None:
-        return load_or_build_srp_index(
-            spark, sf_dir, dim, n_tables, n_bits, id_col, vec_col
-        )
-    added, changed, removed = _manifest_diff(man, current)
-    if removed:
-        return load_or_build_srp_index(
-            spark, sf_dir, dim, n_tables, n_bits, id_col, vec_col
-        )
-    if added or changed:
-        paths = _corpus_file_paths(sf_dir, "embeddings", added + changed)
-        emb = _with_src(spark.read.parquet(*paths))
+    t = _srp_table(sf_dir, dim, n_tables, n_bits)
+
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.removed:
+            return None
+        emb = ix.with_src(spark.read.parquet(*t.file_paths(d.stale)))
         b = srp_buckets(
-            emb, dim, n_tables, n_bits, id_col, vec_col, passthrough=(_SRC,)
+            emb, dim, n_tables, n_bits, id_col, vec_col, passthrough=(ix.SRC,)
         )
-        write_sorted_partitioned(
-            b, path, _SRC, ["t", "bucket"], files=4, dynamic=True
-        )
-        _write_manifest(path, {**_compact_manifest(man, current), "n_bits": n_bits})
-    return _serve_retry(spark, path).select(id_col, vec_col, "t", "bucket")
+        t.write(t.path, "", b, d.stale)
+        return {"n_bits": n_bits}
 
-
-def _build_ivf(spark, sf_dir, num_centroids, id_col, vec_col, path, current):
-    from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
-
-    _sweep_stale_staging()
-    emb = _with_src(load_table(spark, sf_dir, "embeddings"))
-    centroids = emb.drop(_SRC).orderBy(id_col).limit(num_centroids)
-    # persist: the range partitioner's sampling job would otherwise run the
-    # assignment scoring pass a second time.  Both tables build under one
-    # staging dir promoted atomically.
-    assigned = assign_centroids(
-        emb, centroids, id_col, vec_col, passthrough=(_SRC,)
-    ).persist()
-    os.makedirs(_index_root(), exist_ok=True)
-    staging = _staging_path(path)
-    os.makedirs(staging, exist_ok=True)
-    write_sorted_partitioned(
-        assigned, os.path.join(staging, "assignments"), _SRC,
-        ["centroid_id"], files=4,
+    t.refresh(
+        step,
+        lambda: load_or_build_srp_index(
+            spark, sf_dir, dim, n_tables, n_bits, id_col, vec_col
+        ),
     )
-    assigned.unpersist()
-    cent_rows = centroids.coalesce(1)
-    cent_rows.write.mode("overwrite").parquet(os.path.join(staging, "centroids"))
-    stats = spark.read.parquet(os.path.join(staging, "centroids")).agg(
-        F.max(id_col), F.count(F.lit(1))
-    ).first()
-    _write_manifest(
-        staging,
-        {
-            **_compact_manifest(_read_manifest(path), current),
-            "num_centroids": num_centroids,
-            "max_centroid_id": None if stats[0] is None else int(stats[0]),
-            "n_centroids_built": int(stats[1]),
-        },
+    return ix.serve(spark, t.path).select(id_col, vec_col, "t", "bucket")
+
+
+def _ivf_table(sf_dir: str, num_centroids: int) -> ix.SrcTable:
+    return ix.SrcTable(
+        ivf_index_path(sf_dir, num_centroids),
+        sf_dir,
+        "embeddings",
+        {"assignments": (("centroid_id",), 4)},
+        flat=("centroids",),
     )
-    _retire_and_promote(staging, path, current, ("assignments", "centroids"))
+
+
+def _serve_ivf(spark, path: str, id_col: str, vec_col: str):
+    a = ix.serve(spark, path, "assignments").select(id_col, vec_col, "centroid_id")
+    return a, ix.serve(spark, path, "centroids")
 
 
 def load_or_build_ivf_index(
@@ -1426,17 +1299,33 @@ def load_or_build_ivf_index(
     without :func:`refresh_ivf_index`); assignments are src-partitioned +
     sorted on centroid_id so a probe of a few lists prunes most files via
     footer stats."""
-    path = ivf_index_path(sf_dir, num_centroids)
-    apath = os.path.join(path, "assignments")
-    cpath = os.path.join(path, "centroids")
-    current = _corpus_files(sf_dir)
-    man = _read_manifest(path)
-    if not _manifest_is_current(man, current) or not (
-        os.path.exists(apath) and os.path.exists(cpath)
-    ):
-        _build_ivf(spark, sf_dir, num_centroids, id_col, vec_col, path, current)
-    a = _serve_retry(spark, apath).select(id_col, vec_col, "centroid_id")
-    return a, spark.read.parquet(cpath)
+    from olap_sus_spark.catalog import load_table
+
+    t = _ivf_table(sf_dir, num_centroids)
+
+    def build(staging: str) -> dict:
+        emb = ix.with_src(load_table(spark, sf_dir, "embeddings"))
+        centroids = emb.drop(ix.SRC).orderBy(id_col).limit(num_centroids)
+        # persist: the range partitioner's sampling job would otherwise run
+        # the assignment scoring pass a second time.
+        assigned = assign_centroids(
+            emb, centroids, id_col, vec_col, passthrough=(ix.SRC,)
+        ).persist()
+        t.write(staging, "assignments", assigned)
+        assigned.unpersist()
+        cpath = os.path.join(staging, "centroids")
+        centroids.coalesce(1).write.mode("overwrite").parquet(cpath)
+        stats = spark.read.parquet(cpath).agg(
+            F.max(id_col), F.count(F.lit(1))
+        ).first()
+        return {
+            "num_centroids": num_centroids,
+            "max_centroid_id": None if stats[0] is None else int(stats[0]),
+            "n_centroids_built": int(stats[1]),
+        }
+
+    t.load_or_build(build)
+    return _serve_ivf(spark, t.path, id_col, vec_col)
 
 
 def refresh_ivf_index(
@@ -1456,38 +1345,29 @@ def refresh_ivf_index(
     range, rewrites/removals of old files, or a short codebook all fall
     back to the full rebuild — the index must never diverge from what a
     fresh build would produce."""
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
+    t = _ivf_table(sf_dir, num_centroids)
 
-    path = ivf_index_path(sf_dir, num_centroids)
-    apath = os.path.join(path, "assignments")
-    cpath = os.path.join(path, "centroids")
-    man = _read_manifest(path)
-    current = _corpus_files(sf_dir)
-    if man is None or not (os.path.exists(apath) and os.path.exists(cpath)):
-        return load_or_build_ivf_index(spark, sf_dir, num_centroids, id_col, vec_col)
-    added, changed, removed = _manifest_diff(man, current)
-    if changed or removed or man.get("n_centroids_built", 0) < num_centroids:
-        return load_or_build_ivf_index(spark, sf_dir, num_centroids, id_col, vec_col)
-    if added:
-        paths = _corpus_file_paths(sf_dir, "embeddings", added)
-        emb = _with_src(spark.read.parquet(*paths))
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.changed or d.removed or man.get("n_centroids_built", 0) < num_centroids:
+            return None
+        emb = ix.with_src(spark.read.parquet(*t.file_paths(d.added)))
         min_new = emb.agg(F.min(id_col)).first()[0]
         if min_new is not None and min_new <= man["max_centroid_id"]:
             # appended ids intrude into the deterministic codebook: the
             # centroids themselves change — full rebuild.
-            return load_or_build_ivf_index(
-                spark, sf_dir, num_centroids, id_col, vec_col
-            )
-        centroids = spark.read.parquet(cpath)
+            return None
+        centroids = spark.read.parquet(os.path.join(t.path, "centroids"))
         assigned = assign_centroids(
-            emb, centroids, id_col, vec_col, passthrough=(_SRC,)
+            emb, centroids, id_col, vec_col, passthrough=(ix.SRC,)
         )
-        write_sorted_partitioned(
-            assigned, apath, _SRC, ["centroid_id"], files=4, dynamic=True
-        )
-        _write_manifest(path, {**man, **_compact_manifest(man, current)})
-    a = _serve_retry(spark, apath).select(id_col, vec_col, "centroid_id")
-    return a, spark.read.parquet(cpath)
+        t.write(t.path, "assignments", assigned, d.added)
+        return {}
+
+    t.refresh(
+        step,
+        lambda: load_or_build_ivf_index(spark, sf_dir, num_centroids, id_col, vec_col),
+    )
+    return _serve_ivf(spark, t.path, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1522,47 +1402,24 @@ def semantic_index_path(sf_dir: str, cell_target: int, threshold: float) -> str:
         f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
         f"|sem|{cell_target}|{threshold}".encode()
     ).hexdigest()[:16]
-    return os.path.join(_index_root(), f"sem_{key}")
+    return os.path.join(ix.index_root(), f"sem_{key}")
 
 
-def _build_semantic(spark, sf_dir, cell_target, threshold, path, current,
-                    id_col="vec_id", vec_col="embedding"):
-    from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
+def _sem_table(
+    sf_dir: str, cell_target: int, threshold: float, id_col: str
+) -> ix.SrcTable:
+    return ix.SrcTable(
+        semantic_index_path(sf_dir, cell_target, threshold),
+        sf_dir,
+        "embeddings",
+        {"assignments": (("centroid_id",), 4), "verdicts": ((id_col,), 4)},
+        flat=("codebook",),
+    )
 
-    _sweep_stale_staging()
-    emb = _with_src(load_table(spark, sf_dir, "embeddings"))
-    cb = semantic_codebook(
-        emb.drop(_SRC), cell_target, id_col=id_col, vec_col=vec_col
-    )
-    cells = semantic_cells(
-        emb, cell_target, id_col=id_col, vec_col=vec_col,
-        codebook=cb, passthrough=(_SRC,),
-    )
-    verdicts = semantic_dedup(cells, threshold, id_col, passthrough=(_SRC,))
-    os.makedirs(_index_root(), exist_ok=True)
-    staging = _staging_path(path)
-    os.makedirs(staging, exist_ok=True)
-    write_sorted_partitioned(
-        cells.select(id_col, vec_col, "centroid_id", _SRC),
-        os.path.join(staging, "assignments"), _SRC, ["centroid_id"], files=4,
-    )
-    write_sorted_partitioned(
-        verdicts, os.path.join(staging, "verdicts"), _SRC, [id_col], files=4,
-    )
-    cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "codebook"))
-    max_id = emb.agg(F.max(id_col)).first()[0]
-    _write_manifest(
-        staging,
-        {
-            **_compact_manifest(_read_manifest(path), current),
-            "cell_target": cell_target,
-            "threshold": threshold,
-            "max_vec_id": None if max_id is None else int(max_id),
-        },
-    )
-    _retire_and_promote(
-        staging, path, current, ("assignments", "verdicts", "codebook")
+
+def _serve_verdicts(spark, path: str, id_col: str) -> DataFrame:
+    return ix.serve(spark, path, "verdicts").select(
+        id_col, "centroid_id", "is_kept", "dup_of", "dup_cosine"
     )
 
 
@@ -1579,19 +1436,34 @@ def load_or_build_semantic_index(
     and persisting the three index components on first use.  Staleness via
     the corpus manifest — a corpus change without :func:`
     refresh_semantic_index` triggers the safe full rebuild."""
-    path = semantic_index_path(sf_dir, cell_target, threshold)
-    current = _corpus_files(sf_dir)
-    man = _read_manifest(path)
-    if not _manifest_is_current(man, current) or not all(
-        os.path.exists(os.path.join(path, c))
-        for c in ("assignments", "verdicts", "codebook")
-    ):
-        _build_semantic(
-            spark, sf_dir, cell_target, threshold, path, current, id_col, vec_col
+    from olap_sus_spark.catalog import load_table
+
+    t = _sem_table(sf_dir, cell_target, threshold, id_col)
+
+    def build(staging: str) -> dict:
+        emb = ix.with_src(load_table(spark, sf_dir, "embeddings"))
+        cb = semantic_codebook(
+            emb.drop(ix.SRC), cell_target, id_col=id_col, vec_col=vec_col
         )
-    return _serve_retry(spark, os.path.join(path, "verdicts")).select(
-        id_col, "centroid_id", "is_kept", "dup_of", "dup_cosine"
-    )
+        cells = semantic_cells(
+            emb, cell_target, id_col=id_col, vec_col=vec_col,
+            codebook=cb, passthrough=(ix.SRC,),
+        )
+        verdicts = semantic_dedup(cells, threshold, id_col, passthrough=(ix.SRC,))
+        t.write(
+            staging, "assignments", cells.select(id_col, vec_col, "centroid_id", ix.SRC)
+        )
+        t.write(staging, "verdicts", verdicts)
+        cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "codebook"))
+        max_id = emb.agg(F.max(id_col)).first()[0]
+        return {
+            "cell_target": cell_target,
+            "threshold": threshold,
+            "max_vec_id": None if max_id is None else int(max_id),
+        }
+
+    t.load_or_build(build)
+    return _serve_verdicts(spark, t.path, id_col)
 
 
 def _semantic_verdicts(
@@ -1671,50 +1543,28 @@ def refresh_semantic_index(
     that), and re-clustering is the scheduled full-rebuild path — the same
     trade every production SemDeDup deployment makes (re-embedding/
     re-clustering epochs, incremental verdicts in between)."""
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
+    t = _sem_table(sf_dir, cell_target, threshold, id_col)
 
-    path = semantic_index_path(sf_dir, cell_target, threshold)
-    apath = os.path.join(path, "assignments")
-    vpath = os.path.join(path, "verdicts")
-    cpath = os.path.join(path, "codebook")
-    man = _read_manifest(path)
-    current = _corpus_files(sf_dir)
-    if man is None or not all(os.path.exists(p) for p in (apath, vpath, cpath)):
-        return load_or_build_semantic_index(
-            spark, sf_dir, cell_target, threshold, id_col, vec_col
-        )
-    added, changed, removed = _manifest_diff(man, current)
-    if removed or (changed and added):
-        return load_or_build_semantic_index(
-            spark, sf_dir, cell_target, threshold, id_col, vec_col
-        )
-    if changed:
-        out = _semantic_purge_refresh(
-            spark, sf_dir, path, man, current, changed,
-            threshold, id_col, vec_col,
-        )
-        if out is None:  # not a pure removal — safe full rebuild
-            return load_or_build_semantic_index(
-                spark, sf_dir, cell_target, threshold, id_col, vec_col
+    def step(man: dict, d: ix.Diff) -> dict | None:
+        if d.removed or (d.changed and d.added):
+            return None
+        if d.changed:  # None unless a pure removal — safe full rebuild
+            return _semantic_purge_refresh(
+                spark, t, man, d.changed, threshold, id_col, vec_col
             )
-        return out
-    if added:
-        paths = _corpus_file_paths(sf_dir, "embeddings", added)
-        batch = _with_src(spark.read.parquet(*paths))
+        batch = ix.with_src(spark.read.parquet(*t.file_paths(d.added)))
         min_new = batch.agg(F.min(id_col)).first()[0]
         max_old = man.get("max_vec_id")
         if min_new is not None and max_old is not None and min_new <= max_old:
             # an interleaved id could become a smaller-id cell-mate of an
             # EXISTING vector and flip its verdict — full rebuild.
-            return load_or_build_semantic_index(
-                spark, sf_dir, cell_target, threshold, id_col, vec_col
-            )
-        cb = spark.read.parquet(cpath)
+            return None
+        cb = spark.read.parquet(os.path.join(t.path, "codebook"))
         bcells = semantic_cells(
             batch, cell_target, id_col=id_col, vec_col=vec_col,
-            codebook=cb, passthrough=(_SRC,),
+            codebook=cb, passthrough=(ix.SRC,),
         )
-        old = _serve_retry(spark, apath).select(
+        old = ix.serve(spark, t.path, "assignments").select(
             F.col(id_col).alias("dup_of"),
             F.col(vec_col).cast("array<double>").alias("av"),
             "centroid_id",
@@ -1722,45 +1572,41 @@ def refresh_semantic_index(
         batch_a = bcells.select(
             "centroid_id", F.col(id_col).alias("dup_of"), F.col("v").alias("av")
         )
-        b = bcells.select("centroid_id", id_col, F.col("v").alias("bv"), _SRC)
+        b = bcells.select("centroid_id", id_col, F.col("v").alias("bv"), ix.SRC)
         verdicts_new = _semantic_verdicts(
-            b, old.unionByName(batch_a), threshold, id_col, extra=(_SRC,)
+            b, old.unionByName(batch_a), threshold, id_col, extra=(ix.SRC,)
         )
-        write_sorted_partitioned(
-            bcells.select(id_col, vec_col, "centroid_id", _SRC),
-            apath, _SRC, ["centroid_id"], files=4, dynamic=True,
+        t.write(
+            t.path, "assignments",
+            bcells.select(id_col, vec_col, "centroid_id", ix.SRC), d.added,
         )
-        write_sorted_partitioned(
-            verdicts_new, vpath, _SRC, [id_col], files=4, dynamic=True
-        )
+        t.write(t.path, "verdicts", verdicts_new, d.added)
         new_max = batch.agg(F.max(id_col)).first()[0]
-        _write_manifest(
-            path,
-            {
-                **man,
-                **_compact_manifest(man, current),
-                "max_vec_id": max(
-                    x for x in (man.get("max_vec_id"), None if new_max is None else int(new_max))
-                    if x is not None
-                ),
-            },
-        )
-    return _serve_retry(spark, vpath).select(
-        id_col, "centroid_id", "is_kept", "dup_of", "dup_cosine"
+        return {
+            "max_vec_id": max(
+                x for x in (max_old, None if new_max is None else int(new_max))
+                if x is not None
+            ),
+        }
+
+    t.refresh(
+        step,
+        lambda: load_or_build_semantic_index(
+            spark, sf_dir, cell_target, threshold, id_col, vec_col
+        ),
     )
+    return _serve_verdicts(spark, t.path, id_col)
 
 
 def _semantic_purge_refresh(
     spark,
-    sf_dir: str,
-    path: str,
+    t: ix.SrcTable,
     man: dict,
-    current: dict,
     changed: list[str],
     threshold: float,
     id_col: str,
     vec_col: str,
-) -> DataFrame | None:
+) -> dict | None:
     """O(affected) RTBF for the semantic index — the family's analogue of
     the gram chain's un-scrub.
 
@@ -1776,73 +1622,54 @@ def _semantic_purge_refresh(
     partitions (survivor cells are frozen-codebook assignments —
     unchanged); (3) re-verdicts exactly the ``dup_of``-orphaned rows
     against surviving smaller-id cell-mates; (4) rewrites only the verdict
-    partitions holding purged or orphaned rows.  Cost: O(changed files +
-    orphans · cell), never O(corpus).
+    partitions holding purged or orphaned rows.  A fully-purged source
+    writes zero rows, so :meth:`SrcTable.write` drops its partitions.
+    Cost: O(changed files + orphans · cell), never O(corpus).
     """
     from olap_sus_spark.operators.purge import _drop, _match
-    from olap_sus_spark.sources.sinks import write_sorted_partitioned
 
-    apath = os.path.join(path, "assignments")
-    vpath = os.path.join(path, "verdicts")
-
-    new_files = _corpus_file_paths(sf_dir, "embeddings", changed)
-    new_rows = _with_src(spark.read.parquet(*new_files)).select(
-        F.col(id_col), F.col(vec_col).alias("_nv"), _SRC
+    new_rows = ix.with_src(spark.read.parquet(*t.file_paths(changed))).select(
+        F.col(id_col), F.col(vec_col).alias("_nv"), ix.SRC
     )
     old_changed = (
-        _serve_retry(spark, apath)
-        .filter(F.col(_SRC).isin(list(changed)))
-        .select(id_col, vec_col, "centroid_id", _SRC)
+        ix.serve(spark, t.path, "assignments")
+        .filter(F.col(ix.SRC).isin(list(changed)))
+        .select(id_col, vec_col, "centroid_id", ix.SRC)
         .localCheckpoint(eager=True)  # materialize BEFORE overwriting below
     )
-    j = old_changed.join(new_rows, [id_col, _SRC], "left")
+    j = old_changed.join(new_rows, [id_col, ix.SRC], "left")
     survivors = j.filter(F.col("_nv").isNotNull())
     if survivors.filter(F.col("_nv") != F.col(vec_col)).count() > 0:
         return None  # surviving vector mutated — not a purge
     pids = [r[0] for r in j.filter(F.col("_nv").isNull()).select(id_col).collect()]
     if (
         new_rows.join(
-            old_changed.select(id_col, _SRC), [id_col, _SRC], "left_anti"
+            old_changed.select(id_col, ix.SRC), [id_col, ix.SRC], "left_anti"
         ).count()
         > 0
     ):
         return None  # a changed file gained rows — not a purge
     if not pids:
-        _write_manifest(path, {**man, **_compact_manifest(man, current)})
-        return _serve_retry(spark, vpath).select(
-            id_col, "centroid_id", "is_kept", "dup_of", "dup_cosine"
-        )
+        return {}
 
-    # (2) assignments: drop purged rows, rewrite the changed partitions only.
-    # A fully-purged src writes ZERO rows — dynamic overwrite would leave its
-    # stale partition behind (the orphaned-partition class ADVICE r08 found
-    # in gramfreq/inverted), so drop those partitions explicitly.
+    # (2) assignments: drop purged rows, rewrite the changed partitions only
     surv_assign = _drop(old_changed, id_col, pids).select(
-        id_col, vec_col, "centroid_id", _SRC
+        id_col, vec_col, "centroid_id", ix.SRC
     )
-    live_srcs = {r[0] for r in surv_assign.select(_SRC).distinct().collect()}
-    emptied = set(changed) - live_srcs
-    if emptied:
-        from olap_sus_spark.operators.index_store import drop_src_partitions
-
-        drop_src_partitions(apath, emptied)
-        drop_src_partitions(vpath, emptied)
-    write_sorted_partitioned(
-        surv_assign, apath, _SRC, ["centroid_id"], files=4, dynamic=True,
-    )
+    t.write(t.path, "assignments", surv_assign, changed)
 
     # (3) orphans: surviving rows whose recorded dup_of was purged
-    verd = _serve_retry(spark, vpath)
+    verd = ix.serve(spark, t.path, "verdicts")
     orphans = (
         _drop(_match(verd, "dup_of", pids), id_col, pids)
-        .select(id_col, _SRC)
+        .select(id_col, ix.SRC)
         .localCheckpoint(eager=True)
     )
-    orphan_srcs = [r[0] for r in orphans.select(_SRC).distinct().collect()]
+    orphan_srcs = [r[0] for r in orphans.select(ix.SRC).distinct().collect()]
     parts = sorted(set(changed) | set(orphan_srcs))
 
     # candidates = ALL surviving assignments (post-rewrite), cell-bounded
-    alive = _serve_retry(spark, apath)
+    alive = ix.serve(spark, t.path, "assignments")
     cand = alive.select(
         "centroid_id",
         F.col(id_col).alias("dup_of"),
@@ -1852,25 +1679,20 @@ def _semantic_purge_refresh(
         alive.join(orphans.select(id_col), id_col)
         .select(
             "centroid_id", id_col, F.col(vec_col).cast("array<double>").alias("bv"),
-            _SRC,
+            ix.SRC,
         )
     )
-    new_verd = _semantic_verdicts(b, cand, threshold, id_col, extra=(_SRC,)).select(
-        id_col, "centroid_id", _SRC, "is_kept", "dup_of", "dup_cosine"
+    new_verd = _semantic_verdicts(b, cand, threshold, id_col, extra=(ix.SRC,)).select(
+        id_col, "centroid_id", ix.SRC, "is_kept", "dup_of", "dup_cosine"
     )
 
     # (4) rewrite only the touched verdict partitions: purged rows out,
     # orphan verdicts replaced, everything else carried through unchanged
     old_parts = (
-        verd.filter(F.col(_SRC).isin(parts)).localCheckpoint(eager=True)
+        verd.filter(F.col(ix.SRC).isin(parts)).localCheckpoint(eager=True)
     )
     carried = _drop(old_parts, id_col, pids).join(
         orphans.select(id_col), id_col, "left_anti"
-    ).select(id_col, "centroid_id", _SRC, "is_kept", "dup_of", "dup_cosine")
-    write_sorted_partitioned(
-        carried.unionByName(new_verd), vpath, _SRC, [id_col], files=4, dynamic=True
-    )
-    _write_manifest(path, {**man, **_compact_manifest(man, current)})
-    return _serve_retry(spark, vpath).select(
-        id_col, "centroid_id", "is_kept", "dup_of", "dup_cosine"
-    )
+    ).select(id_col, "centroid_id", ix.SRC, "is_kept", "dup_of", "dup_cosine")
+    t.write(t.path, "verdicts", carried.unionByName(new_verd), parts)
+    return {}

@@ -782,8 +782,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-training pipeline materializes.
 
     Serving shape: the cluster map is a MAINTAINED index table
-    (operators/dedup.py:load_or_build_cluster_index — corpus-stamped key,
-    staged build, atomic promotion, same contract as the ANN indexes), so
+    (operators/dedup.py:load_or_build_cluster_index — a per-file table on
+    operators/index_store.SrcTable, like the ANN indexes), so
     this query is one equi-join + one window over cluster_id.  Re-running
     star-edge + connected-components per call — the single most expensive
     computation in the suite — would re-cluster the whole corpus on every
@@ -1669,13 +1669,13 @@ def _eval_docs_of(sf_dir: str):
     the scan, BEFORE spread_compute's potential repartition (input_file_name
     dies at an exchange)."""
     from olap_sus_spark.catalog import load_table, spread_compute
-    from olap_sus_spark.operators.gramfreq import _with_src
+    from olap_sus_spark.operators.index_store import with_src
 
     def docs_of(spark: SparkSession, paths: list[str] | None):
         if paths is None:
-            docs = _with_src(load_table(spark, sf_dir, "documents"))
+            docs = with_src(load_table(spark, sf_dir, "documents"))
         else:
-            docs = _with_src(spark.read.parquet(*paths))
+            docs = with_src(spark.read.parquet(*paths))
         return spread_compute(docs.filter(F.col("doc_id") % 97 == 0))
 
     return docs_of

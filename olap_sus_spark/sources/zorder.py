@@ -15,10 +15,9 @@ expressions (whole-stage codegen, no UDF), the layout write is
 ``repartitionByRange`` on z (globally ordered files) + ``sortWithinPartitions``
 (ordered row groups inside each file).
 
-The maintained z-layout copy follows the index-store contract
-(location-keyed path + corpus-stamp marker, staged build + atomic
-promotion, loser-discards race rule) so serving never rebuilds and a
-changed corpus never serves stale bytes.
+The maintained z-layout copy follows the index-store lifecycle
+(location-keyed path + corpus-stamp marker, staged build + publish) so
+serving never rebuilds and a changed corpus never serves stale bytes.
 """
 
 from __future__ import annotations
@@ -114,55 +113,23 @@ def load_or_build_zorder(
     bits: int = 16,
 ) -> DataFrame:
     """Serve the z-ordered copy of ``table`` clustered on (colx, coly),
-    building + promoting it on first use (stamp-marker staleness, staged
-    build, retire-then-promote with the component-aware pre-retire
-    freshness re-check — the race rules every maintained table follows)."""
-    import shutil
-    import time
-
+    building + publishing it on first use or a stale stamp
+    (operators/maintained.load_or_build_stamped)."""
     from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.operators.index_store import (
-        corpus_stamp,
-        index_root,
-        promote,
-        staging_path,
-        sweep_stale_staging,
-    )
-    from olap_sus_spark.operators.maintained import read_marker, write_marker
+    from olap_sus_spark.operators.index_store import corpus_stamp
+    from olap_sus_spark.operators.maintained import load_or_build_stamped
 
-    path = zorder_layout_path(sf_dir, table, colx, coly)
-    stamp = corpus_stamp(sf_dir, table)
-    if not os.path.exists(path) or read_marker(path) != stamp:
-        sweep_stale_staging()
-        os.makedirs(index_root(), exist_ok=True)
-        staging = staging_path(path)
+    def write(staging: str) -> None:
         zorder_frame(load_table(spark, sf_dir, table), colx, coly, bits).write.mode(
             "overwrite"
         ).parquet(staging)
-        write_marker(staging, stamp)
-        if os.path.exists(path) and read_marker(path) == stamp:
-            # concurrent builder landed a FRESH copy mid-build: retiring it
-            # would yank files under its readers — ours is equivalent
-            shutil.rmtree(staging, ignore_errors=True)
-        elif os.path.exists(path):
-            tomb = staging_path(path) + ".stale"
-            try:
-                os.rename(path, tomb)
-            except OSError:
-                tomb = None
-            promote(staging, path)
-            if tomb is not None:
-                shutil.rmtree(tomb, ignore_errors=True)
-        else:
-            promote(staging, path)
-    for _ in range(100):
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            if os.path.exists(path):
-                raise
-            time.sleep(0.05)
-    return spark.read.parquet(path)
+
+    return load_or_build_stamped(
+        spark,
+        zorder_layout_path(sf_dir, table, colx, coly),
+        corpus_stamp(sf_dir, table),
+        write,
+    )
 
 
 # ---------------------------------------------------------------------------

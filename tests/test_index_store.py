@@ -89,3 +89,126 @@ def test_ivf_loader_restores_concurrently_completed_index(spark, tmp_path, monke
     # no quarantine/staging debris left behind
     leftovers = [e for e in os.listdir(tmp_path) if ".__build__" in e]
     assert leftovers == []
+
+
+# ---------------------------------------------------------------------------
+# The shared lifecycle routines: publish, the bounded-retry serve, and the
+# per-file driver's empty-component read.
+# ---------------------------------------------------------------------------
+def _dir_with(path: str, text: str) -> str:
+    os.makedirs(path)
+    with open(os.path.join(path, "marker"), "w") as f:
+        f.write(text)
+    return path
+
+
+def _read(path: str) -> str:
+    with open(os.path.join(path, "marker")) as f:
+        return f.read()
+
+
+def _debris(root) -> list[str]:
+    return [e for e in os.listdir(root) if ".__build__" in e or e.endswith(".stale")]
+
+
+def test_publish_keeps_concurrent_winners_current_copy(tmp_path):
+    path = _dir_with(str(tmp_path / "idx"), "winner")
+    staging = _dir_with(ix.staging_path(path), "ours")
+    ix.publish(staging, path, is_current=lambda: True)
+    assert _read(path) == "winner"
+    assert _debris(tmp_path) == []
+
+
+def test_publish_replaces_stale_live_copy_without_debris(tmp_path):
+    path = _dir_with(str(tmp_path / "idx"), "stale")
+    staging = _dir_with(ix.staging_path(path), "fresh")
+    ix.publish(staging, path, is_current=lambda: False)
+    assert _read(path) == "fresh"
+    assert _debris(tmp_path) == []
+
+
+def test_publish_lost_retire_falls_through_to_promote(tmp_path, monkeypatch):
+    """Another retirer moves the live copy between our existence check and
+    our retire rename: the rename fails, and publish still promotes."""
+    path = _dir_with(str(tmp_path / "idx"), "stale")
+    staging = _dir_with(ix.staging_path(path), "fresh")
+    other_tomb = str(tmp_path / "other.stale")
+    real_rename = os.rename
+
+    def racing_rename(src, dst):
+        if src == path and dst.endswith(".stale"):
+            real_rename(path, other_tomb)  # the other retirer wins
+            raise FileNotFoundError(src)
+        real_rename(src, dst)
+
+    monkeypatch.setattr(ix.os, "rename", racing_rename)
+    ix.publish(staging, path)
+    monkeypatch.setattr(ix.os, "rename", real_rename)
+    assert _read(path) == "fresh"
+    assert not os.path.exists(staging)
+    assert not os.path.exists(staging + ".stale")
+    shutil.rmtree(other_tomb)  # the other retirer reaps its own tomb
+    assert _debris(tmp_path) == []
+
+
+class _FakeTime:
+    def __init__(self, on_sleep=None):
+        self.sleeps = 0
+        self.on_sleep = on_sleep
+
+    def sleep(self, _s):
+        self.sleeps += 1
+        if self.on_sleep:
+            self.on_sleep(self.sleeps)
+
+
+def _write_parquet(path: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    pq.write_table(pa.table({"x": [1, 2, 3]}), os.path.join(path, "part-0.parquet"))
+
+
+def test_serve_returns_once_the_path_reappears(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "idx")
+    staged = str(tmp_path / "staged")
+    _write_parquet(staged)
+
+    def promote_on_third_wait(n):  # a concurrent publish lands its rename
+        if n == 3:
+            os.rename(staged, path)
+
+    fake = _FakeTime(promote_on_third_wait)
+    monkeypatch.setattr(ix, "time", fake)
+    assert sorted(r.x for r in ix.serve(spark, path).collect()) == [1, 2, 3]
+    assert fake.sleeps == 3
+
+
+def test_serve_raises_at_once_when_present_but_unreadable(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "idx")
+    os.makedirs(path)
+    with open(os.path.join(path, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    fake = _FakeTime()
+    monkeypatch.setattr(ix, "time", fake)
+    try:
+        ix.serve(spark, path, empty_schema="x bigint").collect()
+    except Exception:
+        pass
+    else:
+        raise AssertionError("an unreadable table must raise")
+    assert fake.sleeps == 0
+
+
+def test_empty_src_component_serves_typed_empty_frame(spark, tmp_path):
+    """Every src= partition of a component dropped (a refresh whose
+    sources all recomputed empty): the read serves a typed empty frame."""
+    path = str(tmp_path / "idx")
+    t = ix.SrcTable(path, str(tmp_path / "sf"), "documents", {"grams": (("gram",), 1)})
+    frame = spark.createDataFrame([("a.parquet", 7, 1)], "src string, gram bigint, n_docs bigint")
+    t.write(path, "grams", frame)
+    t.write(path, "grams", frame.filter("false"), ["a.parquet"])
+    out = ix.serve(spark, path, "grams", "gram bigint, n_docs bigint")
+    assert out.count() == 0
+    assert out.dtypes == [("gram", "bigint"), ("n_docs", "bigint")]

@@ -17,6 +17,8 @@ import math
 import re
 import struct as _st
 
+import pytest
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -46,6 +48,7 @@ def test_onecall_doubles_bit_exact(spark):
     rnd = random.Random(7)
     vals = [rnd.uniform(-1, 1) * 10 ** rnd.randint(-12, 12) for _ in range(64)]
     vals += [0.0, -0.0, 1.0, -1.0, 5e-324, 1.7976931348623157e308, 0.1, 2.5e-05]
+    vals += [float("nan"), float("inf"), float("-inf")]
     row = spark.range(1).select(lit_doubles(vals).alias("a")).collect()[0]
     assert all(_bits(a) == _bits(v) for a, v in zip(row["a"], vals))
 
@@ -147,6 +150,16 @@ def test_keep_ge_equals_filter_incl_nan_and_boundary(spark):
     want = {key(r) for r in df.filter(F.col("score") >= 0.3).collect()}
     assert got == want
     assert {r[0] for r in got} == {1, 3, 7, 11}
+
+
+def test_keep_ge_rejects_score_not_last(spark):
+    """The last-column contract holds under ``python -O`` too: a ValueError
+    naming the columns, not an assert."""
+    from olap_sus_spark.operators.dedup import keep_ge
+
+    df = spark.createDataFrame([(0.5, 1)], "score double, id_a bigint")
+    with pytest.raises(ValueError, match=r"'score'.*\['score', 'id_a'\]"):
+        keep_ge(df, "score", 0.3)
 
 
 def test_keep_ge_single_fold_in_plan(spark):

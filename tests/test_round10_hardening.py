@@ -212,12 +212,11 @@ def test_scrub_serve_corruption_raises_not_empty(spark, tmp_path, monkeypatch):
 def test_scrub_serve_no_src_dirs_is_valid_empty(spark, tmp_path):
     path = str(tmp_path / "scrubidx")
     os.makedirs(os.path.join(path, "docs"))
-    out = gf._serve_component(
+    out = ix.serve(
         spark,
         path,
         "docs",
         "doc_id bigint, n_tokens int, n_removed int, scrubbed_text string",
-        partitioned=True,
     )
     assert out.count() == 0
 

@@ -17,10 +17,14 @@ Typical use::
 from __future__ import annotations
 
 import posixpath
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from olap_sus_spark import schemas
 from olap_sus_spark.operators import facts as facts_ops
 from olap_sus_spark.operators.dims import ALL_GENERATED
 from olap_sus_spark.operators.transforms import (
@@ -35,8 +39,52 @@ DIM_TABLES = (
     "dim_data", "dim_horario", "dim_demografia", "dim_info_nascimento",
     "dim_municipio", "dim_ocupacao", "dim_causa",
 )
-FACT_TABLES = ("fact_nascimentos", "fact_obitos", "fact_internacoes")
 BRIDGE_TABLE = "ponte_grupo_causas"
+
+
+@dataclass(frozen=True)
+class Dataset:
+    """One landing dataset: its raw→clean ``transform``, the ``build``
+    that turns clean rows + dims into its fact (and, with ``bridge``, the
+    cause-group bridge rows), the fact table it lands in, and that fact's
+    schema for a warehouse that has not ingested it yet."""
+
+    transform: Callable[[DataFrame], DataFrame]
+    build: Callable[[DataFrame, dict[str, DataFrame]], object]
+    fact_table: str
+    bridge: bool
+    empty_schema: StructType
+
+
+# The transforms and builders are looked up at call time, so whatever
+# wraps the module attributes (tracing) sees every call.
+DATASETS = {
+    "sinasc": Dataset(
+        lambda raw: transform_sinasc(raw),
+        lambda clean, dims: facts_ops.build_fact_nascimentos(clean, dims),
+        "fact_nascimentos", False, schemas.FACT_NASCIMENTOS,
+    ),
+    "sim": Dataset(
+        lambda raw: transform_sim(raw),
+        lambda clean, dims: facts_ops.build_fact_obitos(clean, dims),
+        "fact_obitos", True, schemas.FACT_OBITOS,
+    ),
+    "sih": Dataset(
+        lambda raw: transform_sih(raw),
+        lambda clean, dims: facts_ops.build_fact_internacoes(clean, dims),
+        "fact_internacoes", False, schemas.FACT_INTERNACOES,
+    ),
+}
+FACT_TABLES = tuple(d.fact_table for d in DATASETS.values())
+
+
+def get_dataset(name: str) -> Dataset:
+    try:
+        return DATASETS[name]
+    except KeyError:
+        raise ValueError(
+            f"unknown dataset {name!r} (expected one of {sorted(DATASETS)})"
+        ) from None
 
 
 def bootstrap_warehouse(
@@ -81,25 +129,33 @@ def run_ingest(
     per file, this reads the whole partition in one scan and builds one plan.
     Returns the aggregated fact written (for logging/inspection).
     """
+    ds = get_dataset(dataset)
     raw = read_dataset(spark, landing_dir, dataset, date)
-    dims = load_dims(spark, warehouse_dir)
+    return write_day(ds, raw, load_dims(spark, warehouse_dir), warehouse_dir, date)
 
-    if dataset == "sinasc":
-        fact = facts_ops.build_fact_nascimentos(transform_sinasc(raw), dims)
-        sinks.write_fact_partition(fact, warehouse_dir, "fact_nascimentos", date)
-        return fact
-    if dataset == "sim":
-        fact, bridge = facts_ops.build_fact_obitos(transform_sim(raw), dims)
+
+def write_day(
+    ds: Dataset, raw: DataFrame, dims: dict[str, DataFrame], warehouse_dir: str, date: str
+) -> DataFrame:
+    """Transform one day's raw rows, build the fact and write it as the
+    ``dt=<date>`` partition; returns the fact."""
+    fact = ds.build(ds.transform(raw), dims)
+    if ds.bridge:
+        fact, bridge = fact
         # Bridge first (reference order, sim:239 before :402): groups must
         # exist before facts referencing them are visible.
         sinks.append_bridge(bridge, warehouse_dir, BRIDGE_TABLE)
-        sinks.write_fact_partition(fact, warehouse_dir, "fact_obitos", date)
-        return fact
-    if dataset == "sih":
-        fact = facts_ops.build_fact_internacoes(transform_sih(raw), dims)
-        sinks.write_fact_partition(fact, warehouse_dir, "fact_internacoes", date)
-        return fact
-    raise ValueError(f"unknown dataset {dataset!r} (expected 'sinasc', 'sim' or 'sih')")
+    sinks.write_fact_partition(fact, warehouse_dir, ds.fact_table, date)
+    return fact
+
+
+def refresh_aggregates_of(
+    spark: SparkSession, warehouse_dir: str, fact_table: str, dates: list[str]
+) -> None:
+    """Refresh, for ``dates``, every maintained aggregate over ``fact_table``."""
+    for agg, (ft, _, _, _) in AGGREGATES.items():
+        if ft == fact_table:
+            refresh_aggregate(spark, warehouse_dir, agg, dates=dates)
 
 
 def run_backfill(
@@ -147,12 +203,7 @@ def run_backfill(
             ingested.append(day)
         cur += timedelta(days=1)
     if refresh_aggregates and ingested:
-        fact_table = {
-            "sinasc": "fact_nascimentos", "sim": "fact_obitos", "sih": "fact_internacoes",
-        }[dataset]
-        for name, (ft, _, _, _) in AGGREGATES.items():
-            if ft == fact_table:
-                refresh_aggregate(spark, warehouse_dir, name, dates=ingested)
+        refresh_aggregates_of(spark, warehouse_dir, get_dataset(dataset).fact_table, ingested)
     return ingested
 
 
@@ -252,24 +303,23 @@ def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> None:
     'sih' drop) is registered as an empty frame with the declared schema, so
     queries against a fresh warehouse parse and return zero rows instead of
     failing on a missing path."""
-    from olap_sus_spark import schemas
     from olap_sus_spark.sources.sinks import _exists
 
-    empty_schemas = {
-        "fact_nascimentos": schemas.FACT_NASCIMENTOS,
-        "fact_obitos": schemas.FACT_OBITOS,
-        "fact_internacoes": schemas.FACT_INTERNACOES,
-    }
     for t in (*DIM_TABLES, *FACT_TABLES, BRIDGE_TABLE):
-        path = posixpath.join(warehouse_dir, t)
-        if _exists(spark, path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
-        elif t in empty_schemas:
-            # On-disk facts carry the dt= partition column; mirror it.
-            empty = spark.createDataFrame([], empty_schemas[t]).withColumn(
-                "dt", F.lit(None).cast("string")
-            )
-            empty.createOrReplaceTempView(t)
+        if t in FACT_TABLES or _exists(spark, posixpath.join(warehouse_dir, t)):
+            _load(spark, warehouse_dir, t).createOrReplaceTempView(t)
+
+
+def _load(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
+    """Read a warehouse table; a fact with no ingested partition yet reads
+    as a typed empty frame (with the on-disk dt= partition column)."""
+    from olap_sus_spark.sources.sinks import _exists
+
+    path = posixpath.join(warehouse_dir, table)
+    if _exists(spark, path):
+        return spark.read.parquet(path)
+    (schema,) = [d.empty_schema for d in DATASETS.values() if d.fact_table == table]
+    return spark.createDataFrame([], schema).withColumn("dt", F.lit(None).cast("string"))
 
 
 def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:
@@ -280,36 +330,24 @@ def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:
     case-insensitive).  Columns already share names except where the
     reference diverges: dimCausa exposes ``descricao_subcategoria`` /
     ``codigo_cid`` aliases, dimHorario exposes ``tempo``."""
-    from olap_sus_spark import schemas
-    from olap_sus_spark.sources.sinks import _exists
 
-    def _load(t: str):
-        path = posixpath.join(warehouse_dir, t)
-        if _exists(spark, path):
-            return spark.read.parquet(path)
-        empty = {
-            "fact_nascimentos": schemas.FACT_NASCIMENTOS,
-            "fact_obitos": schemas.FACT_OBITOS,
-            "fact_internacoes": schemas.FACT_INTERNACOES,
-        }[t]
-        return spark.createDataFrame([], empty).withColumn("dt", F.lit(None).cast("string"))
-
-    from pyspark.sql import functions as F
+    def load(t: str) -> DataFrame:
+        return _load(spark, warehouse_dir, t)
 
     alias_map = {
-        "factnascimentos": _load("fact_nascimentos"),
-        "factobitos": _load("fact_obitos"),
-        "factinternacoes": _load("fact_internacoes"),
-        "dimdata": _load("dim_data"),
-        "dimhorario": _load("dim_horario").withColumn("tempo", F.col("tempo_str")),
-        "dimmunicipio": _load("dim_municipio"),
-        "dimocupacao": _load("dim_ocupacao"),
-        "dimdemografia": _load("dim_demografia"),
-        "diminfonascimento": _load("dim_info_nascimento"),
-        "dimcausa": _load("dim_causa")
+        "factnascimentos": load("fact_nascimentos"),
+        "factobitos": load("fact_obitos"),
+        "factinternacoes": load("fact_internacoes"),
+        "dimdata": load("dim_data"),
+        "dimhorario": load("dim_horario").withColumn("tempo", F.col("tempo_str")),
+        "dimmunicipio": load("dim_municipio"),
+        "dimocupacao": load("dim_ocupacao"),
+        "dimdemografia": load("dim_demografia"),
+        "diminfonascimento": load("dim_info_nascimento"),
+        "dimcausa": load("dim_causa")
         .withColumn("descricao_subcategoria", F.col("descricao_causa"))
         .withColumn("codigo_cid", F.col("codigo_cid10")),
-        "pontegrupocausas": _load(BRIDGE_TABLE),
+        "pontegrupocausas": load(BRIDGE_TABLE),
     }
     for name, df in alias_map.items():
         df.createOrReplaceTempView(name)

@@ -3,10 +3,12 @@
 Every maintained table the engine serves is one :class:`Spec`: its name,
 where it lives, how to build it, how to refresh it, and its partition
 unit — a corpus part file (``src``, the per-file tables on
-operators/index_store.SrcTable) or a fact month (``mes_dt``, the partial
-tables on operators/maintained.py).  Everything that walks the inventory
-iterates :func:`specs`: the daily close below, ``bench.py``'s build /
-refresh / rebuild timings, and ``tools/race_probe.py``.
+operators/index_store.SrcTable) or a fact month (``mes_dt``, the
+summaries declared as operators/maintained.MonthTable, and the z-ordered
+fact layouts).  Everything that walks the inventory iterates
+:func:`specs`: the daily close below, ``bench.py``'s build / refresh /
+rebuild timings, ``tools/race_probe.py`` (concurrent builders, refreshers
+and readers) and ``tools/steady_state_probe.py`` (N sequential ingests).
 
 Every refresh is idempotent (a month publish or a per-file partition
 rewrite, never-built fallback to a full staged build), so the daily close
@@ -48,6 +50,7 @@ def specs() -> list[Spec]:
     from olap_sus_spark.operators import qualhist as qh
     from olap_sus_spark.operators import similarity as sim
     from olap_sus_spark.operators.index_store import corpus_rows
+    from olap_sus_spark.operators.maintained import MonthTable
     from olap_sus_spark.queries import cms, hist, sketches
     from olap_sus_spark.queries import incremental as inc
     from olap_sus_spark.queries.text_pipeline import augmented_docs, augmented_docs_of
@@ -58,6 +61,12 @@ def specs() -> list[Spec]:
         # the pair-generation index: occupancy-8 signature width, distinct
         # from the ANN probe index's fixed 4 bits
         return sim.auto_bits(corpus_rows(sf), target_bucket=8)
+
+    def month(name: str, table: MonthTable, source: str | None = None) -> Spec:
+        return Spec(
+            name, "mes_dt", source or table.source,
+            table.path, table.load_or_build, table.refresh,
+        )
 
     def zorder(name: str, table: str, x: str, y: str, date: str) -> Spec:
         return Spec(
@@ -135,28 +144,15 @@ def specs() -> list[Spec]:
             gf.load_or_build_gram_scrub,
             lambda s, sf, days: gf.refresh_gram_scrub(s, sf),
         ),
-        Spec(
-            "daily_revenue", "mes_dt", "lineitem", inc.daily_revenue_path,
-            inc.load_or_build_daily_revenue, inc.refresh_daily_revenue,
-        ),
-        Spec(
-            "orderkey_kmv", "mes_dt", "lineitem", sketches.orderkey_kmv_path,
-            sketches.load_or_build_orderkey_kmv, sketches.refresh_orderkey_kmv,
-        ),
-        Spec(
-            "supplier_cms", "mes_dt", "lineitem", cms.supplier_cms_path,
-            cms.load_or_build_supplier_cms, cms.refresh_supplier_cms,
-        ),
-        Spec(
-            "order_hist", "mes_dt", "lineitem", hist.order_hist_path,
-            hist.load_or_build_order_hist, hist.refresh_order_hist,
-        ),
+        month("daily_revenue", inc.DAILY_REVENUE),
+        month("orderkey_kmv", sketches.ORDERKEY_KMV),
+        month("supplier_cms", cms.SUPPLIER_CMS),
+        # stamped on orders; refreshed by the lineitem daily close (an
+        # order and its lineitems land in the same ingest)
+        month("order_hist", hist.ORDER_HIST, source="lineitem"),
         # the fact lake's default layout: re-z-order ONLY the touched months
         zorder("zorder_lineitem", "lineitem", "l_partkey", "l_suppkey", "l_shipdate"),
-        Spec(
-            "user_kmv", "mes_dt", "events", sketches.user_kmv_path,
-            sketches.load_or_build_user_kmv, sketches.refresh_user_kmv,
-        ),
+        month("user_kmv", sketches.USER_KMV),
         zorder("zorder_events", "events", "user_id", "event_id", "ts"),
     ]
 

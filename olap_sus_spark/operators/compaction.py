@@ -4,7 +4,9 @@ Every incremental refresh writes up to 4 range-sorted parquet files per
 touched ``src=`` partition (sources/sinks.write_sorted_partitioned), so a
 long ingest chain accumulates ~4 index files per corpus part file per
 component — ~15 files/ingest across the fleet in the r10 steady-state
-probe (tools/steady_state_probe.py).  ``compact_maintained_indexes``
+probe (tools/steady_state_probe.py, which runs this every 10th ingest
+over the registry's parameters: augmented corpus view, the ANN probe
+index's SRP width and IVF centroids).  ``compact_maintained_indexes``
 rewrites each over-full partition down to one file via
 ``index_store.compact_src_partitions``, preserving each component's sort
 key so footer min/max stats stay selective.  Manifests are untouched (they

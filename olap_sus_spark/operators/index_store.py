@@ -343,14 +343,12 @@ def compact_src_partitions(
     compaction is invisible to staleness and needs no re-stamp.  Staging
     lives OUTSIDE the component root (a sibling dir), so partition
     discovery on the live root never sees half-written copies; each
-    partition is committed by the sinks retire→promote rename pair.  Same
+    partition is committed by :func:`publish`.  Same
     SINGLE-MAINTAINER assumption as :meth:`SrcTable.refresh`: a concurrent
     reader can race one partition's rename window exactly as it can race a
     dynamic partition overwrite.  Rows are
     re-sorted on ``sort_cols`` so the compacted file keeps the range-
     sorted layout (footer min/max stay selective)."""
-    from olap_sus_spark.sources.sinks import _swap_in
-
     out: dict[str, int] = {}
     try:
         entries = list(os.scandir(component_root))
@@ -371,7 +369,7 @@ def compact_src_partitions(
             df = df.sortWithinPartitions(*sort_cols)
         staging = os.path.join(stage_root, e.name)
         df.write.mode("overwrite").parquet(staging)
-        _swap_in(spark, e.path, staging)
+        publish(staging, e.path)
         out[e.name] = n
     shutil.rmtree(stage_root, ignore_errors=True)
     return out
@@ -414,12 +412,13 @@ def sweep_stale_staging(max_age_sec: float = 3600.0) -> None:
 
 
 def promote(staging: str, path: str) -> None:
-    """Commit a staged index build by rename (same crash-safety contract as
-    sources/sinks._swap_in).  The destination is NEVER deleted: it can only
-    exist via a completed atomic rename, so an existing destination means a
-    concurrent builder won the race over the same corpus — deleting it would
-    open a window where a reader finds no index at all.  The loser just
-    discards its (equivalent) staging copy."""
+    """Commit a staged index build by rename: a crash leaves the staging
+    copy or the promoted one, never a half-written table.  The destination
+    is NEVER deleted: it can only exist via a completed atomic rename, so
+    an existing destination means a concurrent builder won the race over
+    the same corpus — deleting it would open a window where a reader finds
+    no index at all.  The loser just discards its (equivalent) staging
+    copy."""
     if os.path.exists(path):  # lost the race — keep the live index untouched
         shutil.rmtree(staging, ignore_errors=True)
         return

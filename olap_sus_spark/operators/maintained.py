@@ -20,11 +20,15 @@ lifecycle):
 
 ``build(months)`` returns the partial rows for the given months
 (None = all) and MUST include a ``mes_dt`` yyyy-MM partition column.
+
+A month-partitioned summary is declared once as a :class:`MonthTable`;
+its path, stamp, serve and refresh all derive from the declaration.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -222,3 +226,48 @@ def refresh_partials(
     finally:
         if not keep:
             shutil.rmtree(staging, ignore_errors=True)
+
+
+@dataclass(frozen=True)
+class MonthTable:
+    """One month-partitioned maintained summary, declared once.
+
+    ``partials(spark, sf_dir, months)`` is the family's builder (months
+    None = all).  The table's path is keyed by ``kind``, the algorithm
+    ``version`` and the corpus LOCATION — not by the corpus stamp: any
+    ingest changes the stamp, so a stamp-keyed path would never exist yet
+    and every refresh would degenerate to a full rebuild.  Staleness is
+    the stamp MARKER inside the table instead, taken over ``source``
+    (written at build, rewritten by refresh): a serve-time mismatch means
+    the caller ingested without refreshing, and the safe fallback is a
+    full staged rebuild."""
+
+    kind: str
+    version: str
+    source: str
+    partials: Callable[[SparkSession, str, list[str] | None], DataFrame]
+
+    def path(self, sf_dir: str) -> str:
+        from olap_sus_spark.operators.index_store import index_path
+
+        return index_path(self.kind, f"{self.version}|{os.path.abspath(sf_dir)}")
+
+    def stamp(self, sf_dir: str) -> str:
+        from olap_sus_spark.operators.index_store import corpus_stamp
+
+        return corpus_stamp(sf_dir, self.source)
+
+    def load_or_build(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Serve the partials, first rebuilding them when absent or stale."""
+        return load_or_build_partials(
+            spark, self.path(sf_dir), self.stamp(sf_dir),
+            lambda months: self.partials(spark, sf_dir, months),
+        )
+
+    def refresh(self, spark: SparkSession, sf_dir: str, days: list[str]) -> None:
+        """Re-derive only the months containing ``days`` (yyyy-MM-dd) and
+        stamp the table with the current facts — O(day), idempotent."""
+        refresh_partials(
+            spark, self.path(sf_dir), self.stamp(sf_dir),
+            lambda months: self.partials(spark, sf_dir, months), days,
+        )

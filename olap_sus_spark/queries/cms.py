@@ -22,8 +22,6 @@ a watchlist), it cannot enumerate keys itself.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +32,7 @@ from olap_sus_spark.operators.cms import (
     cms_estimate,
     cms_oracle_sql,
 )
+from olap_sus_spark.operators.maintained import MonthTable, month_range_cond
 from olap_sus_spark.registry import register
 
 WIDTH = 1024  # ε = e/width ≈ 0.27% of total weight; depth 4 → δ ≈ 1.8%
@@ -74,26 +73,12 @@ def cms_supplier_item_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Maintained per-day grid partials (shared maintained-partials contract).
 
 
-def supplier_cms_path(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import index_path
-
-    return index_path("cmssupp", f"{_CMS_ALGO_VERSION}|{os.path.abspath(sf_dir)}")
-
-
-def _current_stamp(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import corpus_stamp
-
-    return corpus_stamp(sf_dir, "lineitem")
-
-
 def _day_partials(
     spark: SparkSession, sf_dir: str, months: list[str] | None = None
 ) -> DataFrame:
     """Per-day CMS grids (mes_dt, dia, j, slot, cnt) — ≤ depth·width rows
     per day.  ``months`` restricts the scan with plain range predicates on
     l_shipdate so the refresh reaches parquet row-group stats."""
-    from olap_sus_spark.operators.maintained import month_range_cond
-
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_suppkey").isNotNull())
     if months is not None:
         li = li.filter(month_range_cond("l_shipdate", months))
@@ -105,27 +90,10 @@ def _day_partials(
     return cms_build(keyed, ["mes_dt", "dia"], "l_suppkey", None, CMS_DEPTH, WIDTH)
 
 
-def load_or_build_supplier_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olap_sus_spark.operators.maintained import load_or_build_partials
-
-    return load_or_build_partials(
-        spark,
-        supplier_cms_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _day_partials(spark, sf_dir, months),
-    )
-
-
-def refresh_supplier_cms(spark: SparkSession, sf_dir: str, days: list[str]) -> None:
-    from olap_sus_spark.operators.maintained import refresh_partials
-
-    refresh_partials(
-        spark,
-        supplier_cms_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _day_partials(spark, sf_dir, months),
-        days,
-    )
+SUPPLIER_CMS = MonthTable("cmssupp", _CMS_ALGO_VERSION, "lineitem", _day_partials)
+supplier_cms_path = SUPPLIER_CMS.path
+load_or_build_supplier_cms = SUPPLIER_CMS.load_or_build
+refresh_supplier_cms = SUPPLIER_CMS.refresh
 
 
 def _served_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:

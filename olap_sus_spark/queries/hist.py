@@ -19,29 +19,16 @@ refreshes one day's ≤ |buckets|-row partial.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olap_sus_spark.catalog import load_table
+from olap_sus_spark.operators.maintained import MonthTable, month_range_cond
 from olap_sus_spark.registry import register
 
 BUCKET_WIDTH = 5000.0  # ~120 live buckets over the o_totalprice range
 _HIST_ALGO_VERSION = "v1"
 _PCTS = [25, 50, 75, 90, 99]
-
-
-def order_hist_path(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import index_path
-
-    return index_path("histord", f"{_HIST_ALGO_VERSION}|{os.path.abspath(sf_dir)}")
-
-
-def _current_stamp(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import corpus_stamp
-
-    return corpus_stamp(sf_dir, "orders")
 
 
 def _day_partials(
@@ -50,8 +37,6 @@ def _day_partials(
     """Per-day bucket counts (mes_dt, dia, balde, n).  ``months`` restricts
     the scan with plain range predicates on o_orderdate so the refresh
     reaches parquet row-group stats."""
-    from olap_sus_spark.operators.maintained import month_range_cond
-
     od = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice").isNotNull())
     if months is not None:
         od = od.filter(month_range_cond("o_orderdate", months))
@@ -66,27 +51,10 @@ def _day_partials(
     )
 
 
-def load_or_build_order_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olap_sus_spark.operators.maintained import load_or_build_partials
-
-    return load_or_build_partials(
-        spark,
-        order_hist_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _day_partials(spark, sf_dir, months),
-    )
-
-
-def refresh_order_hist(spark: SparkSession, sf_dir: str, days: list[str]) -> None:
-    from olap_sus_spark.operators.maintained import refresh_partials
-
-    refresh_partials(
-        spark,
-        order_hist_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _day_partials(spark, sf_dir, months),
-        days,
-    )
+ORDER_HIST = MonthTable("histord", _HIST_ALGO_VERSION, "orders", _day_partials)
+order_hist_path = ORDER_HIST.path
+load_or_build_order_hist = ORDER_HIST.load_or_build
+refresh_order_hist = ORDER_HIST.refresh
 
 
 def _folded_hist(spark: SparkSession, sf_dir: str) -> DataFrame:

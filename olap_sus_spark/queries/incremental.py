@@ -21,46 +21,21 @@ ingest volume would partition by day).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olap_sus_spark.catalog import load_table
+from olap_sus_spark.operators.maintained import MonthTable, month_range_cond
 from olap_sus_spark.registry import register
 
 _AGG_ALGO_VERSION = "v1"
 _MONEY = "decimal(15,2)"
 
 
-def daily_revenue_path(sf_dir: str) -> str:
-    """The maintained table's path is keyed by corpus LOCATION only — NOT
-    by the corpus stamp, unlike the immutable ANN/cluster indexes.  A
-    stamp-keyed path can never be refreshed incrementally: any ingest that
-    changes the facts changes the stamp, the new path doesn't exist, and
-    'refresh' degenerates to a full rebuild every time.  Staleness is
-    tracked instead by a stamp MARKER inside the table (written at build
-    and updated by refresh): serve-time mismatch means the caller ingested
-    without refreshing, and the safe fallback is a full rebuild."""
-    from olap_sus_spark.operators.index_store import index_path
-
-    return index_path(
-        "dailyrev", f"{_AGG_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
-    )
-
-
-def _current_stamp(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import corpus_stamp
-
-    return corpus_stamp(sf_dir, "lineitem")
-
-
 def _partials(spark: SparkSession, sf_dir: str, months: list[str] | None = None) -> DataFrame:
     """Day-grain revenue partials from lineitem: (dia, valor, n) + month
     partition key.  ``months`` (yyyy-MM) restricts the scan via the shared
     pushdown-preserving range predicate (operators/maintained.py)."""
-    from olap_sus_spark.operators.maintained import month_range_cond
-
     li = load_table(spark, sf_dir, "lineitem")
     if months is not None:
         li = li.filter(month_range_cond("l_shipdate", months))
@@ -75,42 +50,13 @@ def _partials(spark: SparkSession, sf_dir: str, months: list[str] | None = None)
     )
 
 
-def load_or_build_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintained partial table on the shared contract
-    (operators/maintained.py — this family pioneered it): staged build +
-    atomic promotion, staleness via the stamp marker (a mismatch means the
-    caller ingested without calling :func:`refresh_daily_revenue` and
-    triggers the safe full rebuild — the table must never silently serve
-    stale partials), bounded read-retry through a concurrent rebuilder's
-    retire→promote window."""
-    from olap_sus_spark.operators.maintained import load_or_build_partials
-
-    return load_or_build_partials(
-        spark,
-        daily_revenue_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _partials(spark, sf_dir, months),
-    )
-
-
-def refresh_daily_revenue(spark: SparkSession, sf_dir: str, days: list[str]) -> None:
-    """Incremental maintenance: re-aggregate ONLY the partitions containing
-    the ingested days and dynamic-partition-overwrite them in place —
-    idempotent (re-refreshing an unchanged day rewrites identical bytes).
-    Cost is one pruned scan + one partition write, never the fact history.
-    The refresh stamps the table with the CURRENT facts identity so serves
-    trust the refreshed partials — what makes the O(day) path reachable on
-    actually-changed facts (a stamp-keyed path would full-rebuild on every
-    ingest)."""
-    from olap_sus_spark.operators.maintained import refresh_partials
-
-    refresh_partials(
-        spark,
-        daily_revenue_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _partials(spark, sf_dir, months),
-        days,
-    )
+# The maintained day-grain revenue partials (operators/maintained.py — this
+# family pioneered the contract): refreshed O(day) by month, served
+# through a stamp marker whose mismatch triggers the safe full rebuild.
+DAILY_REVENUE = MonthTable("dailyrev", _AGG_ALGO_VERSION, "lineitem", _partials)
+daily_revenue_path = DAILY_REVENUE.path
+load_or_build_daily_revenue = DAILY_REVENUE.load_or_build
+refresh_daily_revenue = DAILY_REVENUE.refresh
 
 
 _INCR_ORACLE = """

@@ -19,12 +19,11 @@ whole family of distinct-count questions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olap_sus_spark.catalog import load_table
+from olap_sus_spark.operators.maintained import MonthTable, month_range_cond
 from olap_sus_spark.operators.sketches import (
     HASH_SPACE,
     hash48,
@@ -78,21 +77,6 @@ def kmv_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Maintained per-day sketch partials (stamp-marker contract, O(day) refresh).
 
 
-def orderkey_kmv_path(sf_dir: str) -> str:
-    """Location-keyed path + stamp MARKER (not a stamp-keyed path), exactly
-    as queries/incremental.py — a stamp-keyed path can never be refreshed
-    incrementally."""
-    from olap_sus_spark.operators.index_store import index_path
-
-    return index_path("kmvorders", f"{_SKETCH_ALGO_VERSION}|{os.path.abspath(sf_dir)}")
-
-
-def _current_stamp(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import corpus_stamp
-
-    return corpus_stamp(sf_dir, "lineitem")
-
-
 def _day_partials(
     spark: SparkSession, sf_dir: str, months: list[str] | None = None
 ) -> DataFrame:
@@ -101,8 +85,6 @@ def _day_partials(
     range predicates on l_shipdate so the refresh reaches parquet
     row-group stats (the same pushdown-preserving shape as
     incremental._partials)."""
-    from olap_sus_spark.operators.maintained import month_range_cond
-
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey").isNotNull())
     if months is not None:
         li = li.filter(month_range_cond("l_shipdate", months))
@@ -117,33 +99,10 @@ def _day_partials(
     )
 
 
-def load_or_build_orderkey_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve the cube via the shared maintained-partials contract
-    (operators/maintained.py: staged build, atomic promotion, stale-marker
-    rebuild, bounded read-retry)."""
-    from olap_sus_spark.operators.maintained import load_or_build_partials
-
-    return load_or_build_partials(
-        spark,
-        orderkey_kmv_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _day_partials(spark, sf_dir, months),
-    )
-
-
-def refresh_orderkey_kmv(spark: SparkSession, sf_dir: str, days: list[str]) -> None:
-    """Re-sketch ONLY the months containing the ingested days and
-    dynamic-partition-overwrite them — idempotent, O(day), never the fact
-    history (operators/maintained.py contract)."""
-    from olap_sus_spark.operators.maintained import refresh_partials
-
-    refresh_partials(
-        spark,
-        orderkey_kmv_path(sf_dir),
-        _current_stamp(sf_dir),
-        lambda months: _day_partials(spark, sf_dir, months),
-        days,
-    )
+ORDERKEY_KMV = MonthTable("kmvorders", _SKETCH_ALGO_VERSION, "lineitem", _day_partials)
+orderkey_kmv_path = ORDERKEY_KMV.path
+load_or_build_orderkey_kmv = ORDERKEY_KMV.load_or_build
+refresh_orderkey_kmv = ORDERKEY_KMV.refresh
 
 
 @register(
@@ -346,24 +305,10 @@ _USER_HASH_SQL = (
 _AU_WINDOWS = [1, 7, 28]
 
 
-def user_kmv_path(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import index_path
-
-    return index_path("kmvusers", f"{_SKETCH_ALGO_VERSION}|{os.path.abspath(sf_dir)}")
-
-
-def _user_stamp(sf_dir: str) -> str:
-    from olap_sus_spark.operators.index_store import corpus_stamp
-
-    return corpus_stamp(sf_dir, "events")
-
-
 def _user_day_partials(
     spark: SparkSession, sf_dir: str, months: list[str] | None = None
 ) -> DataFrame:
     """Per-day k-min user-hash cells (mes_dt, dia, h) over events."""
-    from olap_sus_spark.operators.maintained import month_range_cond
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     if months is not None:
         ev = ev.filter(month_range_cond("ts", months))
@@ -377,27 +322,10 @@ def _user_day_partials(
     )
 
 
-def load_or_build_user_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olap_sus_spark.operators.maintained import load_or_build_partials
-
-    return load_or_build_partials(
-        spark,
-        user_kmv_path(sf_dir),
-        _user_stamp(sf_dir),
-        lambda months: _user_day_partials(spark, sf_dir, months),
-    )
-
-
-def refresh_user_kmv(spark: SparkSession, sf_dir: str, days: list[str]) -> None:
-    from olap_sus_spark.operators.maintained import refresh_partials
-
-    refresh_partials(
-        spark,
-        user_kmv_path(sf_dir),
-        _user_stamp(sf_dir),
-        lambda months: _user_day_partials(spark, sf_dir, months),
-        days,
-    )
+USER_KMV = MonthTable("kmvusers", _SKETCH_ALGO_VERSION, "events", _user_day_partials)
+user_kmv_path = USER_KMV.path
+load_or_build_user_kmv = USER_KMV.load_or_build
+refresh_user_kmv = USER_KMV.refresh
 
 
 _ACTIVE_USERS_ORACLE = f"""

@@ -324,20 +324,21 @@ def write_sorted_partitioned(
 
 def _swap_in(spark: SparkSession, path: str, staging: str) -> None:
     """Commit a staged rewrite by directory renames, never by rewriting the
-    live table: retire the current dir, promote staging, drop the retired
-    copy.  A crash before the promote leaves the original table intact (at
-    worst under the retired name); a crash after it leaves the new table
-    live — there is no window where the data exists only as a half-written
-    directory.  (On object stores swap a manifest instead; renames there
-    are copies.)"""
+    live table: index_store.publish retires the current dir, promotes
+    staging and drops the retired copy, renaming it back if the promote
+    fails — there is no window where the data exists only as a
+    half-written directory.  (On object stores swap a manifest instead;
+    renames there are copies.)"""
     if "://" not in path:
         import shutil
 
-        retired = path.rstrip("/") + ".__old__"
-        shutil.rmtree(retired, ignore_errors=True)  # stale from a prior crash
-        os.rename(path, retired)
-        os.rename(staging, path)
-        shutil.rmtree(retired, ignore_errors=True)
+        from olap_sus_spark.operators.index_store import publish
+
+        # The staging name is fixed per table, so a crash after a promote
+        # can leave publish's retired copy under the name this swap will
+        # retire to; clear it, or the retire fails and the rewrite is lost.
+        shutil.rmtree(staging.rstrip("/") + ".stale", ignore_errors=True)
+        publish(staging, path)
     else:  # pragma: no cover
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(

@@ -20,11 +20,8 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olap_sus_spark.operators import facts as facts_ops
-from olap_sus_spark.operators.transforms import transform_sim, transform_sinasc
-from olap_sus_spark.sources import sinks
-from olap_sus_spark.sources.raw_csv import RAW_SCHEMAS
 from olap_sus_spark import etl
+from olap_sus_spark.sources.raw_csv import RAW_SCHEMAS
 
 
 def read_landing_stream(spark: SparkSession, landing_dir: str, dataset: str) -> DataFrame:
@@ -50,7 +47,7 @@ def read_landing_stream(spark: SparkSession, landing_dir: str, dataset: str) -> 
 
 
 def _process_batch(dataset: str, warehouse_dir: str, refresh_aggregates: bool = True):
-    fact_table = "fact_nascimentos" if dataset == "sinasc" else "fact_obitos"
+    ds = etl.get_dataset(dataset)
 
     def inner(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -59,24 +56,15 @@ def _process_batch(dataset: str, warehouse_dir: str, refresh_aggregates: bool = 
         dims = etl.load_dims(spark, warehouse_dir)
         # One micro-batch can straddle days; write each dt partition
         # separately so the overwrite stays scoped.
-        days = [str(r.dt) for r in batch.select("dt").distinct().collect()]
-        for dt in sorted(days):
-            day = batch.filter(F.col("dt") == dt).drop("dt")
-            if dataset == "sinasc":
-                fact = facts_ops.build_fact_nascimentos(transform_sinasc(day), dims)
-                sinks.write_fact_partition(fact, warehouse_dir, "fact_nascimentos", dt)
-            else:
-                fact, bridge = facts_ops.build_fact_obitos(transform_sim(day), dims)
-                sinks.append_bridge(bridge, warehouse_dir, etl.BRIDGE_TABLE)
-                sinks.write_fact_partition(fact, warehouse_dir, "fact_obitos", dt)
+        days = sorted(str(r.dt) for r in batch.select("dt").distinct().collect())
+        for dt in days:
+            etl.write_day(ds, batch.filter(F.col("dt") == dt).drop("dt"), dims, warehouse_dir, dt)
         if refresh_aggregates:
             # Close the ingest→refresh→serve loop inside the stream: every
             # maintained aggregate over this fact re-aggregates ONLY the
             # micro-batch's dt partitions (dynamic partition overwrite —
             # idempotent with the fact sink, so a replayed batch converges).
-            for name, (ft, _, _, _) in etl.AGGREGATES.items():
-                if ft == fact_table:
-                    etl.refresh_aggregate(spark, warehouse_dir, name, dates=sorted(days))
+            etl.refresh_aggregates_of(spark, warehouse_dir, ds.fact_table, days)
 
     return inner
 

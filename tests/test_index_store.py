@@ -151,6 +151,20 @@ def test_publish_lost_retire_falls_through_to_promote(tmp_path, monkeypatch):
     assert _debris(tmp_path) == []
 
 
+def test_swap_in_lands_over_a_crash_left_retired_copy(tmp_path):
+    """A sink stages under a fixed name, so a crash after an earlier
+    promote can leave the retired copy where this swap retires to; the
+    rewrite still lands and nothing is left behind."""
+    from olap_sus_spark.sources.sinks import _swap_in
+
+    path = _dir_with(str(tmp_path / "table"), "old")
+    staging = _dir_with(path + ".__compact__", "new")
+    _dir_with(staging + ".stale", "left by a crash")
+    _swap_in(None, path, staging)
+    assert _read(path) == "new"
+    assert _debris(tmp_path) == []
+
+
 class _FakeTime:
     def __init__(self, on_sleep=None):
         self.sleeps = 0

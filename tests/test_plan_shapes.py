@@ -585,17 +585,23 @@ def _window_input_is_limited(plan: str, node_id: int) -> bool:
     return False
 
 
-def test_no_global_window_over_data_sized_grain(spark):
-    """Every registered query: any partition-less window must either read a
-    Limit-bounded input (visible in the plan) or be on the audited
-    bounded-axis allowlist above."""
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Every registered query's formatted physical plan, built once and
+    shared by the registry-wide gates."""
     import olap_sus_spark.queries  # noqa: F401
     from olap_sus_spark.registry import QUERIES
     from tests.conftest import SF_DIR
 
+    return {name: plan_of(QUERIES[name](spark, SF_DIR)) for name in sorted(QUERIES)}
+
+
+def test_no_global_window_over_data_sized_grain(registry_plans):
+    """Every registered query: any partition-less window must either read a
+    Limit-bounded input (visible in the plan) or be on the audited
+    bounded-axis allowlist above."""
     offenders: dict[str, list[int]] = {}
-    for name in sorted(QUERIES):
-        plan = plan_of(QUERIES[name](spark, SF_DIR))
+    for name, plan in registry_plans.items():
         for nid in _global_window_ids(plan):
             if _window_input_is_limited(plan, nid):
                 continue
@@ -646,16 +652,11 @@ SCALAR_BROADCAST_BNLJ = {
 }
 
 
-def test_no_cartesian_and_only_audited_nested_loops(spark):
+def test_no_cartesian_and_only_audited_nested_loops(registry_plans):
     """Every registered query: zero CartesianProduct nodes, and exactly the
     audited number of BroadcastNestedLoopJoin nodes (default zero)."""
-    import olap_sus_spark.queries  # noqa: F401
-    from olap_sus_spark.registry import QUERIES
-    from tests.conftest import SF_DIR
-
     bad = []
-    for name in sorted(QUERIES):
-        plan = plan_of(QUERIES[name](spark, SF_DIR))
+    for name, plan in registry_plans.items():
         if n_nodes(plan, "CartesianProduct"):
             bad.append(f"{name}: CartesianProduct")
         got = n_nodes(plan, "BroadcastNestedLoopJoin")

@@ -73,6 +73,23 @@ def test_stream_ingest_sim(spark, env):
     assert bridge.count() == 5  # sentinel + 3-cause group + 1-cause group
 
 
+def test_stream_ingest_sih_matches_batch(spark, env, tmp_path):
+    """The SIH stream lands the same fact_internacoes rows as batch
+    run_ingest over the same landing day."""
+    landing, wh, ckpt = env
+    stream_ingest(spark, "sih", landing, wh, ckpt + "/sih")
+    batch_wh = str(tmp_path / "wh_batch")
+    etl.bootstrap_warehouse(spark, SEEDS, batch_wh)
+    etl.run_ingest(spark, "sih", DT, landing, batch_wh)
+
+    def rows(w):
+        fact = spark.read.parquet(os.path.join(w, "fact_internacoes"))
+        return sorted(tuple(r) for r in fact.select(*sorted(fact.columns)).collect())
+
+    got = rows(wh)
+    assert got and got == rows(batch_wh)
+
+
 def test_batch_multiday_reingest_scoped_overwrite(spark, env):
     """Batch path: re-running one day's ingest must not touch other days."""
     landing, wh, _ = env

@@ -1,37 +1,36 @@
-"""Steady-state maintenance probe (VERDICT r09 #1): N SEQUENTIAL ingests
-over the full maintained-index fleet at a staged ×R corpus — the claim a
-100 TB operator actually depends on and the one single-shot refresh
-probes never test.
+"""Steady-state maintenance probe: N SEQUENTIAL ingests over every
+maintained table of the registry (olap_sus_spark/maintenance.specs()) at a
+staged ×R corpus — the claim an operator depends on and the one
+single-shot refresh probes never test.
 
-Per ingest the probe appends one part file to each corpus table
-(documents / embeddings / lineitem / orders / events) and refreshes every
-maintained family, recording
+The ×R corpus is staged by tools/sf1_sweep.stage (every table a directory
+dataset, keys shifted per replica).  Each chosen spec is built cold, then
+served again (build and serve seconds).  Per ingest the probe appends one
+part file to each spec's source table — lineitem together with the orders
+its rows belong to, all fact rows on one new day — and refreshes every
+spec with its source's day, recording
 
-- per-refresh wall time per family       -> must stay FLAT vs ingest #
+- per-spec refresh seconds                -> must stay FLAT vs ingest #
   (first-5 median vs last-5 median),
-- index directory file count and bytes   -> growth must be bounded per
-  ingest (the src=-partition design writes <= `files` parquet files per
-  touched partition; rollup/cut/summary rewrites are constant-size),
-- manifest bytes                         -> epoch compaction must bound
-  the files dict (index_store.compact_manifest),
-- leftover staging/tomb debris           -> must be zero.
+- files, bytes and manifest bytes under   -> growth must be bounded per
+  each spec's path                           ingest,
+- staging/tomb debris in the index root   -> must be zero.
 
-After ingest #N the final served state of every family is checksummed
-against a FRESH FULL REBUILD in a separate index root — the chained
-refreshes must be exactly equivalent to rebuilding from the final corpus.
+Every 10th ingest runs operators/compaction.compact_maintained_indexes
+over the registry's parameters (the compaction cadence).  After ingest #N
+the served state of every spec is digested against a FRESH REBUILD in a
+clean index root; an epoch-pinned spec (``Spec.rebuild_exact=False``, the
+semantic index) against a from-scratch dedup under its maintained
+codebook instead.
 
-Families: gram chain (partials -> rollup/cut -> scrub, one
-refresh_gram_scrub call chains all three), inverted index, near-dup
-cluster map, SRP and IVF ANN, and the five fact summaries
-(daily_revenue, orderkey KMV, supplier CMS, order hist, user KMV).
+The document ingest mix: most rows are fresh text (new doc_ids above the
+corpus), ~1/4 duplicate EXISTING corpus text verbatim, so every ingest
+carries unique->shared gram flips (the retroactive re-scrub path runs
+steadily, not only in a one-shot flip probe).
 
-The document ingest mix is realistic: most rows are fresh text (new
-doc_ids above the corpus, clean-append fast path), ~1/4 duplicate
-EXISTING corpus text verbatim so every ingest carries unique->shared
-gram flips (the retroactive re-scrub path runs steadily, not just in a
-one-shot flip probe).
-
-Usage: python tools/steady_state_probe.py [N] [R]   (default 30 10)
+Usage: python tools/steady_state_probe.py [N] [R] [spec ...]
+       (default 30 10, every spec; the base corpus is $SPARK_GRAFT_SF_DIR,
+       default sf0.1).  Writes STEADY_DETAIL_x<R>.json at the repo root.
 """
 
 from __future__ import annotations
@@ -44,22 +43,19 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from olap_sus_spark.catalog import load_table  # noqa: E402
+from olap_sus_spark.maintenance import specs  # noqa: E402
 from olap_sus_spark.session import get_spark  # noqa: E402
-from tools.scale_probe import replicate  # noqa: E402
+from tools.race_probe import _debris, _digest  # noqa: E402
+from tools.sf1_sweep import BASE_SF, stage  # noqa: E402
 
-BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DIM = 64
-
-
-def checksum(df) -> int:
-    h = F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)")
-    return df.agg(F.sum(h)).first()[0] or 0
+COMPACT_EVERY = 10
 
 
 def dir_stats(path: str) -> dict:
@@ -79,17 +75,6 @@ def dir_stats(path: str) -> dict:
     return {"files": files, "mb": round(n_bytes / 1e6, 2), "manifest_b": man_b}
 
 
-def debris(index_root: str) -> list[str]:
-    try:
-        return [
-            e.name
-            for e in os.scandir(index_root)
-            if ".__build__" in e.name or e.name.endswith(".stale")
-        ]
-    except OSError:
-        return []
-
-
 def stage_single_part(df, dest: str) -> None:
     staging = dest + ".__stage__"
     df.coalesce(1).write.mode("overwrite").parquet(staging)
@@ -98,398 +83,225 @@ def stage_single_part(df, dest: str) -> None:
     shutil.rmtree(staging)
 
 
-def stage_corpus(spark, r: int, base: str) -> dict:
-    """Stage the ×R corpus: documents/embeddings via the standard salted
-    replicate (32-file dirs), facts as single-part directory datasets so
-    every ingest grows them file-by-file."""
-    t0 = time.perf_counter()
-    replicate(spark, r, base)
-    for t, date_col in [("lineitem", None), ("orders", None), ("events", None)]:
-        df = load_table(spark, BASE_SF, t)
-        stage_single_part(
-            df, os.path.join(base, f"{t}.parquet", "part-00000.parquet")
-        )
-    # constants the per-ingest appends shift from
-    docs0 = load_table(spark, BASE_SF, "documents")
-    emb0 = load_table(spark, BASE_SF, "embeddings")
-    c = {
-        "max_doc0": docs0.agg(F.max("doc_id")).first()[0] + 1,
-        "max_vec0": emb0.agg(F.max("vec_id")).first()[0] + 1,
-        "max_ship": load_table(spark, BASE_SF, "lineitem")
-        .agg(F.max("l_shipdate"))
-        .first()[0],
-        "max_odate": load_table(spark, BASE_SF, "orders")
-        .agg(F.max("o_orderdate"))
-        .first()[0],
-        "max_okey": load_table(spark, BASE_SF, "orders")
-        .agg(F.max("o_orderkey"))
-        .first()[0]
-        + 1,
-        "max_ts_day": load_table(spark, BASE_SF, "events")
-        .agg(F.max(F.to_date("ts")))
-        .first()[0],
-        "max_event": load_table(spark, BASE_SF, "events")
-        .agg(F.max("event_id"))
-        .first()[0]
-        + 1,
+def shifts(spark, r: int) -> dict:
+    """Id offsets above every staged replica, and the last fact days."""
+    def top(table: str, col):
+        return load_table(spark, BASE_SF, table).agg(F.max(col)).first()[0]
+
+    return {
+        "doc": top("documents", "doc_id") + 1,
+        "vec": top("embeddings", "vec_id") + 1,
+        "order": (top("orders", "o_orderkey") + 1) * r,
+        "event": (top("events", "event_id") + 1) * r,
+        "ship": top("lineitem", "l_shipdate"),
+        "ts_day": top("events", F.to_date("ts")),
     }
-    print(f"staged x{r} corpus in {time.perf_counter() - t0:.1f}s -> {base}")
-    return c
 
 
-def ingest(spark, base: str, r: int, i: int, c: dict) -> dict[str, str]:
-    """Append ingest #i (1-based) to every corpus table; returns the new
-    fact days for the summary refreshes."""
-    docs0 = load_table(spark, BASE_SF, "documents")
-    # ~1% fresh text (salted per ingest -> genuinely new grams) + ~0.25%
-    # verbatim copies of existing corpus text (unique->shared flips)
-    fresh = (
-        docs0.filter(F.col("doc_id") % 97 == i % 97)
-        .withColumn(
+def ingest(spark, base: str, r: int, i: int, c: dict, sources: set[str]) -> dict[str, str]:
+    """Append ingest #i (1-based) to each source table; returns the new
+    fact day per fact source."""
+    def append(table: str, df) -> None:
+        stage_single_part(df, os.path.join(base, f"{table}.parquet", f"ingest-{i:03d}.parquet"))
+
+    if "documents" in sources:
+        docs0 = load_table(spark, BASE_SF, "documents")
+        # ~1% fresh text (salted per ingest -> genuinely new grams) + ~0.25%
+        # verbatim copies of replica-0 text: the staged corpus interleaves
+        # the rep-0 salt (tools/scale_probe.replicate), so the same
+        # transform makes these rows' grams exist verbatim there
+        fresh = docs0.filter(F.col("doc_id") % 97 == i % 97).withColumn(
+            "text",
+            F.expr(f"array_join(transform(split(text, ' '), w -> concat('in{i}', w)), ' ')"),
+        )
+        dup = docs0.filter(F.col("doc_id") % 397 == i % 397).withColumn(
             "text",
             F.expr(
-                f"array_join(transform(split(text, ' '),"
-                f" w -> concat('in{i}', w)), ' ')"
+                "array_join(flatten(transform(split(text, ' '),"
+                " w -> array(w, concat('qq0', w)))), ' ')"
             ),
         )
-    )
-    # duplicate EXISTING corpus text: the staged corpus interleaves the
-    # rep-0 salt (tools/scale_probe.replicate), so flips require the same
-    # transform — these rows' grams then exist verbatim in replica 0
-    dup = docs0.filter(F.col("doc_id") % 397 == i % 397).withColumn(
-        "text",
-        F.expr(
-            "array_join(flatten(transform(split(text, ' '),"
-            " w -> array(w, concat('qq0', w)))), ' ')"
-        ),
-    )
-    batch = fresh.unionAll(dup)
-    batch = (
-        batch.withColumn("rn", F.row_number().over(Window.orderBy("doc_id")))
-        .withColumn(
-            "doc_id", F.lit((r + i) * c["max_doc0"]).cast("bigint") + F.col("rn")
+        batch = (
+            fresh.unionAll(dup)
+            .withColumn("rn", F.row_number().over(Window.orderBy("doc_id")))
+            .withColumn("doc_id", F.lit((r + i) * c["doc"]).cast("bigint") + F.col("rn"))
+            .select(*docs0.columns)
         )
-        .drop("rn")
-        .select(*docs0.columns)
-    )
-    stage_single_part(
-        batch, os.path.join(base, "documents.parquet", f"ingest-{i:03d}.parquet")
-    )
-
-    emb0 = load_table(spark, BASE_SF, "embeddings")
-    ebatch = (
-        emb0.filter(F.col("vec_id") % 37 == i % 37)
-        .withColumn(
-            "vec_id", F.col("vec_id") + F.lit((r + i) * c["max_vec0"]).cast("bigint")
-        )
-        .withColumn(
-            "embedding",
-            F.expr(
-                f"transform(embedding, (x, j) ->"
-                f" cast(x + sin({i} * 131 + j) * 0.03 as float))"
-            ),
-        )
-    )
-    stage_single_part(
-        ebatch, os.path.join(base, "embeddings.parquet", f"ingest-{i:03d}.parquet")
-    )
-
-    # facts: one synthetic new day per table per ingest
-    li0 = load_table(spark, BASE_SF, "lineitem")
-    li_day = F.date_add(F.to_date(F.lit(c["max_ship"])), i)
-    lbatch = li0.filter(F.col("l_orderkey") % 53 == i % 53).withColumn(
-        "l_shipdate", li_day.cast(dict(li0.dtypes)["l_shipdate"])
-    )
-    stage_single_part(
-        lbatch, os.path.join(base, "lineitem.parquet", f"ingest-{i:03d}.parquet")
-    )
-    od0 = load_table(spark, BASE_SF, "orders")
-    o_day = F.date_add(F.to_date(F.lit(c["max_odate"])), i)
-    obatch = (
-        od0.filter(F.col("o_orderkey") % 53 == i % 53)
-        .withColumn("o_orderdate", o_day.cast(dict(od0.dtypes)["o_orderdate"]))
-        .withColumn(
-            "o_orderkey", F.col("o_orderkey") + F.lit(i * c["max_okey"]).cast("bigint")
-        )
-    )
-    stage_single_part(
-        obatch, os.path.join(base, "orders.parquet", f"ingest-{i:03d}.parquet")
-    )
-    ev0 = load_table(spark, BASE_SF, "events")
-    # all appended events land on ONE synthetic new day (original
-    # time-of-day kept), matching the one-day refresh the loop issues —
-    # spreading the shift over the original date range would need a
-    # multi-day refresh list instead
-    ev_day = F.date_add(F.lit(c["max_ts_day"]), i)
-    ebatch2 = (
-        ev0.filter(F.col("event_id") % 41 == i % 41)
-        .withColumn(
-            "ts",
-            (
-                ev_day.cast("timestamp_ntz")
+        append("documents", batch)
+    if "embeddings" in sources:
+        emb0 = load_table(spark, BASE_SF, "embeddings")
+        append("embeddings", (
+            emb0.filter(F.col("vec_id") % 37 == i % 37)
+            .withColumn("vec_id", F.col("vec_id") + F.lit((r + i) * c["vec"]).cast("bigint"))
+            .withColumn(
+                "embedding",
+                F.expr(f"transform(embedding, (x, j) -> cast(x + sin({i} * 131 + j) * 0.03 as float))"),
+            )
+        ))
+    days = {}
+    if "lineitem" in sources:
+        # one new day of orders and their lineitems, order keys above
+        # every replica's
+        day = F.date_add(F.to_date(F.lit(c["ship"])), i)
+        okey = F.lit(i * c["order"]).cast("bigint")
+        li0 = load_table(spark, BASE_SF, "lineitem")
+        append("lineitem", li0.filter(F.col("l_orderkey") % 53 == i % 53)
+               .withColumn("l_shipdate", day.cast(dict(li0.dtypes)["l_shipdate"]))
+               .withColumn("l_orderkey", F.col("l_orderkey") + okey))
+        od0 = load_table(spark, BASE_SF, "orders")
+        append("orders", od0.filter(F.col("o_orderkey") % 53 == i % 53)
+               .withColumn("o_orderdate", day.cast(dict(od0.dtypes)["o_orderdate"]))
+               .withColumn("o_orderkey", F.col("o_orderkey") + okey))
+        days["lineitem"] = day
+    if "events" in sources:
+        # every appended event lands on ONE new day, time of day kept
+        day = F.date_add(F.lit(c["ts_day"]), i)
+        ev0 = load_table(spark, BASE_SF, "events")
+        append("events", (
+            ev0.filter(F.col("event_id") % 41 == i % 41)
+            .withColumn("ts", (
+                day.cast("timestamp_ntz")
                 + (F.col("ts") - F.col("ts").cast("date").cast("timestamp_ntz"))
-            ).cast(dict(ev0.dtypes)["ts"]),
-        )
-        .withColumn(
-            "event_id",
-            F.col("event_id") + F.lit(i * c["max_event"]).cast("bigint"),
-        )
-    )
-    stage_single_part(
-        ebatch2, os.path.join(base, "events.parquet", f"ingest-{i:03d}.parquet")
-    )
-    one = spark.range(1).select(
-        li_day.alias("li"), o_day.alias("o"), ev_day.alias("ev")
-    ).first()
-    return {"li_day": str(one[0]), "o_day": str(one[1]), "ev_day": str(one[2])}
+            ).cast(dict(ev0.dtypes)["ts"]))
+            .withColumn("event_id", F.col("event_id") + F.lit(i * c["event"]).cast("bigint"))
+        ))
+        days["events"] = day
+    if not days:
+        return {}
+    row = spark.range(1).select(*[d.alias(t) for t, d in days.items()]).first()
+    return {t: str(row[t]) for t in days}
 
 
-def families(spark, base: str):
-    """(name, refresh(days), index_paths(), served_frame()) per family."""
-    from olap_sus_spark.operators import dedup as dd
-    from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.operators import inverted as inv
-    from olap_sus_spark.operators import qualhist as qh
-    from olap_sus_spark.operators import similarity as sim
-    from olap_sus_spark.queries import cms as qcms
-    from olap_sus_spark.queries import hist as qhist
-    from olap_sus_spark.queries import incremental as qinc
-    from olap_sus_spark.queries import sketches as qsk
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
-
-    docs_of = corpus_docs_of(base)
-    return [
-        (
-            "gram_chain",
-            lambda d: gf.refresh_gram_scrub(spark, base, docs_of=docs_of),
-            lambda: [
-                gf.gram_freq_path(base, view="plain"),
-                gf.rollup_path(base, view="plain"),
-                gf.scrub_path(base, view="plain"),
-            ],
-            lambda: gf.load_or_build_gram_scrub(spark, base, docs_of=docs_of),
-        ),
-        (
-            "inverted",
-            lambda d: inv.refresh_inverted_index(spark, base),
-            lambda: [inv.inverted_index_path(base)],
-            lambda: inv.load_or_build_inverted_index(spark, base)[0],
-        ),
-        (
-            "cluster",
-            lambda d: dd.refresh_cluster_index(spark, base, docs_of),
-            lambda: [dd.cluster_index_path(base, 0.5)],
-            lambda: dd.load_or_build_cluster_index(
-                spark, base, docs_of(spark, None)
-            ),
-        ),
-        (
-            "srp",
-            lambda d: sim.refresh_srp_index(spark, base, DIM, 4, 4),
-            lambda: [sim.srp_index_path(base, DIM, 4, 4)],
-            lambda: sim.load_or_build_srp_index(spark, base, DIM, 4, 4),
-        ),
-        (
-            "ivf",
-            lambda d: sim.refresh_ivf_index(spark, base, num_centroids=16),
-            lambda: [sim.ivf_index_path(base, 16)],
-            lambda: sim.load_or_build_ivf_index(spark, base, 16)[0],
-        ),
-        (
-            "semantic",
-            lambda d: sim.refresh_semantic_index(spark, base, 64, 0.3),
-            lambda: [sim.semantic_index_path(base, 64, 0.3)],
-            lambda: sim.load_or_build_semantic_index(spark, base, 64, 0.3),
-        ),
-        (
-            "quality_hist",
-            lambda d: qh.refresh_quality_hist(spark, base),
-            lambda: [qh.quality_hist_path(base)],
-            lambda: qh.load_or_build_quality_hist(spark, base),
-        ),
-        (
-            "daily_revenue",
-            lambda d: qinc.refresh_daily_revenue(spark, base, [d["li_day"]]),
-            lambda: [qinc.daily_revenue_path(base)],
-            lambda: qinc.load_or_build_daily_revenue(spark, base),
-        ),
-        (
-            "kmv_orders",
-            lambda d: qsk.refresh_orderkey_kmv(spark, base, [d["li_day"]]),
-            lambda: [qsk.orderkey_kmv_path(base)],
-            lambda: qsk.load_or_build_orderkey_kmv(spark, base),
-        ),
-        (
-            "cms_supplier",
-            lambda d: qcms.refresh_supplier_cms(spark, base, [d["li_day"]]),
-            lambda: [qcms.supplier_cms_path(base)],
-            lambda: qcms.load_or_build_supplier_cms(spark, base),
-        ),
-        (
-            "hist_orders",
-            lambda d: qhist.refresh_order_hist(spark, base, [d["o_day"]]),
-            lambda: [qhist.order_hist_path(base)],
-            lambda: qhist.load_or_build_order_hist(spark, base),
-        ),
-        (
-            "kmv_users",
-            lambda d: qsk.refresh_user_kmv(spark, base, [d["ev_day"]]),
-            lambda: [qsk.user_kmv_path(base)],
-            lambda: qsk.load_or_build_user_kmv(spark, base),
-        ),
-    ]
-
-
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 30
-    r = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_steady_x{r}")
-    idx = os.path.join(tempfile.gettempdir(), f"spark_graft_steady_idx_x{r}")
-    shutil.rmtree(base, ignore_errors=True)
-    shutil.rmtree(idx, ignore_errors=True)
-    os.environ["SPARK_GRAFT_INDEX_DIR"] = idx
-
-    spark = get_spark("steady-state-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    c = stage_corpus(spark, r, base)
-    fams = families(spark, base)
-
-    # cold builds (ingest #0 baseline)
-    t0 = time.perf_counter()
-    for name, _rf, _paths, served in fams:
-        t1 = time.perf_counter()
-        served().count()
-        print(f"  build {name}: {time.perf_counter() - t1:.2f}s", flush=True)
-    print(f"cold builds: {time.perf_counter() - t0:.1f}s", flush=True)
-
-    compact_every = int(sys.argv[3]) if len(sys.argv) > 3 else 10
-    timings: dict[str, list[float]] = {nm: [] for nm, *_ in fams}
-    growth: list[dict] = []
-    for i in range(1, n + 1):
-        days = ingest(spark, base, r, i, c)
-        row: dict = {"ingest": i}
-        for name, refresh, paths, _served in fams:
-            t1 = time.perf_counter()
-            refresh(days)
-            dt = time.perf_counter() - t1
-            timings[name].append(round(dt, 3))
-            row[name] = {"sec": round(dt, 3)}
-        if compact_every and i % compact_every == 0:
-            from olap_sus_spark.operators.compaction import (
-                compact_maintained_indexes,
-            )
-
-            t1 = time.perf_counter()
-            done = compact_maintained_indexes(
-                spark, base, view="plain", dim=DIM, n_tables=4, n_bits=4
-            )
-            row["compact"] = {
-                "sec": round(time.perf_counter() - t1, 3),
-                "partitions": sum(len(v) for v in done.values()),
-            }
-            print(f"  compact @{i}: {row['compact']}", flush=True)
-        # dir stats AFTER any compaction so the growth table reflects the
-        # operator's steady state
-        for name, _refresh, paths, _served in fams:
-            st = [dir_stats(p) for p in paths()]
-            row[name].update(
-                files=sum(s["files"] for s in st),
-                mb=round(sum(s["mb"] for s in st), 2),
-                manifest_b=sum(s["manifest_b"] for s in st),
-            )
-        row["debris"] = debris(idx)
-        growth.append(row)
-        print(
-            f"ingest {i:02d}: "
-            + " ".join(f"{nm}={row[nm]['sec']}s" for nm, *_ in fams),
-            flush=True,
-        )
-
-    # flatness: first-5 median vs last-5 median
-    flat = {}
-    for name, ts in timings.items():
-        a = statistics.median(ts[:5])
-        b = statistics.median(ts[-5:])
-        flat[name] = {
-            "first5_med": round(a, 3),
-            "last5_med": round(b, 3),
-            "ratio": round(b / a, 3) if a else None,
-        }
-    print("\nFLATNESS (last5/first5 median):")
-    for name, v in flat.items():
-        print(f"  {name:<14} {v['first5_med']:>7.3f}s -> {v['last5_med']:>7.3f}s"
-              f"  ratio={v['ratio']}")
-
-    g0, gN = growth[0], growth[-1]
-    print("\nGROWTH (ingest 1 -> N):")
-    for name, *_ in fams:
-        print(
-            f"  {name:<14} files {g0[name]['files']:>5} -> {gN[name]['files']:>5}"
-            f"   mb {g0[name]['mb']:>8} -> {gN[name]['mb']:>8}"
-            f"   manifest_b {g0[name]['manifest_b']:>6} -> {gN[name]['manifest_b']:>6}"
-        )
-    all_debris = [d for row in growth for d in row["debris"]]
-    print(f"  staging/tomb debris across run: {all_debris or 'NONE'}")
-
-    # final state vs fresh rebuild in a separate index root
-    print("\nFINAL vs FRESH REBUILD:")
-    sums_maint = {}
-    for name, _rf, _paths, served in fams:
-        sums_maint[name] = checksum(served())
-    # The semantic family's contract is EPOCH-PINNED (the Lloyd codebook is
-    # corpus-trained, so a from-scratch rebuild over the grown corpus would
-    # legitimately re-cluster) — its rebuild twin is a from-scratch dedup
-    # UNDER THE MAINTAINED CODEBOOK, captured before the root switch.
+def pinned_rebuild(spark, name: str, base: str):
+    """A from-scratch rebuild under the maintained epoch of a spec whose
+    fresh rebuild would re-train (semantic dedup: under its codebook)."""
     from olap_sus_spark.operators import similarity as sim
 
-    sem_cb = spark.read.parquet(
+    assert name == "semantic_dedup", f"no pinned rebuild for {name}"
+    cb = spark.read.parquet(
         os.path.join(sim.semantic_index_path(base, 64, 0.3), "codebook")
     ).localCheckpoint(eager=True)
-    os.environ["SPARK_GRAFT_INDEX_DIR"] = idx + "_fresh"
-    fams_fresh = families(spark, base)
-    verdicts = {}
-    for name, _rf, _paths, served in fams_fresh:
-        if name == "semantic":
-            def served():
-                emb = load_table(spark, base, "embeddings")
-                return sim.semantic_dedup(
-                    sim.semantic_cells(emb, 64, codebook=sem_cb), threshold=0.3
-                )
-        t1 = time.perf_counter()
-        s = checksum(served())
-        ok = s == sums_maint[name]
-        verdicts[name] = bool(ok)
-        print(
-            f"  {name:<14} {'MATCH' if ok else 'MISMATCH'}"
-            f"{' (epoch-pinned codebook)' if name == 'semantic' else ''}"
-            f"  (rebuild {time.perf_counter() - t1:.2f}s)",
-            flush=True,
-        )
-    out = {
-        "n_ingests": n,
-        "replicate": r,
-        "flatness": flat,
-        "growth_first": g0,
-        "growth_last": gN,
-        "debris": all_debris,
-        "rebuild_match": verdicts,
-        "timings": timings,
-    }
-    det = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       f"STEADY_DETAIL_x{r}.json")
-    with open(det, "w") as f:
-        json.dump(out, f, indent=1)
-    print(f"\nwrote {det}")
-    print(json.dumps({
-        "probe": "steady_state", "n": n, "r": r,
-        "all_match": all(verdicts.values()),
-        "worst_flat_ratio": max(v["ratio"] for v in flat.values()),
-        "debris": len(all_debris),
-    }))
-    shutil.rmtree(idx + "_fresh", ignore_errors=True)
-    spark.stop()
+    return lambda: sim.semantic_dedup(
+        sim.semantic_cells(load_table(spark, base, "embeddings"), 64, codebook=cb),
+        threshold=0.3,
+    ).select("vec_id", "centroid_id", "is_kept", "dup_of", "dup_cosine")
+
+
+def timed(fn) -> tuple[object, float]:
+    t0 = time.perf_counter()
+    out = fn()
+    return out, round(time.perf_counter() - t0, 3)
+
+
+def main(args: list[str]) -> None:
+    from olap_sus_spark.operators.compaction import compact_maintained_indexes
+    from olap_sus_spark.queries.vector import _DIM, _LSH_H, _LSH_T, _NC
+
+    n = int(args[0]) if args else 30
+    r = int(args[1]) if len(args) > 1 else 10
+    all_specs = {s.name: s for s in specs()}
+    names = args[2:] or list(all_specs)
+    unknown = set(names) - set(all_specs)
+    assert not unknown, f"unknown specs {sorted(unknown)}; known: {sorted(all_specs)}"
+    chosen = [all_specs[x] for x in names]
+    sources = {s.source for s in chosen}
+
+    work = tempfile.mkdtemp(prefix=f"steady_x{r}_")
+    base, idx = os.path.join(work, "sf"), os.path.join(work, "idx")
+    os.environ["SPARK_GRAFT_INDEX_DIR"] = idx
+    spark = get_spark("steady-state-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        t0 = time.perf_counter()
+        stage(spark, r, base)
+        c = shifts(spark, r)
+        print(f"staged x{r} of {BASE_SF} in {time.perf_counter() - t0:.1f}s", flush=True)
+
+        cold = {}
+        for s in chosen:
+            _, b = timed(lambda: _digest(s.build(spark, base)))
+            _, v = timed(lambda: _digest(s.build(spark, base)))
+            cold[s.name] = {"build_s": b, "serve_s": v}
+            print(f"  cold {s.name}: build {b}s serve {v}s", flush=True)
+
+        timings: dict[str, list[float]] = {x: [] for x in names}
+        growth: list[dict] = []
+        for i in range(1, n + 1):
+            days = ingest(spark, base, r, i, c, sources)
+            row: dict = {"ingest": i}
+            for s in chosen:
+                d = [days[s.source]] if s.unit == "mes_dt" else []
+                _, dt = timed(lambda: s.refresh(spark, base, d))
+                timings[s.name].append(dt)
+                row[s.name] = {"sec": dt}
+            if i % COMPACT_EVERY == 0:
+                done, dt = timed(lambda: compact_maintained_indexes(
+                    spark, base, view="aug", dim=_DIM, n_tables=_LSH_T,
+                    n_bits=_LSH_H, num_centroids=_NC,
+                ))
+                row["compact"] = {"sec": dt, "partitions": sum(len(v) for v in done.values())}
+                print(f"  compact @{i}: {row['compact']}", flush=True)
+            # dir stats AFTER any compaction: the operator's steady state
+            for s in chosen:
+                row[s.name].update(dir_stats(s.path(base)))
+            row["debris"] = _debris(idx)
+            growth.append(row)
+            print(f"ingest {i:02d}: " + " ".join(f"{x}={row[x]['sec']}s" for x in names),
+                  flush=True)
+
+        flat = {}
+        for x, ts in timings.items():
+            a, b = statistics.median(ts[:5]), statistics.median(ts[-5:])
+            flat[x] = {"first5_med": round(a, 3), "last5_med": round(b, 3),
+                       "ratio": round(b / a, 3) if a else None}
+        print("\nFLATNESS (last5/first5 median):")
+        for x, v in flat.items():
+            print(f"  {x:<18} {v['first5_med']:>7.3f}s -> {v['last5_med']:>7.3f}s"
+                  f"  ratio={v['ratio']}")
+
+        g0, gN = growth[0], growth[-1]
+        print("\nGROWTH (ingest 1 -> N):")
+        for x in names:
+            print(f"  {x:<18} files {g0[x]['files']:>5} -> {gN[x]['files']:>5}"
+                  f"   mb {g0[x]['mb']:>8} -> {gN[x]['mb']:>8}"
+                  f"   manifest_b {g0[x]['manifest_b']:>6} -> {gN[x]['manifest_b']:>6}")
+        all_debris = [d for row in growth for d in row["debris"]]
+        print(f"  staging/tomb debris across run: {all_debris or 'NONE'}")
+
+        print("\nFINAL vs FRESH REBUILD:")
+        maintained = {s.name: _digest(s.build(spark, base)) for s in chosen}
+        rebuilds = {
+            s.name: pinned_rebuild(spark, s.name, base)
+            for s in chosen if not s.rebuild_exact
+        }
+        os.environ["SPARK_GRAFT_INDEX_DIR"] = os.path.join(work, "fresh")
+        verdicts = {}
+        for s in chosen:
+            fresh, dt = timed(lambda: _digest(
+                rebuilds[s.name]() if s.name in rebuilds else s.build(spark, base)
+            ))
+            verdicts[s.name] = fresh == maintained[s.name]
+            print(f"  {s.name:<18} {'MATCH' if verdicts[s.name] else 'MISMATCH'}"
+                  f"{' (epoch-pinned codebook)' if s.name in rebuilds else ''}"
+                  f"  (rebuild {dt}s)", flush=True)
+        det = os.path.join(REPO, f"STEADY_DETAIL_x{r}.json")
+        with open(det, "w") as f:
+            json.dump({
+                "n_ingests": n, "replicate": r, "cold": cold, "flatness": flat,
+                "growth_first": g0, "growth_last": gN, "debris": all_debris,
+                "rebuild_match": verdicts, "timings": timings,
+            }, f, indent=1)
+        print(f"\nwrote {det}")
+        print(json.dumps({
+            "probe": "steady_state", "n": n, "r": r,
+            "all_match": all(verdicts.values()),
+            "worst_flat_ratio": max((v["ratio"] or 0) for v in flat.values()),
+            "debris": len(all_debris),
+        }))
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

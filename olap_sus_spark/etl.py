@@ -35,10 +35,7 @@ from olap_sus_spark.operators.transforms import (
 from olap_sus_spark.sources import seeds, sinks
 from olap_sus_spark.sources.raw_csv import read_dataset
 
-DIM_TABLES = (
-    "dim_data", "dim_horario", "dim_demografia", "dim_info_nascimento",
-    "dim_municipio", "dim_ocupacao", "dim_causa",
-)
+DIM_TABLES = tuple(schemas.DIMENSIONS)
 BRIDGE_TABLE = "ponte_grupo_causas"
 
 
@@ -112,7 +109,12 @@ def bootstrap_warehouse(
 
 
 def load_dims(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(posixpath.join(warehouse_dir, t)) for t in DIM_TABLES}
+    """The seven dimensions, read by their declared schemas: no Spark job
+    (an undeclared Parquet read runs one per table to infer the schema)."""
+    return {
+        t: spark.read.schema(schema).parquet(posixpath.join(warehouse_dir, t))
+        for t, schema in schemas.DIMENSIONS.items()
+    }
 
 
 def run_ingest(
@@ -278,14 +280,12 @@ def refresh_aggregate(
     if dates is not None:
         fact = fact.filter(F.col("dt").isin(dates))  # partition-pruned scan
     partial = build(fact, load_dims(spark, warehouse_dir))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partial.write.mode("overwrite").partitionBy("dt").parquet(
-            posixpath.join(warehouse_dir, name)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        partial.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("dt")
+        .parquet(posixpath.join(warehouse_dir, name))
+    )
     return partial
 
 
@@ -312,14 +312,15 @@ def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> None:
 
 def _load(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
     """Read a warehouse table; a fact with no ingested partition yet reads
-    as a typed empty frame (with the on-disk dt= partition column)."""
+    as a typed empty frame, its ``dt`` typed as partition inference types
+    the on-disk ``dt=YYYY-MM-DD`` column once a day lands (DATE)."""
     from olap_sus_spark.sources.sinks import _exists
 
     path = posixpath.join(warehouse_dir, table)
     if _exists(spark, path):
         return spark.read.parquet(path)
     (schema,) = [d.empty_schema for d in DATASETS.values() if d.fact_table == table]
-    return spark.createDataFrame([], schema).withColumn("dt", F.lit(None).cast("string"))
+    return spark.createDataFrame([], schema).withColumn("dt", F.lit(None).cast("date"))
 
 
 def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from olap_sus_spark.operators.dims import FAIXAS_PESO, faixas_etarias
 from olap_sus_spark.operators.joins import band_label
-from olap_sus_spark.operators.onecall import lit_ints_auto, lit_strings
 
 NASC_KEYS = [
     "chave_data",
@@ -258,31 +257,27 @@ def build_fact_obitos(
     # the bridge referencing only live facts.
     deaths = deaths.filter(F.col("data_obito").isNotNull())
 
-    # Cause-group subplan, fully NARROW: the dimCausa lookup becomes a
-    # constant map literal (the dim is ≤ ~12k entries by construction,
-    # BASELINE.md) applied inside the per-row cause array, and the group id
-    # is the content hash of the in-row canonical signature — exactly
+    # Cause-group subplan, fully NARROW: the dimCausa lookup is a constant
+    # map (the dim is ≤ ~12k entries by construction, BASELINE.md) applied
+    # inside the per-row cause array, and the group id is the content hash
+    # of the in-row canonical signature — exactly
     # operators/bridge.py:canonical_signature, computed without the
     # explode → groupBy(row_id) → join-back cycle.  This removes two
     # shuffles from the fact path; at 100 TB the deaths pipeline is one
     # codegen stage ending in the single grain-collapse shuffle.
-    causa_rows = dims["dim_causa"].filter(F.col("chave_causa") != 0).select(
-        "codigo_cid10", "chave_causa"
-    ).collect()
-    # one-call server-side literals (operators/onecall.py): F.lit(list)
-    # expands client-side to one py4j round trip per element — 2×|dimCausa|
-    # calls per fact build.  lit_ints_auto preserves the old element-type
-    # inference (INT while every key fits int32).
-    causa_map = (
-        F.map_from_arrays(
-            lit_strings([r.codigo_cid10 for r in causa_rows]),
-            lit_ints_auto([r.chave_causa for r in causa_rows]),
-        )
-        if causa_rows
-        # sentinel-only dimCausa: an empty literal array has no element
-        # type, so serve a typed empty map — every cause maps to key 0
-        else F.create_map().cast("map<string,int>")
-    )
+    #
+    # The map is ONE string literal parsed by from_json, which
+    # ConstantFolding turns into a map<string,int> constant.  Not
+    # map_from_arrays over two literal arrays: those are 2×|dimCausa|
+    # nodes that every analysis and optimizer pass over this plan (the
+    # joins below, then both executions: bridge append and fact write)
+    # walks.  Spark renders the JSON itself, in one row and one job
+    # (coalesce(1): no exchange before the global aggregate); a
+    # sentinel-only dim yields '{}', a typed empty map (every cause → 0).
+    (causa_json,) = dims["dim_causa"].filter(F.col("chave_causa") != 0).coalesce(1).agg(
+        F.to_json(F.map_from_entries(F.collect_list(F.struct("codigo_cid10", "chave_causa"))))
+    ).first()
+    causa_map = F.from_json(F.lit(causa_json), "map<string,int>")
     keyed = F.transform(
         causes_array(),
         lambda s: F.struct(
@@ -292,8 +287,9 @@ def build_fact_obitos(
     )
     # In-row twin of bridge.canonical_signature: 'chave:ordem' fragments
     # sorted by (ordem, chave, frag), joined by '|', md5-hashed.
+    causas = F.col("_causas")
     trip = F.transform(
-        keyed,
+        causas,
         lambda s: F.struct(
             s["ordem_causa"].alias("o"),
             s["chave_causa"].alias("i"),
@@ -303,7 +299,7 @@ def build_fact_obitos(
         ),
     )
     sig = F.concat_ws("|", F.transform(F.array_sort(trip), lambda x: x["f"]))
-    group_id = F.when(F.size(keyed) > 0, F.md5(sig)).otherwise(F.lit(BRIDGE_SENTINEL))
+    group_id = F.when(F.size(causas) > 0, F.md5(sig)).otherwise(F.lit(BRIDGE_SENTINEL))
 
     d = deaths.withColumn("_causas", keyed).withColumn("chave_grupo_causa", group_id)
     bridge = (

@@ -22,7 +22,13 @@ makes exactly ONE py4j call (``F.expr``).  Value fidelity:
 The resulting unresolved expression tree (``array(...)`` /
 ``named_struct(...)`` calls over foldable literals) is what the client-side
 expansion produced anyway, so analysis, constant folding and execution are
-unchanged — only construction cost moves.
+unchanged — only construction cost moves.  That tree still holds one node
+per element, though, and every analyzer and optimizer pass over each plan
+that contains it walks them all until ConstantFolding collapses it.  For a
+dimension-sized lookup (dimCausa's 12,477 codes: 24,954 nodes) that costs
+more than construction did; pass such a table as ONE string literal,
+``F.from_json(F.lit(json), "map<string,int>")``, which folds to the same
+constant (operators/facts.py:build_fact_obitos).
 """
 
 from __future__ import annotations
@@ -80,17 +86,6 @@ def lit_doubles(xs: Sequence[float]) -> Column:
 
 def lit_bigints(xs: Sequence[int]) -> Column:
     """array<bigint> literal — one py4j call."""
-    return F.expr(_array(sql_bigint(x) for x in xs))
-
-
-def lit_ints_auto(xs: Sequence[int]) -> Column:
-    """Integer-array literal with the SAME element-type inference the old
-    ``F.lit(list)`` expansion had: INT when every element fits int32, else
-    BIGINT (CreateArray widened mixed elements to the widest).  Use where
-    downstream schemas depend on the historical type."""
-    xs = [int(x) for x in xs]
-    if all(-_INT32_MAX - 1 <= x <= _INT32_MAX for x in xs):
-        return F.expr(_array(sql_int(x) for x in xs))
     return F.expr(_array(sql_bigint(x) for x in xs))
 
 

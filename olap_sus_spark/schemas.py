@@ -1,10 +1,14 @@
-"""Explicit StructTypes for raw inputs, dimensions and facts.
+"""Explicit schemas for raw inputs, dimensions and facts.
 
 The reference reads raw CSVs all-string with no inference
 (/root/reference/dags/spark_script_sinasc.py:192) and declares warehouse
 tables in DDL (/root/reference/scripts/init.sql).  The rebuild pins every
 schema here so scans never depend on sampling — mandatory at 100 TB where a
-schema-inference pass is a full extra read.
+schema-inference pass is a full extra read.  That holds for Parquet too:
+``spark.read.parquet`` without a schema runs a Spark job to merge footers,
+so ``etl.load_dims`` reads the seven dimensions by the ``DIMENSIONS``
+schemas below (StructTypes or DDL strings, equal to what
+``etl.bootstrap_warehouse`` writes — pinned by tests/test_ingest_dims.py).
 """
 
 from __future__ import annotations
@@ -69,6 +73,52 @@ DIM_MUNICIPIO = StructType(
     ]
 )
 
+DIM_DATA = (
+    "chave_data int, data date, numero_dia_semana int, dia_semana string, numero_dia int, "
+    "dia_ano int, numero_mes int, mes string, ano int, bimestre int, trimestre int, "
+    "semestre int"
+)
+
+DIM_HORARIO = (
+    "chave_tempo int, hora int, minutos int, segundos int, tempo_str string, periodo string"
+)
+
+DIM_DEMOGRAFIA = (
+    "chave_demografia int, raca string, escolaridade string, nivel_escolaridade int, "
+    "estado_civil string, sexo string, descricao_sexo string, faixa_etaria string, "
+    "idade_minima int, idade_maxima int"
+)
+
+DIM_INFO_NASCIMENTO = (
+    "chave_info_nascimento int, sexo string, descricao_sexo string, raca_cor string, "
+    "faixa_peso string, peso_min_gramas int, peso_max_gramas int, tipo_parto string, "
+    "tempo_gestacao string, semanas_gestacao_min int, semanas_gestacao_max int, "
+    "tipo_gravidez string"
+)
+
+DIM_OCUPACAO = (
+    "chave_ocupacao int, codigo_cbo string, descricao_ocupacao string, "
+    "descricao_familia string, descricao_subgrupo string, "
+    "descricao_subgrupo_principal string, descricao_grande_grupo string"
+)
+
+DIM_CAUSA = (
+    "chave_causa int, codigo_cid10 string, descricao_causa string, categoria string, "
+    "descricao_categoria string, capitulo string, descricao_capitulo string, "
+    "causa_violencia boolean, causa_overdose boolean"
+)
+
+# Warehouse dimension table -> its schema, in bootstrap order.
+DIMENSIONS = {
+    "dim_data": DIM_DATA,
+    "dim_horario": DIM_HORARIO,
+    "dim_demografia": DIM_DEMOGRAFIA,
+    "dim_info_nascimento": DIM_INFO_NASCIMENTO,
+    "dim_municipio": DIM_MUNICIPIO,
+    "dim_ocupacao": DIM_OCUPACAO,
+    "dim_causa": DIM_CAUSA,
+}
+
 FACT_NASCIMENTOS = StructType(
     [
         StructField("chave_data", IntegerType(), True),
@@ -117,9 +167,4 @@ FACT_INTERNACOES = StructType(
         StructField("valor", DecimalType(15, 2), True),
         StructField("quantidade_procedimentos", LongType(), False),
     ]
-)
-
-DIM_DATA_COLUMNS = (
-    "chave_data data DATE numero_dia_semana dia_semana numero_dia dia_ano "
-    "numero_mes mes ano bimestre trimestre semestre"
 )

@@ -26,12 +26,11 @@ def write_fact_partition(df: DataFrame, warehouse_dir: str, table: str, dt: str)
     """Overwrite the single ``dt=<date>`` partition of a fact table."""
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
     path = posixpath.join(warehouse_dir, table)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.withColumn("dt", F.lit(dt))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("dt")
         .parquet(path)
     )
@@ -301,24 +300,16 @@ def write_sorted_partitioned(
     partition overwrite replaces exactly the refreshed source's rows), and
     within each partition files stay range-sorted on ``sort_cols`` so
     footer min/max stats keep pruning selective probes.  ``dynamic=True``
-    scopes an overwrite to the partitions present in ``df`` (saving and
-    restoring the session conf)."""
-    spark = df.sparkSession
-    out = (
+    scopes an overwrite to the partitions present in ``df`` (a per-write
+    option; the session conf is untouched)."""
+    (
         df.repartitionByRange(files, part_col, *sort_cols)
         .sortWithinPartitions(part_col, *sort_cols)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
         .partitionBy(part_col)
+        .parquet(path)
     )
-    if not dynamic:
-        out.parquet(path)
-        return path
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return path
 
 

@@ -1,11 +1,14 @@
-"""Shared fixtures: one local SparkSession per test run + a DuckDB oracle
+"""Shared fixtures: one local SparkSession per test run, every registered
+query's schema and plan built once (``registry_plans``), and a DuckDB oracle
 comparator that mirrors the driver's t2 gate (row-count + schema-name +
 order-insensitive value comparison)."""
 
 from __future__ import annotations
 
+import io
 import math
 import os
+from contextlib import redirect_stdout
 
 import duckdb
 import pytest
@@ -20,6 +23,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("olap_sus_spark-tests")
     yield s
+
+
+def plan_of(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark):
+    """name -> (output schema, formatted physical plan) of every registered
+    query, built once and shared by the registry-wide gates."""
+    import olap_sus_spark.queries  # noqa: F401 — populate registry
+    from olap_sus_spark.registry import QUERIES
+
+    out = {}
+    for name in sorted(QUERIES):
+        df = QUERIES[name](spark, SF_DIR)
+        out[name] = (df.schema, plan_of(df))
+    return out
 
 
 @pytest.fixture(scope="session")

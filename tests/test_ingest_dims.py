@@ -1,0 +1,107 @@
+"""Ingest-side plan and session hygiene: the dimensions load by declared
+schema without a Spark job, the SIM cause lookup is one plan node whatever
+dimCausa's size, an empty fact's view keeps its types across the first
+ingest, and the fact sink leaves the session's overwrite mode alone."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from olap_sus_spark import etl, schemas
+from olap_sus_spark.operators.facts import build_fact_obitos
+from olap_sus_spark.operators.transforms import transform_sim
+from olap_sus_spark.sources import formats, sinks
+from olap_sus_spark.sources.raw_csv import read_dataset
+from tests.test_etl_e2e import DT, LANDING, SEEDS
+
+
+@pytest.fixture(scope="module")
+def wh(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("wh_dims"))
+    etl.bootstrap_warehouse(spark, SEEDS, d)
+    return d
+
+
+def test_load_dims_runs_no_spark_job(spark, wh):
+    sc = spark.sparkContext
+    sc.setJobGroup("test_load_dims", "load_dims")
+    try:
+        etl.load_dims(spark, wh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test_load_dims")) == []
+
+
+def test_declared_dim_schemas_equal_bootstrapped(spark, wh):
+    assert tuple(schemas.DIMENSIONS) == etl.DIM_TABLES
+    dims = etl.load_dims(spark, wh)
+    for t in etl.DIM_TABLES:
+        assert dims[t].schema == spark.read.parquet(os.path.join(wh, t)).schema, t
+
+
+def _expression_nodes(df) -> int:
+    """Expression nodes in ``df``'s analyzed plan, walked over py4j."""
+
+    def expr(e) -> int:
+        kids = e.children()
+        return 1 + sum(expr(kids.apply(i)) for i in range(kids.size()))
+
+    def plan(p) -> int:
+        exprs, kids = p.expressions(), p.children()
+        return sum(expr(exprs.apply(i)) for i in range(exprs.size())) + sum(
+            plan(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return plan(df._jdf.queryExecution().analyzed())
+
+
+def test_cause_lookup_plan_size_is_independent_of_dim_causa(spark, wh):
+    """dimCausa enters the SIM fact plan as one literal: 12,000 more codes
+    add no expression node."""
+    dims = etl.load_dims(spark, wh)
+    deaths = transform_sim(read_dataset(spark, LANDING, "sim", DT))
+    extra = spark.range(12000).select(
+        F.format_string("Z%05d", "id").alias("codigo_cid10"),
+        (F.col("id") + 100000).cast("int").alias("chave_causa"),
+    )
+    big = dict(dims, dim_causa=dims["dim_causa"].unionByName(extra, allowMissingColumns=True))
+    small_fact, _ = build_fact_obitos(deaths, dims)
+    big_fact, _ = build_fact_obitos(deaths, big)
+    assert _expression_nodes(big_fact) == _expression_nodes(small_fact)
+
+
+def test_empty_fact_view_types_survive_first_ingest(spark, wh):
+    """A never-ingested fact reads with the column types it has once its
+    first ``dt=`` partition lands (``dt`` is inferred as DATE)."""
+
+    def types():
+        return [(f.name, f.dataType) for f in etl._load(spark, wh, "fact_internacoes").schema]
+
+    before = types()
+    etl.run_ingest(spark, "sih", DT, LANDING, wh)
+    assert types() == before
+
+
+def test_fact_sink_leaves_session_overwrite_mode_static(spark, tmp_path):
+    """The fact sink overwrites one dt partition per write, and a later full
+    partitioned overwrite in the same session still drops every partition
+    absent from its frame."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    fact = spark.createDataFrame([(1,)], "v int")
+    sinks.write_fact_partition(fact, str(tmp_path), "fact", "2024-01-01")
+    sinks.write_fact_partition(fact, str(tmp_path), "fact", "2024-01-02")
+    assert sorted(p for p in os.listdir(tmp_path / "fact") if p.startswith("dt=")) == [
+        "dt=2024-01-01", "dt=2024-01-02"]
+    assert spark.conf.get(key) == before
+
+    path = str(tmp_path / "t")
+    formats.write_table(spark.createDataFrame([("a", 1), ("b", 2)], "p string, v int"),
+                        path, partition_by=["p"])
+    formats.write_table(spark.createDataFrame([("a", 3)], "p string, v int"),
+                        path, partition_by=["p"])
+    assert sorted(p for p in os.listdir(path) if p.startswith("p=")) == ["p=a"]

@@ -31,7 +31,7 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_no_canon_hostile_output_types(spark, oracle_con):
+def test_no_canon_hostile_output_types(registry_plans, oracle_con):
     """The driver canonicalizes through pandas (toPandas vs fetchdf), where
     three equal-value output shapes still hash-mismatch: raw DECIMAL columns
     (Spark Decimal objects vs DuckDB float64), DuckDB HUGEINT aggregates
@@ -39,9 +39,8 @@ def test_no_canon_hostile_output_types(spark, oracle_con):
     whole registry against all three — schema-only, no execution."""
     hostile = ("decimal", "array", "map", "struct")
     bad = []
-    for name in sorted(QUERIES):
-        df = QUERIES[name](spark, SF_DIR)
-        for f in df.schema.fields:
+    for name, (schema, _) in registry_plans.items():
+        for f in schema.fields:
             tn = f.dataType.simpleString()
             if any(tn.startswith(h) for h in hostile):
                 bad.append(f"{name}: spark col {f.name} is {tn}")

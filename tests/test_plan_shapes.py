@@ -7,23 +7,15 @@ from the fact reads, these fail before any benchmark notices.
 
 from __future__ import annotations
 
-import io
 import os
 import re
-from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
 from olap_sus_spark import etl
+from tests.conftest import plan_of
 from tests.test_etl_e2e import DT, LANDING, SEEDS
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def n_nodes(plan: str, op: str) -> int:
@@ -585,23 +577,12 @@ def _window_input_is_limited(plan: str, node_id: int) -> bool:
     return False
 
 
-@pytest.fixture(scope="module")
-def registry_plans(spark):
-    """Every registered query's formatted physical plan, built once and
-    shared by the registry-wide gates."""
-    import olap_sus_spark.queries  # noqa: F401
-    from olap_sus_spark.registry import QUERIES
-    from tests.conftest import SF_DIR
-
-    return {name: plan_of(QUERIES[name](spark, SF_DIR)) for name in sorted(QUERIES)}
-
-
 def test_no_global_window_over_data_sized_grain(registry_plans):
     """Every registered query: any partition-less window must either read a
     Limit-bounded input (visible in the plan) or be on the audited
     bounded-axis allowlist above."""
     offenders: dict[str, list[int]] = {}
-    for name, plan in registry_plans.items():
+    for name, (_, plan) in registry_plans.items():
         for nid in _global_window_ids(plan):
             if _window_input_is_limited(plan, nid):
                 continue
@@ -656,7 +637,7 @@ def test_no_cartesian_and_only_audited_nested_loops(registry_plans):
     """Every registered query: zero CartesianProduct nodes, and exactly the
     audited number of BroadcastNestedLoopJoin nodes (default zero)."""
     bad = []
-    for name, plan in registry_plans.items():
+    for name, (_, plan) in registry_plans.items():
         if n_nodes(plan, "CartesianProduct"):
             bad.append(f"{name}: CartesianProduct")
         got = n_nodes(plan, "BroadcastNestedLoopJoin")

@@ -59,32 +59,18 @@ def test_onecall_doubles_bit_exact(spark):
 
 
 def test_onecall_int_and_string_fidelity(spark):
-    from olap_sus_spark.operators.onecall import (
-        lit_bigints,
-        lit_ints_auto,
-        lit_strings,
-    )
+    from olap_sus_spark.operators.onecall import lit_bigints, lit_strings
 
     big = [0, 1, -1, 2**62, -(2**62), 2**31, 2**31 - 1]
-    small = [0, 5, -7, 2**31 - 1, -(2**31)]
     strs = ["plain", "o'brien", "back\\slash", "tab\tchar", ""]
     df = spark.range(1).select(
         lit_bigints(big).alias("b"),
-        lit_ints_auto(small).alias("i"),
-        lit_ints_auto(big).alias("w"),
         lit_strings(strs).alias("s"),
     )
     row = df.collect()[0]
     assert list(row["b"]) == big
-    assert list(row["i"]) == small
-    assert list(row["w"]) == big
     assert list(row["s"]) == strs
-    # element-type inference matches the old F.lit(list) expansion:
-    # all-int32 -> array<int>, any wider -> array<bigint>
-    types = dict(df.dtypes)
-    assert types["i"] == "array<int>"
-    assert types["w"] == "array<bigint>"
-    assert types["b"] == "array<bigint>"
+    assert dict(df.dtypes)["b"] == "array<bigint>"
 
 
 def test_onecall_inline_rows_matches_scalar_lit_inline(spark):

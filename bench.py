@@ -8,6 +8,7 @@ so JVM/codegen startup isn't billed to the first query.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import sys
@@ -159,7 +160,7 @@ def main() -> None:
     from olap_sus_spark.queries import incremental as _inc
     from olap_sus_spark.queries import sketches as _qs
     from olap_sus_spark.sources import zorder as _zo
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
+    from olap_sus_spark.operators.corpus_view import PLAIN
 
     # registry name -> BENCH_DETAIL.json index_build keys of its (full
     # build, 1-day refresh, grown-corpus full rebuild); None = not timed
@@ -246,35 +247,38 @@ def main() -> None:
 
     # The cluster map keeps its own line here: on the increment copy it
     # runs over the plain corpus view (monotonic ids — the O(batch) refresh
-    # shape), not the augmented view the registered queries serve.
-    docs_of = corpus_docs_of(inc_sf)
+    # shape), not the augmented view the registered queries serve; the
+    # view keys its path, so the rebuild below removes the PLAIN map.
+    def _inc_spec(spec):
+        if spec.name != "near_dup_clusters":
+            return spec
+        return dataclasses.replace(
+            spec,
+            path=lambda sf: _dd.cluster_index_path(sf, PLAIN, 0.5),
+            build=lambda s, sf: _dd.load_or_build_cluster_index(
+                s, sf, PLAIN, threshold=0.5
+            ),
+            refresh=lambda s, sf, days: _dd.refresh_cluster_index(
+                s, sf, PLAIN, threshold=0.5
+            ),
+        )
 
-    def _build_inc(spec):
-        if spec.name == "near_dup_clusters":
-            return _dd.load_or_build_cluster_index(
-                spark, inc_sf, docs_of(spark, None), threshold=0.5
-            )
-        return spec.build(spark, inc_sf)
-
-    def _refresh_inc(spec):
-        if spec.name == "near_dup_clusters":
-            return _dd.refresh_cluster_index(spark, inc_sf, docs_of, threshold=0.5)
-        return spec.refresh(spark, inc_sf, [])
-
-    per_file = [s for s in timed if s.unit == "src" and keys[s.name][1]]
+    per_file = [_inc_spec(s) for s in timed if s.unit == "src" and keys[s.name][1]]
     # pre-append builds (setup; untimed — the timed baseline is the grown-
     # corpus full rebuild below, the cost a manifest-less index would pay)
     for spec in per_file:
-        _build_inc(spec)
+        spec.build(spark, inc_sf)
     _append_part("embeddings", "vec_id", 100, 100_000_000)
     _append_part("documents", "doc_id", 100, 100_000_000)
     # registry order: the rollup refresh runs after the gramfreq refresh,
     # so it times just the rollup merge, and the scrub refresh just the
     # scrub of the appended + retroactively flipped files
     for spec in per_file:
-        _time(keys[spec.name][1], lambda: _refresh_inc(spec))
+        _time(keys[spec.name][1], lambda: spec.refresh(spark, inc_sf, []))
     for spec in per_file:
-        _rebuild(keys[spec.name][2], spec.path(inc_sf), lambda: _build_inc(spec))
+        _rebuild(
+            keys[spec.name][2], spec.path(inc_sf), lambda: spec.build(spark, inc_sf)
+        )
     shutil.rmtree(inc_root, ignore_errors=True)
 
     # Month-partitioned summaries: the O(day) refresh a daily ingest pays,

@@ -49,11 +49,11 @@ def specs() -> list[Spec]:
     from olap_sus_spark.operators import inverted as inv
     from olap_sus_spark.operators import qualhist as qh
     from olap_sus_spark.operators import similarity as sim
+    from olap_sus_spark.operators.corpus_view import AUG
     from olap_sus_spark.operators.index_store import corpus_rows
     from olap_sus_spark.operators.maintained import MonthTable
     from olap_sus_spark.queries import cms, hist, sketches
     from olap_sus_spark.queries import incremental as inc
-    from olap_sus_spark.queries.text_pipeline import augmented_docs, augmented_docs_of
     from olap_sus_spark.queries.vector import _DIM, _LSH_H, _LSH_T, _NC
     from olap_sus_spark.sources import zorder as zo
 
@@ -112,13 +112,9 @@ def specs() -> list[Spec]:
             # the near-dup cluster map over the augmented corpus view the
             # registered dedup queries serve
             "near_dup_clusters", "src", "documents",
-            lambda sf: dd.cluster_index_path(sf, 0.5),
-            lambda s, sf: dd.load_or_build_cluster_index(
-                s, sf, augmented_docs(s, sf), threshold=0.5
-            ),
-            lambda s, sf, days: dd.refresh_cluster_index(
-                s, sf, augmented_docs_of(sf), threshold=0.5
-            ),
+            lambda sf: dd.cluster_index_path(sf, AUG, 0.5),
+            lambda s, sf: dd.load_or_build_cluster_index(s, sf, AUG, threshold=0.5),
+            lambda s, sf, days: dd.refresh_cluster_index(s, sf, AUG, threshold=0.5),
         ),
         Spec(
             "inverted", "src", "documents",

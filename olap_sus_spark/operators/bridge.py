@@ -49,34 +49,3 @@ def group_signature(
     """Per-group canonical signature + content-hash key (A2 + hash-id)."""
     sig, key = canonical_signature(F.col(order_col), F.col(item_col))
     return df.groupBy(group_col).agg(sig.alias(signature_alias), key.alias(key_alias))
-
-
-def build_bridge(
-    exploded: DataFrame,
-    row_col: str = "row_id",
-    order_col: str = "ordem_causa",
-    key_col: str = "chave_causa",
-) -> tuple[DataFrame, DataFrame]:
-    """From exploded (row, ordem, chave) rows build:
-
-    - ``mapping``: row → chave_grupo (content hash), to attach to the fact;
-    - ``bridge``: distinct (chave_grupo, chave_causa, ordem_causa) rows.
-
-    Replaces sim:130-255 without the existing-groups read or id sequence:
-    because ids are content-derived, re-emitting an existing group writes
-    identical rows, so the bridge store is deduplicated idempotently
-    (``dropDuplicates`` on the full key) instead of check-then-insert.
-    """
-    sig, key = canonical_signature(F.col(order_col), F.col(key_col))
-    grouped = exploded.groupBy(row_col).agg(
-        sig.alias("assinatura"),
-        key.alias("chave_grupo_causa"),
-        F.collect_list(F.struct(F.col(order_col), F.col(key_col))).alias("_causas"),
-    )
-    mapping = grouped.select(row_col, "chave_grupo_causa")
-    bridge = (
-        grouped.select("chave_grupo_causa", F.explode("_causas").alias("c"))
-        .select("chave_grupo_causa", f"c.{order_col}", f"c.{key_col}")
-        .dropDuplicates(["chave_grupo_causa", order_col, key_col])
-    )
-    return mapping, bridge

@@ -5,7 +5,7 @@ Five dedup families, each designed shuffle-light for 100 TB:
 - **exact** (:func:`exact_dedup`): md5(content) → one shuffle on the 16-byte
   hash (never on the text itself), keep min doc_id per group.
 - **n-gram Jaccard** (:func:`jaccard_pairs`): blocked self-join — candidate
-  pairs only within a cheap blocking key (here (lang, length bucket)), exact
+  pairs only within a cheap blocking key (here the min gram hash), exact
   Jaccard on token n-gram sets.  The blocking key is the scale lever: the
   join is equi on the block, so Spark plans a shuffle-hash/sort-merge join
   on block ids instead of a cartesian product.
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from olap_sus_spark.operators.corpus_view import TABLE, CorpusView
 from olap_sus_spark.operators.onecall import lit_bigints
 from olap_sus_spark.operators.text import md5_int, token_ngrams, tokens
 
@@ -97,26 +98,6 @@ def jaccard_of(a: str, b: str) -> Column:
     return inter.cast("double") / (
         (F.size(F.col(a) if isinstance(a, str) else a)
          + F.size(F.col(b) if isinstance(b, str) else b) - inter).cast("double")
-    )
-
-
-def with_block_key(df: DataFrame, text_col: str = "text", bucket: int = 64) -> DataFrame:
-    """Length-bucket blocking key: (lang, token-count bucket).
-
-    Only useful when document lengths actually vary; on a corpus with
-    near-uniform lengths every document lands in one block and the pair join
-    degenerates to O(n²) — use min-gram blocking (:func:`jaccard_pairs`
-    default) instead.  Kept as the simple, recall-complete-within-length
-    blocking variant."""
-    return df.withColumn(
-        "block",
-        F.concat_ws(
-            "#",
-            F.col("lang"),
-            # floor division, not double-cast: double→int CASTs round in some
-            # engines (DuckDB) and truncate in others (Spark).
-            F.floor(F.size(tokens(F.col(text_col))) / F.lit(bucket)).cast("int").cast("string"),
-        ),
     )
 
 
@@ -544,14 +525,19 @@ _CLUSTER_ALGO_VERSION = "v2"
 _SRC = "src"
 
 
-def cluster_index_path(sf_dir: str, threshold: float, n: int = 3) -> str:
+def cluster_index_path(
+    sf_dir: str, view: CorpusView, threshold: float, n: int = 3
+) -> str:
+    """Index directory for one (corpus dir, corpus view, threshold, n):
+    the view name is in the key, so cluster maps over two views of one
+    corpus never share a directory."""
     import os
 
     from olap_sus_spark.operators.index_store import index_path
 
     return index_path(
         "ndclust",
-        f"{_CLUSTER_ALGO_VERSION}|{os.path.abspath(sf_dir)}|{threshold}|{n}",
+        f"{_CLUSTER_ALGO_VERSION}|{os.path.abspath(sf_dir)}|{view.name}|{threshold}|{n}",
     )
 
 
@@ -605,13 +591,13 @@ def star_labels(
     )
 
 
-def _cluster_table(sf_dir: str, threshold: float, n: int):
+def _cluster_table(sf_dir: str, view: CorpusView, threshold: float, n: int):
     from olap_sus_spark.operators import index_store as ix
 
     return ix.SrcTable(
-        cluster_index_path(sf_dir, threshold, n),
+        cluster_index_path(sf_dir, view, threshold, n),
         sf_dir,
-        "documents",
+        TABLE,
         {"clusters": (("cluster_id",), 4), "hubs": (("block",), 4)},
     )
 
@@ -619,7 +605,7 @@ def _cluster_table(sf_dir: str, threshold: float, n: int):
 def load_or_build_cluster_index(
     spark,
     sf_dir: str,
-    docs: DataFrame,
+    view: CorpusView,
     threshold: float = 0.5,
     n: int = 3,
     id_col: str = "doc_id",
@@ -634,8 +620,8 @@ def load_or_build_cluster_index(
     dedup family; serving queries (keep-best corpus selection, membership
     lookups) must NOT re-cluster the corpus per call — they probe this
     table (join + window), exactly like ANN probes over the bucket table.
-    ``docs`` is the caller-defined corpus view (must be deterministic from
-    the files at ``sf_dir``, which the manifest covers).
+    Pass a ``CorpusView`` (operators/corpus_view.py) as ``view``: it
+    decides the rows clustered and keys the index path.
 
     Layout: ``path/clusters`` (doc_id, cluster_id; src-partitioned, sorted
     on cluster_id so footer stats prune membership probes) plus
@@ -648,15 +634,10 @@ def load_or_build_cluster_index(
 
     from olap_sus_spark.operators import index_store as ix
 
-    t = _cluster_table(sf_dir, threshold, n)
+    t = _cluster_table(sf_dir, view, threshold, n)
 
     def build(staging: str) -> dict:
-        g = _grams_blocks(docs, n, id_col)
-        if _SRC not in g.columns:
-            # a docs view without source-file provenance still maintains
-            # incrementally: base rows live under one partition, refreshed
-            # appends land under their own src partitions
-            g = g.withColumn(_SRC, F.lit("__base__"))
+        g = _grams_blocks(view.docs(spark, sf_dir), n, id_col)
         # The gram arrays feed the hub table AND the labeling join —
         # materialize the (expensive) shingling pass once.
         g = g.persist()
@@ -698,7 +679,7 @@ def load_or_build_cluster_index(
 def refresh_cluster_index(
     spark,
     sf_dir: str,
-    docs_of,
+    view: CorpusView,
     threshold: float = 0.5,
     n: int = 3,
     id_col: str = "doc_id",
@@ -718,29 +699,22 @@ def refresh_cluster_index(
     labels a fresh full build would assign — proven by the
     refresh==rebuild equality test.
 
-    ``docs_of(spark, paths)`` returns the corpus view over the given
-    parquet part files (``None`` = whole corpus) — the same view
-    ``load_or_build_cluster_index`` was built from, e.g.
-    ``text_pipeline.augmented_docs_of(sf_dir)``.  Non-append changes
-    (rewritten or removed part files) and id-order violations fall back to
-    the safe full rebuild."""
+    ``view`` is the same ``CorpusView`` the map was built over (it keys
+    the path).  Non-append changes (rewritten or removed part files) and
+    id-order violations — the augmented view's derived ids interleave
+    across batches — fall back to the safe full rebuild."""
     import os
 
     from pyspark.sql import functions as F
 
     from olap_sus_spark.operators import index_store as ix
 
-    t = _cluster_table(sf_dir, threshold, n)
+    t = _cluster_table(sf_dir, view, threshold, n)
 
     def step(man: dict, d) -> dict | None:
         if d.changed or d.removed:
             return None
-        g = _grams_blocks(docs_of(spark, t.file_paths(d.added)), n, id_col)
-        if _SRC not in g.columns:
-            raise ValueError(
-                "refresh_cluster_index needs per-row src provenance: docs_of "
-                "must tag rows with the source part file (see augmented_docs_of)"
-            )
+        g = _grams_blocks(view.docs(spark, sf_dir, t.file_paths(d.added)), n, id_col)
         g = g.persist()
         try:
             min_new = g.agg(F.min(id_col)).first()[0]
@@ -789,9 +763,7 @@ def refresh_cluster_index(
 
     t.refresh(
         step,
-        lambda: load_or_build_cluster_index(
-            spark, sf_dir, docs_of(spark, None), threshold, n, id_col
-        ),
+        lambda: load_or_build_cluster_index(spark, sf_dir, view, threshold, n, id_col),
     )
     return ix.serve(spark, t.path, "clusters").select(id_col, "cluster_id")
 

@@ -234,14 +234,6 @@ def causes_array() -> F.Column:
     )
 
 
-def explode_causes(deaths: DataFrame) -> DataFrame:
-    """Exploded (row_id, ordem_causa, codigo) view of :func:`causes_array`."""
-    return (
-        deaths.select("row_id", F.explode(causes_array()).alias("c"))
-        .select("row_id", "c.ordem_causa", "c.codigo")
-    )
-
-
 def build_fact_obitos(
     deaths: DataFrame, dims: dict[str, DataFrame]
 ) -> tuple[DataFrame, DataFrame]:

@@ -11,12 +11,14 @@ operators/index_store.SrcTable (corpus-manifest staleness, staged build +
 publish, per-``src`` partition refresh):
 
 - ``grams/`` — per corpus part file: ``(src, gram, n_docs)`` where ``gram``
-  is the 60-bit md5 hash of a sliding token 5-gram over the AUGMENTED view
+  is the 60-bit md5 hash of a sliding token 5-gram over one corpus view
   of that file's documents and ``n_docs`` the count of distinct docs in
-  the file containing it.  The augmentation (queries/text_pipeline._augment)
-  is row-local and every document lives wholly in one part file, so each
-  partition is a pure function of its part file — a refresh of the
-  ingested files is bit-identical to a full rebuild by construction.
+  the file containing it.  Pass a ``CorpusView``
+  (operators/corpus_view.py; default ``AUG``, the registered queries'
+  augmented view): its transform is row-local and every document lives
+  wholly in one part file, so each partition is a pure function of its
+  part file — a refresh of the ingested files is bit-identical to a full
+  rebuild by construction.
 - Serving folds the partials: global document frequency of a gram is the
   SUM of its per-src counts (``doc_id`` is the corpus primary key, unique
   across part files — the same assumption the cluster index's id-order
@@ -34,55 +36,33 @@ from pyspark.sql import functions as F
 
 from olap_sus_spark.operators import index_store as ix
 from olap_sus_spark.operators import text as tx
+from olap_sus_spark.operators.corpus_view import AUG, TABLE, CorpusView
 
 _ALGO_VERSION = "gramfreq-v1"
 NGRAM_N = 5  # must match queries/text_pipeline._CROSS_NGRAM_N
-
-# Per-view doc_id offsets for the footer-stat doc-locality guard: a view
-# maps one base row with id x to rows {x + o for o in offsets} (a subset —
-# the guard only needs a superset of the produced ids).  "aug" must match
-# queries/text_pipeline._augment (+1M for doc_id%7==0, +2M for %11==0) —
-# pinned by tests/test_index_refresh.py.  Views not listed here can't be
-# range-checked and take the exact Spark check on every rebuild.
-_VIEW_OFFSETS: dict[str, tuple[int, ...]] = {
-    "plain": (0,),
-    "aug": (0, 1_000_000, 2_000_000),
-    # eval-split view (queries/text_pipeline decontamination): keeps a
-    # row iff doc_id % 97 == 0, ids unchanged — produced ids are a SUBSET
-    # of {x + 0}, which is all the guard needs
-    "eval97": (0,),
-}
 _DEGRADED_SRC = "__degraded__"
 
 
-def gram_freq_path(sf_dir: str, table: str = "documents", view: str = "aug") -> str:
-    """Index directory for one (corpus dir, table, CORPUS VIEW).  The view
-    tag is part of the key: the registered queries gram the AUGMENTED view
+def _key(sf_dir: str, view: CorpusView) -> str:
+    return f"{_ALGO_VERSION}|{os.path.abspath(sf_dir)}|{TABLE}|{NGRAM_N}|{view.name}"
+
+
+def gram_freq_path(sf_dir: str, view: CorpusView = AUG) -> str:
+    """Index directory for one (corpus dir, ``CorpusView``).  The view
+    name is part of the key: the registered queries gram the AUGMENTED view
     (synthetic duplicate injection the driver oracles are defined over)
     while the streaming ingest loop grams the PLAIN corpus — folding one
     view's partials into the other's query would be silently wrong, so the
     two views can never share a directory.  ``sf_dir`` is normalized with
     abspath (same as cluster_index_path) so relative vs absolute
     invocations of the same corpus hit the same index."""
-    return ix.index_path(
-        "gramfreq",
-        f"{_ALGO_VERSION}|{os.path.abspath(sf_dir)}|{table}|{NGRAM_N}|{view}",
-    )
-
-
-def _view_of(docs_of, view: str | None) -> str:
-    """Resolve the index-key view tag: the default ``docs_of`` is the
-    augmented query view; a caller-supplied ``docs_of`` (streaming/purge —
-    plain corpus) defaults to 'plain' unless the caller says otherwise."""
-    return view if view is not None else ("aug" if docs_of is None else "plain")
+    return ix.index_path("gramfreq", _key(sf_dir, view))
 
 
 def _partials_frame(docs: DataFrame) -> DataFrame:
-    """(src, gram, n_docs) for a documents frame in the caller's chosen
+    """(src, gram, n_docs) for a ``src``-tagged documents frame in one
     corpus view: distinct docs per 60-bit-hashed sliding 5-gram, within
-    src.  A frame without a ``src`` column (e.g. corpus_docs_of's
-    full-corpus branch) gets tagged here — still at the scan, before any
-    exchange, since nothing above this call shuffles.
+    src.
 
     ``count_distinct(doc_id)`` (not ``count(1)``) so a doc_id duplicated
     across two ROWS of the same part file is counted once — intra-file
@@ -91,8 +71,6 @@ def _partials_frame(docs: DataFrame) -> DataFrame:
     Shuffle cost is unchanged in the common case: after the per-row
     ``array_distinct``, (src, doc_id, gram) rows are already unique when
     doc_ids are, so the extra distinct level collapses nothing."""
-    if ix.SRC not in docs.columns:
-        docs = ix.with_src(docs)
     return (
         docs.select(
             ix.SRC,
@@ -137,12 +115,11 @@ def _degraded_partials(docs: DataFrame) -> DataFrame:
 
 
 def _expanded_intervals(
-    ranges: dict[str, list[int] | None] | None, view: str
+    ranges: dict[str, list[int] | None] | None, view: CorpusView
 ) -> list[tuple[int, int]] | None:
     """View-expanded per-file id intervals, or None when they can't prove
-    anything (missing stats, unknown view, legacy manifest)."""
-    offs = _VIEW_OFFSETS.get(view)
-    if offs is None or not isinstance(ranges, dict):
+    anything (missing stats, legacy manifest)."""
+    if not isinstance(ranges, dict):
         return None
     out: list[tuple[int, int]] = []
     for rng in ranges.values():
@@ -151,7 +128,7 @@ def _expanded_intervals(
         lo, hi = int(rng[0]), int(rng[1])
         if lo > hi:  # empty file: vacuously safe
             continue
-        out.extend((lo + o, hi + o) for o in offs)
+        out.extend((lo + o, hi + o) for o in view.offsets)
     return out
 
 
@@ -184,30 +161,9 @@ def _intervals_between_disjoint(
     return True
 
 
-def _augmented_docs_of(sf_dir: str):
-    """Default ``docs_of``: the registered queries' AUGMENTED corpus view
-    (queries/text_pipeline._augment — the synthetic duplicate injection the
-    driver oracles are defined over).  Real corpora (e.g. the streaming
-    ingest loop) pass a plain view instead — like the cluster index, the
-    caller owns which corpus view an index path serves; the augmentation is
-    row-local either way, so per-src purity (the refresh contract) holds
-    for both."""
-    from olap_sus_spark.catalog import load_table, spread_compute
-    from olap_sus_spark.queries.text_pipeline import _augment
-
-    def docs_of(spark: SparkSession, paths: list[str] | None) -> DataFrame:
-        if paths is None:
-            docs = ix.with_src(load_table(spark, sf_dir, "documents"))
-        else:
-            docs = ix.with_src(spark.read.parquet(*paths))
-        return _augment(spread_compute(docs))
-
-    return docs_of
-
-
-def _freq_table(sf_dir: str, table: str, view: str) -> ix.SrcTable:
+def _freq_table(sf_dir: str, view: CorpusView) -> ix.SrcTable:
     return ix.SrcTable(
-        gram_freq_path(sf_dir, table, view), sf_dir, table, {"grams": (("gram",), 4)}
+        gram_freq_path(sf_dir, view), sf_dir, TABLE, {"grams": (("gram",), 4)}
     )
 
 
@@ -216,8 +172,7 @@ def _doc_local(docs: DataFrame) -> bool:
     doc_id within src) is exact iff no doc_id lives in two part files —
     intra-file duplicate rows are harmless, so distinct (src, doc_id)
     tuples must equal distinct doc_ids."""
-    d = docs if ix.SRC in docs.columns else ix.with_src(docs)
-    n, nd = d.agg(
+    n, nd = docs.agg(
         F.count_distinct(F.col(ix.SRC), F.col("doc_id")),
         F.count_distinct(F.col("doc_id")),
     ).first()
@@ -227,9 +182,7 @@ def _doc_local(docs: DataFrame) -> bool:
 def load_or_build_gram_freq(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """Return the ``(src, gram, n_docs)`` partials, building + persisting
     on first use.  A manifest mismatch triggers the safe full staged
@@ -245,13 +198,11 @@ def load_or_build_gram_freq(
     (``src=__degraded__``) — served frequencies stay correct, maintenance
     degrades to rebuild-on-change.  The verdict (ranges + degraded flag)
     is stamped into the manifest for the refresh-time guard."""
-    view = _view_of(docs_of, view)
-    docs_of = docs_of or _augmented_docs_of(sf_dir)
-    t = _freq_table(sf_dir, table, view)
+    t = _freq_table(sf_dir, view)
 
     def build(staging: str) -> dict:
-        docs = docs_of(spark, None)
-        ranges = ix.corpus_id_ranges(sf_dir, table, "doc_id")
+        docs = view.docs(spark, sf_dir)
+        ranges = ix.corpus_id_ranges(sf_dir, TABLE, "doc_id")
         ivs = _expanded_intervals(ranges, view)
         proven = ivs is not None and _intervals_disjoint(ivs)
         degraded = not proven and not _doc_local(docs)
@@ -266,9 +217,7 @@ def load_or_build_gram_freq(
 def refresh_gram_freq(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """Incremental maintenance: re-gram ONLY the part files added or
     rewritten since the last manifest and overwrite their ``src=``
@@ -277,9 +226,7 @@ def refresh_gram_freq(
     build.  Single refresher per index directory (index_store.SrcTable):
     the streaming ingest loop is serialized per checkpoint by Structured
     Streaming itself, and the query path only ever load_or_builds."""
-    view = _view_of(docs_of, view)
-    docs_of = docs_of or _augmented_docs_of(sf_dir)
-    t = _freq_table(sf_dir, table, view)
+    t = _freq_table(sf_dir, view)
 
     def step(man: dict, d: ix.Diff) -> dict | None:
         if d.removed or man.get("degraded"):
@@ -299,7 +246,7 @@ def refresh_gram_freq(
         # falls back to the full staged rebuild, whose exact corpus-wide
         # check decides per-src vs degraded.
         old_ranges = man.get("doc_ranges")
-        new_ranges = ix.corpus_id_ranges(sf_dir, table, "doc_id", d.stale)
+        new_ranges = ix.corpus_id_ranges(sf_dir, TABLE, "doc_id", d.stale)
         if not isinstance(old_ranges, dict):
             return None
         kept = set(d.files) - set(d.stale)
@@ -314,29 +261,27 @@ def refresh_gram_freq(
             or not _intervals_between_disjoint(new_ivs, old_ivs)
         ):
             return None
-        batch = docs_of(spark, t.file_paths(d.stale))
+        batch = view.docs(spark, sf_dir, t.file_paths(d.stale))
         if not _doc_local(batch):
             return None
         t.write(t.path, "grams", _partials_frame(batch), d.stale)
         ranges = {k: v for k, v in old_ranges.items() if k in d.files}
         return {"doc_ranges": {**ranges, **new_ranges}, "degraded": False}
 
-    t.refresh(step, lambda: load_or_build_gram_freq(spark, sf_dir, table, docs_of, view))
+    t.refresh(step, lambda: load_or_build_gram_freq(spark, sf_dir, view))
     return _serve(spark, t.path)
 
 
 def shared_grams(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """Grams contained in >= 2 distinct documents corpus-wide, served from
     the maintained partials: one fold over the index table, zero corpus
     work."""
     return (
-        load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
+        load_or_build_gram_freq(spark, sf_dir, view)
         .groupBy("gram")
         .agg(F.sum("n_docs").alias("n_docs"))
         .filter(F.col("n_docs") >= 2)
@@ -357,11 +302,8 @@ def shared_grams(
 # Non-append changes (RTBF rewrites, removals) and degraded-mode partials
 # re-fold from the partials index — still never O(corpus) text work.
 # ---------------------------------------------------------------------------
-def rollup_path(sf_dir: str, table: str = "documents", view: str = "aug") -> str:
-    return ix.index_path(
-        "gramrollup",
-        f"{_ALGO_VERSION}|{os.path.abspath(sf_dir)}|{table}|{NGRAM_N}|{view}",
-    )
+def rollup_path(sf_dir: str, view: CorpusView = AUG) -> str:
+    return ix.index_path("gramrollup", _key(sf_dir, view))
 
 
 def _write_rollup_tables(rolled: DataFrame, root: str) -> None:
@@ -380,28 +322,25 @@ def _write_rollup_tables(rolled: DataFrame, root: str) -> None:
         rolled.unpersist()
 
 
-def _rollup_table(sf_dir: str, table: str, view: str) -> ix.SrcTable:
+def _rollup_table(sf_dir: str, view: CorpusView) -> ix.SrcTable:
     return ix.SrcTable(
-        rollup_path(sf_dir, table, view), sf_dir, table, {}, flat=("rollup", "cut")
+        rollup_path(sf_dir, view), sf_dir, TABLE, {}, flat=("rollup", "cut")
     )
 
 
 def load_or_build_gram_rollup(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """Global ``(gram, n_docs)``, building by folding the (fresh) partials
     on first use / staleness.  Inherits the partials' degraded flag so a
     doc-locality violation keeps forcing re-folds instead of merges."""
-    view = _view_of(docs_of, view)
-    t = _rollup_table(sf_dir, table, view)
+    t = _rollup_table(sf_dir, view)
 
     def build(staging: str) -> dict:
-        partials = load_or_build_gram_freq(spark, sf_dir, table, docs_of, view)
-        gman = ix.read_manifest(gram_freq_path(sf_dir, table, view)) or {}
+        partials = load_or_build_gram_freq(spark, sf_dir, view)
+        gman = ix.read_manifest(gram_freq_path(sf_dir, view)) or {}
         rolled = partials.groupBy("gram").agg(
             F.sum("n_docs").cast("bigint").alias("n_docs")
         )
@@ -546,9 +485,7 @@ def _capture_partials(spark: SparkSession, gpath: str, srcs: list[str]) -> str:
 def refresh_gram_rollup(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """Keep partials AND rollup fresh after an ingest or an RTBF rewrite.
     Appends contribute ``appended srcs' partials``; CHANGED files (purge
@@ -566,14 +503,13 @@ def refresh_gram_rollup(
     import shutil
     import uuid
 
-    view = _view_of(docs_of, view)
-    t = _rollup_table(sf_dir, table, view)
+    t = _rollup_table(sf_dir, view)
     path = t.path
-    gpath = gram_freq_path(sf_dir, table, view)
+    gpath = gram_freq_path(sf_dir, view)
 
     def rebuild() -> None:
-        refresh_gram_freq(spark, sf_dir, table, docs_of, view)
-        load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
+        refresh_gram_freq(spark, sf_dir, view)
+        load_or_build_gram_rollup(spark, sf_dir, view)
 
     def step(man: dict, d: ix.Diff) -> dict | None:
         if d.removed or man.get("degraded"):
@@ -584,7 +520,7 @@ def refresh_gram_rollup(
                 return None
             old_delta_tmp = _capture_partials(spark, gpath, d.changed)
         try:
-            refresh_gram_freq(spark, sf_dir, table, docs_of, view)
+            refresh_gram_freq(spark, sf_dir, view)
             if (ix.read_manifest(gpath) or {}).get("degraded"):
                 return None
             delta = (
@@ -721,17 +657,14 @@ def _fold_delta(
 def shared_grams_cut(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """The >=2 cut served from the maintained ROLLUP — a plain sorted scan
     of the base cut plus a broadcast overlay of the (bounded) crossing
     levels, zero base exchange (the scale serving path;
     :func:`shared_grams` remains the fold-the-partials fallback)."""
-    view = _view_of(docs_of, view)
-    load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
-    path = rollup_path(sf_dir, table, view)
+    load_or_build_gram_rollup(spark, sf_dir, view)
+    path = rollup_path(sf_dir, view)
     return _merged_cut(spark, path, ix.read_manifest(path))
 
 
@@ -758,11 +691,8 @@ def shared_grams_cut(
 # fall back to the full staged rebuild — correct first, incremental where
 # the invariants allow.  No counterpart in the reference.
 # ---------------------------------------------------------------------------
-def scrub_path(sf_dir: str, table: str = "documents", view: str = "aug") -> str:
-    return ix.index_path(
-        "gramscrub",
-        f"{_ALGO_VERSION}|{os.path.abspath(sf_dir)}|{table}|{NGRAM_N}|{view}",
-    )
+def scrub_path(sf_dir: str, view: CorpusView = AUG) -> str:
+    return ix.index_path("gramscrub", _key(sf_dir, view))
 
 
 def scrub_assemble(toks: DataFrame, covered_pos: DataFrame, extra=()) -> DataFrame:
@@ -810,8 +740,6 @@ def _scrub_frame(docs: DataFrame, shared: DataFrame, src_col=None) -> DataFrame:
     whose oracle the maintained table shares).  ``src_col`` overrides the
     provenance column (degraded mode writes one pseudo-partition)."""
     n = NGRAM_N
-    if src_col is None and ix.SRC not in docs.columns:
-        docs = ix.with_src(docs)
     src = F.lit(src_col) if src_col is not None else F.col(ix.SRC)
     toks = docs.select(
         src.alias(ix.SRC), "doc_id", tx.tokens(F.col("text")).alias("t")
@@ -833,18 +761,16 @@ def _scrub_frame(docs: DataFrame, shared: DataFrame, src_col=None) -> DataFrame:
     return scrub_assemble(toks, covered, extra=(ix.SRC,))
 
 
-def _scrub_table(sf_dir: str, table: str, view: str) -> ix.SrcTable:
+def _scrub_table(sf_dir: str, view: CorpusView) -> ix.SrcTable:
     return ix.SrcTable(
-        scrub_path(sf_dir, table, view), sf_dir, table, {"docs": (("doc_id",), 4)}
+        scrub_path(sf_dir, view), sf_dir, TABLE, {"docs": (("doc_id",), 4)}
     )
 
 
 def load_or_build_gram_scrub(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """The maintained scrub table, full staged build on first use /
     staleness: partials + rollup brought current first, then every part
@@ -852,20 +778,16 @@ def load_or_build_gram_scrub(
     violation) scrub the whole view in ONE pass under ``src=__degraded__``
     — identical semantics to the from-scratch query, which groups kept
     tokens by doc_id corpus-wide."""
-    view = _view_of(docs_of, view)
-    docs_of_r = docs_of or _augmented_docs_of(sf_dir)
-    t = _scrub_table(sf_dir, table, view)
+    t = _scrub_table(sf_dir, view)
 
     def build(staging: str) -> dict:
-        load_or_build_gram_rollup(spark, sf_dir, table, docs_of, view)
+        load_or_build_gram_rollup(spark, sf_dir, view)
         degraded = bool(
-            (ix.read_manifest(gram_freq_path(sf_dir, table, view)) or {}).get(
-                "degraded"
-            )
+            (ix.read_manifest(gram_freq_path(sf_dir, view)) or {}).get("degraded")
         )
-        shared = shared_grams_cut(spark, sf_dir, table, docs_of, view)
+        shared = shared_grams_cut(spark, sf_dir, view)
         frame = _scrub_frame(
-            docs_of_r(spark, None), shared, src_col=_DEGRADED_SRC if degraded else None
+            view.docs(spark, sf_dir), shared, src_col=_DEGRADED_SRC if degraded else None
         )
         t.write(staging, "docs", frame)
         return {"degraded": degraded}
@@ -877,9 +799,7 @@ def load_or_build_gram_scrub(
 def refresh_gram_scrub(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "documents",
-    docs_of=None,
-    view: str | None = None,
+    view: CorpusView = AUG,
 ) -> DataFrame:
     """Scrub-on-ingest AND scrub-on-purge: bring partials + rollup current,
     then rewrite ONLY the scrub partitions of (added ∪ changed srcs) ∪
@@ -893,10 +813,8 @@ def refresh_gram_scrub(
     assumption as :func:`refresh_gram_freq`."""
     import shutil
 
-    view = _view_of(docs_of, view)
-    docs_of_r = docs_of or _augmented_docs_of(sf_dir)
-    t = _scrub_table(sf_dir, table, view)
-    gpath = gram_freq_path(sf_dir, table, view)
+    t = _scrub_table(sf_dir, view)
+    gpath = gram_freq_path(sf_dir, view)
 
     def step(man: dict, d: ix.Diff) -> dict | None:
         if d.removed or man.get("degraded"):
@@ -907,7 +825,7 @@ def refresh_gram_scrub(
                 return None
             old_delta_tmp = _capture_partials(spark, gpath, d.changed)
         try:
-            rollup = refresh_gram_rollup(spark, sf_dir, table, docs_of, view)
+            rollup = refresh_gram_rollup(spark, sf_dir, view)
             if (ix.read_manifest(gpath) or {}).get("degraded"):
                 return None
             partials = spark.read.parquet(os.path.join(gpath, "grams"))
@@ -957,15 +875,15 @@ def refresh_gram_scrub(
             finally:
                 cand.unpersist()
             scope = sorted(set(d.stale) | affected)
-            shared = shared_grams_cut(spark, sf_dir, table, docs_of, view)
-            frame = _scrub_frame(docs_of_r(spark, t.file_paths(scope)), shared)
+            shared = shared_grams_cut(spark, sf_dir, view)
+            frame = _scrub_frame(view.docs(spark, sf_dir, t.file_paths(scope)), shared)
             t.write(t.path, "docs", frame, scope)
             return {"degraded": False}
         finally:
             if old_delta_tmp is not None:
                 shutil.rmtree(old_delta_tmp, ignore_errors=True)
 
-    t.refresh(step, lambda: load_or_build_gram_scrub(spark, sf_dir, table, docs_of, view))
+    t.refresh(step, lambda: load_or_build_gram_scrub(spark, sf_dir, view))
     return _serve_scrub(spark, t.path)
 
 

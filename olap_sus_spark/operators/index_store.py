@@ -597,6 +597,19 @@ class SrcTable:
             frame.unpersist()
         drop_src_partitions(dest, set(srcs) - written)
 
+    def compact(self, spark, target_files: int = 1) -> dict[str, dict[str, int]]:
+        """Small-file compaction of every partitioned component that exists
+        (:func:`compact_src_partitions`, each re-sorted on its declared
+        sort key).  Returns {component: {partition: files before}} for what
+        was rewritten."""
+        out = {}
+        for component, (sort, _) in self.parts.items():
+            root = os.path.join(self.path, component) if component else self.path
+            done = compact_src_partitions(spark, root, target_files, sort)
+            if done:
+                out[component] = done
+        return out
+
     def load_or_build(self, build: Callable[[str], dict | None]) -> None:
         """Full staged build when the manifest is stale or a component is
         missing: ``build(staging)`` writes every component under

@@ -1,4 +1,4 @@
-"""Join operators: broadcast star joins, role-playing dims, band joins.
+"""Join operators: band joins.
 
 The reference's join surface (SURVEY.md §2.3) is: broadcast left equi-joins
 of a fact against small dimensions (J1-J3, J6-J9), role-playing dimensions
@@ -6,6 +6,9 @@ of a fact against small dimensions (J1-J3, J6-J9), role-playing dimensions
 joins* (J4/J5) — equality on several attributes plus a range predicate on a
 banded measure with NULL↔NULL matching arms
 (/root/reference/dags/spark_script_sinasc.py:218-250).
+
+The equi-joins are plain ``join(F.broadcast(dim), ...)`` calls at their
+sites; only the band joins need operators.
 
 Band joins get two implementations:
 
@@ -24,16 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_left(fact: DataFrame, dim: DataFrame, on, how: str = "left") -> DataFrame:
-    """Broadcast the dimension side of a star join (J1-J3/J6 shape)."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
-def role_play(dim: DataFrame, key: str, out_key: str, join_col: str, out_join_col: str) -> DataFrame:
-    """Re-alias a dimension for role-playing joins (J3: birth vs residence)."""
-    return dim.select(F.col(join_col).alias(out_join_col), F.col(key).alias(out_key))
 
 
 def band_predicate(

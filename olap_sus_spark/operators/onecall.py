@@ -17,7 +17,8 @@ makes exactly ONE py4j call (``F.expr``).  Value fidelity:
   int64-bit-view compare over random magnitudes, ±0.0 and denormals in
   tests/test_r11_optimizations.py).
 - ints are rendered as ``L`` (BIGINT) or bare (INT) literals — exact.
-- strings are single-quoted with backslash/quote escaping.
+- strings are single-quoted with backslash/quote escaping, refused when
+  the session parses string literals with escapes kept verbatim.
 
 The resulting unresolved expression tree (``array(...)`` /
 ``named_struct(...)`` calls over foldable literals) is what the client-side
@@ -35,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 _INT32_MAX = 2**31 - 1
@@ -68,8 +69,26 @@ def sql_int(n: int) -> str:
     return str(n)
 
 
+_ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
+
+
 def sql_string(s: str) -> str:
-    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """Quoted STRING literal with backslash/quote escaping.  Under
+    ``spark.sql.parser.escapedStringLiterals=true`` the parser keeps the
+    escapes verbatim, so an escaped string would render to a different
+    value: refuse it.  Only a string that needs escaping reads the conf,
+    so the common path makes no extra py4j call."""
+    s = str(s)
+    escaped = s.replace("\\", "\\\\").replace("'", "\\'")
+    if escaped != s:
+        spark = SparkSession.getActiveSession()
+        mode = spark.conf.get(_ESCAPED_LITERALS, "false") if spark else "false"
+        if mode.lower() == "true":
+            raise ValueError(
+                f"cannot render {s!r} as a SQL string literal while "
+                f"{_ESCAPED_LITERALS}=true: the parser would keep its escapes"
+            )
+    return "'" + escaped + "'"
 
 
 def _array(items: Iterable[str]) -> str:

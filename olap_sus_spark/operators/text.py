@@ -107,19 +107,6 @@ def langid(text: Column | str) -> Column:
     return best["c"]
 
 
-def char_shingles(text: Column | str, k: int = 5) -> Column:
-    """k-character shingles of the normalized text (array, with repeats).
-
-    Built from the char array with :func:`sliding_concat` — the substr-per-
-    index construction re-evaluates the normalization regex once per element
-    (see sliding_concat).  Strings shorter than k yield one short shingle.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    norm = F.regexp_replace(F.lower(c), "[^a-z0-9]+", " ")
-    sh = sliding_concat(F.split(norm, ""), k, sep="")
-    return F.when(F.length(norm) >= k, sh).otherwise(F.array(norm))
-
-
 def sliding_concat(arr: Column, n: int, sep: str = " ") -> Column:
     """n-gram sliding window over an array via chained ``zip_with``.
 

@@ -42,13 +42,6 @@ ACCTBAL_BANDS: list[tuple[str, float | None, float | None]] = [
 ]
 
 
-def acctbal_band_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(label, lo, hi) for label, lo, hi in ACCTBAL_BANDS],
-        "faixa string, bal_min double, bal_max double",
-    )
-
-
 def _bands_values_sql() -> str:
     rows = ", ".join(
         "({}, {}, {})".format(

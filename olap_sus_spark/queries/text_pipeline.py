@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from olap_sus_spark.catalog import load_table, spread_compute
 from olap_sus_spark.operators import dedup as dd
 from olap_sus_spark.operators import text as tx
+from olap_sus_spark.operators.corpus_view import AUG, EVAL97, _augment
 from olap_sus_spark.operators.prefix import running_total
 from olap_sus_spark.registry import register
 
@@ -49,48 +50,11 @@ aug AS (
 """
 
 
-def _augment(docs: DataFrame) -> DataFrame:
-    """Derive the exact/near duplicate rows (1 source row → up to 3 output
-    rows) — row-local, so any extra columns (e.g. the ``src`` provenance an
-    incremental cluster refresh needs) propagate unchanged."""
-    exact = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    near = (
-        docs.filter(F.col("doc_id") % 11 == 0)
-        .withColumn("doc_id", F.col("doc_id") + 2000000)
-        .withColumn("text", F.concat(F.col("text"), F.lit(" zzduplicado")))
-    )
-    return docs.unionByName(exact).unionByName(near)
-
-
 def augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Every consumer immediately runs n-gram/signature hashing over the
     # text; spread the (narrow single-row-group) scan across cores first —
     # no-op on a wide input (catalog.spread_compute).
     return _augment(spread_compute(load_table(spark, sf_dir, "documents")))
-
-
-def augmented_docs_of(sf_dir: str):
-    """``docs_of`` factory for ``operators.dedup.refresh_cluster_index``:
-    the same augmented corpus view, restricted to specific parquet part
-    files and tagged with per-row source-file provenance (the refresh's
-    dynamic-partition-overwrite unit).  NOTE: the derived duplicate ids
-    (+1_000_000 / +2_000_000) interleave with base ids across ingest
-    batches, so refreshes of THIS view fall back to the full rebuild via
-    the id-order guard — the plain documents view (monotonic ids) is the
-    incremental-refresh shape; this factory exists so callers can hand one
-    ``docs_of`` to the refresh API regardless."""
-
-    def docs_of(spark: SparkSession, paths: list[str] | None) -> DataFrame:
-        if paths is None:
-            return augmented_docs(spark, sf_dir)
-        docs = spark.read.parquet(*paths).withColumn(
-            "src", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-        return _augment(spread_compute(docs))
-
-    return docs_of
 
 
 # ---------------------------------------------------------------------------
@@ -747,8 +711,7 @@ def dedup_near_clusters_star_served(spark: SparkSession, sf_dir: str) -> DataFra
     rebuild is a corpus-version-level batch job, not a query.  Oracle is
     hash-identical to the from-scratch twin's, proving the index holds
     exactly the star-CC map."""
-    docs = augmented_docs(spark, sf_dir)
-    idx = dd.load_or_build_cluster_index(spark, sf_dir, docs, threshold=0.5)
+    idx = dd.load_or_build_cluster_index(spark, sf_dir, AUG, threshold=0.5)
     return idx.select("doc_id", "cluster_id")
 
 
@@ -791,7 +754,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bench reports the build separately as index_build.near_dup_clusters,
     like the ANN builds)."""
     docs = augmented_docs(spark, sf_dir)
-    clusters = dd.load_or_build_cluster_index(spark, sf_dir, docs, threshold=0.5)
+    clusters = dd.load_or_build_cluster_index(spark, sf_dir, AUG, threshold=0.5)
     quality = docs.select("doc_id", tx.token_count(F.col("text")).alias("q_tokens"))
     # rank-1 window + COUNT window → ONE hash aggregate (r10): the window
     # pair forced a full sort of the corpus-sized member stream per
@@ -841,8 +804,7 @@ def dedup_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     user asked about'), every member of each probe's cluster.  Pure index
     probe: no shingling, no edge verification, no CC — two reads of the
     persisted map joined on cluster_id."""
-    docs = augmented_docs(spark, sf_dir)
-    idx = dd.load_or_build_cluster_index(spark, sf_dir, docs, threshold=0.5)
+    idx = dd.load_or_build_cluster_index(spark, sf_dir, AUG, threshold=0.5)
     probes = idx.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("probe_doc"), "cluster_id"
     )
@@ -1655,58 +1617,26 @@ def decontaminate_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # Maintained decontamination (VERDICT r09 #6): the eval gram set is a pure
 # per-src function of the eval-split corpus view, so it rides the ENTIRE
-# gram_freq maintenance contract unchanged — index keyed on view="eval97",
+# gram_freq maintenance contract unchanged — index keyed on the EVAL97 view,
 # per-src dynamic refresh O(ingested files), doc-locality guard, zero-row
 # partition drop, staged build + atomic promote.  The served twin shares
 # the from-scratch oracle: serving reads ~|eval grams| index rows instead
 # of re-gramming the eval split per call; the training side (per-doc
 # stats over the query's input corpus) is inherent to the question asked.
-def _eval_docs_of(sf_dir: str):
-    """Eval-split docs_of for the maintained eval gram set: plain
-    documents table (the decontamination queries run on the raw corpus,
-    no augmentation), rows kept iff ``doc_id % 97 == 0`` — the same
-    convention the from-scratch query filters inline.  src is tagged at
-    the scan, BEFORE spread_compute's potential repartition (input_file_name
-    dies at an exchange)."""
-    from olap_sus_spark.catalog import load_table, spread_compute
-    from olap_sus_spark.operators.index_store import with_src
-
-    def docs_of(spark: SparkSession, paths: list[str] | None):
-        if paths is None:
-            docs = with_src(load_table(spark, sf_dir, "documents"))
-        else:
-            docs = with_src(spark.read.parquet(*paths))
-        return spread_compute(docs.filter(F.col("doc_id") % 97 == 0))
-
-    return docs_of
-
-
 def load_or_build_eval_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintained eval gram SET (distinct fold over the per-src
     partials; set semantics need no flip handling — a gram is in the set
     iff any live src contributes it)."""
     from olap_sus_spark.operators import gramfreq as gf
 
-    return (
-        gf.load_or_build_gram_freq(
-            spark, sf_dir, docs_of=_eval_docs_of(sf_dir), view="eval97"
-        )
-        .select("gram")
-        .distinct()
-    )
+    return gf.load_or_build_gram_freq(spark, sf_dir, EVAL97).select("gram").distinct()
 
 
 def refresh_eval_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O(ingested files) maintenance of the eval gram set."""
     from olap_sus_spark.operators import gramfreq as gf
 
-    return (
-        gf.refresh_gram_freq(
-            spark, sf_dir, docs_of=_eval_docs_of(sf_dir), view="eval97"
-        )
-        .select("gram")
-        .distinct()
-    )
+    return gf.refresh_gram_freq(spark, sf_dir, EVAL97).select("gram").distinct()
 
 
 @register(

@@ -339,14 +339,3 @@ def _swap_in(spark: SparkSession, path: str, staging: str) -> None:
         fs.rename(jvm.org.apache.hadoop.fs.Path(path), retired)
         fs.rename(jvm.org.apache.hadoop.fs.Path(staging), jvm.org.apache.hadoop.fs.Path(path))
         fs.delete(retired, True)
-
-
-def _rm(spark: SparkSession, path: str) -> None:
-    if "://" not in path:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-    else:  # pragma: no cover
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jvm_path, True)

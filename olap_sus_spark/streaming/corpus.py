@@ -8,6 +8,8 @@ per-part-file index refreshes (``refresh_cluster_index`` for near-dup
 serving, ``refresh_srp_index``/``refresh_ivf_index`` for ANN serving) so
 every maintained index is fresh the moment the batch commits — cost
 O(ingested files), never O(corpus) (operators/dedup.py, similarity.py).
+The document refreshes pass a ``CorpusView`` — ``PLAIN``
+(operators/corpus_view.py) — which keys their index paths.
 
 Exactness is inherited, not re-argued: each refresh is bit-identical to a
 fresh full build or falls back to one (id-order and part-file-diff guards
@@ -28,7 +30,6 @@ from __future__ import annotations
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from olap_sus_spark.sources.sinks import append_exactly_once, run_tag_of
 from pyspark.sql.types import (
@@ -69,24 +70,6 @@ def read_embedding_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     return spark.readStream.schema(EMBEDDING_SCHEMA).json(landing_dir)
 
 
-def corpus_docs_of(corpus_dir: str):
-    """Plain-corpus ``docs_of`` for ``refresh_cluster_index``: the corpus
-    documents table, restricted to specific part files with per-row src
-    provenance when asked.  Plain monotonic doc ids are the true
-    incremental-refresh shape (no derived-id interleaving), so streaming
-    appends take the O(batch) path instead of the full-rebuild fallback."""
-    from olap_sus_spark.catalog import load_table
-
-    def docs_of(spark: SparkSession, paths: list[str] | None) -> DataFrame:
-        if paths is None:
-            return load_table(spark, corpus_dir, "documents")
-        return spark.read.parquet(*paths).withColumn(
-            "src", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-
-    return docs_of
-
-
 def _document_batch(
     corpus_dir: str,
     run_tag: str,
@@ -94,6 +77,8 @@ def _document_batch(
     threshold: float = 0.5,
 ):
     from olap_sus_spark.operators import dedup as dd
+    from olap_sus_spark.operators import gramfreq as gf
+    from olap_sus_spark.operators.corpus_view import PLAIN
 
     table = posixpath.join(corpus_dir, "documents.parquet")
 
@@ -103,21 +88,16 @@ def _document_batch(
         spark = batch.sparkSession
         append_exactly_once(batch, table, batch_id, run_tag)
         if refresh_indexes:
-            dd.refresh_cluster_index(
-                spark, corpus_dir, corpus_docs_of(corpus_dir), threshold=threshold
-            )
-            # exact-substring serving stays fresh too: O(batch) re-gram of
-            # the appended part files over the PLAIN corpus view (stream
-            # duplicates are real duplicates — no synthetic augmentation).
-            # refresh_gram_scrub chains all three maintained levels —
-            # partials -> rollup/cut -> per-src scrub output (incl. old
-            # files retroactively hit by a unique→shared flip), closing
-            # ingest→refresh→scrub→serve inside the micro-batch (r9)
-            from olap_sus_spark.operators import gramfreq as gf
-
-            gf.refresh_gram_scrub(
-                spark, corpus_dir, docs_of=corpus_docs_of(corpus_dir)
-            )
+            # both over the PLAIN corpus view: stream duplicates are real
+            # duplicates (no synthetic augmentation), and monotonic ids
+            # keep the cluster refresh on its O(batch) path
+            dd.refresh_cluster_index(spark, corpus_dir, PLAIN, threshold=threshold)
+            # exact-substring serving stays fresh too: refresh_gram_scrub
+            # chains all three maintained levels — partials -> rollup/cut
+            # -> per-src scrub output (incl. old files retroactively hit by
+            # a unique→shared flip), closing ingest→refresh→scrub→serve
+            # inside the micro-batch (r9)
+            gf.refresh_gram_scrub(spark, corpus_dir, PLAIN)
 
     return inner
 

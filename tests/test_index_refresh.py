@@ -18,6 +18,7 @@ from olap_sus_spark.catalog import load_table
 from olap_sus_spark.operators import dedup as dd
 from olap_sus_spark.operators import index_store as ix
 from olap_sus_spark.operators import similarity as sim
+from olap_sus_spark.operators.corpus_view import AUG, PLAIN
 from tests.conftest import SF_DIR
 
 pytestmark = pytest.mark.slow  # hour-scale chain/probe suite: opt-in via -m slow (driver verify window, r11)
@@ -213,31 +214,16 @@ def test_ivf_refresh_low_id_append_falls_back_to_rebuild(spark, tmp_path, monkey
 # Near-dup cluster map
 
 
-def _plain_docs_of(sf: str):
-    """The incremental-refresh corpus shape: raw documents, monotonic ids,
-    per-row src provenance."""
-
-    def docs_of(spark, paths):
-        if paths is None:
-            return load_table(spark, sf, "documents")
-        return spark.read.parquet(*paths).withColumn(
-            "src", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-
-    return docs_of
-
-
 def test_cluster_refresh_equals_fresh_build(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    docs_of = _plain_docs_of(sf)
-    dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
+    dd.load_or_build_cluster_index(spark, sf, PLAIN, threshold=0.5)
 
     _append_documents(spark, sf, "part-01.parquet")
-    got = _rows(dd.refresh_cluster_index(spark, sf, docs_of, threshold=0.5))
+    got = _rows(dd.refresh_cluster_index(spark, sf, PLAIN, threshold=0.5))
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
+    fresh = dd.load_or_build_cluster_index(spark, sf, PLAIN, threshold=0.5)
     assert got == _rows(fresh)
     # the appended docs actually clustered: exact copies of part-00 docs
     # (doc_id%3==0, even shifted id) must join their source's cluster
@@ -248,17 +234,16 @@ def test_cluster_refresh_equals_fresh_build(spark, tmp_path, monkeypatch):
 def test_cluster_refresh_touches_only_new_partitions(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    docs_of = _plain_docs_of(sf)
-    dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
-    path = dd.cluster_index_path(sf, 0.5)
-    base = os.path.join(path, "clusters", "src=__base__")
+    dd.load_or_build_cluster_index(spark, sf, PLAIN, threshold=0.5)
+    path = dd.cluster_index_path(sf, PLAIN, 0.5)
+    base = os.path.join(path, "clusters", "src=part-00.parquet")
     stamps = {
         f: os.path.getmtime(os.path.join(base, f))
         for f in os.listdir(base)
         if f.endswith(".parquet")
     }
     _append_documents(spark, sf, "part-01.parquet")
-    dd.refresh_cluster_index(spark, sf, docs_of, threshold=0.5)
+    dd.refresh_cluster_index(spark, sf, PLAIN, threshold=0.5)
     for f, ts in stamps.items():
         assert os.path.getmtime(os.path.join(base, f)) == ts
     assert os.path.isdir(os.path.join(path, "clusters", "src=part-01.parquet"))
@@ -270,29 +255,25 @@ def test_cluster_refresh_id_order_violation_falls_back(spark, tmp_path, monkeypa
     rebuild, and the result must still equal a fresh build."""
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    docs_of = _plain_docs_of(sf)
-    dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
+    dd.load_or_build_cluster_index(spark, sf, PLAIN, threshold=0.5)
 
     _append_documents(spark, sf, "part-01.parquet", id_shift=-100000)
-    got = _rows(dd.refresh_cluster_index(spark, sf, docs_of, threshold=0.5))
+    got = _rows(dd.refresh_cluster_index(spark, sf, PLAIN, threshold=0.5))
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
+    fresh = dd.load_or_build_cluster_index(spark, sf, PLAIN, threshold=0.5)
     assert got == _rows(fresh)
 
 
 def test_cluster_refresh_augmented_view_stays_correct(spark, tmp_path, monkeypatch):
-    """The serving view (text_pipeline.augmented_docs) has interleaved
-    derived ids; refresh over it must stay CORRECT (fallback path)."""
-    from olap_sus_spark.queries.text_pipeline import augmented_docs_of
-
+    """The serving view (corpus_view.AUG) has interleaved derived ids;
+    refresh over it must stay CORRECT (fallback path)."""
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    docs_of = augmented_docs_of(sf)
-    dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
+    dd.load_or_build_cluster_index(spark, sf, AUG, threshold=0.5)
     _append_documents(spark, sf, "part-01.parquet")
-    got = _rows(dd.refresh_cluster_index(spark, sf, docs_of, threshold=0.5))
+    got = _rows(dd.refresh_cluster_index(spark, sf, AUG, threshold=0.5))
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = dd.load_or_build_cluster_index(spark, sf, docs_of(spark, None), threshold=0.5)
+    fresh = dd.load_or_build_cluster_index(spark, sf, AUG, threshold=0.5)
     assert got == _rows(fresh)
 
 
@@ -569,23 +550,17 @@ def test_gramfreq_view_tag_separates_indexes(spark, tmp_path, monkeypatch):
     never share an index directory, and relative vs absolute sf_dir hit
     the same one."""
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    assert gf.gram_freq_path(sf) != gf.gram_freq_path(sf, view="plain")
+    assert gf.gram_freq_path(sf) != gf.gram_freq_path(sf, PLAIN)
     rel = os.path.relpath(sf)
     assert gf.gram_freq_path(rel) == gf.gram_freq_path(sf)
 
     # building both views over one corpus dir keeps them independent:
     # plain has strictly fewer shared grams (no augmented duplicates)
     aug = {r[0] for r in gf.shared_grams(spark, sf).collect()}
-    plain = {
-        r[0]
-        for r in gf.shared_grams(
-            spark, sf, docs_of=corpus_docs_of(sf)
-        ).collect()
-    }
+    plain = {r[0] for r in gf.shared_grams(spark, sf, PLAIN).collect()}
     assert len(aug) > len(plain)
     # and re-serving the aug view after the plain build still folds the
     # augmented partials (no silent cross-view reuse)
@@ -602,7 +577,6 @@ def test_gramfreq_duplicate_doc_id_degrades_and_stays_correct(
     spark, tmp_path, monkeypatch
 ):
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
@@ -612,9 +586,8 @@ def test_gramfreq_duplicate_doc_id_degrades_and_stays_correct(
         os.path.join(sf, "documents.parquet", "part-00.parquet"),
         os.path.join(sf, "documents.parquet", "part-01.parquet"),
     )
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of)
-    path = gf.gram_freq_path(sf, view="plain")
+    gf.load_or_build_gram_freq(spark, sf, PLAIN)
+    path = gf.gram_freq_path(sf, PLAIN)
     assert os.path.isdir(os.path.join(path, "grams", "src=__degraded__"))
     assert ix.read_manifest(path)["degraded"] is True
 
@@ -644,7 +617,7 @@ def test_gramfreq_duplicate_doc_id_degrades_and_stays_correct(
         .select("gram")
         .collect()
     }
-    served = {r[0] for r in gf.shared_grams(spark, sf, docs_of=docs_of).collect()}
+    served = {r[0] for r in gf.shared_grams(spark, sf, PLAIN).collect()}
     assert served == truth
     # and the naive per-ROW fold WOULD have been wrong (every gram appears
     # in 2 rows) — the guard is load-bearing, not decorative
@@ -656,13 +629,11 @@ def test_gramfreq_overlapping_append_falls_back_on_refresh(
     spark, tmp_path, monkeypatch
 ):
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of)
-    path = gf.gram_freq_path(sf, view="plain")
+    gf.load_or_build_gram_freq(spark, sf, PLAIN)
+    path = gf.gram_freq_path(sf, PLAIN)
     man = ix.read_manifest(path)
     assert man["degraded"] is False and "part-00.parquet" in man["doc_ranges"]
 
@@ -671,10 +642,10 @@ def test_gramfreq_overlapping_append_falls_back_on_refresh(
         os.path.join(sf, "documents.parquet", "part-00.parquet"),
         os.path.join(sf, "documents.parquet", "part-01.parquet"),
     )
-    got = _rows(gf.refresh_gram_freq(spark, sf, docs_of=docs_of))
+    got = _rows(gf.refresh_gram_freq(spark, sf, PLAIN))
     assert os.path.isdir(os.path.join(path, "grams", "src=__degraded__"))
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of))
+    fresh = _rows(gf.load_or_build_gram_freq(spark, sf, PLAIN))
     assert got == fresh and len(got) > 0
 
 
@@ -696,19 +667,16 @@ def test_gramfreq_clean_append_keeps_fast_path_and_stamps_ranges(
 
 
 def test_gramfreq_view_offsets_match_augment(spark):
-    """Pin _VIEW_OFFSETS['aug'] to the actual text_pipeline._augment id
-    derivation — a drifted offset would silently weaken the range guard."""
-    from olap_sus_spark.operators.gramfreq import _VIEW_OFFSETS
-    from olap_sus_spark.queries.text_pipeline import _augment
-
+    """Pin AUG.offsets to the view's own id derivation — a drifted offset
+    would silently weaken the range guard."""
     base = spark.createDataFrame(
         [(i, "w%d" % i) for i in range(0, 100)], "doc_id long, text string"
     )
-    out_ids = {r[0] for r in _augment(base).select("doc_id").collect()}
-    allowed = {i + o for i in range(0, 100) for o in _VIEW_OFFSETS["aug"]}
+    out_ids = {r[0] for r in AUG.transform(base).select("doc_id").collect()}
+    allowed = {i + o for i in range(0, 100) for o in AUG.offsets}
     assert out_ids <= allowed
     # every non-zero offset is actually exercised
-    for o in _VIEW_OFFSETS["aug"]:
+    for o in AUG.offsets:
         assert any(i + o in out_ids for i in range(0, 100))
 
 
@@ -764,22 +732,20 @@ def test_gram_rollup_rewrite_refolds_and_equals_rebuild(spark, tmp_path, monkeyp
 
 def test_gram_rollup_degraded_partials_stay_correct(spark, tmp_path, monkeypatch):
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
-    docs_of = corpus_docs_of(sf)
-    before = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
+    before = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
     # invariant-violating append → refresh must land on the degraded
     # re-fold, and the rollup equals the distinct-doc truth
     shutil.copy(
         os.path.join(sf, "documents.parquet", "part-00.parquet"),
         os.path.join(sf, "documents.parquet", "part-01.parquet"),
     )
-    got = _rows(gf.refresh_gram_rollup(spark, sf, docs_of=docs_of))
-    assert ix.read_manifest(gf.rollup_path(sf, view="plain"))["degraded"] is True
+    got = _rows(gf.refresh_gram_rollup(spark, sf, PLAIN))
+    assert ix.read_manifest(gf.rollup_path(sf, PLAIN))["degraded"] is True
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
+    fresh = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
     assert got == fresh
     # byte-copied rows are the SAME docs: distinct-doc counts unchanged
     # (the naive per-row fold would have doubled every n_docs)
@@ -816,7 +782,6 @@ def test_gram_scrub_retroactive_flip_rescrubs_old_file(spark, tmp_path, monkeypa
     affected old doc come out identical to a full rebuild, and the
     unaffected file's partition is untouched."""
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = str(tmp_path / "corpus")
@@ -828,14 +793,13 @@ def test_gram_scrub_retroactive_flip_rescrubs_old_file(spark, tmp_path, monkeypa
         spark, sf, "part-zz.parquet",
         [(200, "q r s t u v"), (201, "m n o p qq rr")],
     )
-    docs_of = corpus_docs_of(sf)
     base = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.load_or_build_gram_scrub(spark, sf, PLAIN).collect()
     }
     # no shared grams yet: nothing scrubbed anywhere
     assert all(r[2] == 0 for r in base.values())
-    path = gf.scrub_path(sf, view="plain")
+    path = gf.scrub_path(sf, PLAIN)
     zz_before = _scrub_part_mtimes(path, "part-zz.parquet")
 
     # append: doc 10 shares the 5-gram "a b c d e" with OLD doc 1 (flip)
@@ -845,7 +809,7 @@ def test_gram_scrub_retroactive_flip_rescrubs_old_file(spark, tmp_path, monkeypa
     )
     got = {
         r[0]: tuple(r)
-        for r in gf.refresh_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.refresh_gram_scrub(spark, sf, PLAIN).collect()
     }
 
     # the new doc AND the retroactively affected old doc are scrubbed
@@ -859,7 +823,7 @@ def test_gram_scrub_retroactive_flip_rescrubs_old_file(spark, tmp_path, monkeypa
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
     fresh = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.load_or_build_gram_scrub(spark, sf, PLAIN).collect()
     }
     assert got == fresh
 
@@ -868,7 +832,6 @@ def test_gram_scrub_no_flip_append_touches_only_new_partition(
     spark, tmp_path, monkeypatch
 ):
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = str(tmp_path / "corpus")
@@ -876,9 +839,8 @@ def test_gram_scrub_no_flip_append_touches_only_new_partition(
         spark, sf, "part-00.parquet",
         [(1, "a b c d e f"), (2, "g h i j k")],
     )
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of)
-    path = gf.scrub_path(sf, view="plain")
+    gf.load_or_build_gram_scrub(spark, sf, PLAIN)
+    path = gf.scrub_path(sf, PLAIN)
     before = _scrub_part_mtimes(path, "part-00.parquet")
 
     _write_doc_part(
@@ -887,7 +849,7 @@ def test_gram_scrub_no_flip_append_touches_only_new_partition(
     )
     got = {
         r[0]: tuple(r)
-        for r in gf.refresh_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.refresh_gram_scrub(spark, sf, PLAIN).collect()
     }
     # intra-batch duplicate gram scrubbed, old file untouched on disk
     assert got[10][2] == 5 and got[11][2] == 5
@@ -898,14 +860,13 @@ def test_gram_scrub_no_flip_append_touches_only_new_partition(
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
     fresh = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.load_or_build_gram_scrub(spark, sf, PLAIN).collect()
     }
     assert got == fresh
 
 
 def test_gram_scrub_rewrite_and_degraded_fall_back(spark, tmp_path, monkeypatch):
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = str(tmp_path / "corpus")
@@ -913,8 +874,7 @@ def test_gram_scrub_rewrite_and_degraded_fall_back(spark, tmp_path, monkeypatch)
         spark, sf, "part-00.parquet",
         [(1, "a b c d e f"), (2, "a b c d e g")],
     )
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of)
+    gf.load_or_build_gram_scrub(spark, sf, PLAIN)
 
     # in-place rewrite (RTBF shape) → full rebuild, still exact
     _write_doc_part(spark, sf, "part-00.parquet", [(1, "a b c d e f")])
@@ -922,7 +882,7 @@ def test_gram_scrub_rewrite_and_degraded_fall_back(spark, tmp_path, monkeypatch)
 
     now = time.time() + 2
     os.utime(os.path.join(sf, "documents.parquet", "part-00.parquet"), (now, now))
-    got = _rows(gf.refresh_gram_scrub(spark, sf, docs_of=docs_of))
+    got = _rows(gf.refresh_gram_scrub(spark, sf, PLAIN))
     assert [r[2] for r in got] == [0]  # partner doc gone: nothing shared
 
     # doc-locality violation → degraded single-pass scrub, still exact
@@ -930,11 +890,11 @@ def test_gram_scrub_rewrite_and_degraded_fall_back(spark, tmp_path, monkeypatch)
         os.path.join(sf, "documents.parquet", "part-00.parquet"),
         os.path.join(sf, "documents.parquet", "part-01.parquet"),
     )
-    got2 = _rows(gf.refresh_gram_scrub(spark, sf, docs_of=docs_of))
-    path = gf.scrub_path(sf, view="plain")
+    got2 = _rows(gf.refresh_gram_scrub(spark, sf, PLAIN))
+    path = gf.scrub_path(sf, PLAIN)
     assert os.path.isdir(os.path.join(path, "docs", "src=__degraded__"))
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of))
+    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, PLAIN))
     assert got2 == fresh
 
 
@@ -946,26 +906,24 @@ def test_gram_scrub_purge_unscrubs_retroactively(spark, tmp_path, monkeypatch):
     whole table equals a full rebuild over the purged corpus."""
     from olap_sus_spark.operators import gramfreq as gf
     from olap_sus_spark.operators import purge as pg
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = str(tmp_path / "corpus")
     _write_doc_part(spark, sf, "part-00.parquet", [(1, "a b c d e f")])
     _write_doc_part(spark, sf, "part-01.parquet", [(10, "a b c d e g")])
     _write_doc_part(spark, sf, "part-zz.parquet", [(200, "q r s t u v")])
-    docs_of = corpus_docs_of(sf)
     base = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.load_or_build_gram_scrub(spark, sf, PLAIN).collect()
     }
     assert base[1][2] == 5 and base[10][2] == 5  # the shared gram scrubbed
-    path = gf.scrub_path(sf, view="plain")
+    path = gf.scrub_path(sf, PLAIN)
     zz_before = _scrub_part_mtimes(path, "part-zz.parquet")
 
     assert pg.purge_table_ids(spark, sf, "documents", "doc_id", [10]) == 1
     got = {
         r[0]: tuple(r)
-        for r in gf.refresh_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.refresh_gram_scrub(spark, sf, PLAIN).collect()
     }
     assert set(got) == {1, 200}
     assert got[1][2] == 0 and got[1][3] == "a b c d e f"  # tokens RESTORED
@@ -976,7 +934,7 @@ def test_gram_scrub_purge_unscrubs_retroactively(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
     fresh = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of).collect()
+        for r in gf.load_or_build_gram_scrub(spark, sf, PLAIN).collect()
     }
     assert got == fresh
 
@@ -987,7 +945,6 @@ def test_gram_rollup_purge_delta_merge_equals_rebuild(spark, tmp_path, monkeypat
     fresh rebuild and the purged doc's grams leave the cut."""
     from olap_sus_spark.operators import gramfreq as gf
     from olap_sus_spark.operators import purge as pg
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = str(tmp_path / "corpus")
@@ -995,16 +952,15 @@ def test_gram_rollup_purge_delta_merge_equals_rebuild(spark, tmp_path, monkeypat
     _write_doc_part(
         spark, sf, "part-01.parquet", [(10, "a b c d e g"), (11, "h i j k l m")]
     )
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of)
-    assert gf.shared_grams_cut(spark, sf, docs_of=docs_of).count() == 1
+    gf.load_or_build_gram_rollup(spark, sf, PLAIN)
+    assert gf.shared_grams_cut(spark, sf, PLAIN).count() == 1
 
     assert pg.purge_table_ids(spark, sf, "documents", "doc_id", [10]) == 1
-    got = _rows(gf.refresh_gram_rollup(spark, sf, docs_of=docs_of))
-    assert gf.shared_grams_cut(spark, sf, docs_of=docs_of).count() == 0
+    got = _rows(gf.refresh_gram_rollup(spark, sf, PLAIN))
+    assert gf.shared_grams_cut(spark, sf, PLAIN).count() == 0
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
+    fresh = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
     assert got == fresh and len(got) > 0
 
 

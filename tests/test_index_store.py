@@ -226,3 +226,21 @@ def test_empty_src_component_serves_typed_empty_frame(spark, tmp_path):
     out = ix.serve(spark, path, "grams", "gram bigint, n_docs bigint")
     assert out.count() == 0
     assert out.dtypes == [("gram", "bigint"), ("n_docs", "bigint")]
+
+
+def test_cluster_map_views_never_share_an_index(spark, tmp_path, monkeypatch):
+    """The corpus view keys the cluster map's path: a PLAIN map built
+    first over the same corpus and index root must not be served as the
+    registry's near_dup_clusters, which is over the AUG view."""
+    from olap_sus_spark.maintenance import specs
+    from olap_sus_spark.operators import dedup as dd
+    from olap_sus_spark.operators.corpus_view import PLAIN
+    from tests.conftest import SF_DIR
+
+    spec = next(s for s in specs() if s.name == "near_dup_clusters")
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "fresh"))
+    want = spec.build(spark, SF_DIR).count()
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    plain = dd.load_or_build_cluster_index(spark, SF_DIR, PLAIN, threshold=0.5)
+    assert plain.count() < want
+    assert spec.build(spark, SF_DIR).count() == want

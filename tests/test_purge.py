@@ -99,12 +99,12 @@ def test_purge_propagates_to_srp_and_ivf(spark, tmp_path, monkeypatch):
 def test_purge_propagates_to_inverted_and_clusters(spark, tmp_path, monkeypatch):
     from olap_sus_spark.operators import dedup as dd
     from olap_sus_spark.operators import inverted as iv
+    from olap_sus_spark.operators.corpus_view import PLAIN
 
     corpus = _stage_corpus(spark, tmp_path)
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     iv.load_or_build_inverted_index(spark, corpus, "documents")
-    docs = load_table(spark, corpus, "documents")
-    dd.load_or_build_cluster_index(spark, corpus, docs)
+    dd.load_or_build_cluster_index(spark, corpus, PLAIN)
 
     assert pg.purge_table_ids(
         spark, corpus, "documents", "doc_id", _PURGE
@@ -117,9 +117,7 @@ def test_purge_propagates_to_inverted_and_clusters(spark, tmp_path, monkeypatch)
 
     # cluster labels are global (a purged doc can be a hub): the manifest
     # mismatch routes the next load through the safe full rebuild
-    clusters = dd.load_or_build_cluster_index(
-        spark, corpus, load_table(spark, corpus, "documents")
-    )
+    clusters = dd.load_or_build_cluster_index(spark, corpus, PLAIN)
     assert clusters.filter(F.col("doc_id").isin(_PURGE)).count() == 0
     assert clusters.filter(F.col("cluster_id").isin(_PURGE)).count() == 0
 
@@ -145,12 +143,11 @@ def test_purge_propagates_to_gram_freq(spark, tmp_path, monkeypatch):
     purged corpus, unaffected src partitions keep their bytes, and a
     purged doc's shared grams drop out of the >=2 serving cut."""
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
+    from olap_sus_spark.operators.corpus_view import PLAIN
 
     corpus = _stage_corpus(spark, tmp_path)
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    docs_of = corpus_docs_of(corpus)
-    gf.load_or_build_gram_freq(spark, corpus, docs_of=docs_of)
+    gf.load_or_build_gram_freq(spark, corpus, PLAIN)
 
     # a doc pair sharing grams ONLY with each other: duplicate doc 3's
     # text onto a fresh id, rebuild the index, then purge the original
@@ -163,18 +160,18 @@ def test_purge_propagates_to_gram_freq(spark, tmp_path, monkeypatch):
     extra.coalesce(1).write.mode("overwrite").parquet(staging)
     part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
     os.replace(os.path.join(staging, part), os.path.join(doc_dir, "part-extra.parquet"))
-    gf.refresh_gram_freq(spark, corpus, docs_of=docs_of)
-    shared_before = {r[0] for r in gf.shared_grams(spark, corpus, docs_of=docs_of).collect()}
+    gf.refresh_gram_freq(spark, corpus, PLAIN)
+    shared_before = {r[0] for r in gf.shared_grams(spark, corpus, PLAIN).collect()}
 
     doc_parts = sorted(f for f in os.listdir(doc_dir) if f.endswith(".parquet"))
     before = {f: os.stat(os.path.join(doc_dir, f)).st_mtime_ns for f in doc_parts}
     assert pg.purge_table_ids(spark, corpus, "documents", "doc_id", _PURGE) == len(_PURGE)
-    served = sorted(tuple(r) for r in gf.refresh_gram_freq(spark, corpus, docs_of=docs_of).collect())
+    served = sorted(tuple(r) for r in gf.refresh_gram_freq(spark, corpus, PLAIN).collect())
 
     # equals a fresh rebuild over the purged corpus
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
     fresh = sorted(
-        tuple(r) for r in gf.load_or_build_gram_freq(spark, corpus, docs_of=docs_of).collect()
+        tuple(r) for r in gf.load_or_build_gram_freq(spark, corpus, PLAIN).collect()
     )
     assert served == fresh
 
@@ -191,5 +188,5 @@ def test_purge_propagates_to_gram_freq(spark, tmp_path, monkeypatch):
 
     # doc 3 purged -> grams it shared ONLY with its 777777 duplicate fall
     # out of the >=2 cut (777777's text now appears once corpus-wide)
-    shared_after = {r[0] for r in gf.shared_grams(spark, corpus, docs_of=docs_of).collect()}
+    shared_after = {r[0] for r in gf.shared_grams(spark, corpus, PLAIN).collect()}
     assert shared_after < shared_before

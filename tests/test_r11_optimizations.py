@@ -73,6 +73,23 @@ def test_onecall_int_and_string_fidelity(spark):
     assert dict(df.dtypes)["b"] == "array<bigint>"
 
 
+def test_onecall_string_refuses_verbatim_escape_parsing(spark):
+    """With escapedStringLiterals=true the parser keeps backslash escapes,
+    so "o'brien" would render to "o\\'brien": a string that needs
+    escaping must raise instead; one that needs none still renders."""
+    from olap_sus_spark.operators.onecall import lit_strings, sql_string
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        assert spark.range(1).select(lit_strings(["plain"])).first()[0] == ["plain"]
+        for s in ("o'brien", "back\\slash"):
+            with pytest.raises(ValueError, match=key):
+                sql_string(s)
+    finally:
+        spark.conf.unset(key)
+
+
 def test_onecall_inline_rows_matches_scalar_lit_inline(spark):
     from olap_sus_spark.operators.onecall import inline_rows
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from olap_sus_spark.operators import gramfreq as gf
 from olap_sus_spark.operators import index_store as ix
+from olap_sus_spark.operators.corpus_view import PLAIN
 from tests.conftest import SF_DIR
 
 pytestmark = pytest.mark.slow  # hour-scale chain/probe suite: opt-in via -m slow (driver verify window, r11)
@@ -87,7 +88,6 @@ def test_intra_file_dup_keeps_fast_path_and_exact_cut(
     served >=2 cut must equal the distinct-document truth: the duplicated
     doc's unique grams must NOT leak into the cut."""
     from olap_sus_spark.operators import text as tx
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path)
@@ -109,9 +109,8 @@ def test_intra_file_dup_keeps_fast_path_and_exact_cut(
     ).select(*docs.columns)
     _move_single_part(docs.unionAll(dup).unionAll(dup), part)
 
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of)
-    path = gf.gram_freq_path(sf, view="plain")
+    gf.load_or_build_gram_freq(spark, sf, PLAIN)
+    path = gf.gram_freq_path(sf, PLAIN)
     man = ix.read_manifest(path)
     assert man["degraded"] is False  # fast path kept, not degraded
     assert not os.path.isdir(os.path.join(path, "grams", "src=__degraded__"))
@@ -139,9 +138,7 @@ def test_intra_file_dup_keeps_fast_path_and_exact_cut(
         .select("gram")
         .collect()
     }
-    served = {
-        r[0] for r in gf.shared_grams(spark, sf, docs_of=docs_of).collect()
-    }
+    served = {r[0] for r in gf.shared_grams(spark, sf, PLAIN).collect()}
     assert served == truth
     # the pre-fix per-row fold WOULD have differed (the duplicated doc's
     # solo grams would read n_docs=2): prove the fix is load-bearing
@@ -172,7 +169,6 @@ def test_cross_file_dup_still_degrades(spark, tmp_path, monkeypatch):
     """The refined exact check (distinct (src, doc_id) == distinct doc_id)
     must still catch a doc_id living in TWO part files with overlapping
     footer ranges — per-src fold impossible, degrade required."""
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path)
@@ -180,9 +176,8 @@ def test_cross_file_dup_still_degrades(spark, tmp_path, monkeypatch):
         os.path.join(sf, "documents.parquet", "part-00.parquet"),
         os.path.join(sf, "documents.parquet", "part-01.parquet"),
     )
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of)
-    path = gf.gram_freq_path(sf, view="plain")
+    gf.load_or_build_gram_freq(spark, sf, PLAIN)
+    path = gf.gram_freq_path(sf, PLAIN)
     assert ix.read_manifest(path)["degraded"] is True
 
 
@@ -280,7 +275,7 @@ def test_maybe_broadcast_eval_probe_is_bounded(spark):
 
 # ---------------------------------------------------------------------------
 # 7. maintained decontamination (VERDICT r09 #6): the eval gram set rides
-# the gram_freq contract under view="eval97"; refresh == rebuild, and the
+# the gram_freq contract under the EVAL97 view; refresh == rebuild, and the
 # served twin equals the from-scratch query row for row.
 # ---------------------------------------------------------------------------
 def test_eval_grams_refresh_equals_rebuild(spark, tmp_path, monkeypatch):
@@ -405,15 +400,13 @@ def test_compaction_shrinks_files_preserves_values_and_refresh(
     import olap_sus_spark.operators.inverted as inv
     from olap_sus_spark.operators import gramfreq as gf
     from olap_sus_spark.operators.compaction import compact_maintained_indexes
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path)
-    docs_of = corpus_docs_of(sf)
     docs0 = spark.read.parquet(os.path.join(sf, "documents.parquet", "part-00.parquet"))
     max_id = docs0.agg(F.max("doc_id")).first()[0] + 1
 
-    gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of)
+    gf.load_or_build_gram_scrub(spark, sf, PLAIN)
     inv.load_or_build_inverted_index(spark, sf)
     for i in (1, 2):  # two refresh rounds accumulate per-src files
         extra = docs0.filter(F.col("doc_id") % 5 == i).withColumn(
@@ -422,21 +415,21 @@ def test_compaction_shrinks_files_preserves_values_and_refresh(
         _move_single_part(
             extra, os.path.join(sf, "documents.parquet", f"part-{i:02d}.parquet")
         )
-        gf.refresh_gram_scrub(spark, sf, docs_of=docs_of)
+        gf.refresh_gram_scrub(spark, sf, PLAIN)
         inv.refresh_inverted_index(spark, sf)
 
-    gpath = os.path.join(gf.gram_freq_path(sf, view="plain"), "grams")
-    spath = os.path.join(gf.scrub_path(sf, view="plain"), "docs")
+    gpath = os.path.join(gf.gram_freq_path(sf, PLAIN), "grams")
+    spath = os.path.join(gf.scrub_path(sf, PLAIN), "docs")
     ppath = os.path.join(inv.inverted_index_path(sf), "postings")
     before = {p: _n_parquet(p) for p in (gpath, spath, ppath)}
     served_before = {
-        "grams": _rows(gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of)),
-        "scrub": _rows(gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of)),
+        "grams": _rows(gf.load_or_build_gram_freq(spark, sf, PLAIN)),
+        "scrub": _rows(gf.load_or_build_gram_scrub(spark, sf, PLAIN)),
         "postings": _rows(inv.load_or_build_inverted_index(spark, sf)[0]),
     }
-    man_before = ix.read_manifest(gf.gram_freq_path(sf, view="plain"))
+    man_before = ix.read_manifest(gf.gram_freq_path(sf, PLAIN))
 
-    done = compact_maintained_indexes(spark, sf, view="plain")
+    done = compact_maintained_indexes(spark, sf, PLAIN)
     assert "gramfreq/grams" in done and "inverted/postings" in done
     after = {p: _n_parquet(p) for p in (gpath, spath, ppath)}
     for p in before:
@@ -449,12 +442,12 @@ def test_compaction_shrinks_files_preserves_values_and_refresh(
                 assert len(files) == 1, (e.path, files)
 
     # served values bit-identical, manifest untouched
-    assert man_before == ix.read_manifest(gf.gram_freq_path(sf, view="plain"))
+    assert man_before == ix.read_manifest(gf.gram_freq_path(sf, PLAIN))
     assert served_before["grams"] == _rows(
-        gf.load_or_build_gram_freq(spark, sf, docs_of=docs_of)
+        gf.load_or_build_gram_freq(spark, sf, PLAIN)
     )
     assert served_before["scrub"] == _rows(
-        gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of)
+        gf.load_or_build_gram_scrub(spark, sf, PLAIN)
     )
     assert served_before["postings"] == _rows(
         inv.load_or_build_inverted_index(spark, sf)[0]
@@ -467,9 +460,9 @@ def test_compaction_shrinks_files_preserves_values_and_refresh(
     _move_single_part(
         extra, os.path.join(sf, "documents.parquet", "part-03.parquet")
     )
-    got = _rows(gf.refresh_gram_scrub(spark, sf, docs_of=docs_of))
+    got = _rows(gf.refresh_gram_scrub(spark, sf, PLAIN))
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of))
+    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, PLAIN))
     assert got == fresh and len(got) > 0
 
 
@@ -488,15 +481,15 @@ def test_compaction_skips_missing_indexes(spark, tmp_path, monkeypatch):
 # and the level cap folds everything back into a fresh sorted base —
 # serve == fresh rebuild after every step.
 # ---------------------------------------------------------------------------
-def _fresh_rollup_rows(spark, sf, docs_of, tmp_path, tag):
+def _fresh_rollup_rows(spark, sf, tmp_path, tag):
     """Rollup + cut of a FRESH full build in a throwaway index root."""
     old = os.environ.get("SPARK_GRAFT_INDEX_DIR")
     os.environ["SPARK_GRAFT_INDEX_DIR"] = str(tmp_path / f"idx_fresh_{tag}")
     try:
         from olap_sus_spark.operators import gramfreq as gf
 
-        r = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
-        c = _rows(gf.shared_grams_cut(spark, sf, docs_of=docs_of))
+        r = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
+        c = _rows(gf.shared_grams_cut(spark, sf, PLAIN))
         return r, c
     finally:
         os.environ["SPARK_GRAFT_INDEX_DIR"] = old
@@ -504,14 +497,12 @@ def _fresh_rollup_rows(spark, sf, docs_of, tmp_path, tag):
 
 def test_rollup_lsm_levels_and_fold(spark, tmp_path, monkeypatch):
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     monkeypatch.setattr(gf, "_ROLLUP_MAX_LEVELS", 3)
     sf = _mk_corpus(spark, tmp_path)
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of)
-    path = gf.rollup_path(sf, view="plain")
+    gf.load_or_build_gram_rollup(spark, sf, PLAIN)
+    path = gf.rollup_path(sf, PLAIN)
     assert gf._levels_of(ix.read_manifest(path)) == []
     base_files = sorted(os.listdir(os.path.join(path, "rollup")))
 
@@ -536,14 +527,14 @@ def test_rollup_lsm_levels_and_fold(spark, tmp_path, monkeypatch):
         _move_single_part(
             batch, os.path.join(sf, "documents.parquet", f"part-{i:02d}.parquet")
         )
-        gf.refresh_gram_rollup(spark, sf, docs_of=docs_of)
+        gf.refresh_gram_rollup(spark, sf, PLAIN)
         man = ix.read_manifest(path)
         assert len(gf._levels_of(man)) == i  # one level per ingest
         # the sorted base was NOT rewritten
         assert sorted(os.listdir(os.path.join(path, "rollup"))) == base_files
-        got_r = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
-        got_c = _rows(gf.shared_grams_cut(spark, sf, docs_of=docs_of))
-        fr, fc = _fresh_rollup_rows(spark, sf, docs_of, tmp_path, f"a{i}")
+        got_r = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
+        got_c = _rows(gf.shared_grams_cut(spark, sf, PLAIN))
+        fr, fc = _fresh_rollup_rows(spark, sf, tmp_path, f"a{i}")
         assert got_r == fr and got_c == fc and len(got_c) > 0
 
     # ingest 3: RTBF-style rewrite of the dup file -> negative deltas,
@@ -558,12 +549,12 @@ def test_rollup_lsm_levels_and_fold(spark, tmp_path, monkeypatch):
     )
     now = time.time() + 2
     os.utime(os.path.join(sf, "documents.parquet", "part-01.parquet"), (now, now))
-    gf.refresh_gram_rollup(spark, sf, docs_of=docs_of)
+    gf.refresh_gram_rollup(spark, sf, PLAIN)
     assert len(gf._levels_of(ix.read_manifest(path))) == 3
     assert sorted(os.listdir(os.path.join(path, "rollup"))) == base_files
-    got_r = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
-    got_c = _rows(gf.shared_grams_cut(spark, sf, docs_of=docs_of))
-    fr, fc = _fresh_rollup_rows(spark, sf, docs_of, tmp_path, "rtbf")
+    got_r = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
+    got_c = _rows(gf.shared_grams_cut(spark, sf, PLAIN))
+    fr, fc = _fresh_rollup_rows(spark, sf, tmp_path, "rtbf")
     assert got_r == fr and got_c == fc
 
     # ingest 4: level cap reached -> FOLD into a fresh sorted base
@@ -573,13 +564,13 @@ def test_rollup_lsm_levels_and_fold(spark, tmp_path, monkeypatch):
     _move_single_part(
         batch, os.path.join(sf, "documents.parquet", "part-04.parquet")
     )
-    gf.refresh_gram_rollup(spark, sf, docs_of=docs_of)
+    gf.refresh_gram_rollup(spark, sf, PLAIN)
     man = ix.read_manifest(path)
     assert gf._levels_of(man) == []  # folded
     assert not os.path.exists(os.path.join(path, "rdelta"))  # promote wiped
-    got_r = _rows(gf.load_or_build_gram_rollup(spark, sf, docs_of=docs_of))
-    got_c = _rows(gf.shared_grams_cut(spark, sf, docs_of=docs_of))
-    fr, fc = _fresh_rollup_rows(spark, sf, docs_of, tmp_path, "fold")
+    got_r = _rows(gf.load_or_build_gram_rollup(spark, sf, PLAIN))
+    got_c = _rows(gf.shared_grams_cut(spark, sf, PLAIN))
+    fr, fc = _fresh_rollup_rows(spark, sf, tmp_path, "fold")
     assert got_r == fr and got_c == fc
 
 
@@ -588,12 +579,10 @@ def test_rollup_lsm_scrub_chain_stays_exact(spark, tmp_path, monkeypatch):
     detection reads the MERGED rollup — after two leveled ingests the
     maintained scrub must equal a fresh full rebuild."""
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path)
-    docs_of = corpus_docs_of(sf)
-    gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of)
+    gf.load_or_build_gram_scrub(spark, sf, PLAIN)
     part0 = os.path.join(sf, "documents.parquet", "part-00.parquet")
     docs0 = spark.read.parquet(part0)
     max_id = docs0.agg(F.max("doc_id")).first()[0] + 1
@@ -606,12 +595,12 @@ def test_rollup_lsm_scrub_chain_stays_exact(spark, tmp_path, monkeypatch):
         _move_single_part(
             batch, os.path.join(sf, "documents.parquet", f"part-{i:02d}.parquet")
         )
-        got = _rows(gf.refresh_gram_scrub(spark, sf, docs_of=docs_of))
+        got = _rows(gf.refresh_gram_scrub(spark, sf, PLAIN))
     assert (
-        len(gf._levels_of(ix.read_manifest(gf.rollup_path(sf, view="plain")))) == 2
+        len(gf._levels_of(ix.read_manifest(gf.rollup_path(sf, PLAIN)))) == 2
     )
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, docs_of=docs_of))
+    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, PLAIN))
     assert got == fresh and len(got) > 0
 
 

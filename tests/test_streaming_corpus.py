@@ -12,8 +12,8 @@ import shutil
 import pytest
 
 from olap_sus_spark.catalog import load_table
+from olap_sus_spark.operators.corpus_view import PLAIN
 from olap_sus_spark.streaming.corpus import (
-    corpus_docs_of,
     stream_document_ingest,
     stream_embedding_ingest,
 )
@@ -79,15 +79,13 @@ def test_stream_document_ingest_equals_rebuild(spark, dirs):
     # maintained cluster index == fresh full build over the same final corpus
     from olap_sus_spark.operators import dedup as dd
 
-    served = dd.refresh_cluster_index(spark, corpus, corpus_docs_of(corpus))
+    served = dd.refresh_cluster_index(spark, corpus, PLAIN)
     os.makedirs(fresh, exist_ok=True)
     shutil.copytree(
         os.path.join(corpus, "documents.parquet"),
         os.path.join(fresh, "documents.parquet"),
     )
-    rebuilt = dd.load_or_build_cluster_index(
-        spark, fresh, load_table(spark, fresh, "documents"), threshold=0.5
-    )
+    rebuilt = dd.load_or_build_cluster_index(spark, fresh, PLAIN, threshold=0.5)
     a = sorted(map(tuple, served.select("doc_id", "cluster_id").collect()))
     b = sorted(map(tuple, rebuilt.select("doc_id", "cluster_id").collect()))
     assert a == b
@@ -98,21 +96,20 @@ def test_stream_document_ingest_equals_rebuild(spark, dirs):
     # maintained gram-frequency partials (refreshed per micro-batch over
     # the PLAIN corpus view) == fresh full build over the same final corpus
     from olap_sus_spark.operators import gramfreq as gf
-    from olap_sus_spark.streaming.corpus import corpus_docs_of as _cdo
 
     gf_served = sorted(
-        map(tuple, gf.refresh_gram_freq(spark, corpus, docs_of=_cdo(corpus)).collect())
+        map(tuple, gf.refresh_gram_freq(spark, corpus, PLAIN).collect())
     )
     gf_rebuilt = sorted(
         map(
             tuple,
-            gf.load_or_build_gram_freq(spark, fresh, docs_of=_cdo(fresh)).collect(),
+            gf.load_or_build_gram_freq(spark, fresh, PLAIN).collect(),
         )
     )
     assert gf_served == gf_rebuilt and len(gf_served) > 0
     # the exact duplicate (31 == copy of 3) makes every one of its 5-grams
     # cross-doc shared; the plain view must see them as >= 2 docs
-    shared = gf.shared_grams(spark, corpus, docs_of=_cdo(corpus))
+    shared = gf.shared_grams(spark, corpus, PLAIN)
     assert shared.count() > 0
 
 
@@ -167,9 +164,7 @@ def test_stream_scrub_close_equals_rebuild(spark, dirs):
     stream_document_ingest(spark, landing, corpus, ckpt)
     served1 = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(
-            spark, corpus, docs_of=corpus_docs_of(corpus)
-        ).collect()
+        for r in gf.load_or_build_gram_scrub(spark, corpus, PLAIN).collect()
     }
     assert len(served1) == 10 and all(r[2] == 0 for r in served1.values())
 
@@ -180,15 +175,13 @@ def test_stream_scrub_close_equals_rebuild(spark, dirs):
 
     # the stream already maintained the scrub: manifest is current, so the
     # load below is a pure read (no rebuild)
-    spath = gf.scrub_path(corpus, view="plain")
+    spath = gf.scrub_path(corpus, PLAIN)
     assert ix.manifest_is_current(
         ix.read_manifest(spath), ix.corpus_files(corpus, "documents")
     )
     served2 = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(
-            spark, corpus, docs_of=corpus_docs_of(corpus)
-        ).collect()
+        for r in gf.load_or_build_gram_scrub(spark, corpus, PLAIN).collect()
     }
     # both the new doc and the retroactively affected old doc fully scrubbed
     assert served2[3][2] == 8 and served2[3][3] == ""
@@ -202,8 +195,6 @@ def test_stream_scrub_close_equals_rebuild(spark, dirs):
     )
     rebuilt = {
         r[0]: tuple(r)
-        for r in gf.load_or_build_gram_scrub(
-            spark, fresh, docs_of=corpus_docs_of(fresh)
-        ).collect()
+        for r in gf.load_or_build_gram_scrub(spark, fresh, PLAIN).collect()
     }
     assert served2 == rebuilt

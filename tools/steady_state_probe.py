@@ -195,6 +195,7 @@ def timed(fn) -> tuple[object, float]:
 
 def main(args: list[str]) -> None:
     from olap_sus_spark.operators.compaction import compact_maintained_indexes
+    from olap_sus_spark.operators.corpus_view import AUG
     from olap_sus_spark.queries.vector import _DIM, _LSH_H, _LSH_T, _NC
 
     n = int(args[0]) if args else 30
@@ -236,7 +237,7 @@ def main(args: list[str]) -> None:
                 row[s.name] = {"sec": dt}
             if i % COMPACT_EVERY == 0:
                 done, dt = timed(lambda: compact_maintained_indexes(
-                    spark, base, view="aug", dim=_DIM, n_tables=_LSH_T,
+                    spark, base, view=AUG, dim=_DIM, n_tables=_LSH_T,
                     n_bits=_LSH_H, num_centroids=_NC,
                 ))
                 row["compact"] = {"sec": dt, "partitions": sum(len(v) for v in done.values())}

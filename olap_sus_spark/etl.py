@@ -3,9 +3,11 @@ Airflow DAG + spark-submit scripts (/root/reference/dags/spark_dag.py:48-78).
 
 One plain function per concern, no scheduler: incrementality stays
 partition-based (``dt=YYYY-MM-DD`` landing folders in, ``dt=`` fact
-partitions out).  Re-running a (dataset, date) pair is idempotent: facts use
-dynamic partition overwrite, bridge rows are content-keyed and anti-joined
-(sources/sinks.py).
+partitions out).  Re-running a (dataset, date) pair is idempotent: a fact
+day and its aggregate partials are staged and swapped in by
+index_store.publish_partitions (a re-run whose day came out empty drops
+it), bridge rows are content-keyed and anti-joined (sources/sinks.py).
+The warehouse is a local directory.
 
 Typical use::
 
@@ -16,6 +18,7 @@ Typical use::
 
 from __future__ import annotations
 
+import os
 import posixpath
 from dataclasses import dataclass
 from typing import Callable
@@ -260,32 +263,32 @@ def refresh_aggregate(
     The scalable warehouse pattern the reference lacks: instead of
     recomputing a summary over the whole fact history after every daily
     ingest, only the ``dt`` partitions just ingested are re-aggregated and
-    their partitions of the aggregate table replaced (dynamic partition
-    overwrite — same idempotency contract as the fact sink).  ``dates=None``
-    rebuilds everything.  At 100 TB the daily refresh therefore scans one
-    day, not the decade: partition pruning makes refresh cost O(day), and
-    the additive partials keep query-time work O(aggregate cardinality).
+    their partitions of the aggregate table swapped in by
+    index_store.publish_partitions — the same idempotency contract as the
+    fact sink: a date whose fact day is gone or empty loses its partials.
+    ``dates=None`` rewrites every day the fact holds and drops none.  At
+    100 TB the daily refresh therefore scans one day, not the decade:
+    partition pruning makes refresh cost O(day), and the additive partials
+    keep query-time work O(aggregate cardinality).
     """
-    from olap_sus_spark.sources.sinks import _exists
+    from olap_sus_spark.operators.index_store import publish_partitions, staging_path
 
     fact_table, build, _, _ = AGGREGATES[name]
-    if dates is not None and not _exists(spark, posixpath.join(warehouse_dir, name)):
+    path = posixpath.join(warehouse_dir, name)
+    if dates is not None and not os.path.exists(path):
         # A dated refresh against a never-built aggregate would create a
         # partial table covering only these dt partitions, which
         # read_aggregate would then serve as if complete — first build must
         # cover the whole fact history (same guard as
         # refresh_daily_revenue's never-built fallback).
         dates = None
-    fact = spark.read.parquet(posixpath.join(warehouse_dir, fact_table))
+    fact = _load(spark, warehouse_dir, fact_table)
     if dates is not None:
         fact = fact.filter(F.col("dt").isin(dates))  # partition-pruned scan
     partial = build(fact, load_dims(spark, warehouse_dir))
-    (
-        partial.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("dt")
-        .parquet(posixpath.join(warehouse_dir, name))
-    )
+    staging = staging_path(path)
+    partial.write.partitionBy("dt").parquet(staging)
+    publish_partitions(staging, path, "dt", scope=dates or ())
     return partial
 
 
@@ -303,21 +306,20 @@ def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> None:
     'sih' drop) is registered as an empty frame with the declared schema, so
     queries against a fresh warehouse parse and return zero rows instead of
     failing on a missing path."""
-    from olap_sus_spark.sources.sinks import _exists
-
     for t in (*DIM_TABLES, *FACT_TABLES, BRIDGE_TABLE):
-        if t in FACT_TABLES or _exists(spark, posixpath.join(warehouse_dir, t)):
+        if t in FACT_TABLES or os.path.exists(posixpath.join(warehouse_dir, t)):
             _load(spark, warehouse_dir, t).createOrReplaceTempView(t)
 
 
 def _load(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
-    """Read a warehouse table; a fact with no ingested partition yet reads
-    as a typed empty frame, its ``dt`` typed as partition inference types
-    the on-disk ``dt=YYYY-MM-DD`` column once a day lands (DATE)."""
-    from olap_sus_spark.sources.sinks import _exists
+    """Read a warehouse table; a fact with no day on disk (never ingested,
+    or every day dropped by an empty re-run) reads as a typed empty frame,
+    its ``dt`` typed as partition inference types the on-disk
+    ``dt=YYYY-MM-DD`` column once a day lands (DATE)."""
+    from olap_sus_spark.operators.index_store import _holds_no_data
 
     path = posixpath.join(warehouse_dir, table)
-    if _exists(spark, path):
+    if os.path.exists(path) and not _holds_no_data(path):
         return spark.read.parquet(path)
     (schema,) = [d.empty_schema for d in DATASETS.values() if d.fact_table == table]
     return spark.createDataFrame([], schema).withColumn("dt", F.lit(None).cast("date"))

@@ -9,7 +9,8 @@ over the registry's parameters: augmented corpus view, the ANN probe
 index's SRP width and IVF centroids).  ``compact_maintained_indexes``
 rewrites each over-full partition down to one file through each table's
 ``SrcTable.compact``, which keeps the sort key the table declares so
-footer min/max stats stay selective.  Manifests are untouched (they
+footer min/max stats stay selective, stages the rewritten partitions and
+swaps them in with one ``index_store.publish_partitions`` per component.  Manifests are untouched (they
 track corpus files, not index files), served values are bit-identical (a
 pure layout rewrite), and the refresh contract is unaffected — run it on
 an operator's cadence, e.g. every K ingests or nightly.

@@ -17,7 +17,11 @@ here:
   copy aside, renames staging into place and drops the retired copy — a
   crash mid-build never leaves a directory that existence checks mistake
   for a complete table.  A concurrent builder that already landed a
-  current copy wins: our equivalent staging is discarded instead.
+  current copy wins: our equivalent staging is discarded instead.  One
+  publish per table; a partition-scoped rewrite (refreshed ``src=``
+  units, ``mes_dt=`` months, warehouse ``dt=`` days) is one
+  :func:`publish_partitions`, which publishes each staged partition and
+  drops every in-scope partition the rewrite left empty.
 - **One bounded-retry read** (:func:`serve`): readers retry through a
   concurrent publish's two-rename window and fail at once on anything
   else.
@@ -294,33 +298,63 @@ def manifest_diff(
     )
 
 
-def drop_src_partitions(component_root: str, srcs: set[str]) -> None:
-    """Remove ``src=<name>`` partition directories for the given source
-    part-file names.  Needed by the per-``src`` refresh paths: dynamic
-    partition overwrite only rewrites partitions PRESENT in the output, so
-    a stale source whose recomputed partial is EMPTY (e.g. an RTBF rewrite
-    that purged every index-producing row of the file) would otherwise keep
-    serving its old rows forever while the manifest reads current.  Names
-    are matched through Spark's partition-path percent-escaping (escapes
-    are UTF-8 byte sequences — %C3%A9 is one 'é', so decode with
+def _partitions(root: str, col: str) -> dict[str, str]:
+    """{directory name: value} of the ``col=`` partitions under ``root``.
+    Values are decoded through Spark's partition-path percent-escaping:
+    escapes are UTF-8 byte sequences (%C3%A9 is one 'é'), so decode with
     urllib.parse.unquote, never per-byte chr(), or multi-byte names
-    mismatch and the stale partition is kept forever)."""
+    mismatch; a name that is not a valid escape sequence reads verbatim."""
     from urllib.parse import unquote
 
     try:
-        entries = list(os.scandir(component_root))
+        entries = list(os.scandir(root))
     except OSError:
-        return
+        return {}
+    out = {}
     for e in entries:
-        if not (e.is_dir() and e.name.startswith("src=")):
-            continue
-        raw = e.name[len("src="):]
+        if e.is_dir() and e.name.startswith(f"{col}="):
+            raw = e.name[len(col) + 1:]
+            try:
+                out[e.name] = unquote(raw, errors="strict")
+            except UnicodeDecodeError:
+                out[e.name] = raw
+    return out
+
+
+def publish_partitions(staging: str, live: str, col: str, scope=()) -> None:
+    """Swap a partition-scoped rewrite into the live table: every ``col=``
+    partition staged under ``staging`` is published over its live twin
+    (:func:`publish`), and the live partition of every value in ``scope``
+    that staging does not hold is dropped — a unit the rewrite covered but
+    whose new output is empty (an RTBF purge, a re-landed day whose rows
+    all fail to parse) must stop serving its old rows.  Other live
+    partitions are untouched.
+
+    Every unit is attempted; if any publish failed, :class:`OSError` is
+    raised at the end and that partition keeps its old copy where
+    :func:`publish` could restore it.  Staging is removed unless it holds
+    a partition's only copy.  Local filesystem only, like :func:`publish`:
+    a ``://`` path raises :class:`ValueError`."""
+    if "://" in staging or "://" in live:
+        raise ValueError(f"publish_partitions is local-only: {staging} -> {live}")
+    staged = _partitions(staging, col)
+    if staged:
+        os.makedirs(live, exist_ok=True)
+    failed, keep = [], False
+    for name in sorted(staged):
         try:
-            value = unquote(raw, errors="strict")
-        except UnicodeDecodeError:
-            value = raw  # not a Spark escape sequence: match verbatim
-        if value in srcs:
-            shutil.rmtree(e.path, ignore_errors=True)
+            publish(os.path.join(staging, name), os.path.join(live, name))
+        except OSError:
+            failed.append(name)
+            keep = keep or not os.path.exists(os.path.join(live, name))
+    gone = set(scope) - set(staged.values())
+    for name, value in _partitions(live, col).items():
+        if value in gone:
+            shutil.rmtree(os.path.join(live, name), ignore_errors=True)
+    if not keep:
+        shutil.rmtree(staging, ignore_errors=True)
+    if failed:
+        raise OSError(f"{live}: failed to publish {failed}")
 
 
 def compact_src_partitions(
@@ -340,38 +374,29 @@ def compact_src_partitions(
     rewritten.
 
     The corpus manifest tracks CORPUS files, not index files, so
-    compaction is invisible to staleness and needs no re-stamp.  Staging
-    lives OUTSIDE the component root (a sibling dir), so partition
-    discovery on the live root never sees half-written copies; each
-    partition is committed by :func:`publish`.  Same
-    SINGLE-MAINTAINER assumption as :meth:`SrcTable.refresh`: a concurrent
-    reader can race one partition's rename window exactly as it can race a
-    dynamic partition overwrite.  Rows are
+    compaction is invisible to staleness and needs no re-stamp.  The
+    over-full partitions are staged OUTSIDE the component root (a sibling
+    dir), so partition discovery on the live root never sees half-written
+    copies, then committed by one :func:`publish_partitions`.  Same
+    SINGLE-MAINTAINER assumption as :meth:`SrcTable.refresh`.  Rows are
     re-sorted on ``sort_cols`` so the compacted file keeps the range-
     sorted layout (footer min/max stay selective)."""
     out: dict[str, int] = {}
-    try:
-        entries = list(os.scandir(component_root))
-    except OSError:
-        return out
     stage_root = component_root.rstrip("/") + f".__compactstage__{os.getpid()}"
-    for e in entries:
-        if not (e.is_dir() and e.name.startswith("src=")):
-            continue
+    for name in _partitions(component_root, SRC):
+        part = os.path.join(component_root, name)
         try:
-            n = sum(1 for f in os.listdir(e.path) if f.endswith(".parquet"))
+            n = sum(1 for f in os.listdir(part) if f.endswith(".parquet"))
         except OSError:
             continue
         if n <= target_files:
             continue
-        df = spark.read.parquet(e.path).coalesce(target_files)
+        df = spark.read.parquet(part).coalesce(target_files)
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
-        staging = os.path.join(stage_root, e.name)
-        df.write.mode("overwrite").parquet(staging)
-        publish(staging, e.path)
-        out[e.name] = n
-    shutil.rmtree(stage_root, ignore_errors=True)
+        df.write.mode("overwrite").parquet(os.path.join(stage_root, name))
+        out[name] = n
+    publish_partitions(stage_root, component_root, SRC)
     return out
 
 
@@ -574,12 +599,10 @@ class SrcTable:
     def write(self, root: str, component: str, frame, srcs=None) -> None:
         """Write ``frame`` (carrying ``src``) as ``component`` under
         ``root``.  ``srcs=None`` is a full build (static overwrite);
-        otherwise the write refreshes exactly the ``srcs`` units by dynamic
-        partition overwrite, and drops the partition of every unit the
-        frame holds no row for — dynamic overwrite only replaces partitions
-        PRESENT in the output, so a source whose recomputed rows are empty
-        (an RTBF rewrite that purged them all) would otherwise serve its
-        old rows forever while the manifest reads current."""
+        otherwise the write refreshes exactly the ``srcs`` units: staged,
+        then swapped in by :func:`publish_partitions`, which also drops
+        the partition of every unit the frame holds no row for (an RTBF
+        rewrite that purged them all)."""
         from olap_sus_spark.sources.sinks import write_sorted_partitioned
 
         sort, n_files = self.parts[component]
@@ -587,15 +610,9 @@ class SrcTable:
         if srcs is None:
             write_sorted_partitioned(frame, dest, SRC, list(sort), files=n_files)
             return
-        frame = frame.persist()
-        try:
-            write_sorted_partitioned(
-                frame, dest, SRC, list(sort), files=n_files, dynamic=True
-            )
-            written = {r[0] for r in frame.select(SRC).distinct().collect()}
-        finally:
-            frame.unpersist()
-        drop_src_partitions(dest, set(srcs) - written)
+        staging = staging_path(dest)
+        write_sorted_partitioned(frame, staging, SRC, list(sort), files=n_files)
+        publish_partitions(staging, dest, SRC, scope=srcs)
 
     def compact(self, spark, target_files: int = 1) -> dict[str, dict[str, int]]:
         """Small-file compaction of every partitioned component that exists
@@ -637,8 +654,9 @@ class SrcTable:
         the refresh equal to a rebuild — then ``rebuild()`` runs the full
         staged build.  A never-built or incomplete table rebuilds too.
         Removed part files' partitions are dropped, then the manifest is
-        stamped current.  SINGLE REFRESHER per table: the step overwrites
-        live partitions in place."""
+        stamped current.  SINGLE REFRESHER per table: each partition swap
+        is safe, but the manifest write is not merged, so a second
+        refresher could stamp a manifest over the other's units."""
         man = read_manifest(self.path)
         if man is None or not self._complete():
             rebuild()
@@ -651,6 +669,7 @@ class SrcTable:
         if extra is None:
             rebuild()
             return
-        for c in self.parts:
-            drop_src_partitions(os.path.join(self.path, c), set(d.removed))
+        for c in self.parts:  # an empty rewrite of the removed units drops them
+            root = os.path.join(self.path, c)
+            publish_partitions(staging_path(root), root, SRC, scope=d.removed)
         write_manifest(self.path, {**man, **compact_manifest(man, files), **extra})

@@ -175,24 +175,21 @@ def refresh_partials(
     """Re-derive ONLY the months containing ``days`` (yyyy-MM-dd) and swap
     the refreshed month partitions in — O(day), never the fact history.
 
-    The refreshed months are STAGED to a per-process dir first and each is
-    then published over its live month (index_store.publish: never delete
-    a live directory; the rename-race loser discards its equivalent copy).
-    An in-place dynamic-partition overwrite instead deletes the live
-    month's files before committing the new ones — a concurrent
-    cross-process reader mid-scan of that month would hit FileNotFound
-    outside the bounded whole-path retry of index_store.serve.  With the
-    swap the vulnerable window is two renames per month.  Cross-process
-    READERS of that window may still see one transient FileNotFound
-    mid-action; the contract is retry-the-action (never partial or merged
-    data — each month is whole before and after the swap).  Concurrent
-    refreshers are safe (``python tools/race_probe.py`` races two drivers
-    through refresh+serve loops and pins raced == fresh rebuild with zero
+    The refreshed months are STAGED to a per-process dir first, then
+    swapped in by index_store.publish_partitions: each month is published
+    over its live copy (never delete a live directory; the rename-race
+    loser discards its equivalent copy) and a refreshed month whose new
+    partial is empty is dropped.  Cross-process READERS of a month's
+    two-rename window may see one transient FileNotFound mid-action; the
+    contract is retry-the-action (never partial or merged data — each
+    month is whole before and after the swap).  Concurrent refreshers are
+    safe (``python tools/race_probe.py`` races two drivers through
+    refresh+serve loops and pins raced == fresh rebuild with zero
     debris)."""
     import shutil
 
     from olap_sus_spark.operators.index_store import (
-        publish,
+        publish_partitions,
         staging_path,
         sweep_stale_staging,
     )
@@ -203,29 +200,20 @@ def refresh_partials(
         return
     sweep_stale_staging()
     staging = staging_path(path)
-    degraded = keep = False
     try:
         _write_months(build(months), staging, layout)
-        for entry in sorted(os.listdir(staging)):
-            if not entry.startswith("mes_dt="):
-                continue
-            live = os.path.join(path, entry)
-            try:
-                publish(os.path.join(staging, entry), live)
-            except OSError:
-                # The promote failed for a reason OTHER than a concurrent
-                # winner; publish restored the retired month where it
-                # could.  Skip the marker write so the stale stamp forces
-                # the next load to rebuild instead of serving pre-refresh
-                # data as current; if the month is gone, the retired copy
-                # under staging is its only copy — keep it.
-                degraded = True
-                keep = keep or not os.path.exists(live)
-        if not degraded:
-            write_marker(path, stamp)
-    finally:
-        if not keep:
-            shutil.rmtree(staging, ignore_errors=True)
+    except Exception:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    try:
+        publish_partitions(staging, path, "mes_dt", scope=months)
+    except OSError:
+        # A month's promote failed for a reason OTHER than a concurrent
+        # winner (its old copy is restored where publish could).  Skip the
+        # marker write so the stale stamp forces the next load to rebuild
+        # instead of serving pre-refresh data as current.
+        return
+    write_marker(path, stamp)
 
 
 @dataclass(frozen=True)

@@ -5,7 +5,7 @@ fact history after each ingest; the engine maintains per-partition partials
 and refreshes only the partitions an ingest touched).
 
 The pattern at 100 TB: a daily ingest re-aggregates ONE day's facts and
-dynamic-partition-overwrites that day's slice of the partial table
+swaps that day's slice of the partial table in
 (idempotent, same contract as the fact sink); serving queries fold the
 partials — O(aggregate cardinality), never O(fact history).  Additive
 measures use exact types end-to-end (DECIMAL sums + BIGINT counts), so

@@ -1618,7 +1618,7 @@ def decontaminate_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame
 # Maintained decontamination (VERDICT r09 #6): the eval gram set is a pure
 # per-src function of the eval-split corpus view, so it rides the ENTIRE
 # gram_freq maintenance contract unchanged — index keyed on the EVAL97 view,
-# per-src dynamic refresh O(ingested files), doc-locality guard, zero-row
+# per-src staged refresh O(ingested files), doc-locality guard, zero-row
 # partition drop, staged build + atomic promote.  The served twin shares
 # the from-scratch oracle: serving reads ~|eval grams| index rows instead
 # of re-gramming the eval split per call; the training side (per-doc

@@ -5,10 +5,12 @@ transaction around the read-check-assign-write sequence
 (/root/reference/dags/spark_script_sim.py:239,402) — a retry double-writes.
 Here:
 
-- **facts** land as date-partitioned Parquet with *dynamic partition
-  overwrite*: re-running a day replaces exactly that day's partition and
-  nothing else.  Idempotent by construction, and the ``dt=`` layout gives
-  partition pruning to every downstream query.
+- **facts** land as date-partitioned Parquet: a day is staged, then
+  swapped in by index_store.publish_partitions, so re-running a day
+  replaces exactly that day's partition and nothing else — and a re-run
+  whose day came out empty drops it.  Idempotent by construction, and the
+  ``dt=`` layout gives partition pruning to every downstream query.
+  Warehouse paths are local (the swap is directory renames).
 - **bridge rows** carry content-hash group ids (operators/bridge.py), so a
   re-run emits byte-identical rows; the sink anti-joins against the existing
   store and appends only genuinely new groups.
@@ -23,17 +25,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_fact_partition(df: DataFrame, warehouse_dir: str, table: str, dt: str) -> str:
-    """Overwrite the single ``dt=<date>`` partition of a fact table."""
+    """Replace the single ``dt=<date>`` partition of a fact table: the day
+    is staged, then published over the live one; an empty ``df`` drops
+    the day.  ``warehouse_dir`` must be local."""
     from pyspark.sql import functions as F
 
+    from olap_sus_spark.operators.index_store import publish_partitions, staging_path
+
     path = posixpath.join(warehouse_dir, table)
-    (
-        df.withColumn("dt", F.lit(dt))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("dt")
-        .parquet(path)
-    )
+    staging = staging_path(path)
+    df.withColumn("dt", F.lit(dt)).write.partitionBy("dt").parquet(staging)
+    publish_partitions(staging, path, "dt", scope=[dt])
     return path
 
 
@@ -46,7 +48,7 @@ def append_bridge(df: DataFrame, warehouse_dir: str, table: str = "ponte_grupo_c
     """
     spark = df.sparkSession
     path = posixpath.join(warehouse_dir, table)
-    if _exists(spark, path):
+    if os.path.exists(path):
         existing = spark.read.parquet(path).select("chave_grupo_causa").distinct()
         df = df.join(existing, "chave_grupo_causa", "left_anti")
     df.write.mode("append").parquet(path)
@@ -58,14 +60,6 @@ def write_dimension(df: DataFrame, warehouse_dir: str, name: str) -> str:
     path = posixpath.join(warehouse_dir, name)
     df.write.mode("overwrite").parquet(path)
     return path
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    if "://" not in path:
-        return os.path.exists(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # pragma: no cover
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(jvm_path)
 
 
 def merge_upsert(
@@ -99,7 +93,7 @@ def merge_upsert(
 
     staging = path.rstrip("/") + ".__staging__"
     merged.write.mode("overwrite").parquet(staging)
-    _swap_in(spark, path, staging)
+    _swap_in(path, staging)
     return path
 
 
@@ -191,10 +185,8 @@ def compact_partition(spark: SparkSession, path: str, target_files: int = 1) -> 
     df = spark.read.parquet(path)
     staging = path.rstrip("/") + ".__compact__"
     df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    _swap_in(spark, path, staging)
-    return sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    ) if "://" not in path else target_files
+    _swap_in(path, staging)
+    return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
 
 
 def write_sorted(
@@ -292,50 +284,37 @@ def write_sorted_partitioned(
     part_col: str,
     sort_cols: list[str],
     files: int = 4,
-    dynamic: bool = False,
 ) -> str:
     """:func:`write_sorted` with a directory-partition column layered on
     top — the layout of the incrementally-maintained index tables: the
-    ``part_col`` (source part-file name) is the refresh unit (dynamic
-    partition overwrite replaces exactly the refreshed source's rows), and
-    within each partition files stay range-sorted on ``sort_cols`` so
-    footer min/max stats keep pruning selective probes.  ``dynamic=True``
-    scopes an overwrite to the partitions present in ``df`` (a per-write
-    option; the session conf is untouched)."""
+    ``part_col`` (source part-file name) is the refresh unit (a refresh
+    stages its units and swaps them in with
+    index_store.publish_partitions), and within each partition files stay
+    range-sorted on ``sort_cols`` so footer min/max stats keep pruning
+    selective probes."""
     (
         df.repartitionByRange(files, part_col, *sort_cols)
         .sortWithinPartitions(part_col, *sort_cols)
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
         .partitionBy(part_col)
         .parquet(path)
     )
     return path
 
 
-def _swap_in(spark: SparkSession, path: str, staging: str) -> None:
+def _swap_in(path: str, staging: str) -> None:
     """Commit a staged rewrite by directory renames, never by rewriting the
     live table: index_store.publish retires the current dir, promotes
     staging and drops the retired copy, renaming it back if the promote
     fails — there is no window where the data exists only as a
-    half-written directory.  (On object stores swap a manifest instead;
-    renames there are copies.)"""
-    if "://" not in path:
-        import shutil
+    half-written directory.  Local paths only, like every warehouse write
+    (on object stores renames are copies: swap a manifest instead)."""
+    import shutil
 
-        from olap_sus_spark.operators.index_store import publish
+    from olap_sus_spark.operators.index_store import publish
 
-        # The staging name is fixed per table, so a crash after a promote
-        # can leave publish's retired copy under the name this swap will
-        # retire to; clear it, or the retire fails and the rewrite is lost.
-        shutil.rmtree(staging.rstrip("/") + ".stale", ignore_errors=True)
-        publish(staging, path)
-    else:  # pragma: no cover
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        retired = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__old__")
-        fs.rename(jvm.org.apache.hadoop.fs.Path(path), retired)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(staging), jvm.org.apache.hadoop.fs.Path(path))
-        fs.delete(retired, True)
+    # The staging name is fixed per table, so a crash after a promote can
+    # leave publish's retired copy under the name this swap will retire
+    # to; clear it, or the retire fails and the rewrite is lost.
+    shutil.rmtree(staging.rstrip("/") + ".stale", ignore_errors=True)
+    publish(staging, path)

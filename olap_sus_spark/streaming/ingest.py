@@ -6,8 +6,8 @@ processes new files as they arrive — same transforms, same fact builders,
 same idempotent sinks, via ``foreachBatch``:
 
 - the file source + checkpoint give exactly-once *file* processing;
-- inside each micro-batch, facts are written with dynamic partition
-  overwrite per ``dt``, so reprocessing a partition (or a crash between
+- inside each micro-batch, facts are written one ``dt`` partition at a
+  time through the fact sink's staged swap, so reprocessing a partition (or a crash between
   batch and checkpoint commit) converges to the same state;
 - late files for an old ``dt`` simply rewrite that partition with the now-
   complete day (the reference's append model would double-count instead).
@@ -62,7 +62,7 @@ def _process_batch(dataset: str, warehouse_dir: str, refresh_aggregates: bool = 
         if refresh_aggregates:
             # Close the ingest→refresh→serve loop inside the stream: every
             # maintained aggregate over this fact re-aggregates ONLY the
-            # micro-batch's dt partitions (dynamic partition overwrite —
+            # micro-batch's dt partitions (a staged partition swap —
             # idempotent with the fact sink, so a replayed batch converges).
             etl.refresh_aggregates_of(spark, warehouse_dir, ds.fact_table, days)
 

@@ -9,6 +9,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from olap_sus_spark.operators import index_store as ix
 
 
@@ -151,6 +153,70 @@ def test_publish_lost_retire_falls_through_to_promote(tmp_path, monkeypatch):
     assert _debris(tmp_path) == []
 
 
+def _partition_layout(tmp_path):
+    live = str(tmp_path / "t")
+    for v in ("a", "b", "f%C3%A9", "keep"):
+        _dir_with(os.path.join(live, f"k={v}"), f"old {v}")
+    staging = ix.staging_path(live)
+    for v in ("a", "new"):
+        _dir_with(os.path.join(staging, f"k={v}"), f"new {v}")
+    return live, staging
+
+
+def test_publish_partitions_swaps_staged_and_drops_scoped_empty_units(tmp_path):
+    live, staging = _partition_layout(tmp_path)
+    ix.publish_partitions(staging, live, "k", scope=["a", "b", "fé", "new"])
+    assert sorted(os.listdir(live)) == ["k=a", "k=keep", "k=new"]
+    assert _read(os.path.join(live, "k=a")) == "new a"
+    assert _read(os.path.join(live, "k=new")) == "new new"
+    assert _read(os.path.join(live, "k=keep")) == "old keep"  # out of scope
+    assert _debris(tmp_path) == []
+
+
+def test_publish_partitions_failed_promote_keeps_old_rows_and_raises(tmp_path, monkeypatch):
+    live, staging = _partition_layout(tmp_path)
+    real_promote = ix.promote
+
+    def failing_promote(src, dst):
+        if dst.endswith("k=a"):
+            raise OSError("injected promote failure")
+        real_promote(src, dst)
+
+    monkeypatch.setattr(ix, "promote", failing_promote)
+    with pytest.raises(OSError, match="k=a"):
+        ix.publish_partitions(staging, live, "k", scope=["a", "b"])
+    assert _read(os.path.join(live, "k=a")) == "old a"  # the retired copy is back
+    assert _read(os.path.join(live, "k=new")) == "new new"  # the others still land
+    assert not os.path.exists(os.path.join(live, "k=b"))
+    assert _debris(tmp_path) == []  # staging held no only copy
+
+
+def test_publish_partitions_keeps_staging_holding_a_units_only_copy(tmp_path, monkeypatch):
+    live, staging = _partition_layout(tmp_path)
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if dst.endswith("k=a"):  # the promote AND the restore of the retired copy
+            raise OSError("injected rename failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(ix.os, "rename", rename)
+    with pytest.raises(OSError):
+        ix.publish_partitions(staging, live, "k")
+    monkeypatch.setattr(ix.os, "rename", real_rename)
+    assert not os.path.exists(os.path.join(live, "k=a"))
+    assert _read(os.path.join(staging, "k=a.stale")) == "old a"  # the only copy
+    assert _read(os.path.join(live, "k=new")) == "new new"
+
+
+def test_publish_partitions_is_local_only(tmp_path):
+    with pytest.raises(ValueError):
+        ix.publish_partitions(str(tmp_path / "s"), "s3a://bucket/t", "dt", scope=["x"])
+    with pytest.raises(ValueError):
+        ix.publish_partitions("s3a://bucket/t.__build__", str(tmp_path / "t"), "dt")
+    assert os.listdir(tmp_path) == []
+
+
 def test_swap_in_lands_over_a_crash_left_retired_copy(tmp_path):
     """A sink stages under a fixed name, so a crash after an earlier
     promote can leave the retired copy where this swap retires to; the
@@ -160,7 +226,7 @@ def test_swap_in_lands_over_a_crash_left_retired_copy(tmp_path):
     path = _dir_with(str(tmp_path / "table"), "old")
     staging = _dir_with(path + ".__compact__", "new")
     _dir_with(staging + ".stale", "left by a crash")
-    _swap_in(None, path, staging)
+    _swap_in(path, staging)
     assert _read(path) == "new"
     assert _debris(tmp_path) == []
 

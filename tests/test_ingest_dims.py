@@ -1,11 +1,13 @@
 """Ingest-side plan and session hygiene: the dimensions load by declared
 schema without a Spark job, the SIM cause lookup is one plan node whatever
 dimCausa's size, an empty fact's view keeps its types across the first
-ingest, and the fact sink leaves the session's overwrite mode alone."""
+ingest, the fact sink leaves the session's overwrite mode alone, and a
+re-run day that comes out empty stops serving its old rows."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,3 +107,34 @@ def test_fact_sink_leaves_session_overwrite_mode_static(spark, tmp_path):
     formats.write_table(spark.createDataFrame([("a", 3)], "p string, v int"),
                         path, partition_by=["p"])
     assert sorted(p for p in os.listdir(path) if p.startswith("p=")) == ["p=a"]
+
+
+def test_empty_rerun_day_drops_fact_and_aggregate_partitions(spark, tmp_path):
+    """Re-landing the SIM day with every death date unresolvable leaves the
+    day with no fact row: the re-run drops its ``dt=`` partition from the
+    fact and from the aggregate, and the emptied fact reads as the typed
+    empty fact."""
+    wh = str(tmp_path / "wh")
+    etl.bootstrap_warehouse(spark, SEEDS, wh)
+    etl.run_ingest(spark, "sim", DT, LANDING, wh)
+    etl.refresh_aggregate(spark, wh, "agg_obitos_uf_ano")
+
+    def day_rows(table):
+        return etl._load(spark, wh, table).filter(F.col("dt") == DT).count()
+
+    assert day_rows("fact_obitos") > 0 and day_rows("agg_obitos_uf_ano") > 0
+    types = [(f.name, f.dataType) for f in etl._load(spark, wh, "fact_obitos").schema]
+
+    relanded = str(tmp_path / "landing")
+    shutil.copytree(os.path.join(LANDING, "sim"), os.path.join(relanded, "sim"))
+    csv = os.path.join(relanded, "sim", f"dt={DT}", "part-0.csv")
+    with open(csv) as f:
+        header, *rows = f.read().splitlines()
+    with open(csv, "w") as f:
+        f.write("\n".join([header] + ["99999999" + r[r.index(";"):] for r in rows]) + "\n")
+    etl.run_ingest(spark, "sim", DT, relanded, wh)
+    etl.refresh_aggregate(spark, wh, "agg_obitos_uf_ano", dates=[DT])
+
+    assert day_rows("fact_obitos") == 0
+    assert not os.path.exists(os.path.join(wh, "agg_obitos_uf_ano", f"dt={DT}"))
+    assert [(f.name, f.dataType) for f in etl._load(spark, wh, "fact_obitos").schema] == types

@@ -11,7 +11,8 @@
    src=-partitioned, so a real read error on a POPULATED scrub table was
    masked as a valid empty frame.  Fixed: partitioned components detect
    emptiness by absence of src= dirs.
-3. low — drop_src_partitions decoded partition-path percent-escapes
+3. low — drop_src_partitions (now publish_partitions' scope drop)
+   decoded partition-path percent-escapes
    byte-wise with chr() (Latin-1), so UTF-8 source names never matched
    and stale partitions were kept forever.  Fixed: urllib.parse.unquote.
 4. low — `python bench.py --aba` with no commit argument silently ran
@@ -227,7 +228,7 @@ def test_drop_src_partitions_decodes_utf8_escapes(tmp_path):
     raw = os.path.join(root, "src=naïve.parquet")  # unescaped multi-byte
     for d in (victim, keeper, raw):
         os.makedirs(d)
-    ix.drop_src_partitions(root, {"fé.parquet", "naïve.parquet"})
+    ix.publish_partitions(root + ".none", root, "src", {"fé.parquet", "naïve.parquet"})
     assert not os.path.isdir(victim)
     assert not os.path.isdir(raw)
     assert os.path.isdir(keeper)
@@ -238,7 +239,7 @@ def test_drop_src_partitions_invalid_escape_matches_verbatim(tmp_path):
     # %FF%FE is not valid UTF-8: strict decode fails, verbatim match wins
     odd = os.path.join(root, "src=x%FF%FE.parquet")
     os.makedirs(odd)
-    ix.drop_src_partitions(root, {"x%FF%FE.parquet"})
+    ix.publish_partitions(root + ".none", root, "src", {"x%FF%FE.parquet"})
     assert not os.path.isdir(odd)
 
 

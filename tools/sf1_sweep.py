@@ -177,7 +177,7 @@ def main() -> None:
     #   single-node harness bottleneck, not the engine; same class as the
     #   pre-rewrite gram oracle, but irreducible: assignment IS n×k).  The
     #   engine side is probed at x100 with invariant checks + a pinned
-    #   checksum by tools/semantic_scale_probe.py.
+    #   checksum by tools/semantic_scale_probe.py (at commit 4c87b2d).
     # - dedup_embedding_pairs: label-blocked ALL-PAIRS baseline; the staged
     #   corpus keeps labels, so blocks grow ×N and pairs ×N² (~2B 64-dim
     #   cosines at x100 — ground >45 min in Spark and unbounded single-node).
@@ -189,8 +189,8 @@ def main() -> None:
     #   scores every collision pair single-node (~234M 64-dim cosines at
     #   x100, hours of DuckDB lambdas vs seconds engine-side).  Full-oracle
     #   ceiling is x10 (run separately, MATCH); the x100 evidence is the
-    #   engine-side candidate-volume probe (tools/mutual_nn_probe.py) +
-    #   the recall-vs-exact unit gate.
+    #   engine-side candidate-volume probe (tools/mutual_nn_probe.py at
+    #   commit 4c87b2d) + the recall-vs-exact unit gate.
     # - khop_reachable_parts: the ORACLE's 3-hop frontier×adjacency
     #   expansion spills >75 GB of DuckDB temp at x100 (observed twice, r10
     #   s3) — single-node BFS materialization, not an engine limit (the

@@ -25,7 +25,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from olap_sus_spark import schemas
 from olap_sus_spark.operators import facts as facts_ops
@@ -46,14 +45,13 @@ BRIDGE_TABLE = "ponte_grupo_causas"
 class Dataset:
     """One landing dataset: its raw→clean ``transform``, the ``build``
     that turns clean rows + dims into its fact (and, with ``bridge``, the
-    cause-group bridge rows), the fact table it lands in, and that fact's
-    schema for a warehouse that has not ingested it yet."""
+    cause-group bridge rows), and the fact table it lands in (its schema
+    is ``schemas.FACTS[fact_table]``)."""
 
     transform: Callable[[DataFrame], DataFrame]
     build: Callable[[DataFrame, dict[str, DataFrame]], object]
     fact_table: str
     bridge: bool
-    empty_schema: StructType
 
 
 # The transforms and builders are looked up at call time, so whatever
@@ -62,17 +60,17 @@ DATASETS = {
     "sinasc": Dataset(
         lambda raw: transform_sinasc(raw),
         lambda clean, dims: facts_ops.build_fact_nascimentos(clean, dims),
-        "fact_nascimentos", False, schemas.FACT_NASCIMENTOS,
+        "fact_nascimentos", False,
     ),
     "sim": Dataset(
         lambda raw: transform_sim(raw),
         lambda clean, dims: facts_ops.build_fact_obitos(clean, dims),
-        "fact_obitos", True, schemas.FACT_OBITOS,
+        "fact_obitos", True,
     ),
     "sih": Dataset(
         lambda raw: transform_sih(raw),
         lambda clean, dims: facts_ops.build_fact_internacoes(clean, dims),
-        "fact_internacoes", False, schemas.FACT_INTERNACOES,
+        "fact_internacoes", False,
     ),
 }
 FACT_TABLES = tuple(d.fact_table for d in DATASETS.values())
@@ -104,8 +102,7 @@ def bootstrap_warehouse(
     # star joins through the bridge keep cause-less deaths (init.sql:585-652
     # key-0 convention).
     sentinel = spark.createDataFrame(
-        [(facts_ops.BRIDGE_SENTINEL, 1, 0)],
-        "chave_grupo_causa string, ordem_causa int, chave_causa int",
+        [(facts_ops.BRIDGE_SENTINEL, 1, 0)], schemas.PONTE_GRUPO_CAUSAS
     )
     sentinel.write.mode("overwrite").parquet(posixpath.join(warehouse_dir, BRIDGE_TABLE))
     return dims
@@ -114,10 +111,7 @@ def bootstrap_warehouse(
 def load_dims(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
     """The seven dimensions, read by their declared schemas: no Spark job
     (an undeclared Parquet read runs one per table to infer the schema)."""
-    return {
-        t: spark.read.schema(schema).parquet(posixpath.join(warehouse_dir, t))
-        for t, schema in schemas.DIMENSIONS.items()
-    }
+    return {t: schemas.read_table(spark, warehouse_dir, t) for t in DIM_TABLES}
 
 
 def run_ingest(
@@ -282,7 +276,7 @@ def refresh_aggregate(
         # cover the whole fact history (same guard as
         # refresh_daily_revenue's never-built fallback).
         dates = None
-    fact = _load(spark, warehouse_dir, fact_table)
+    fact = schemas.read_table(spark, warehouse_dir, fact_table)
     if dates is not None:
         fact = fact.filter(F.col("dt").isin(dates))  # partition-pruned scan
     partial = build(fact, load_dims(spark, warehouse_dir))
@@ -293,9 +287,10 @@ def refresh_aggregate(
 
 
 def read_aggregate(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
-    """Serve a maintained aggregate: sum the per-dt partials."""
+    """Serve a maintained aggregate: sum the per-dt partials.  One whose
+    every day was dropped serves zero rows; a never-built one raises."""
     _, _, keys, measure = AGGREGATES[name]
-    df = spark.read.parquet(posixpath.join(warehouse_dir, name))
+    df = schemas.read_table(spark, warehouse_dir, name)
     return df.groupBy(*keys).agg(F.sum(measure).alias(measure))
 
 
@@ -308,21 +303,7 @@ def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> None:
     failing on a missing path."""
     for t in (*DIM_TABLES, *FACT_TABLES, BRIDGE_TABLE):
         if t in FACT_TABLES or os.path.exists(posixpath.join(warehouse_dir, t)):
-            _load(spark, warehouse_dir, t).createOrReplaceTempView(t)
-
-
-def _load(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
-    """Read a warehouse table; a fact with no day on disk (never ingested,
-    or every day dropped by an empty re-run) reads as a typed empty frame,
-    its ``dt`` typed as partition inference types the on-disk
-    ``dt=YYYY-MM-DD`` column once a day lands (DATE)."""
-    from olap_sus_spark.operators.index_store import _holds_no_data
-
-    path = posixpath.join(warehouse_dir, table)
-    if os.path.exists(path) and not _holds_no_data(path):
-        return spark.read.parquet(path)
-    (schema,) = [d.empty_schema for d in DATASETS.values() if d.fact_table == table]
-    return spark.createDataFrame([], schema).withColumn("dt", F.lit(None).cast("date"))
+            schemas.read_table(spark, warehouse_dir, t).createOrReplaceTempView(t)
 
 
 def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:
@@ -335,7 +316,7 @@ def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:
     ``codigo_cid`` aliases, dimHorario exposes ``tempo``."""
 
     def load(t: str) -> DataFrame:
-        return _load(spark, warehouse_dir, t)
+        return schemas.read_table(spark, warehouse_dir, t)
 
     alias_map = {
         "factnascimentos": load("fact_nascimentos"),

@@ -6,15 +6,13 @@ init.sql:50-130,442-579) and inserts sentinel "Ignorado" members with key
 0 / −1 (:585-652).  Here each dimension is a deterministic, seed-free pure
 function of the Spark session — calendar dims generated distributed
 (``sequence``/``spark.range``), bounded junk dims generated driver-side —
-then written as Parquet by :func:`bootstrap_dimensions`.
+then written as Parquet by ``etl.bootstrap_warehouse``.
 
 Cardinalities (BASELINE.md): dimData 47,847 · dimHorario 86,401 ·
 dimDemografia 14,256+1 · dimInfoNascimento 9,072+1.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -219,11 +217,3 @@ ALL_GENERATED = {
     "dim_info_nascimento": dim_info_nascimento,
 }
 
-
-def bootstrap_dimensions(spark: SparkSession, out_dir: str) -> None:
-    """Write every generated dimension as Parquet and register views
-    (replaces the reference's init.sql bootstrap, SURVEY.md §3 EP3)."""
-    for name, fn in ALL_GENERATED.items():
-        path = os.path.join(out_dir, name)
-        fn(spark).write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(name)

@@ -11,28 +11,33 @@ fixture warehouse (tests/test_warehouse_queries.py).
 
 Every function takes (spark, warehouse_dir) so it works on any warehouse the
 ETL produced; all dims broadcast (≤ ~90k rows), facts prune on their dt=
-partitions.
+partitions.  Tables are read by their declared schemas (schemas.read_table),
+so building a query runs no Spark job — except the pivot's one category
+job.
 """
 
 from __future__ import annotations
-
-import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from olap_sus_spark.schemas import read_table
 
-def _t(spark: SparkSession, wh: str, name: str) -> DataFrame:
-    return spark.read.parquet(posixpath.join(wh, name))
+
+def orderby_key(v: str | None) -> tuple[bool, str]:
+    """Sort key that orders strings on the driver as Spark's ascending
+    ``orderBy`` does: nulls first, then by code point (UTF-8 byte order,
+    which Spark compares, is code-point order)."""
+    return (v is not None, v or "")
 
 
 def rollup_deaths_by_occupation_schooling(spark: SparkSession, wh: str) -> DataFrame:
     """ROLL-UP 1 (queries-scripts.py:9-20): deaths by occupation family ×
     schooling."""
-    fact = _t(spark, wh, "fact_obitos")
-    ocup = _t(spark, wh, "dim_ocupacao")
-    demog = _t(spark, wh, "dim_demografia")
+    fact = read_table(spark, wh, "fact_obitos")
+    ocup = read_table(spark, wh, "dim_ocupacao")
+    demog = read_table(spark, wh, "dim_demografia")
     return (
         fact.join(F.broadcast(ocup), "chave_ocupacao")
         .join(F.broadcast(demog), "chave_demografia")
@@ -44,11 +49,11 @@ def rollup_deaths_by_occupation_schooling(spark: SparkSession, wh: str) -> DataF
 def rollup_births_by_state_age(spark: SparkSession, wh: str) -> DataFrame:
     """ROLL-UP 2 (queries-scripts.py:29-40): births by state (birth
     municipality) × mother age band."""
-    fact = _t(spark, wh, "fact_nascimentos")
-    mun = _t(spark, wh, "dim_municipio").select(
+    fact = read_table(spark, wh, "fact_nascimentos")
+    mun = read_table(spark, wh, "dim_municipio").select(
         F.col("chave_municipio").alias("chave_municipio_nascimento"), "estado"
     )
-    demog = _t(spark, wh, "dim_demografia")
+    demog = read_table(spark, wh, "dim_demografia")
     return (
         fact.join(F.broadcast(mun), "chave_municipio_nascimento")
         .join(F.broadcast(demog), "chave_demografia")
@@ -62,14 +67,14 @@ def slice_dice_deaths(
 ) -> DataFrame:
     """SLICE & DICE (dashboard/app.py:84-109): deaths for one residence city
     over a year range, grouped month × year."""
-    fact = _t(spark, wh, "fact_obitos")
+    fact = read_table(spark, wh, "fact_obitos")
     mun = (
-        _t(spark, wh, "dim_municipio")
+        read_table(spark, wh, "dim_municipio")
         .filter(F.col("nome_municipio") == city)
         .select(F.col("chave_municipio").alias("chave_municipio_residencia"))
     )
     data = (
-        _t(spark, wh, "dim_data")
+        read_table(spark, wh, "dim_data")
         .filter(F.col("ano").between(y0, y1))
         .select(F.col("chave_data").alias("chave_data_obito"), "mes", "numero_mes", "ano")
     )
@@ -90,14 +95,17 @@ def pivot_deaths_year_by_uf(spark: SparkSession, wh: str) -> DataFrame:
     as CROSSTAB's categories argument) so the column set is stable and
     sorted.
     """
-    fact = _t(spark, wh, "fact_obitos")
-    mun = _t(spark, wh, "dim_municipio").select(
+    fact = read_table(spark, wh, "fact_obitos")
+    mun = read_table(spark, wh, "dim_municipio").select(
         F.col("chave_municipio").alias("chave_municipio_residencia"), "uf"
     )
-    data = _t(spark, wh, "dim_data").select(
+    data = read_table(spark, wh, "dim_data").select(
         F.col("chave_data").alias("chave_data_obito"), "ano"
     )
-    ufs = [r.uf for r in mun.select("uf").distinct().orderBy("uf").collect()]
+    # One job: a single partition needs no exchange for the distinct.
+    ufs = sorted(
+        (r.uf for r in mun.select("uf").coalesce(1).distinct().collect()), key=orderby_key
+    )
     return (
         fact.join(F.broadcast(mun), "chave_municipio_residencia")
         .join(F.broadcast(data), "chave_data_obito")
@@ -120,14 +128,14 @@ def drill_across_growth(
     documents (queries-scripts.py:117-118) — its INNER join silently dropped
     municipality-years present on only one side.
     """
-    mun = _t(spark, wh, "dim_municipio")
+    mun = read_table(spark, wh, "dim_municipio")
     if health_regions:
         mun = mun.filter(F.col("regiao_saude").isin(*health_regions))
     mun = mun.select("chave_municipio", "nome_municipio")
-    data = _t(spark, wh, "dim_data").select("chave_data", "ano")
+    data = read_table(spark, wh, "dim_data").select("chave_data", "ano")
 
     births = (
-        _t(spark, wh, "fact_nascimentos")
+        read_table(spark, wh, "fact_nascimentos")
         .join(F.broadcast(mun.withColumnRenamed("chave_municipio", "chave_municipio_residencia")),
               "chave_municipio_residencia")
         .join(F.broadcast(data), "chave_data")
@@ -135,7 +143,7 @@ def drill_across_growth(
         .agg(F.sum("quantidade_nascimentos").alias("nascimentos"))
     )
     deaths = (
-        _t(spark, wh, "fact_obitos")
+        read_table(spark, wh, "fact_obitos")
         .join(F.broadcast(mun.withColumnRenamed("chave_municipio", "chave_municipio_residencia")),
               "chave_municipio_residencia")
         .join(F.broadcast(data.withColumnRenamed("chave_data", "chave_data_obito")),
@@ -164,10 +172,10 @@ def topk_causes_per_family(spark: SparkSession, wh: str, k: int = 10) -> DataFra
     per occupation family — primary cause only (ordem_causa = 1), sentinel
     cause '0000' excluded, ROW_NUMBER ranking with a deterministic
     tie-break."""
-    fact = _t(spark, wh, "fact_obitos")
-    ocup = _t(spark, wh, "dim_ocupacao").select("chave_ocupacao", "descricao_familia")
-    bridge = _t(spark, wh, "ponte_grupo_causas").filter(F.col("ordem_causa") == 1)
-    causa = _t(spark, wh, "dim_causa").filter(F.col("codigo_cid10") != "0000").select(
+    fact = read_table(spark, wh, "fact_obitos")
+    ocup = read_table(spark, wh, "dim_ocupacao").select("chave_ocupacao", "descricao_familia")
+    bridge = read_table(spark, wh, "ponte_grupo_causas").filter(F.col("ordem_causa") == 1)
+    causa = read_table(spark, wh, "dim_causa").filter(F.col("codigo_cid10") != "0000").select(
         "chave_causa", "descricao_causa"
     )
     grouped = (
@@ -191,8 +199,8 @@ def rollup_cost_by_cause_chapter(spark: SparkSession, wh: str) -> DataFrame:
     ROLL-UP 1, but over factInternacoes — which the reference declared and
     never loaded, so this query has no reference twin; the measure semantics
     (exact DECIMAL money) are what the NUMERIC(15,2) DDL implies."""
-    fact = _t(spark, wh, "fact_internacoes")
-    causa = _t(spark, wh, "dim_causa").select(
+    fact = read_table(spark, wh, "fact_internacoes")
+    causa = read_table(spark, wh, "dim_causa").select(
         F.col("chave_causa").alias("chave_causa_primaria"),
         "capitulo", "descricao_capitulo",
     )
@@ -210,15 +218,15 @@ def stay_cost_by_municipality(spark: SparkSession, wh: str) -> DataFrame:
     """Drill over both date roles: closed stays only (exit key ≠ sentinel),
     length-of-stay from the two role-played dimData members, total spend and
     mean stay per residence municipality."""
-    fact = _t(spark, wh, "fact_internacoes").filter(F.col("chave_data_saida") != 0)
-    data = _t(spark, wh, "dim_data")
+    fact = read_table(spark, wh, "fact_internacoes").filter(F.col("chave_data_saida") != 0)
+    data = read_table(spark, wh, "dim_data")
     entrada = data.select(
         F.col("chave_data").alias("chave_data_entrada"), F.col("data").alias("data_entrada")
     )
     saida = data.select(
         F.col("chave_data").alias("chave_data_saida"), F.col("data").alias("data_saida")
     )
-    mun = _t(spark, wh, "dim_municipio").select(
+    mun = read_table(spark, wh, "dim_municipio").select(
         F.col("chave_municipio"), "nome_municipio", "estado"
     )
     return (

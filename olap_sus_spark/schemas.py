@@ -1,18 +1,25 @@
-"""Explicit schemas for raw inputs, dimensions and facts.
+"""Explicit schemas for raw inputs and every warehouse table.
 
 The reference reads raw CSVs all-string with no inference
 (/root/reference/dags/spark_script_sinasc.py:192) and declares warehouse
 tables in DDL (/root/reference/scripts/init.sql).  The rebuild pins every
 schema here so scans never depend on sampling — mandatory at 100 TB where a
 schema-inference pass is a full extra read.  That holds for Parquet too:
-``spark.read.parquet`` without a schema runs a Spark job to merge footers,
-so ``etl.load_dims`` reads the seven dimensions by the ``DIMENSIONS``
-schemas below (StructTypes or DDL strings, equal to what
-``etl.bootstrap_warehouse`` writes — pinned by tests/test_ingest_dims.py).
+``spark.read.parquet`` without a schema runs a Spark job to merge footers.
+So every table the engine writes into a warehouse — the seven dimensions,
+the three ``dt``-partitioned facts, the cause-group bridge and the two
+maintained aggregates — is declared once in ``WAREHOUSE`` (StructTypes or
+DDL strings, equal to what ``etl`` writes — pinned by
+tests/test_ingest_dims.py), and :func:`read_table` is the one reader of
+them: no Spark job at construction.
 """
 
 from __future__ import annotations
 
+import os
+import posixpath
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BooleanType,
     DateType,
@@ -168,3 +175,44 @@ FACT_INTERNACOES = StructType(
         StructField("quantidade_procedimentos", LongType(), False),
     ]
 )
+
+
+def _with_dt(schema: StructType) -> StructType:
+    """A fact as stored: its ``dt=`` partition column read back as DATE."""
+    return StructType([*schema.fields, StructField("dt", DateType(), True)])
+
+
+FACTS = {
+    "fact_nascimentos": _with_dt(FACT_NASCIMENTOS),
+    "fact_obitos": _with_dt(FACT_OBITOS),
+    "fact_internacoes": _with_dt(FACT_INTERNACOES),
+}
+
+# Cause-group bridge: one row per (content-hash group, cause position).
+PONTE_GRUPO_CAUSAS = "chave_grupo_causa string, ordem_causa int, chave_causa int"
+
+# Maintained aggregates: additive per-``dt`` partials (etl.AGGREGATES).
+AGGREGATES = {
+    "agg_nascimentos_uf_ano": "uf string, ano int, quantidade_nascimentos bigint, dt date",
+    "agg_obitos_uf_ano": "uf string, ano int, quantidade_obitos bigint, dt date",
+}
+
+# Every warehouse table -> its schema.
+WAREHOUSE = {
+    **DIMENSIONS,
+    **FACTS,
+    "ponte_grupo_causas": PONTE_GRUPO_CAUSAS,
+    **AGGREGATES,
+}
+
+
+def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
+    """Read a warehouse table by its declared schema.  A directory holding
+    no data reads as a typed empty frame (a fact or aggregate whose every
+    day was dropped), and so does a fact never ingested; any other missing
+    table raises."""
+    schema = WAREHOUSE[table]
+    path = posixpath.join(warehouse_dir, table)
+    if table in FACTS and not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)

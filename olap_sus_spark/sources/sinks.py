@@ -23,6 +23,8 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 
+from olap_sus_spark.schemas import read_table
+
 
 def write_fact_partition(df: DataFrame, warehouse_dir: str, table: str, dt: str) -> str:
     """Replace the single ``dt=<date>`` partition of a fact table: the day
@@ -44,12 +46,13 @@ def append_bridge(df: DataFrame, warehouse_dir: str, table: str = "ponte_grupo_c
 
     Safe to re-run: identical input produces identical keys, which the
     anti-join removes.  At scale the existing-side scan prunes to the one
-    join column (``chave_grupo_causa``) via Parquet column pruning.
+    join column (``chave_grupo_causa``) via Parquet column pruning; it is
+    read by the table's declared schema.
     """
     spark = df.sparkSession
     path = posixpath.join(warehouse_dir, table)
     if os.path.exists(path):
-        existing = spark.read.parquet(path).select("chave_grupo_causa").distinct()
+        existing = read_table(spark, warehouse_dir, table).select("chave_grupo_causa").distinct()
         df = df.join(existing, "chave_grupo_causa", "left_anti")
     df.write.mode("append").parquet(path)
     return path

@@ -78,11 +78,11 @@ def test_parameterized_requests_drive_live_queries(spark, wh):
         # restriction must reach the query (row counts strictly shrink).
         from pyspark.sql import functions as F
 
-        from olap_sus_spark.queries.warehouse import _t
+        from olap_sus_spark.schemas import read_table
 
         # the busiest city's health region is guaranteed to have fact rows
         region = (
-            _t(spark, wh, "dim_municipio")
+            read_table(spark, wh, "dim_municipio")
             .filter(F.col("nome_municipio") == city)
             .select("regiao_saude")
             .first()[0]

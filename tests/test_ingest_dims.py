@@ -1,8 +1,9 @@
-"""Ingest-side plan and session hygiene: the dimensions load by declared
-schema without a Spark job, the SIM cause lookup is one plan node whatever
-dimCausa's size, an empty fact's view keeps its types across the first
-ingest, the fact sink leaves the session's overwrite mode alone, and a
-re-run day that comes out empty stops serving its old rows."""
+"""Ingest-side plan and session hygiene: every warehouse table reads by
+its declared schema without a Spark job (the dashboard queries build with
+none but the pivot's category job), the SIM cause lookup is one plan node
+whatever dimCausa's size, an empty fact's view keeps its types across the
+first ingest, the fact sink leaves the session's overwrite mode alone, and
+a re-run day that comes out empty stops serving its old rows."""
 
 from __future__ import annotations
 
@@ -10,11 +11,13 @@ import os
 import shutil
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from olap_sus_spark import etl, schemas
 from olap_sus_spark.operators.facts import build_fact_obitos
 from olap_sus_spark.operators.transforms import transform_sim
+from olap_sus_spark.queries import warehouse as W
 from olap_sus_spark.sources import formats, sinks
 from olap_sus_spark.sources.raw_csv import read_dataset
 from tests.test_etl_e2e import DT, LANDING, SEEDS
@@ -27,21 +30,74 @@ def wh(spark, tmp_path_factory):
     return d
 
 
-def test_load_dims_runs_no_spark_job(spark, wh):
+@pytest.fixture(scope="module")
+def full_wh(spark, tmp_path_factory):
+    """Every warehouse table written: one day of each dataset and both
+    aggregates."""
+    d = str(tmp_path_factory.mktemp("wh_full"))
+    etl.bootstrap_warehouse(spark, SEEDS, d)
+    for ds in etl.DATASETS:
+        etl.run_ingest(spark, ds, DT, LANDING, d)
+    for agg in etl.AGGREGATES:
+        etl.refresh_aggregate(spark, d, agg, dates=[DT])
+    return d
+
+
+def _jobs(spark, group: str, build) -> int:
+    """Spark jobs ``build()`` runs, counted under its own job group."""
     sc = spark.sparkContext
-    sc.setJobGroup("test_load_dims", "load_dims")
+    sc.setJobGroup(group, group)
     try:
-        etl.load_dims(spark, wh)
+        build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("test_load_dims")) == []
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_declared_dim_schemas_equal_bootstrapped(spark, wh):
+def _types(df) -> list[tuple[str, object]]:
+    # Parquet reads every column back nullable: compare names and types.
+    return [(f.name, f.dataType) for f in df.schema]
+
+
+def test_load_dims_runs_no_spark_job(spark, wh):
+    assert _jobs(spark, "test_load_dims", lambda: etl.load_dims(spark, wh)) == 0
+
+
+def test_declared_dim_schemas_equal_bootstrapped(spark, full_wh):
+    """Every declared warehouse schema equals what the engine writes."""
     assert tuple(schemas.DIMENSIONS) == etl.DIM_TABLES
-    dims = etl.load_dims(spark, wh)
-    for t in etl.DIM_TABLES:
-        assert dims[t].schema == spark.read.parquet(os.path.join(wh, t)).schema, t
+    assert set(schemas.WAREHOUSE) == {
+        *etl.DIM_TABLES, *etl.FACT_TABLES, etl.BRIDGE_TABLE, *etl.AGGREGATES}
+    for t in schemas.WAREHOUSE:
+        inferred = spark.read.parquet(os.path.join(full_wh, t))
+        assert _types(schemas.read_table(spark, full_wh, t)) == _types(inferred), t
+
+
+def test_dashboard_queries_build_without_spark_jobs(spark, full_wh):
+    """Building a dashboard query runs no Spark job (tables are read by
+    declared schema); the pivot runs exactly one, for its category list."""
+    builds = {
+        "rollup_occupation": lambda: W.rollup_deaths_by_occupation_schooling(spark, full_wh),
+        "rollup_births": lambda: W.rollup_births_by_state_age(spark, full_wh),
+        "slice_dice": lambda: W.slice_dice_deaths(spark, full_wh, "São Paulo", 2020, 2024),
+        "pivot": lambda: W.pivot_deaths_year_by_uf(spark, full_wh),
+        "drill_across": lambda: W.drill_across_growth(spark, full_wh, ["Grande São Paulo"]),
+        "topk": lambda: W.topk_causes_per_family(spark, full_wh, 3),
+        "rollup_cost": lambda: W.rollup_cost_by_cause_chapter(spark, full_wh),
+        "stay_cost": lambda: W.stay_cost_by_municipality(spark, full_wh),
+        **{agg: (lambda a=agg: etl.read_aggregate(spark, full_wh, a)) for agg in etl.AGGREGATES},
+    }
+    got = {name: _jobs(spark, f"test_construct_{name}", b) for name, b in builds.items()}
+    assert got == {name: int(name == "pivot") for name in builds}
+
+
+def test_pivot_categories_sort_as_spark_orders(spark):
+    values = ["Z", None, "É", "A"]
+    spark_order = [
+        r.v for r in spark.createDataFrame([(v,) for v in values], "v string")
+        .orderBy("v").collect()
+    ]
+    assert sorted(values, key=W.orderby_key) == spark_order == [None, "A", "Z", "É"]
 
 
 def _expression_nodes(df) -> int:
@@ -80,7 +136,7 @@ def test_empty_fact_view_types_survive_first_ingest(spark, wh):
     first ``dt=`` partition lands (``dt`` is inferred as DATE)."""
 
     def types():
-        return [(f.name, f.dataType) for f in etl._load(spark, wh, "fact_internacoes").schema]
+        return _types(schemas.read_table(spark, wh, "fact_internacoes"))
 
     before = types()
     etl.run_ingest(spark, "sih", DT, LANDING, wh)
@@ -112,18 +168,20 @@ def test_fact_sink_leaves_session_overwrite_mode_static(spark, tmp_path):
 def test_empty_rerun_day_drops_fact_and_aggregate_partitions(spark, tmp_path):
     """Re-landing the SIM day with every death date unresolvable leaves the
     day with no fact row: the re-run drops its ``dt=`` partition from the
-    fact and from the aggregate, and the emptied fact reads as the typed
-    empty fact."""
+    fact and from the aggregate, the emptied fact reads as the typed empty
+    fact, and the aggregate, every day of it dropped, serves zero rows (a
+    never-built aggregate still raises)."""
     wh = str(tmp_path / "wh")
     etl.bootstrap_warehouse(spark, SEEDS, wh)
     etl.run_ingest(spark, "sim", DT, LANDING, wh)
     etl.refresh_aggregate(spark, wh, "agg_obitos_uf_ano")
 
     def day_rows(table):
-        return etl._load(spark, wh, table).filter(F.col("dt") == DT).count()
+        return schemas.read_table(spark, wh, table).filter(F.col("dt") == DT).count()
 
     assert day_rows("fact_obitos") > 0 and day_rows("agg_obitos_uf_ano") > 0
-    types = [(f.name, f.dataType) for f in etl._load(spark, wh, "fact_obitos").schema]
+    types = _types(schemas.read_table(spark, wh, "fact_obitos"))
+    served = _types(etl.read_aggregate(spark, wh, "agg_obitos_uf_ano"))
 
     relanded = str(tmp_path / "landing")
     shutil.copytree(os.path.join(LANDING, "sim"), os.path.join(relanded, "sim"))
@@ -137,4 +195,8 @@ def test_empty_rerun_day_drops_fact_and_aggregate_partitions(spark, tmp_path):
 
     assert day_rows("fact_obitos") == 0
     assert not os.path.exists(os.path.join(wh, "agg_obitos_uf_ano", f"dt={DT}"))
-    assert [(f.name, f.dataType) for f in etl._load(spark, wh, "fact_obitos").schema] == types
+    assert _types(schemas.read_table(spark, wh, "fact_obitos")) == types
+    emptied = etl.read_aggregate(spark, wh, "agg_obitos_uf_ano")
+    assert emptied.count() == 0 and _types(emptied) == served
+    with pytest.raises(AnalysisException):
+        etl.read_aggregate(spark, wh, "agg_nascimentos_uf_ano")

@@ -98,10 +98,10 @@ def build_report(spark, wh: str) -> str:
     )
     # slice & dice parameters auto-picked from the warehouse (the dashboard
     # reads them from input boxes): busiest residence city, full year span
-    from olap_sus_spark.queries.warehouse import _t
+    from olap_sus_spark.schemas import read_table
 
-    fact = _t(spark, wh, "fact_obitos")
-    mun = _t(spark, wh, "dim_municipio")
+    fact = read_table(spark, wh, "fact_obitos")
+    mun = read_table(spark, wh, "dim_municipio")
     city = (
         fact.groupBy("chave_municipio_residencia")
         .count()
@@ -117,7 +117,7 @@ def build_report(spark, wh: str) -> str:
     )
     anos = (
         fact.join(
-            _t(spark, wh, "dim_data").select(
+            read_table(spark, wh, "dim_data").select(
                 F.col("chave_data").alias("chave_data_obito"), "ano"
             ),
             "chave_data_obito",

@@ -142,10 +142,10 @@ def _defaults(spark, wh: str) -> dict:
     """Pre-fill the form like the Dash app does: busiest city, year span."""
     from pyspark.sql import functions as F
 
-    from olap_sus_spark.queries.warehouse import _t
+    from olap_sus_spark.schemas import read_table
 
-    fact = _t(spark, wh, "fact_obitos")
-    mun = _t(spark, wh, "dim_municipio")
+    fact = read_table(spark, wh, "fact_obitos")
+    mun = read_table(spark, wh, "dim_municipio")
     city = (
         fact.groupBy("chave_municipio_residencia")
         .count()
@@ -161,7 +161,7 @@ def _defaults(spark, wh: str) -> dict:
     )
     anos = (
         fact.join(
-            _t(spark, wh, "dim_data").select(
+            read_table(spark, wh, "dim_data").select(
                 F.col("chave_data").alias("chave_data_obito"), "ano"
             ),
             "chave_data_obito",

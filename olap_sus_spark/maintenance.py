@@ -22,6 +22,8 @@ from typing import Callable
 
 from pyspark.sql import SparkSession
 
+from olap_sus_spark.operators.index_store import SrcTable
+
 
 @dataclass(frozen=True)
 class Spec:
@@ -30,7 +32,9 @@ class Spec:
     refresh; ``refresh(spark, sf_dir, days)`` — per-file tables diff the
     corpus themselves and ignore ``days``.  ``rebuild_exact`` is False for
     an epoch-pinned table, whose refresh equals a rebuild under its BUILT
-    codebook rather than a fresh rebuild of the grown corpus."""
+    codebook rather than a fresh rebuild of the grown corpus.  ``table``
+    gives a per-file table's ``SrcTable`` for a corpus dir (None for a
+    month table); fleet compaction walks it."""
 
     name: str
     unit: str
@@ -39,6 +43,7 @@ class Spec:
     build: Callable[[SparkSession, str], object]
     refresh: Callable[[SparkSession, str, list[str]], object]
     rebuild_exact: bool = True
+    table: Callable[[str], SrcTable] | None = None
 
 
 def specs() -> list[Spec]:
@@ -62,6 +67,19 @@ def specs() -> list[Spec]:
         # from the ANN probe index's fixed 4 bits
         return sim.auto_bits(corpus_rows(sf), target_bucket=8)
 
+    def src(
+        name: str,
+        source: str,
+        table: Callable[[str], SrcTable],
+        build: Callable[[SparkSession, str], object],
+        refresh: Callable[[SparkSession, str], object],
+        rebuild_exact: bool = True,
+    ) -> Spec:
+        return Spec(
+            name, "src", source, lambda sf: table(sf).path, build,
+            lambda s, sf, days: refresh(s, sf), rebuild_exact, table,
+        )
+
     def month(name: str, table: MonthTable, source: str | None = None) -> Spec:
         return Spec(
             name, "mes_dt", source or table.source,
@@ -77,68 +95,62 @@ def specs() -> list[Spec]:
         )
 
     return [
-        Spec(
-            "srp_lsh", "src", "embeddings",
-            lambda sf: sim.srp_index_path(sf, _DIM, _LSH_T, _LSH_H),
+        src(
+            "srp_lsh", "embeddings",
+            lambda sf: sim._srp_table(sf, _DIM, _LSH_T, _LSH_H),
             lambda s, sf: sim.load_or_build_srp_index(s, sf, _DIM, _LSH_T, _LSH_H),
-            lambda s, sf, days: sim.refresh_srp_index(s, sf, _DIM, _LSH_T, _LSH_H),
+            lambda s, sf: sim.refresh_srp_index(s, sf, _DIM, _LSH_T, _LSH_H),
         ),
-        Spec(
-            "srp_lsh_dedup", "src", "embeddings",
-            lambda sf: sim.srp_index_path(sf, _DIM, _LSH_T, dedup_bits(sf)),
+        src(
+            "srp_lsh_dedup", "embeddings",
+            lambda sf: sim._srp_table(sf, _DIM, _LSH_T, dedup_bits(sf)),
             lambda s, sf: sim.load_or_build_srp_index(s, sf, _DIM, _LSH_T, dedup_bits(sf)),
-            lambda s, sf, days: sim.refresh_srp_index(s, sf, _DIM, _LSH_T, dedup_bits(sf)),
+            lambda s, sf: sim.refresh_srp_index(s, sf, _DIM, _LSH_T, dedup_bits(sf)),
         ),
-        Spec(
-            "ivf", "src", "embeddings",
-            lambda sf: sim.ivf_index_path(sf, _NC),
+        src(
+            "ivf", "embeddings",
+            lambda sf: sim._ivf_table(sf, _NC),
             lambda s, sf: sim.load_or_build_ivf_index(s, sf, num_centroids=_NC),
-            lambda s, sf, days: sim.refresh_ivf_index(s, sf, num_centroids=_NC),
+            lambda s, sf: sim.refresh_ivf_index(s, sf, num_centroids=_NC),
         ),
-        Spec(
-            "semantic_dedup", "src", "embeddings",
-            lambda sf: sim.semantic_index_path(sf, 64, 0.3),
+        src(
+            "semantic_dedup", "embeddings",
+            lambda sf: sim._sem_table(sf, 64, 0.3, "vec_id"),
             lambda s, sf: sim.load_or_build_semantic_index(s, sf, 64, 0.3),
-            lambda s, sf, days: sim.refresh_semantic_index(s, sf, 64, 0.3),
+            lambda s, sf: sim.refresh_semantic_index(s, sf, 64, 0.3),
             rebuild_exact=False,
         ),
-        Spec(
-            "quality_hist", "src", "documents",
-            qh.quality_hist_path,
-            qh.load_or_build_quality_hist,
-            lambda s, sf, days: qh.refresh_quality_hist(s, sf),
+        src(
+            "quality_hist", "documents", qh._table,
+            qh.load_or_build_quality_hist, qh.refresh_quality_hist,
         ),
-        Spec(
+        src(
             # the near-dup cluster map over the augmented corpus view the
             # registered dedup queries serve
-            "near_dup_clusters", "src", "documents",
-            lambda sf: dd.cluster_index_path(sf, AUG, 0.5),
+            "near_dup_clusters", "documents",
+            lambda sf: dd._cluster_table(sf, AUG, 0.5, 3),
             lambda s, sf: dd.load_or_build_cluster_index(s, sf, AUG, threshold=0.5),
-            lambda s, sf, days: dd.refresh_cluster_index(s, sf, AUG, threshold=0.5),
+            lambda s, sf: dd.refresh_cluster_index(s, sf, AUG, threshold=0.5),
         ),
-        Spec(
-            "inverted", "src", "documents",
-            inv.inverted_index_path,
-            inv.load_or_build_inverted_index,
-            lambda s, sf, days: inv.refresh_inverted_index(s, sf),
+        src(
+            "inverted", "documents",
+            lambda sf: inv._table(sf, "documents"),
+            inv.load_or_build_inverted_index, inv.refresh_inverted_index,
         ),
-        Spec(
-            "gramfreq", "src", "documents",
-            gf.gram_freq_path,
-            gf.load_or_build_gram_freq,
-            lambda s, sf, days: gf.refresh_gram_freq(s, sf),
+        src(
+            "gramfreq", "documents",
+            lambda sf: gf._freq_table(sf, AUG),
+            gf.load_or_build_gram_freq, gf.refresh_gram_freq,
         ),
-        Spec(
-            "gramrollup", "src", "documents",
-            gf.rollup_path,
-            gf.load_or_build_gram_rollup,
-            lambda s, sf, days: gf.refresh_gram_rollup(s, sf),
+        src(
+            "gramrollup", "documents",
+            lambda sf: gf._rollup_table(sf, AUG),
+            gf.load_or_build_gram_rollup, gf.refresh_gram_rollup,
         ),
-        Spec(
-            "gramscrub", "src", "documents",
-            gf.scrub_path,
-            gf.load_or_build_gram_scrub,
-            lambda s, sf, days: gf.refresh_gram_scrub(s, sf),
+        src(
+            "gramscrub", "documents",
+            lambda sf: gf._scrub_table(sf, AUG),
+            gf.load_or_build_gram_scrub, gf.refresh_gram_scrub,
         ),
         month("daily_revenue", inc.DAILY_REVENUE),
         month("orderkey_kmv", sketches.ORDERKEY_KMV),

@@ -135,74 +135,113 @@ def best_by(
     )
 
 
-# Above this size the k×dim literal matrix (and the driver collect) stops
-# being sensible — the crossJoin + window fallback handles big codebooks.
-_MATRIX_MAX_K = 64
+# One literal matrix holds at most this many centroids; a bigger codebook
+# folds chunk by chunk.
+_CHUNK_K = 64
+# localCheckpoint after every this many chunks keeps a big codebook's plan
+# flat.
+_CHECKPOINT_EVERY = 8
 
 
-def _nearest_centroid_matrix(
+def matrix_dots(v: Column, vecs: list[list[float]]) -> Column:
+    """Dots of ``v`` against every vector of ``vecs``, all in ONE aggregate
+    pass with a len(vecs)-wide accumulator (the simhash60 votes trick): per
+    element j, acc_k += v_j·vecs[k][j].  One HOF traversal replaces one
+    fold per vector — HOFs don't codegen, so per-invocation overhead
+    dominates and collapsing the traversals is the lever.
+
+    Bit-exactness: each acc_k accumulates ((0 + v₀p₀ₖ) + v₁p₁ₖ)… — the
+    identical left-to-right association as a per-vector sequential fold
+    (:func:`dot`), so results match the oracles' list_reduce digit for
+    digit.  The element-major matrix is ONE server-side SQL literal
+    (operators/onecall.py): F.lit(list-of-lists) expands client-side to
+    len(vecs)·dim scalar-lit py4j round trips per construction, degrading
+    as the py4j object registry grows (measured r11: 4–15 s per
+    construction via F.lit vs ~15 ms via one F.expr)."""
+    k, dim = len(vecs), len(vecs[0])
+    pmat = lit_double_matrix([[vecs[c][j] for c in range(k)] for j in range(dim)])
+    return F.aggregate(
+        F.zip_with(v, pmat, lambda x, prow: F.transform(prow, lambda p: x * p)),
+        F.array_repeat(F.lit(0.0), k),
+        lambda acc, prods: F.zip_with(acc, prods, lambda a, b: a + b),
+    )
+
+
+def _norm(xs: list[float]) -> float:
+    """Driver-side twin of :func:`norm`: the same sequential float64 fold
+    and one sqrt."""
+    import math
+
+    s = 0.0
+    for x in xs:
+        s += x * x
+    return math.sqrt(s)
+
+
+def _nearest_centroid(
     vecs: DataFrame,
     cent_rows: list,
     keep_cols: list[str],
     v_col: str = "v",
-):
-    """All-k cosine scoring in ONE aggregate pass (the srp_buckets matrix
-    fold on runtime centroids): centroid vectors are collected driver-side
-    (k is bounded — the codebook is the small side by construction) and
-    folded into a constant element-major matrix, the per-vector norm prices
-    once, and argmax-with-smallest-id-tie-break is array_position of the
-    max (first occurrence — centroids enter the matrix sorted by id).
+) -> DataFrame:
+    """EXACT nearest centroid (max cosine, ties → smallest id) of every
+    ``v_col`` vector against a driver-side codebook of (id, vector) rows:
+    :func:`matrix_dots` over id-ordered chunks of at most ``_CHUNK_K``
+    centroids, carrying a running (best sim, best id) pair.  A codebook of
+    up to 64 centroids is one chunk, i.e. one narrow projection; a bigger
+    one costs the irreducible n·k dot products with ZERO shuffle — a
+    broadcast crossJoin + window would materialize n×k rows each carrying
+    both vectors (~700 GB at 200k vectors × 3125 centroids, the x100
+    semantic probe).
 
-    Bit-exactness vs the crossJoin + per-centroid fold formulation (and the
-    DuckDB oracles): each dot accumulates in the identical left-to-right
-    element order; centroid norms are computed driver-side with the same
-    sequential float64 fold + one sqrt; the division tree d/(vn·cn) is
-    unchanged.  Returns ``keep_cols`` + (centroid_id, sim).
-    """
-    import math
-
+    Ties: within a chunk the first max (array_position) is the smallest
+    id; across chunks strictly-greater keeps the earlier, smaller-id chunk.
+    A NaN cosine is the greatest double in Spark's order, so it wins at its
+    smallest id.  Centroid norms fold driver-side in the same order as
+    :func:`norm`, and the division tree d/(vn·cn) matches :func:`cosine` —
+    so a zero-norm vector or centroid raises DIVIDE_BY_ZERO under ANSI, as
+    :func:`cosine` does.  Returns ``keep_cols`` + centroid_id (BIGINT, like the source id column;
+    NULL for a NULL vector or an empty codebook)."""
     rows = sorted(cent_rows, key=lambda r: r[0])
-    ids = [int(r[0]) for r in rows]
-    cvecs = [[float(x) for x in r[1]] for r in rows]
-    k, dim = len(ids), len(cvecs[0])
-
-    def _norm(xs: list[float]) -> float:
-        s = 0.0
-        for x in xs:
-            s += x * x
-        return math.sqrt(s)
-
-    cnorms = [_norm(v) for v in cvecs]
-    # ONE py4j call via a server-side SQL literal (operators/onecall.py):
-    # F.lit(list-of-lists) expands client-side to k·dim scalar lits — the
-    # r10 rewrite was a no-op and the construction still cost seconds per
-    # build, degrading with the py4j registry (measured r11).
-    pmat = lit_double_matrix([[cvecs[c][j] for c in range(k)] for j in range(dim)])
-    dots = F.aggregate(
-        F.zip_with(F.col(v_col), pmat, lambda x, prow: F.transform(prow, lambda p: x * p)),
-        F.array_repeat(F.lit(0.0), k),
-        lambda acc, prods: F.zip_with(acc, prods, lambda a, b: a + b),
-    )
-    # Stage dots + the vector norm as real columns: sims references _vn per
-    # element, and an inlined norm fold would re-run per element (the HOF
-    # re-evaluation gotcha); attribute references are cheap.
-    staged = vecs.select(*keep_cols, dots.alias("_dots"), norm(F.col(v_col)).alias("_vn"))
-    sims = F.zip_with(
-        F.col("_dots"),
-        lit_doubles(cnorms),
-        lambda d, cn: d / (F.col("_vn") * cn),
-    )
-    staged = staged.select(*keep_cols, sims.alias("_sims"))
-    best = F.array_position(F.col("_sims"), F.array_max(F.col("_sims"))).cast("int")
-    # centroid_id stays BIGINT like the chunked path's (and like the
-    # source id column): the two paths must not produce different physical
-    # schemas for the persisted assignments table.
-    id_arr = lit_bigints(ids)
-    return staged.select(
+    staged = vecs.select(
         *keep_cols,
-        F.element_at(id_arr, best).alias("centroid_id"),
-        F.array_max(F.col("_sims")).alias("sim"),
+        F.col(v_col),
+        norm(F.col(v_col)).alias("_vn"),
+        F.lit(float("-inf")).alias("_bs"),
+        F.lit(None).cast("long").alias("_bi"),
     )
+    carry = [*keep_cols, v_col, "_vn"]
+    for ci, lo in enumerate(range(0, len(rows), _CHUNK_K)):
+        chunk = rows[lo : lo + _CHUNK_K]
+        cvecs = [[float(x) for x in r[1]] for r in chunk]
+        # stage dots, then sims, as real columns: sims reads _vn per
+        # element, and the best pick reads _sims twice (HOF re-evaluation)
+        staged = staged.select(
+            *carry, "_bs", "_bi", matrix_dots(F.col(v_col), cvecs).alias("_dots")
+        )
+        sims = F.zip_with(
+            F.col("_dots"),
+            lit_doubles([_norm(c) for c in cvecs]),
+            lambda d, cn: d / (F.col("_vn") * cn),
+        )
+        staged = staged.select(*carry, "_bs", "_bi", sims.alias("_sims"))
+        best = F.array_max(F.col("_sims"))
+        pos = F.array_position(F.col("_sims"), best).cast("int")
+        # A NULL vector's best is NULL, so it never takes: the generated
+        # element_at reads a NULL position as -1 (the LAST id), and only the
+        # when keeps that value out.  Both whens read the INPUT row's _bs —
+        # one select, no ordering hazard.
+        take = best > F.col("_bs")
+        staged = staged.select(
+            *carry,
+            F.when(take, best).otherwise(F.col("_bs")).alias("_bs"),
+            F.when(take, F.element_at(lit_bigints([int(r[0]) for r in chunk]), pos))
+            .otherwise(F.col("_bi"))
+            .alias("_bi"),
+        )
+        if (ci + 1) % _CHECKPOINT_EVERY == 0:
+            staged = staged.localCheckpoint(eager=True)
+    return staged.select(*keep_cols, F.col("_bi").alias("centroid_id"))
 
 
 def assign_centroids(
@@ -213,118 +252,18 @@ def assign_centroids(
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """IVF list assignment: nearest centroid per vector (max cosine, ties →
-    smallest centroid id).  Small codebooks (k ≤ 64) take the single-pass
-    matrix fold (:func:`_nearest_centroid_matrix`); larger ones take the
-    CHUNKED matrix fold (:func:`_nearest_centroid_chunked`) — still exact,
-    still narrow.  The retired alternative (broadcast crossJoin + window)
-    materializes n×k rows each carrying both vectors: at 200k vectors ×
-    3125 centroids that is a ~700 GB shuffle — the x100 semantic probe
-    found it, and the chunked fold replaces it with k/64 shuffle-free
-    passes.  ``passthrough`` columns (e.g. the source-file partition key of
-    an incremental index refresh) ride along unchanged."""
-    cents = _as_double(centroids, vec_col, "centv").select(
-        F.col(id_col).alias("centroid_id"), "centv"
-    )
-    # limit(k+1) decides the path WITHOUT pulling a big codebook to the
-    # driver prematurely: it returns every row iff the codebook fits the
-    # single-matrix path, and at most 65 rows (discarded) when it doesn't.
-    cent_rows = cents.limit(_MATRIX_MAX_K + 1).collect()
+    smallest centroid id) by the chunked matrix fold
+    (:func:`_nearest_centroid`) — exact and narrow.  The codebook comes to
+    the driver in ONE collect (k×dim doubles — 3125×64 ≈ 1.6 MB; ~65k
+    centroids ≈ 33 MB is the practical ceiling before the documented
+    coarse-to-fine nesting takes over).  ``passthrough`` columns (e.g. the
+    source-file partition key of an incremental index refresh) ride along
+    unchanged."""
+    cents = _as_double(centroids, vec_col, "centv").select(F.col(id_col), "centv")
     vecs = _as_double(emb, vec_col, "v").select(
         F.col(id_col), "v", F.col(vec_col), *[F.col(c) for c in passthrough]
     )
-    if 0 < len(cent_rows) <= _MATRIX_MAX_K:
-        return _nearest_centroid_matrix(
-            vecs, cent_rows, [id_col, vec_col, *passthrough]
-        ).select(id_col, vec_col, *passthrough, "centroid_id")
-    # big codebook: collect it whole (k×dim doubles — 3125×64 ≈ 1.6 MB;
-    # ~65k centroids ≈ 33 MB is the practical ceiling before the documented
-    # coarse-to-fine nesting takes over) and fold it chunk by chunk
-    return _nearest_centroid_chunked(
-        vecs, cents.collect(), [id_col, vec_col, *passthrough]
-    ).select(id_col, vec_col, *passthrough, "centroid_id")
-
-
-def _nearest_centroid_chunked(
-    vecs: DataFrame,
-    cent_rows: list,
-    keep_cols: list[str],
-    v_col: str = "v",
-    checkpoint_every: int = 8,
-):
-    """EXACT nearest-centroid over a codebook larger than one literal
-    matrix: iterate :func:`_nearest_centroid_matrix`-style folds over
-    64-centroid chunks (id-ordered), carrying a running (best sim, best id)
-    pair — every pass is a narrow projection, so the total cost is the
-    irreducible n·k dot products with ZERO shuffle, vs the n×k row
-    materialization of a crossJoin.  Ties: within a chunk, first-max =
-    smallest id; across chunks, strictly-greater keeps the earlier
-    (smaller-id) chunk — together exactly the global smallest-id
-    tie-break.  ``localCheckpoint`` every few chunks keeps the plan flat.
-    Bit-exact vs the single-matrix path: identical per-chunk fold order,
-    identical division tree, comparisons on identical doubles."""
-    import math
-
-    rows = sorted(cent_rows, key=lambda r: r[0])
-
-    def _norm(xs: list[float]) -> float:
-        s = 0.0
-        for x in xs:
-            s += x * x
-        return math.sqrt(s)
-
-    staged = vecs.select(
-        *keep_cols,
-        F.col(v_col),
-        norm(F.col(v_col)).alias("_vn"),
-        F.lit(float("-inf")).alias("_bs"),
-        F.lit(None).cast("long").alias("_bi"),
-    )
-    for ci, lo in enumerate(range(0, len(rows), _MATRIX_MAX_K)):
-        chunk = rows[lo : lo + _MATRIX_MAX_K]
-        ids = [int(r[0]) for r in chunk]
-        cvecs = [[float(x) for x in r[1]] for r in chunk]
-        k, dim = len(ids), len(cvecs[0])
-        cnorms = [_norm(v) for v in cvecs]
-        # one-call SQL literal per chunk (F.lit(list) would be k·dim py4j
-        # round trips per chunk — see operators/onecall.py)
-        pmat = lit_double_matrix([[cvecs[c][j] for c in range(k)] for j in range(dim)])
-        dots = F.aggregate(
-            F.zip_with(
-                F.col(v_col), pmat, lambda x, prow: F.transform(prow, lambda p: x * p)
-            ),
-            F.array_repeat(F.lit(0.0), k),
-            lambda acc, prods: F.zip_with(acc, prods, lambda a, b: a + b),
-        )
-        # stage dots, then sims, as real columns (HOF re-evaluation gotcha)
-        staged = staged.select(
-            *keep_cols, v_col, "_vn", "_bs", "_bi", dots.alias("_dots")
-        )
-        sims = F.zip_with(
-            F.col("_dots"),
-            lit_doubles(cnorms),
-            lambda d, cn: d / (F.col("_vn") * cn),
-        )
-        staged = staged.select(
-            *keep_cols, v_col, "_vn", "_bs", "_bi", sims.alias("_sims")
-        )
-        cbest = F.array_max(F.col("_sims"))
-        cpos = F.array_position(F.col("_sims"), cbest).cast("int")
-        cid = F.element_at(lit_bigints(ids), cpos)
-        # both whens read the INPUT row's _bs — one select, no ordering hazard
-        staged = staged.select(
-            *keep_cols,
-            v_col,
-            "_vn",
-            F.when(cbest > F.col("_bs"), cbest).otherwise(F.col("_bs")).alias("_bs"),
-            F.when(cbest > F.col("_bs"), cid).otherwise(F.col("_bi")).alias("_bi"),
-        )
-        if (ci + 1) % checkpoint_every == 0:
-            staged = staged.localCheckpoint(eager=True)
-    return staged.select(
-        *keep_cols,
-        F.col("_bi").alias("centroid_id"),
-        F.col("_bs").alias("sim"),
-    )
+    return _nearest_centroid(vecs, cents.collect(), [id_col, vec_col, *passthrough])
 
 
 def ivf_probe(
@@ -412,63 +351,53 @@ def ivf_topk(
                      query_id_col)
 
 
-def kmeans_centroids(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means as DataFrame iterations (deterministic smallest-id
-    init) — upgrades the IVF index from placeholder centroids to trained
-    ones.
-
-    Each round: broadcast the k centroids, assign every vector (narrow),
-    recompute means with posexplode → groupBy(centroid_id, pos) partial
-    sums — every aggregation buffer holds ONE (cluster, dimension) running
-    (sum, count) pair, so memory stays bounded no matter how many vectors a
-    hot cluster attracts (a collect_list-of-vectors mean would materialize
-    the whole cluster in one buffer).  The k×dim per-dimension means then
-    reassemble into ordered arrays with a dim-bounded collect_list.
-    ``localCheckpoint`` truncates lineage so the plan stays flat across
-    rounds; k rows always fit on the driver.  Returns
-    (centroid_id, embedding).
-    """
-    cents = (
-        _as_double(emb.orderBy(id_col).limit(k), vec_col, "centv")
-        .select(F.col(id_col).alias("centroid_id"), "centv")
-        .localCheckpoint(eager=True)
-    )
-    vecs = _as_double(emb, vec_col, "v").select(id_col, "v").localCheckpoint(eager=True)
-    for _ in range(iters):
-        # single-pass matrix-fold assignment (k bounded; cents checkpointed)
-        best = _nearest_centroid_matrix(
-            vecs, cents.select("centroid_id", "centv").collect(), ["v"]
-        )
-        # element-wise mean with bounded buffers: one (sum, count) pair per
-        # (centroid, dimension) — never a whole cluster's vectors in memory
-        dim_means = (
-            best.select("centroid_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        cents = dim_means.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("pos"), (F.col("s") / F.col("n")).alias("m"))
-                    )
-                ),
-                lambda st: st["m"],
-            ).alias("centv")
-        ).localCheckpoint(eager=True)
-    return cents.select("centroid_id", F.col("centv").alias(vec_col))
-
-
 KMEANS_FP_SCALE = 1 << 20
 """Fixed-point scale for :func:`kmeans_fp` mean accumulation (≈6 decimal
 digits — far below embedding noise, far above any drift that could flip a
 nearest-centroid assignment)."""
+
+
+def _fixed_point(v: Column, scale: int) -> Column:
+    """Quantize a double array to 64-bit fixed point: floor(x·scale + 0.5),
+    the quantize_int8 rounding rule."""
+    return F.transform(
+        v, lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint")
+    )
+
+
+def _fp_means(
+    assigned: DataFrame, vfp: Column, scale: int, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The means half of one fixed-point Lloyd round over ``assigned``
+    (rows carrying ``centroid_id`` and the fixed-point vector ``vfp``).
+
+    posexplode → groupBy(centroid_id, pos) partial sums: every aggregation
+    buffer holds ONE (cluster, dimension) running (sum, count) pair, so
+    memory stays bounded no matter how many vectors a hot cluster attracts.
+    The sums are exact integers — order-independent, unlike double sums
+    whose order follows Spark's shuffle — and each coordinate is one
+    correctly-rounded double division sum/(n·scale).
+
+    Returns (dim_means (centroid_id, pos, m, n), centroids (centroid_id,
+    vec_col double array reassembled in pos order)), both lazy."""
+    dim_means = (
+        assigned.select("centroid_id", F.posexplode(vfp).alias("pos", "x"))
+        .groupBy("centroid_id", F.col("pos").cast("int").alias("pos"))
+        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
+        .select(
+            "centroid_id",
+            "pos",
+            (F.col("s").cast("double") / (F.col("n") * F.lit(scale)).cast("double")).alias("m"),
+            "n",
+        )
+    )
+    cents = dim_means.groupBy("centroid_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m")))),
+            lambda st: st["m"],
+        ).alias(vec_col)
+    )
+    return dim_means, cents
 
 
 def kmeans_fp(
@@ -479,20 +408,17 @@ def kmeans_fp(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Lloyd's k-means with ENGINE-PORTABLE determinism — the oracle-able
-    twin of :func:`kmeans_centroids` (same seeds, same assignment rule,
-    same per-(centroid, dim) bounded-memory partial aggregation).
+    """Lloyd's k-means with ENGINE-PORTABLE determinism: smallest-id seeds,
+    exact nearest-centroid assignment (:func:`_nearest_centroid`), and the
+    fixed-point means of :func:`_fp_means`.
 
     The one non-portable step in plain k-means is the mean: summing doubles
     is order-sensitive, and Spark's shuffle order differs from any other
-    engine's.  Here each element is quantized ONCE per round's input to a
-    64-bit fixed-point integer (floor(x·scale + 0.5), the quantize_int8
-    rounding rule), so the per-(centroid, dim) SUM is exact integer
-    arithmetic — order-independent — and the new centroid coordinate is a
-    single correctly-rounded double division sum/(n·scale).  Assignment
-    cosines stay sequential-fold doubles (deterministic per row, like every
-    ANN operator here).  The pagerank rank_fp trick (graph.py), applied to
-    vectors.
+    engine's.  Here each element is quantized ONCE to a 64-bit fixed-point
+    integer, so the per-(centroid, dim) SUM is exact integer arithmetic.
+    Assignment cosines stay sequential-fold doubles (deterministic per row,
+    like every ANN operator here).  The pagerank rank_fp trick (graph.py),
+    applied to vectors.
 
     Returns one row per (centroid_id, pos): the final round's per-dimension
     mean plus the centroid's member count — scalar columns only, so the
@@ -500,52 +426,20 @@ def kmeans_fp(
     some round drop out in both engines identically.
     """
     v = F.col(vec_col).cast("array<double>")
-    vecs = (
-        emb.select(
-            F.col(id_col),
-            v.alias("v"),
-            F.transform(
-                v, lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint")
-            ).alias("vfp"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cents = (
-        _as_double(emb.orderBy(id_col).limit(k), vec_col, "centv")
-        .select(F.col(id_col).alias("centroid_id"), "centv")
-        .localCheckpoint(eager=True)
-    )
+    vecs = emb.select(
+        F.col(id_col), v.alias("v"), _fixed_point(v, scale).alias("vfp")
+    ).localCheckpoint(eager=True)
+    # k rows always fit on the driver; each round's codebook is collected
+    # straight from its means
+    cent_rows = _as_double(emb.orderBy(id_col).limit(k), vec_col, "centv").select(
+        id_col, "centv"
+    ).collect()
     dim_means = None
     for it in range(iters):
-        # single-pass matrix-fold assignment (k is bounded; cents is
-        # checkpointed, so the collect reads k materialized rows)
-        best = _nearest_centroid_matrix(
-            vecs, cents.select("centroid_id", "centv").collect(), ["vfp"]
-        ).select("centroid_id", "vfp")
-        dim_means = (
-            best.select("centroid_id", F.posexplode("vfp").alias("pos", "x"))
-            .groupBy("centroid_id", F.col("pos").cast("int").alias("pos"))
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select(
-                "centroid_id",
-                "pos",
-                (F.col("s").cast("double") / (F.col("n") * F.lit(scale)).cast("double")).alias("m"),
-                "n",
-            )
-        )
+        best = _nearest_centroid(vecs, cent_rows, ["vfp"])
+        dim_means, cents = _fp_means(best, F.col("vfp"), scale, "centv")
         if it < iters - 1:  # final round's centroids are the output itself
-            cents = (
-                dim_means.groupBy("centroid_id")
-                .agg(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                        ),
-                        lambda st: st["m"],
-                    ).alias("centv")
-                )
-                .localCheckpoint(eager=True)
-            )
+            cent_rows = cents.collect()
     return dim_means.select(
         "centroid_id",
         "pos",
@@ -584,32 +478,9 @@ def semantic_codebook(
 
     n = emb.count()
     k = max(k_min, _math.ceil(n / float(cell_target)))
-    c0 = emb.orderBy(id_col).limit(k)
-    a1 = assign_centroids(emb, c0, id_col, vec_col)
-    vfp = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
-    )
-    dim_means = (
-        a1.select("centroid_id", F.posexplode(vfp).alias("pos", "x"))
-        .groupBy("centroid_id", F.col("pos").cast("int").alias("pos"))
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "centroid_id",
-            "pos",
-            (F.col("s").cast("double") / (F.col("n") * F.lit(scale)).cast("double")).alias("m"),
-        )
-    )
-    return (
-        dim_means.groupBy("centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m")))),
-                lambda st: st["m"],
-            ).alias(vec_col)
-        )
-        .localCheckpoint(eager=True)
-    )
+    a1 = assign_centroids(emb, emb.orderBy(id_col).limit(k), id_col, vec_col)
+    vfp = _fixed_point(F.col(vec_col).cast("array<double>"), scale)
+    return _fp_means(a1, vfp, scale, vec_col)[1].localCheckpoint(eager=True)
 
 
 def semantic_cells(
@@ -718,22 +589,6 @@ def semantic_dedup(
             F.coalesce(F.col("dup_cosine"), F.lit(-2.0)).alias("dup_cosine"),
         )
     )
-
-
-def kmeans_inertia(emb: DataFrame, centroids: DataFrame,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> float:
-    """Mean best-cosine across vectors (higher = tighter clustering)."""
-    cents = _as_double(centroids, vec_col, "centv").select(
-        F.col("centroid_id"), "centv"
-    )
-    vecs = _as_double(emb, vec_col, "v").select(id_col, "v")
-    best = (
-        vecs.crossJoin(F.broadcast(cents))
-        .select(id_col, cosine(F.col("v"), F.col("centv")).alias("sim"))
-        .groupBy(id_col)
-        .agg(F.max("sim").alias("best"))
-    )
-    return best.agg(F.avg("best")).first()[0]
 
 
 def quantize_int8(
@@ -978,33 +833,14 @@ def srp_buckets(
     # parquet scans as ONE task, serializing it.  Re-spread first (no-op on
     # any real multi-split table — see catalog.spread_compute).
     emb = spread_compute(emb)
-    K = n_tables * n_bits
     planes = [
         _srp_plane(t, h, dim) for t in range(n_tables) for h in range(n_bits)
     ]
-    # ALL K plane dots in ONE aggregate pass with a K-wide accumulator (the
-    # simhash60 votes trick): per element j, acc_k += x_j·P[j][k].  One HOF
-    # traversal replaces K separate folds — measured 6× faster signatures
-    # at (12 tables × 8 bits); HOFs don't codegen, so per-invocation
-    # overhead dominates and collapsing K traversals into one is the lever.
-    # Bit-exactness: each acc_k accumulates ((0 + x₀p₀ₖ) + x₁p₁ₖ)… — the
-    # identical left-to-right association as a per-plane sequential fold,
-    # so signatures still match the oracle's list_reduce digit for digit.
-    # The element-major plane matrix is built server-side as ONE SQL
-    # literal (operators/onecall.py): F.lit(list-of-lists) expands
-    # CLIENT-side to dim·K scalar-lit py4j round trips (6144 for the
-    # occupancy-8 signatures; 9216 at the sf0.1 dedup width) per QUERY
-    # CONSTRUCTION, degrading as the py4j object registry grows — the r10
-    # nested-lit rewrite did not change that mechanism (ADVICE r10;
-    # re-measured r11: 4–15 s per construction via F.lit vs ~15 ms via
-    # one F.expr).  Same literal value, same constant folding.
-    pmat = lit_double_matrix([[planes[k][j] for k in range(K)] for j in range(dim)])
-    v = F.col(vec_col).cast("array<double>")
-    dots = F.aggregate(
-        F.zip_with(v, pmat, lambda x, prow: F.transform(prow, lambda p: x * p)),
-        F.array_repeat(F.lit(0.0), K),
-        lambda acc, prods: F.zip_with(acc, prods, lambda a, b: a + b),
-    )
+    # ALL n_tables×n_bits plane dots in one matrix_dots pass: measured 6×
+    # faster signatures than per-plane folds at (12 tables × 8 bits), and
+    # the one-call plane literal replaced 6144–9216 py4j round trips per
+    # construction (r11).  Same per-plane fold order as the oracle.
+    dots = matrix_dots(F.col(vec_col).cast("array<double>"), planes)
     # Stage the dots as a REAL column: the bucket projection references it
     # n_tables×n_bits times, and an inlined aggregate would re-run the
     # whole pass per reference (CollapseProject only duplicates cheap

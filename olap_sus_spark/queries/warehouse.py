@@ -131,23 +131,25 @@ def drill_across_growth(
     mun = read_table(spark, wh, "dim_municipio")
     if health_regions:
         mun = mun.filter(F.col("regiao_saude").isin(*health_regions))
-    mun = mun.select("chave_municipio", "nome_municipio")
+    mun = mun.select(
+        F.col("chave_municipio").alias("chave_municipio_residencia"), "nome_municipio"
+    )
     data = read_table(spark, wh, "dim_data").select("chave_data", "ano")
 
+    # Both branches join the SAME mun and data frames, so AQE builds each
+    # broadcast once and the other branch reuses it (a renamed copy of
+    # dim_data would be a second 48k-row broadcast).
     births = (
         read_table(spark, wh, "fact_nascimentos")
-        .join(F.broadcast(mun.withColumnRenamed("chave_municipio", "chave_municipio_residencia")),
-              "chave_municipio_residencia")
+        .join(F.broadcast(mun), "chave_municipio_residencia")
         .join(F.broadcast(data), "chave_data")
         .groupBy("ano", "nome_municipio")
         .agg(F.sum("quantidade_nascimentos").alias("nascimentos"))
     )
+    obitos = read_table(spark, wh, "fact_obitos")
     deaths = (
-        read_table(spark, wh, "fact_obitos")
-        .join(F.broadcast(mun.withColumnRenamed("chave_municipio", "chave_municipio_residencia")),
-              "chave_municipio_residencia")
-        .join(F.broadcast(data.withColumnRenamed("chave_data", "chave_data_obito")),
-              "chave_data_obito")
+        obitos.join(F.broadcast(mun), "chave_municipio_residencia")
+        .join(F.broadcast(data), obitos["chave_data_obito"] == data["chave_data"])
         .groupBy("ano", "nome_municipio")
         .agg(F.sum("quantidade_obitos").alias("obitos"))
     )

@@ -382,9 +382,9 @@ def test_mutual_nn_bucketed_indexed_equals_inline(spark, tmp_path, monkeypatch):
 
 # ---------------------------------------------------------------------------
 # 8. index compaction (VERDICT r09 #1): refresh chains accumulate up to 4
-# files per touched src= partition; compaction folds them to 1 with
-# bit-identical served values, untouched manifests, and a still-working
-# refresh path afterwards.
+# files per touched src= partition; compaction walks the registry's
+# per-file tables and folds them to 1 with bit-identical served values,
+# untouched manifests, and a still-working refresh path afterwards.
 # ---------------------------------------------------------------------------
 def _n_parquet(root: str) -> int:
     return sum(
@@ -395,76 +395,98 @@ def _n_parquet(root: str) -> int:
     )
 
 
+def _served(out) -> list:
+    """Every served frame of a spec's build or refresh, as sorted rows."""
+    return [_rows(df) for df in (out if isinstance(out, tuple) else (out,))]
+
+
+# the registry's text tables (the gram partials, the scrub and the
+# postings) plus the SRP pair-generation index, whose width follows the
+# corpus size (the table the old hand-written list missed)
+_COMPACTED = ("gramfreq", "gramscrub", "inverted", "srp_lsh_dedup")
+
+
+def _append_parts(spark, sf, docs0, emb0, max_doc, max_vec, i) -> None:
+    """Part file ``i`` of both corpora: docs with doc_id % 5 == i under
+    fresh ids, and 4 vectors under fresh ids (504..512 vectors keep the
+    occupancy-8 SRP width at 6 bits)."""
+    extra = docs0.filter(F.col("doc_id") % 5 == i).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(i * max_doc).cast("bigint")
+    )
+    _move_single_part(extra, os.path.join(sf, "documents.parquet", f"part-{i:02d}.parquet"))
+    vecs = emb0.orderBy("vec_id").limit(4).withColumn(
+        "vec_id", F.col("vec_id") + F.lit(i * max_vec).cast("bigint")
+    )
+    _move_single_part(vecs, os.path.join(sf, "embeddings.parquet", f"part-{i:02d}.parquet"))
+
+
 def test_compaction_shrinks_files_preserves_values_and_refresh(
     spark, tmp_path, monkeypatch
 ):
-    import olap_sus_spark.operators.inverted as inv
-    from olap_sus_spark.operators import gramfreq as gf
+    from olap_sus_spark.maintenance import specs
     from olap_sus_spark.operators.compaction import compact_maintained_indexes
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path)
+    os.makedirs(os.path.join(sf, "embeddings.parquet"))
+    shutil.copy(
+        os.path.join(SF_DIR, "embeddings.parquet"),
+        os.path.join(sf, "embeddings.parquet", "part-00.parquet"),
+    )
     docs0 = spark.read.parquet(os.path.join(sf, "documents.parquet", "part-00.parquet"))
-    max_id = docs0.agg(F.max("doc_id")).first()[0] + 1
+    emb0 = spark.read.parquet(os.path.join(sf, "embeddings.parquet", "part-00.parquet"))
+    max_doc = docs0.agg(F.max("doc_id")).first()[0] + 1
+    max_vec = emb0.agg(F.max("vec_id")).first()[0] + 1
+    assert emb0.count() == 500
 
-    gf.load_or_build_gram_scrub(spark, sf, PLAIN)
-    inv.load_or_build_inverted_index(spark, sf)
+    chosen = [s for s in specs() if s.name in _COMPACTED]
+    assert {s.name for s in chosen} == set(_COMPACTED)
+    for s in chosen:
+        s.build(spark, sf)
     for i in (1, 2):  # two refresh rounds accumulate per-src files
-        extra = docs0.filter(F.col("doc_id") % 5 == i).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(i * max_id).cast("bigint")
-        )
-        _move_single_part(
-            extra, os.path.join(sf, "documents.parquet", f"part-{i:02d}.parquet")
-        )
-        gf.refresh_gram_scrub(spark, sf, PLAIN)
-        inv.refresh_inverted_index(spark, sf)
+        _append_parts(spark, sf, docs0, emb0, max_doc, max_vec, i)
+        for s in chosen:
+            s.refresh(spark, sf, [])
 
-    gpath = os.path.join(gf.gram_freq_path(sf, PLAIN), "grams")
-    spath = os.path.join(gf.scrub_path(sf, PLAIN), "docs")
-    ppath = os.path.join(inv.inverted_index_path(sf), "postings")
-    before = {p: _n_parquet(p) for p in (gpath, spath, ppath)}
-    served_before = {
-        "grams": _rows(gf.load_or_build_gram_freq(spark, sf, PLAIN)),
-        "scrub": _rows(gf.load_or_build_gram_scrub(spark, sf, PLAIN)),
-        "postings": _rows(inv.load_or_build_inverted_index(spark, sf)[0]),
+    paths = {s.name: s.path(sf) for s in chosen}
+    before = {n: _n_parquet(p) for n, p in paths.items()}
+    served_before = {s.name: _served(s.build(spark, sf)) for s in chosen}
+    man_before = {n: ix.read_manifest(p) for n, p in paths.items()}
+
+    done = compact_maintained_indexes(spark, sf)
+    for key in ("gramfreq/grams", "gramscrub/docs", "inverted/postings", "srp_lsh_dedup"):
+        assert key in done, (key, sorted(done))
+    assert set(done) <= {
+        f"{s.name}/{c}" if c else s.name
+        for s in specs() if s.table is not None
+        for c in s.table(sf).parts
     }
-    man_before = ix.read_manifest(gf.gram_freq_path(sf, PLAIN))
+    after = {n: _n_parquet(p) for n, p in paths.items()}
+    for n in before:
+        assert after[n] < before[n], (n, before[n], after[n])
+    # one file per src= partition now, in every compacted component
+    for s in specs():
+        if s.table is None or not os.path.isdir(s.path(sf)):
+            continue
+        t = s.table(sf)
+        for c in t.parts:
+            root = os.path.join(t.path, c) if c else t.path
+            for e in os.scandir(root):
+                if e.is_dir() and e.name.startswith("src="):
+                    files = [f for f in os.listdir(e.path) if f.endswith(".parquet")]
+                    assert len(files) == 1, (e.path, files)
 
-    done = compact_maintained_indexes(spark, sf, PLAIN)
-    assert "gramfreq/grams" in done and "inverted/postings" in done
-    after = {p: _n_parquet(p) for p in (gpath, spath, ppath)}
-    for p in before:
-        assert after[p] < before[p]
-    # one file per src= partition now
-    for p in (gpath, spath, ppath):
-        for e in os.scandir(p):
-            if e.is_dir() and e.name.startswith("src="):
-                files = [f for f in os.listdir(e.path) if f.endswith(".parquet")]
-                assert len(files) == 1, (e.path, files)
-
-    # served values bit-identical, manifest untouched
-    assert man_before == ix.read_manifest(gf.gram_freq_path(sf, PLAIN))
-    assert served_before["grams"] == _rows(
-        gf.load_or_build_gram_freq(spark, sf, PLAIN)
-    )
-    assert served_before["scrub"] == _rows(
-        gf.load_or_build_gram_scrub(spark, sf, PLAIN)
-    )
-    assert served_before["postings"] == _rows(
-        inv.load_or_build_inverted_index(spark, sf)[0]
-    )
+    # served values bit-identical, manifests untouched
+    assert man_before == {n: ix.read_manifest(p) for n, p in paths.items()}
+    assert served_before == {s.name: _served(s.build(spark, sf)) for s in chosen}
 
     # the refresh contract survives compaction: append -> refresh == rebuild
-    extra = docs0.filter(F.col("doc_id") % 5 == 3).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(3 * max_id).cast("bigint")
-    )
-    _move_single_part(
-        extra, os.path.join(sf, "documents.parquet", "part-03.parquet")
-    )
-    got = _rows(gf.refresh_gram_scrub(spark, sf, PLAIN))
+    _append_parts(spark, sf, docs0, emb0, max_doc, max_vec, 3)
+    got = {s.name: _served(s.refresh(spark, sf, [])) for s in chosen}
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
-    fresh = _rows(gf.load_or_build_gram_scrub(spark, sf, PLAIN))
-    assert got == fresh and len(got) > 0
+    fresh = {s.name: _served(s.build(spark, sf)) for s in chosen}
+    assert got == fresh
+    assert all(rows for name in got for rows in got[name])
 
 
 def test_compaction_skips_missing_indexes(spark, tmp_path, monkeypatch):

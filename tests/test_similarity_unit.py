@@ -91,40 +91,75 @@ def test_semantic_cells_autosize_k():
         assert k == want
 
 
-@pytest.mark.slow  # heavy probe: opt-in via -m slow (r11)
-def test_assign_centroids_chunked_equals_crossjoin(spark):
-    """k > 64 takes the chunked matrix fold; it must reproduce the
-    crossJoin + window formulation bit-for-bit (max cosine, smallest-id
-    tie-break) — the shuffle-free replacement for the n×k row blow-up the
-    x100 semantic probe caught."""
+def _with_vector(spark, emb, vec):
+    """``emb`` plus one row holding ``vec`` under an id past the largest, so
+    it never seeds a smallest-id codebook; returns (frame, that id)."""
+    from pyspark.sql import functions as F
+
+    new_id = emb.agg(F.max("vec_id")).first()[0] + 1
+    return emb.unionByName(spark.createDataFrame([(new_id, vec, 0)], emb.schema)), new_id
+
+
+@pytest.mark.parametrize("k", [1, 16, 64, 65, 100])
+def test_assign_centroids_chunked_equals_crossjoin(spark, k):
+    """Every codebook size across the 64-centroid chunk boundary (one
+    chunk, exactly one full chunk, one centroid past it, two chunks) must
+    reproduce the crossJoin + window formulation bit-for-bit (max cosine,
+    smallest-id tie-break) — the shuffle-free replacement for the n×k row
+    blow-up the x100 semantic probe caught.  A NULL embedding gets a NULL
+    centroid_id; a zero-norm one divides by zero under ANSI in the fold
+    exactly as in the reference."""
+    from pyspark.errors import ArithmeticException
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from olap_sus_spark.catalog import load_table
     from olap_sus_spark.operators import similarity as sim
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    centroids = emb.orderBy("vec_id").limit(100)  # k=100 > _MATRIX_MAX_K
+    base = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb, null_id = _with_vector(spark, base, None)
+    centroids = base.orderBy("vec_id").limit(k)
 
-    got = sorted(
-        (r.vec_id, r.centroid_id)
-        for r in sim.assign_centroids(emb, centroids).collect()
-    )
+    got = {r.vec_id: r.centroid_id for r in sim.assign_centroids(emb, centroids).collect()}
+    assert got.pop(null_id) is None
 
-    cents = centroids.select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").cast("array<double>").alias("centv"),
-    )
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "centroid_id", sim.cosine(F.col("v"), F.col("centv")).alias("s")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("s").desc(), F.col("centroid_id"))
-    want = sorted(
-        (r.vec_id, r.centroid_id)
-        for r in scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .collect()
-    )
+    def crossjoin(vectors):
+        cents = centroids.select(
+            F.col("vec_id").alias("centroid_id"),
+            F.col("embedding").cast("array<double>").alias("centv"),
+        )
+        vecs = vectors.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        scored = vecs.crossJoin(F.broadcast(cents)).select(
+            "vec_id", "centroid_id", sim.cosine(F.col("v"), F.col("centv")).alias("s")
+        )
+        w = Window.partitionBy("vec_id").orderBy(F.col("s").desc(), F.col("centroid_id"))
+        return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
+
+    want = {r.vec_id: r.centroid_id for r in crossjoin(base).collect()}
     assert got == want
     assert len(got) == 500
+
+    zero, _ = _with_vector(spark, base, [0.0] * len(base.first().embedding))
+    for build in (lambda: sim.assign_centroids(zero, centroids), lambda: crossjoin(zero)):
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            build().collect()
+
+
+def test_assign_centroids_empty_codebook_and_one_collect(spark):
+    """An empty codebook assigns NULL; building the assignment for a
+    two-chunk codebook (k = 100) runs exactly one Spark job — the codebook
+    collect."""
+    from olap_sus_spark.catalog import load_table
+    from olap_sus_spark.operators import similarity as sim
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    empty = sim.assign_centroids(emb, emb.limit(0))
+    assert {r.centroid_id for r in empty.collect()} == {None}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("assign_k100", "assign_k100")
+    try:
+        sim.assign_centroids(emb, emb.orderBy("vec_id").limit(100))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("assign_k100")) == 1

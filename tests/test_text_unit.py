@@ -132,19 +132,6 @@ def test_dedup_clusters_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 8, 9: 8, 10: 8, 11: 11}
 
 
-def test_kmeans_improves_clustering(spark):
-    from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.operators import similarity as sim
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    init = sim.kmeans_centroids(emb, k=8, iters=0)   # = smallest-id init
-    trained = sim.kmeans_centroids(emb, k=8, iters=3)
-    q0 = sim.kmeans_inertia(emb, init)
-    q3 = sim.kmeans_inertia(emb, trained)
-    assert q3 >= q0 - 1e-9, (q0, q3)  # training never hurts mean best-cosine
-    assert trained.count() <= 8
-
 def test_lsh_recall_vs_brute_force(spark):
     """SRP-LSH (12 tables x 4 bits) must keep reasonable recall@5 vs the
     exact brute-force ranking (quality gate for the bucketed path)."""

@@ -93,6 +93,40 @@ def test_drill_across_growth_health_regions(spark, wh):
     }
 
 
+def _broadcasts_over(df, table: str) -> int:
+    """BroadcastExchange nodes over a scan of ``table`` in ``df``'s
+    executed (final adaptive) plan; a ReusedExchange does not count."""
+
+    def kids(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        if name.endswith("QueryStage"):
+            return [node.plan()]
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def scans(node) -> bool:
+        if node.nodeName().startswith("Scan"):
+            return f"/{table}]" in node.toString()
+        return any(scans(k) for k in kids(node))
+
+    def walk(node) -> int:
+        own = node.nodeName() == "BroadcastExchange" and scans(node)
+        return own + sum(walk(k) for k in kids(node))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_drill_across_growth_broadcasts_dim_data_once(spark, wh):
+    """Births and deaths join the same dim_data frame, so the executed plan
+    builds its broadcast once and the deaths branch reuses it."""
+    df = W.drill_across_growth(spark, wh)
+    df.collect()
+    assert _broadcasts_over(df, "dim_data") == 1
+    assert _broadcasts_over(df, "dim_municipio") == 1
+
+
 def test_topk_causes_per_family(spark, wh):
     rows = W.topk_causes_per_family(spark, wh, k=10).collect()
     got = {

@@ -17,7 +17,7 @@ spec with its source's day, recording
 - staging/tomb debris in the index root   -> must be zero.
 
 Every 10th ingest runs operators/compaction.compact_maintained_indexes
-over the registry's parameters (the compaction cadence).  After ingest #N
+over every per-file table of the registry (the compaction cadence).  After ingest #N
 the served state of every spec is digested against a FRESH REBUILD in a
 clean index root; an epoch-pinned spec (``Spec.rebuild_exact=False``, the
 semantic index) against a from-scratch dedup under its maintained
@@ -195,8 +195,6 @@ def timed(fn) -> tuple[object, float]:
 
 def main(args: list[str]) -> None:
     from olap_sus_spark.operators.compaction import compact_maintained_indexes
-    from olap_sus_spark.operators.corpus_view import AUG
-    from olap_sus_spark.queries.vector import _DIM, _LSH_H, _LSH_T, _NC
 
     n = int(args[0]) if args else 30
     r = int(args[1]) if len(args) > 1 else 10
@@ -236,10 +234,7 @@ def main(args: list[str]) -> None:
                 timings[s.name].append(dt)
                 row[s.name] = {"sec": dt}
             if i % COMPACT_EVERY == 0:
-                done, dt = timed(lambda: compact_maintained_indexes(
-                    spark, base, view=AUG, dim=_DIM, n_tables=_LSH_T,
-                    n_bits=_LSH_H, num_centroids=_NC,
-                ))
+                done, dt = timed(lambda: compact_maintained_indexes(spark, base))
                 row["compact"] = {"sec": dt, "partitions": sum(len(v) for v in done.values())}
                 print(f"  compact @{i}: {row['compact']}", flush=True)
             # dir stats AFTER any compaction: the operator's steady state

@@ -125,6 +125,12 @@ HEADLINE = [
     "streaming_sessionize",
     "streaming_sessionize_bucketed",  # adopted bucketed-dispatch scale shape
     "streaming_funnel_bucketed",
+    # graph / co-purchase / interval timelines
+    "pagerank_parts",
+    "triangle_counts_parts",
+    "top_copurchases_per_part",
+    "open_orders_timeline",
+    "open_orders_time_weighted_avg",
 ]
 
 

@@ -25,6 +25,17 @@ def spark():
     yield s
 
 
+def count_jobs(spark, group: str, build) -> int:
+    """Spark jobs ``build()`` runs, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):

@@ -310,3 +310,29 @@ def test_cluster_map_views_never_share_an_index(spark, tmp_path, monkeypatch):
     plain = dd.load_or_build_cluster_index(spark, SF_DIR, PLAIN, threshold=0.5)
     assert plain.count() < want
     assert spec.build(spark, SF_DIR).count() == want
+
+
+def test_month_table_is_served_without_a_listing_job(spark, tmp_path, monkeypatch):
+    """A month table holds one ``mes_dt=`` directory per month (83 for
+    lineitem here), more than Spark's default parallel-discovery threshold
+    of 32 entries. The session lists on the driver, so serving it runs one
+    job (the footer read) and a declared-schema read runs none; the rows
+    are the same as a fresh read's."""
+    from olap_sus_spark.queries.incremental import DAILY_REVENUE
+    from tests.conftest import SF_DIR, count_jobs
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
+    DAILY_REVENUE.load_or_build(spark, SF_DIR)
+    path = DAILY_REVENUE.path(SF_DIR)
+    assert sum(e.startswith("mes_dt=") for e in os.listdir(path)) > 32
+
+    served = []
+    build = lambda: served.append(DAILY_REVENUE.load_or_build(spark, SF_DIR))  # noqa: E731
+    assert count_jobs(spark, "test_month_serve", build) == 1
+    schema = served[0].schema
+    declared = lambda: spark.read.schema(schema).parquet(path)  # noqa: E731
+    assert count_jobs(spark, "test_month_declared_read", declared) == 0
+
+    fresh = DAILY_REVENUE.partials(spark, SF_DIR).select(*served[0].columns)
+    assert sorted(served[0].collect()) == sorted(fresh.collect())
+    assert sorted(declared().collect()) == sorted(fresh.collect())

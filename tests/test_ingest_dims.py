@@ -20,6 +20,7 @@ from olap_sus_spark.operators.transforms import transform_sim
 from olap_sus_spark.queries import warehouse as W
 from olap_sus_spark.sources import formats, sinks
 from olap_sus_spark.sources.raw_csv import read_dataset
+from tests.conftest import count_jobs
 from tests.test_etl_e2e import DT, LANDING, SEEDS
 
 
@@ -43,24 +44,13 @@ def full_wh(spark, tmp_path_factory):
     return d
 
 
-def _jobs(spark, group: str, build) -> int:
-    """Spark jobs ``build()`` runs, counted under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _types(df) -> list[tuple[str, object]]:
     # Parquet reads every column back nullable: compare names and types.
     return [(f.name, f.dataType) for f in df.schema]
 
 
 def test_load_dims_runs_no_spark_job(spark, wh):
-    assert _jobs(spark, "test_load_dims", lambda: etl.load_dims(spark, wh)) == 0
+    assert count_jobs(spark, "test_load_dims", lambda: etl.load_dims(spark, wh)) == 0
 
 
 def test_declared_dim_schemas_equal_bootstrapped(spark, full_wh):
@@ -87,7 +77,7 @@ def test_dashboard_queries_build_without_spark_jobs(spark, full_wh):
         "stay_cost": lambda: W.stay_cost_by_municipality(spark, full_wh),
         **{agg: (lambda a=agg: etl.read_aggregate(spark, full_wh, a)) for agg in etl.AGGREGATES},
     }
-    got = {name: _jobs(spark, f"test_construct_{name}", b) for name, b in builds.items()}
+    got = {name: count_jobs(spark, f"test_construct_{name}", b) for name, b in builds.items()}
     assert got == {name: int(name == "pivot") for name in builds}
 
 

@@ -165,7 +165,6 @@ def main() -> None:
     from olap_sus_spark.operators import dedup as _dd
     from olap_sus_spark.queries import incremental as _inc
     from olap_sus_spark.queries import sketches as _qs
-    from olap_sus_spark.sources import zorder as _zo
     from olap_sus_spark.operators.corpus_view import PLAIN
 
     # registry name -> BENCH_DETAIL.json index_build keys of its (full
@@ -198,6 +197,7 @@ def main() -> None:
         "order_hist": ("hist_partials", "hist_refresh_1d", None),
         "zorder_lineitem": ("zorder_monthly_full", "zorder_refresh_1d", None),
         "user_kmv": ("user_kmv_partials", "user_kmv_refresh_1d", None),
+        "zorder_events": ("zorder_events_full", "zorder_events_refresh_1d", None),
     }
     timed = [s for s in maintenance.specs() if s.name in keys]
     index_build: dict[str, float] = {}
@@ -213,15 +213,6 @@ def main() -> None:
 
     for spec in timed:
         _rebuild(keys[spec.name][0], spec.path(sf_dir), lambda: spec.build(spark, sf_dir))
-    # Morton-clustered lineitem copy (written once at compaction in
-    # production; amortized here) — rebuilt on change, never refreshed.
-    _rebuild(
-        "zorder_layout",
-        _zo.zorder_layout_path(sf_dir, "lineitem", "l_partkey", "l_suppkey"),
-        lambda: _zo.load_or_build_zorder(
-            spark, sf_dir, "lineitem", "l_partkey", "l_suppkey"
-        ),
-    )
 
     # Incremental maintenance of the per-file tables: the cost a daily
     # ingest actually pays — refresh re-indexes only the appended part file

@@ -154,10 +154,8 @@ def zorder_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (build amortized off the serving path, stamp-marker staleness).  Both
     range predicates push down to the parquet scan, where the Morton
     clustering makes the footer min/max selective in both dimensions.
-    Round 7: serves from the MONTH-partitioned maintained layout — a dated
-    ingest re-layouts only the touched months (refresh_zorder_monthly,
-    O(month)) instead of rebuilding the whole copy; per-month composition
-    answers identically (commit d60a0d3's proof, now the default)."""
+    The layout is month-partitioned: a dated ingest re-layouts only the
+    touched months (refresh_zorder_monthly, O(month))."""
     from olap_sus_spark.sources.zorder import load_or_build_zorder_monthly
 
     zl = load_or_build_zorder_monthly(

@@ -14,6 +14,12 @@ Here:
 - **bridge rows** carry content-hash group ids (operators/bridge.py), so a
   re-run emits byte-identical rows; the sink anti-joins against the existing
   store and appends only genuinely new groups.
+
+The rest are table-maintenance writes: a keyed MERGE (:func:`merge_upsert`),
+exactly-once micro-batch appends for streaming sinks, and range-sorted
+layouts (:func:`write_sorted`, :func:`write_sorted_partitioned`).  Small-file
+compaction is index_store.compact_src_partitions, and the Morton (z-order)
+layout is sources/zorder.py.
 """
 
 from __future__ import annotations
@@ -178,103 +184,19 @@ def run_tag_of(checkpoint_dir: str) -> str:
     return hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
 
-def compact_partition(spark: SparkSession, path: str, target_files: int = 1) -> int:
-    """Small-file compaction: rewrite a table/partition directory into
-    ``target_files`` parquet files (streaming ingest and per-day appends
-    accumulate small files that wreck scan parallelism accounting and
-    NameNode/listing costs at scale).  Returns the new file count.
-    Coalesce (not repartition): a pure read+write with no shuffle.
-    """
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".__compact__"
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    _swap_in(path, staging)
-    return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-
-
 def write_sorted(
     df: DataFrame, path: str, sort_cols: list[str], files: int = 4
 ) -> str:
     """Layout-optimized write: range-partition + sort by ``sort_cols`` so
     each parquet file (and row group) covers a tight, near-disjoint value
     range.  Parquet min/max footer stats then let any filter on the sort
-    key skip whole files/row groups — the poor man's clustering/Z-order,
-    and the single highest-leverage layout choice for selective scans at
-    100 TB.  (For multi-column skipping, lead with the most-filtered
-    column; true Z-order interleaving needs a lakehouse format.)
+    key skip whole files/row groups — the single highest-leverage layout
+    choice for selective scans at 100 TB.  Only the lead column gets tight
+    stats; a 2-D box filter needs the Morton layout of sources/zorder.py.
     """
     (
         df.repartitionByRange(files, *sort_cols)
         .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    return path
-
-
-def zorder_key(df: DataFrame, cols: list[str], bits: int = 12):
-    """Morton (Z-order) interleave key over ``cols`` as a pure Catalyst
-    expression — multi-dimensional clustering without a lakehouse format.
-
-    Each column is min/max-scaled to ``bits`` buckets (bounds come from one
-    scalar aggregate, collected like a codebook — bounded driver work), and
-    the bucket bits are interleaved so nearby Z values are nearby in EVERY
-    dimension.  ``k * bits`` must fit a BIGINT (k <= 5 at the default 12).
-    NULLs scale to bucket 0.  Min/max scaling keeps the expression
-    shuffle-free; under heavy skew substitute rank-based buckets (a
-    repartitionByRange pass) — same interleave, different scale.
-    """
-    from pyspark.sql import functions as F
-
-    if len(cols) * bits > 63:
-        raise ValueError(f"zorder_key: {len(cols)} cols x {bits} bits > 63")
-    bounds = df.agg(
-        *[F.min(c).cast("double").alias(f"lo_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"hi_{c}") for c in cols],
-    ).first()
-    k = len(cols)
-    scaled = []
-    for c in cols:
-        lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
-        if lo is None:  # all-NULL column: every row lands in bucket 0
-            lo, hi = 0.0, 0.0
-        span = (hi - lo) or 1.0
-        scaled.append(
-            F.least(
-                F.lit((1 << bits) - 1),
-                F.floor(
-                    (F.coalesce(F.col(c).cast("double"), F.lit(lo)) - F.lit(lo))
-                    / F.lit(span)
-                    * F.lit(1 << bits)
-                ).cast("bigint"),
-            )
-        )
-    z = F.lit(0).cast("bigint")
-    for i in range(bits):
-        for j, s in enumerate(scaled):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(s, i).bitwiseAND(F.lit(1)), i * k + j)
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame, path: str, cols: list[str], files: int = 4, bits: int = 12
-) -> str:
-    """:func:`write_sorted` generalized to multi-dimensional skipping:
-    range-partition + sort by the Morton key of ``cols`` so parquet footer
-    min/max stats prune selective filters on ANY of the clustered columns
-    — a lead-column sort prunes only its first column.  The key is layout
-    machinery only (not written to the table).  At 100 TB this is the
-    OPTIMIZE ZORDER equivalent for the hot multi-predicate tables."""
-    from pyspark.sql import functions as F
-
-    z = zorder_key(df, cols, bits)
-    (
-        df.withColumn("__z__", z)
-        .repartitionByRange(files, F.col("__z__"))
-        .sortWithinPartitions("__z__")
-        .drop("__z__")
         .write.mode("overwrite")
         .parquet(path)
     )

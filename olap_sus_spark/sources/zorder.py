@@ -4,20 +4,23 @@ pruning for the lake.
 A parquet scan skips a row group when the pushed predicate can't match its
 footer min/max.  Sorting on ONE column makes that work for one dimension
 only; a range-sort on the interleaved-bit Morton value of TWO columns
-clusters BOTH, so a 2-D box predicate (part × supplier, user × day, …)
+clusters BOTH, so a 2-D box predicate (part × supplier, user × id, …)
 touches only the row groups whose rectangles intersect the box — the same
-technique behind Delta/Iceberg ``OPTIMIZE ZORDER BY``.  At 100 TB the
-layout is written once per partition at ingest/compaction; every
-subsequent selective scan pays for it.
+technique behind Delta/Iceberg ``OPTIMIZE ZORDER BY``.
+
+This module is the engine's one Morton path: one key expression
+(:func:`_z_key`, :func:`z_value` over :func:`scale_to_bits`), one domain
+aggregate (:func:`_domain`), and one maintained layout, month-partitioned
+(``mes_dt=``) under the maintained-partials contract — full staged build
+on first use or a stale corpus stamp, O(month) dated refresh, and a
+re-layout trigger when refreshed keys drift out of the stored domain.
+The registry declares it twice (``zorder_lineitem``, ``zorder_events``
+in maintenance.specs).
 
 Everything is Catalyst-only: the z-value is a fixed chain of shift/mask/or
-expressions (whole-stage codegen, no UDF), the layout write is
-``repartitionByRange`` on z (globally ordered files) + ``sortWithinPartitions``
-(ordered row groups inside each file).
-
-The maintained z-layout copy follows the index-store lifecycle
-(location-keyed path + corpus-stamp marker, staged build + publish) so
-serving never rebuilds and a changed corpus never serves stale bytes.
+expressions (whole-stage codegen, no UDF); the layout write is a range
+exchange on (month, z) plus an in-partition sort (ordered files and
+ordered row groups inside each month).
 """
 
 from __future__ import annotations
@@ -26,6 +29,8 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from olap_sus_spark.catalog import load_table
 
 
 def z_value(x: Column, y: Column, bits: int = 16) -> Column:
@@ -66,14 +71,22 @@ def scale_to_bits(col: Column, mn: int, mx: int, bits: int) -> Column:
     return F.shiftleft(base, bits - sb)
 
 
-def zorder_frame(
-    df: DataFrame, colx: str, coly: str, bits: int = 16, files: int | None = None
-) -> DataFrame:
-    """Return ``df`` ordered for a z-layout write: one exact min/max pass
-    over the two cluster columns, then range-partition + in-partition sort
-    on the Morton value.  The helper column is dropped — the layout IS the
-    output.  ``files`` pins the range-partition count (default: the
-    session's shuffle parallelism)."""
+def _z_key(colx: str, coly: str, bounds: list[int], bits: int = 16) -> Column:
+    """The Morton key of (colx, coly) over the domain ``bounds``
+    (``[xmin, xmax, ymin, ymax]``, from :func:`_domain`)."""
+    return z_value(
+        scale_to_bits(F.col(colx), bounds[0], bounds[1], bits),
+        scale_to_bits(F.col(coly), bounds[2], bounds[3], bits),
+        bits,
+    )
+
+
+def _domain(df: DataFrame, colx: str, coly: str) -> list[int]:
+    """Exact ``[xmin, xmax, ymin, ymax]`` of the two cluster keys, one
+    aggregate.  An empty table gets the degenerate ``[0, 0, 0, 0]``: it
+    keeps scale_to_bits well-defined (every later key clamps to 0 until a
+    real full build re-derives the domain) instead of int(None) blowing
+    up."""
     stats = df.agg(
         F.min(colx).cast("long"),
         F.max(colx).cast("long"),
@@ -81,80 +94,27 @@ def zorder_frame(
         F.max(coly).cast("long"),
     ).first()
     if stats[0] is None:
-        return df
-    z = z_value(
-        scale_to_bits(F.col(colx), stats[0], stats[1], bits),
-        scale_to_bits(F.col(coly), stats[2], stats[3], bits),
-        bits,
-    )
-    out = df.withColumn("_z", z)
-    out = (
-        out.repartitionByRange(files, "_z")
-        if files
-        else out.repartitionByRange("_z")
-    )
-    return out.sortWithinPartitions("_z").drop("_z")
+        return [0, 0, 0, 0]
+    return [int(v) for v in stats]
 
 
-def zorder_layout_path(sf_dir: str, table: str, colx: str, coly: str) -> str:
-    from olap_sus_spark.operators.index_store import index_path
-
-    return index_path(
-        "zorder", f"v1|{os.path.abspath(sf_dir)}|{table}|{colx}|{coly}"
-    )
-
-
-def load_or_build_zorder(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    colx: str,
-    coly: str,
-    bits: int = 16,
-) -> DataFrame:
-    """Serve the z-ordered copy of ``table`` clustered on (colx, coly),
-    building + publishing it on first use or a stale stamp
-    (operators/maintained.load_or_build_stamped)."""
-    from olap_sus_spark.catalog import load_table
-    from olap_sus_spark.operators.index_store import corpus_stamp
-    from olap_sus_spark.operators.maintained import load_or_build_stamped
-
-    def write(staging: str) -> None:
-        zorder_frame(load_table(spark, sf_dir, table), colx, coly, bits).write.mode(
-            "overwrite"
-        ).parquet(staging)
-
-    return load_or_build_stamped(
-        spark,
-        zorder_layout_path(sf_dir, table, colx, coly),
-        corpus_stamp(sf_dir, table),
-        write,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Monthly-maintained z-layout — the fact-lake default (round 7).
-#
-# The global layout above rebuilds the WHOLE copy when the corpus changes;
-# commit d60a0d3 proved month-scoped Morton layouts compose, prune, and
-# answer identically, so the maintained fact layout is now month-
-# partitioned under the shared maintained-partials contract: a dated
-# ingest refreshes ONLY the touched months (O(month), staged + atomically
-# swapped), exactly how production lakehouses run OPTIMIZE ZORDER BY per
-# partition.  Two deliberate deviations from the tiny-partials default:
+# The maintained layout is month-partitioned under the shared
+# maintained-partials contract: a dated ingest refreshes ONLY the touched
+# months (O(month), staged + atomically swapped), the way production
+# lakehouses run OPTIMIZE ZORDER BY per partition.  Two deliberate
+# deviations from the tiny-partials default:
 #
 # - the pre-write shaping is a range exchange on (mes_dt, _z), NOT
 #   _one_file_per_month: a fact month is data-sized, so each month must be
 #   written by many tasks as contiguous z-runs (the partitioned write then
 #   emits per-month files that are disjoint z-ranges with ordered row
-#   groups inside — the same footer-stats geometry as the global layout);
+#   groups inside);
 # - the Morton domain (per-column min/max) is computed ONCE at the first
 #   full build and persisted in the layout dir (`_zdomain.json`), then
 #   REUSED on refresh — re-deriving it would scan history and silently
 #   turn refresh O(corpus).  Key domains are stable dimensions; a key
 #   outside the stored domain clamps (scale_to_bits), degrading pruning
 #   for its own rows only.  Dropping the layout dir re-derives everything.
-# ---------------------------------------------------------------------------
 _DOMAIN_FILE = "_zdomain.json"  # leading "_": invisible to Spark's FileIndex
 
 
@@ -212,49 +172,17 @@ def _monthly_build_fn(
     bits: int,
     bounds: list[int],
 ):
-    from olap_sus_spark.catalog import load_table
     from olap_sus_spark.operators.maintained import month_range_cond
 
     def build(months: list[str] | None) -> DataFrame:
         df = load_table(spark, sf_dir, table)
         if months is not None:
             df = df.filter(month_range_cond(date_col, months))
-        z = z_value(
-            scale_to_bits(F.col(colx), bounds[0], bounds[1], bits),
-            scale_to_bits(F.col(coly), bounds[2], bounds[3], bits),
-            bits,
-        )
         return df.withColumn(
             "mes_dt", F.date_format(date_col, "yyyy-MM")
-        ).withColumn("_z", z)
+        ).withColumn("_z", _z_key(colx, coly, bounds, bits))
 
     return build
-
-
-def _monthly_domain(
-    spark: SparkSession, sf_dir: str, table: str, colx: str, coly: str, path: str
-) -> list[int]:
-    bounds = _read_domain(path)
-    if bounds is not None:
-        return bounds
-    from olap_sus_spark.catalog import load_table
-
-    stats = (
-        load_table(spark, sf_dir, table)
-        .agg(
-            F.min(colx).cast("long"),
-            F.max(colx).cast("long"),
-            F.min(coly).cast("long"),
-            F.max(coly).cast("long"),
-        )
-        .first()
-    )
-    if stats[0] is None:
-        # Empty table: a degenerate [0,0,0,0] domain keeps scale_to_bits
-        # well-defined (every later key clamps to 0 until a real full
-        # build re-derives the domain) instead of int(None) blowing up.
-        return [0, 0, 0, 0]
-    return [int(v) for v in stats]
 
 
 def load_or_build_zorder_monthly(
@@ -274,7 +202,9 @@ def load_or_build_zorder_monthly(
 
     path = zorder_monthly_path(sf_dir, table, colx, coly, date_col)
     stamp = corpus_stamp(sf_dir, table)
-    bounds = _monthly_domain(spark, sf_dir, table, colx, coly, path)
+    bounds = _read_domain(path) or _domain(
+        load_table(spark, sf_dir, table), colx, coly
+    )
     out = load_or_build_partials(
         spark,
         path,
@@ -312,7 +242,6 @@ def _escape_fraction(
     """Fraction of rows in the months containing ``days`` whose cluster
     keys fall outside ``bounds`` — one O(touched-month) aggregate over the
     slice the refresh is about to re-layout anyway."""
-    from olap_sus_spark.catalog import load_table
     from olap_sus_spark.operators.maintained import month_range_cond
 
     months = sorted({d[:7] for d in days})
@@ -378,9 +307,7 @@ def refresh_zorder_monthly(
                 spark, sf_dir, table, colx, coly, date_col, bits
             )
             return
-    bounds = stored if stored is not None else _monthly_domain(
-        spark, sf_dir, table, colx, coly, path
-    )
+    bounds = stored or _domain(load_table(spark, sf_dir, table), colx, coly)
     refresh_partials(
         spark,
         path,

@@ -1,11 +1,11 @@
 """The shared maintained-partials contract (operators/maintained.py),
-proven against a CHANGING corpus for all three summary families: append
+proven against a CHANGING corpus for every month-partitioned family: append
 new facts to a copied corpus, refresh ONLY the changed day, and the served
 answer must equal a from-scratch rebuild over the new facts — plus the
 stale-marker safety net (mutate without refresh → serve detects and
 rebuilds, never serves stale partials).  The same recipe as
 test_incremental_agg's revenue proof, applied to the KMV cube, the CMS
-grid, and the histogram."""
+grid, the histogram and the monthly z-layout."""
 
 from __future__ import annotations
 
@@ -19,6 +19,7 @@ from olap_sus_spark.catalog import load_table
 from olap_sus_spark.queries import cms as qcms
 from olap_sus_spark.queries import hist as qhist
 from olap_sus_spark.queries import sketches as qsk
+from olap_sus_spark.sources import zorder as zo
 from tests.conftest import SF_DIR
 
 pytestmark = pytest.mark.slow  # hour-scale chain/probe suite: opt-in via -m slow (driver verify window, r11)
@@ -59,6 +60,8 @@ def _shift_orderkeys(df, datecol, day):
     )
 
 
+_ZKEYS = ("lineitem", "l_partkey", "l_suppkey", "l_shipdate")
+
 FAMILIES = [
     pytest.param(
         "lineitem",
@@ -83,6 +86,14 @@ FAMILIES = [
         lambda s, sf, d: qhist.refresh_order_hist(s, sf, [d]),
         _dup_day,
         id="histogram",
+    ),
+    pytest.param(
+        "lineitem",
+        "l_shipdate",
+        lambda s, sf: zo.load_or_build_zorder_monthly(s, sf, *_ZKEYS),
+        lambda s, sf, d: zo.refresh_zorder_monthly(s, sf, *_ZKEYS, [d]),
+        _dup_day,
+        id="zorder_layout",
     ),
 ]
 

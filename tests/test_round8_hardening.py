@@ -1,7 +1,6 @@
 """Round-8 hardening (ADVICE r07): degraded refresh skips the marker
 write (stale stamp forces rebuild instead of serving pre-refresh data as
-current), first-commit-wins in the no-hardlink append fallback, and the
-empty-table Morton domain."""
+current), first-commit-wins in the no-hardlink append fallback."""
 
 from __future__ import annotations
 
@@ -111,20 +110,3 @@ def test_append_fallback_commits_when_unraced(spark, tmp_path, monkeypatch):
     # replay skips (file present), still no duplicates
     sinks.append_exactly_once(batch, table, 9, "runZ")
     assert _rows(spark.read.parquet(table)) == [(1, "a"), (2, "b")]
-
-
-# ---------------------------------------------------------------------------
-# zorder._monthly_domain: an empty table yields the degenerate [0,0,0,0]
-# domain (scale_to_bits clamps everything to 0) instead of int(None).
-# ---------------------------------------------------------------------------
-def test_monthly_domain_of_empty_table(spark, tmp_path):
-    from olap_sus_spark.sources import zorder as zo
-
-    sf_dir = str(tmp_path)
-    spark.createDataFrame([], "l_partkey long, l_suppkey long, l_shipdate date").write.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    )
-    bounds = zo._monthly_domain(
-        spark, sf_dir, "lineitem", "l_partkey", "l_suppkey", str(tmp_path / "idx")
-    )
-    assert bounds == [0, 0, 0, 0]

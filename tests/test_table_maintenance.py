@@ -1,5 +1,8 @@
-"""Table-maintenance operators (sources/sinks.py): keyed MERGE/upsert,
-small-file compaction, and sorted (layout-optimized) writes."""
+"""Table-maintenance operators (sources/sinks.py): keyed MERGE/upsert and
+range-sorted (layout-optimized) writes.  Small-file compaction
+(index_store.compact_src_partitions) is tested through
+compaction.compact_maintained_indexes in tests/test_round10_hardening.py,
+the Morton layout in tests/test_zorder.py."""
 
 from __future__ import annotations
 
@@ -8,11 +11,7 @@ import os
 from pyspark.sql import functions as F
 
 from olap_sus_spark.catalog import load_table
-from olap_sus_spark.sources.sinks import (
-    compact_partition,
-    merge_upsert,
-    write_sorted,
-)
+from olap_sus_spark.sources.sinks import merge_upsert, write_sorted
 from tests.conftest import SF_DIR
 
 
@@ -67,17 +66,6 @@ def test_merge_upsert_is_idempotent(spark, tmp_path):
     assert once == twice
 
 
-def test_compact_partition(spark, tmp_path):
-    path = str(tmp_path / "many")
-    ev = load_table(spark, SF_DIR, "events")
-    ev.repartition(8).write.parquet(path)
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert sum(1 for f in os.listdir(path) if f.endswith(".parquet")) == 8
-    n = compact_partition(spark, path, target_files=2)
-    assert n == 2
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
-
-
 def test_write_sorted_produces_tight_disjoint_stats(spark, tmp_path):
     import pyarrow.parquet as pq
 
@@ -101,73 +89,3 @@ def test_write_sorted_produces_tight_disjoint_stats(spark, tmp_path):
         assert hi1 <= lo2, f"overlapping file ranges: {(lo1, hi1)} vs {(lo2, hi2)}"
     # and data survives byte-identical
     assert spark.read.parquet(path).count() == li.count()
-
-
-def _file_spans(path, col):
-    """Per-parquet-file (min, max) footer stats for ``col``."""
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in sorted(os.listdir(path)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        idx = md.schema.to_arrow_schema().get_field_index(col)
-        lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-        spans.append((lo, hi))
-    return spans
-
-
-def test_write_zordered_tightens_stats_on_every_dimension(spark, tmp_path):
-    """Z-order clustering: per-file min/max spans shrink for BOTH clustered
-    columns, where a lead-column sort leaves the second column's spans at
-    (nearly) the full value range — i.e. only Z-order lets footer stats
-    prune selective filters on either column."""
-    from olap_sus_spark.sources.sinks import write_zordered
-
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-    )
-
-    def global_span(col):
-        lo, hi = li.agg(F.min(col), F.max(col)).first()
-        return lo, hi, float(hi - lo)
-
-    z_path = str(tmp_path / "zord")
-    write_zordered(li, z_path, ["l_partkey", "l_suppkey"], files=4)
-    s_path = str(tmp_path / "lead")
-    write_sorted(li, s_path, ["l_partkey", "l_suppkey"], files=4)
-
-    def files_hit(path, col, q_lo, q_hi):
-        """How many files footer stats CANNOT skip for col BETWEEN q_lo/q_hi."""
-        return sum(1 for lo, hi in _file_spans(path, col) if hi >= q_lo and lo <= q_hi)
-
-    # a 5%-of-range band predicate must be prunable on BOTH dimensions
-    # (range-partition split points aren't exact quadrant boundaries, so one
-    # straddling file is tolerated — hence <= 3 of 4, not <= 2)
-    for col in ("l_partkey", "l_suppkey"):
-        lo, _, g = global_span(col)
-        q_lo, q_hi = lo + 0.10 * g, lo + 0.15 * g
-        hit = files_hit(z_path, col, q_lo, q_hi)
-        assert hit <= 3, f"{col}: z-order layout cannot skip any file"
-
-    # the lead-sorted layout cannot prune the SECOND column at all: every
-    # file spans (essentially) the whole l_suppkey range
-    lo, _, g = global_span("l_suppkey")
-    assert files_hit(s_path, "l_suppkey", lo + 0.10 * g, lo + 0.15 * g) == 4
-
-    # layout machinery only: data round-trips, no extra column
-    out = spark.read.parquet(z_path)
-    assert out.columns == li.columns
-    assert out.count() == li.count()
-
-
-def test_zorder_key_guards_bit_budget(spark):
-    import pytest
-
-    from olap_sus_spark.sources.sinks import zorder_key
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    with pytest.raises(ValueError):
-        zorder_key(li, ["l_orderkey"] * 6, bits=12)

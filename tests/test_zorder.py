@@ -1,6 +1,6 @@
 """Z-order layout (sources/zorder.py): Morton-value correctness, the
-measured row-group-skipping win over a single-column sort, maintained-copy
-contract, and oracle-exact serving."""
+measured row-group-skipping win over a single-column sort, the monthly
+maintained layout's contract, and oracle-exact serving."""
 
 from __future__ import annotations
 
@@ -22,6 +22,18 @@ def _py_interleave(x: int, y: int, bits: int) -> int:
     return z
 
 
+def _z_sorted(df, files: int):
+    """``df`` globally Morton-ordered on (l_partkey, l_suppkey) with the
+    shipped key and domain: range exchange + sort on z, helper dropped."""
+    key = zo._z_key("l_partkey", "l_suppkey", zo._domain(df, "l_partkey", "l_suppkey"))
+    return (
+        df.withColumn("_z", key)
+        .repartitionByRange(files, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
+
+
 def test_z_value_matches_reference(spark):
     rows = [(0, 0), (1, 0), (0, 1), (65535, 65535), (12345, 54321), (255, 1)]
     df = spark.createDataFrame(rows, "x long, y long").withColumn(
@@ -39,7 +51,7 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
     li = load_table(spark, SF_DIR, "lineitem")
     zdir = str(tmp_path / "zorder")
     ldir = str(tmp_path / "linear")
-    zo.zorder_frame(li, "l_partkey", "l_suppkey", files=32).write.parquet(zdir)
+    _z_sorted(li, 32).write.parquet(zdir)
     (
         li.repartitionByRange(32, "l_partkey")
         .sortWithinPartitions("l_partkey")
@@ -91,84 +103,60 @@ def test_zorder_box_filters_reach_scan(spark, tmp_path, monkeypatch):
 
 
 def test_zorder_maintained_copy_is_cached_and_stale_safe(spark, tmp_path, monkeypatch):
+    """A second serve of an unchanged corpus reads the published months
+    (no file rewritten); a corpus identity change rebuilds the layout
+    under the new stamp."""
     import shutil
 
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    # stage a corpus we can mutate
+    from olap_sus_spark.operators.index_store import corpus_stamp
+    from olap_sus_spark.operators.maintained import read_marker
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "ix"))
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
-    for t in ("lineitem",):
-        shutil.copy(
-            os.path.join(SF_DIR, f"{t}.parquet"), os.path.join(sf, f"{t}.parquet")
-        )
-    first = zo.load_or_build_zorder(spark, sf, "lineitem", "l_partkey", "l_suppkey")
-    n1 = first.count()
-    path = zo.zorder_layout_path(sf, "lineitem", "l_partkey", "l_suppkey")
-    stamps = {
-        f: os.path.getmtime(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    }
-    again = zo.load_or_build_zorder(spark, sf, "lineitem", "l_partkey", "l_suppkey")
-    assert again.count() == n1
-    for f, ts in stamps.items():  # served, not rebuilt
-        assert os.path.getmtime(os.path.join(path, f)) == ts
-    # corpus change -> stale marker -> safe full rebuild with the new rows
-    src = os.path.join(SF_DIR, "lineitem.parquet")
     dst = os.path.join(sf, "lineitem.parquet")
-    os.utime(dst)  # identity (mtime) change = new corpus stamp
-    rebuilt = zo.load_or_build_zorder(spark, sf, "lineitem", "l_partkey", "l_suppkey")
-    assert rebuilt.count() == n1
-    assert src  # silence lint
+    shutil.copy(os.path.join(SF_DIR, "lineitem.parquet"), dst)
+    keys = ("lineitem", "l_partkey", "l_suppkey", "l_shipdate")
+    path = zo.zorder_monthly_path(sf, *keys)
+
+    def month_files():
+        return {
+            os.path.join(e, f): os.path.getmtime(os.path.join(path, e, f))
+            for e in os.listdir(path)
+            if e.startswith("mes_dt=")
+            for f in os.listdir(os.path.join(path, e))
+            if f.endswith(".parquet")
+        }
+
+    n = zo.load_or_build_zorder_monthly(spark, sf, *keys).count()
+    built = month_files()
+    assert built
+    assert zo.load_or_build_zorder_monthly(spark, sf, *keys).count() == n
+    assert month_files() == built  # served, not rebuilt
+    # corpus change -> stale stamp -> full rebuild, stamped current
+    old_stamp = read_marker(path)
+    st = os.stat(dst)
+    os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert zo.load_or_build_zorder_monthly(spark, sf, *keys).count() == n
+    assert read_marker(path) == corpus_stamp(sf, "lineitem") != old_stamp
+    assert month_files() != built
 
 
 def test_zorder_per_partition_layout(spark, tmp_path):
-    """The PLANS.md maintenance-boundary claim, proven: zorder_frame works
-    per ingest partition (a dt=/month loop — how production re-layouts at
-    compaction).  Each month's files are z-clustered independently, the
-    composed dataset answers box queries identically to the raw table, and
-    a month+box probe prunes row groups within the month too."""
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, SF_DIR, "lineitem").withColumn(
-        "mes", F.date_format("l_shipdate", "yyyy-MM")
+    """The maintenance-boundary claim: the Morton key works per ingest
+    partition (a month loop — how production re-layouts at compaction), so
+    a month+box probe prunes row groups within one month too.  That the
+    composed months answer box queries like the raw table is
+    test_zorder_monthly_is_a_permutation_of_the_facts."""
+    li = load_table(spark, SF_DIR, "lineitem")
+    m0 = li.agg(F.min(F.date_format("l_shipdate", "yyyy-MM"))).first()[0]
+    mdir = str(tmp_path / f"mes={m0}")
+    _z_sorted(li.filter(F.date_format("l_shipdate", "yyyy-MM") == m0), 4).write.parquet(
+        mdir
     )
-    months = [r.mes for r in li.select("mes").distinct().collect()]
-    root = str(tmp_path / "zpart")
-    for m in sorted(months)[:3]:  # three partitions suffice for the proof
-        part = li.filter(F.col("mes") == m).drop("mes")
-        zo.zorder_frame(part, "l_partkey", "l_suppkey", files=4).write.parquet(
-            os.path.join(root, f"mes={m}")
-        )
-    got = spark.read.option("basePath", root).parquet(root)
-    want = li.filter(F.col("mes").isin(sorted(months)[:3]))
     smax = li.agg(F.max("l_suppkey")).first()[0]
-    box = F.col("l_suppkey") <= max(1, smax // 8)
-    assert (
-        got.filter(box).agg(F.count(F.lit(1)), F.sum("l_quantity")).first()
-        == want.filter(box).agg(F.count(F.lit(1)), F.sum("l_quantity")).first()
-    )
-    # within one month partition, the box still skips row groups
-    m0 = sorted(months)[0]
-    t, tot = zo.row_groups_touched(
-        os.path.join(root, f"mes={m0}"), {"l_suppkey": (1, max(1, smax // 8))}
-    )
+    t, tot = zo.row_groups_touched(mdir, {"l_suppkey": (1, max(1, smax // 8))})
     assert tot >= 4 and t < tot, (t, tot)
-
-
-def test_zorder_row_order_is_full_permutation(spark, tmp_path):
-    """The layout must be a permutation — every row exactly once."""
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
-    )
-    z = zo.zorder_frame(li, "l_partkey", "l_suppkey", files=8)
-    assert z.count() == li.count()
-    assert (
-        z.select("l_orderkey", "l_linenumber")
-        .exceptAll(li.select("l_orderkey", "l_linenumber"))
-        .count()
-        == 0
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -370,3 +358,14 @@ def test_zorder_monthly_small_escape_keeps_domain(spark, tmp_path, monkeypatch):
         spark, sf, "lineitem", "l_partkey", "l_suppkey", "l_shipdate"
     )
     assert _multiset(served) == _multiset(load_table(spark, sf, "lineitem"))
+
+
+def test_monthly_domain_of_empty_table(spark, tmp_path):
+    """An empty table yields the degenerate [0,0,0,0] domain
+    (scale_to_bits clamps everything to 0) instead of int(None)."""
+    sf_dir = str(tmp_path)
+    spark.createDataFrame([], "l_partkey long, l_suppkey long, l_shipdate date").write.parquet(
+        os.path.join(sf_dir, "lineitem.parquet")
+    )
+    bounds = zo._domain(load_table(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey")
+    assert bounds == [0, 0, 0, 0]

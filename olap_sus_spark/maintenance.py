@@ -97,13 +97,13 @@ def specs() -> list[Spec]:
     return [
         src(
             "srp_lsh", "embeddings",
-            lambda sf: sim._srp_table(sf, _DIM, _LSH_T, _LSH_H),
+            lambda sf: sim._srp_map(_DIM, _LSH_T, _LSH_H).table(sf),
             lambda s, sf: sim.load_or_build_srp_index(s, sf, _DIM, _LSH_T, _LSH_H),
             lambda s, sf: sim.refresh_srp_index(s, sf, _DIM, _LSH_T, _LSH_H),
         ),
         src(
             "srp_lsh_dedup", "embeddings",
-            lambda sf: sim._srp_table(sf, _DIM, _LSH_T, dedup_bits(sf)),
+            lambda sf: sim._srp_map(_DIM, _LSH_T, dedup_bits(sf)).table(sf),
             lambda s, sf: sim.load_or_build_srp_index(s, sf, _DIM, _LSH_T, dedup_bits(sf)),
             lambda s, sf: sim.refresh_srp_index(s, sf, _DIM, _LSH_T, dedup_bits(sf)),
         ),
@@ -115,13 +115,13 @@ def specs() -> list[Spec]:
         ),
         src(
             "semantic_dedup", "embeddings",
-            lambda sf: sim._sem_table(sf, 64, 0.3, "vec_id"),
+            lambda sf: sim._sem_table(sf, 64, 0.3),
             lambda s, sf: sim.load_or_build_semantic_index(s, sf, 64, 0.3),
             lambda s, sf: sim.refresh_semantic_index(s, sf, 64, 0.3),
             rebuild_exact=False,
         ),
         src(
-            "quality_hist", "documents", qh._table,
+            "quality_hist", "documents", qh.QUALHIST.table,
             qh.load_or_build_quality_hist, qh.refresh_quality_hist,
         ),
         src(
@@ -133,8 +133,7 @@ def specs() -> list[Spec]:
             lambda s, sf: dd.refresh_cluster_index(s, sf, AUG, threshold=0.5),
         ),
         src(
-            "inverted", "documents",
-            lambda sf: inv._table(sf, "documents"),
+            "inverted", "documents", inv.INVERTED.table,
             inv.load_or_build_inverted_index, inv.refresh_inverted_index,
         ),
         src(

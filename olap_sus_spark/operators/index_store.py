@@ -28,7 +28,10 @@ here:
 - **One per-file maintenance driver** (:class:`SrcTable`): manifest read,
   staleness test, staged full build, added/changed/removed diff, orphan
   partition drop and manifest write; families supply only their frame
-  builders and exactness guards.
+  builders and exactness guards.  A family whose every row is a function
+  of one part file needs no guard and is one :class:`FileMap`
+  declaration (SRP buckets, inverted index, quality histogram), which
+  derives its path, staged build and refresh.
 - **Age-gated staging sweep** (:func:`sweep_stale_staging`): abandoned
   staging dirs from crashed builds are reaped only past an age threshold —
   a live build's staging is minutes old at most.
@@ -39,6 +42,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from dataclasses import dataclass
 from typing import Callable, NamedTuple
 
 
@@ -673,3 +677,70 @@ class SrcTable:
             root = os.path.join(self.path, c)
             publish_partitions(staging_path(root), root, SRC, scope=d.removed)
         write_manifest(self.path, {**man, **compact_manifest(man, files), **extra})
+
+
+@dataclass(frozen=True)
+class FileMap:
+    """One per-file map index, declared once: every component row is a
+    function of ONE corpus part file, so the full build and every refresh
+    are the same ``frames`` over different files, and a refresh equals a
+    fresh build with no exactness guard.
+
+    ``frames(docs)`` maps ``src``-tagged rows of corpus table ``source``
+    to ``{component: frame}`` for the components ``parts`` declares (see
+    :class:`SrcTable`).  The path is keyed by ``kind``, the algorithm
+    ``version``, the corpus LOCATION (absolute, so a relative and an
+    absolute spelling of one corpus share one table) and the build
+    ``params``; the declaration derives the table, its staged full build
+    and its refresh.  Each frame is unpersisted once written, so a
+    ``frames`` that persists a compute-heavy pass (the range
+    partitioner's sampling job would run it twice) needs no cleanup."""
+
+    kind: str
+    version: str
+    source: str
+    parts: dict[str, tuple[tuple[str, ...], int]]
+    frames: Callable[[object], dict]
+    params: str = ""
+
+    def path(self, sf_dir: str) -> str:
+        return index_path(
+            self.kind, f"{self.version}|{os.path.abspath(sf_dir)}{self.params}"
+        )
+
+    def table(self, sf_dir: str) -> SrcTable:
+        return SrcTable(self.path(sf_dir), sf_dir, self.source, self.parts)
+
+    def _write(self, t: SrcTable, root: str, docs, srcs=None) -> None:
+        for component, frame in self.frames(with_src(docs)).items():
+            t.write(root, component, frame, srcs)
+            frame.unpersist()
+
+    def load_or_build(self, spark, sf_dir: str) -> str:
+        """Build the whole table when absent or stale (staged, then
+        published); returns its path."""
+        from olap_sus_spark.catalog import load_table
+
+        t = self.table(sf_dir)
+        t.load_or_build(
+            lambda staging: self._write(
+                t, staging, load_table(spark, sf_dir, self.source)
+            )
+        )
+        return t.path
+
+    def refresh(self, spark, sf_dir: str) -> str:
+        """Rewrite the partitions of the added and changed part files and
+        drop those of removed ones — O(changed files), and no corpus read
+        when nothing was added or changed.  Never built: the full build.
+        Returns the table's path."""
+        t = self.table(sf_dir)
+
+        def rewrite(man: dict, d: Diff) -> dict:
+            if d.stale:
+                docs = spark.read.parquet(*t.file_paths(d.stale))
+                self._write(t, t.path, docs, d.stale)
+            return {}
+
+        t.refresh(rewrite, lambda: self.load_or_build(spark, sf_dir))
+        return t.path

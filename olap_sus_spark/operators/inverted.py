@@ -2,9 +2,11 @@
 retrieval (BM25 — queries/search.py scores over it).
 
 Reference parity note: the reference engine has no text-retrieval surface;
-this is part of the LLM-data-pipeline extension family, maintained through
-the per-file driver of operators/index_store.py (corpus-manifest
-staleness, staged build + publish, per-``src``-partition refresh).
+this is part of the LLM-data-pipeline extension family.  Every row is a
+function of one corpus part file, so the index is one
+``index_store.FileMap`` declaration (:data:`INVERTED`): the frames below
+plus the shared corpus-manifest staleness, staged build + publish, and
+per-``src``-partition refresh.
 
 Two tables under one index directory:
 
@@ -35,7 +37,8 @@ oracle with ``bm25_search_topk``, which IS the maintained==recomputed proof.
 
 At 100 TB: the build is one tokenize+explode pass (the only corpus-sized
 job); a daily append re-tokenizes only the ingested part files and
-overwrites their ``src=`` partitions (O(ingest day));
+overwrites their ``src=`` partitions (O(ingest day)), and a removed part
+file drops its partitions;
 the probe reads footer-pruned postings for the query terms only.
 """
 
@@ -50,12 +53,9 @@ from olap_sus_spark.operators import text as tx
 _ALGO_VERSION = "inv2"  # inv2: positional postings (positions column)
 
 
-def inverted_index_path(sf_dir: str, table: str = "documents") -> str:
-    return ix.index_path("inv", f"{_ALGO_VERSION}|{sf_dir}|{table}")
-
-
-def _index_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(postings, doc_stats) for a src-tagged documents frame.
+def _index_frames(docs: DataFrame) -> dict[str, DataFrame]:
+    """``postings`` and ``docs`` (per-src stats) for a src-tagged
+    documents frame.
 
     One tokenize pass feeds both: ``dl`` is computed on the un-exploded
     frame (zero-token docs must still reach doc_stats) and carried through
@@ -90,65 +90,42 @@ def _index_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.sum("dl").cast("bigint").alias("s_tokens"),
         )
     )
-    return postings, doc_stats
+    return {"postings": postings, "docs": doc_stats}
 
 
-def _table(sf_dir: str, table: str) -> ix.SrcTable:
-    return ix.SrcTable(
-        inverted_index_path(sf_dir, table),
-        sf_dir,
-        table,
-        {"postings": (("term",), 4), "docs": (("n_docs",), 1)},
-    )
+INVERTED = ix.FileMap(
+    "inv", _ALGO_VERSION, "documents",
+    {"postings": (("term",), 4), "docs": (("n_docs",), 1)},
+    _index_frames,
+)
+
+
+def inverted_index_path(sf_dir: str) -> str:
+    return INVERTED.path(sf_dir)
 
 
 def load_or_build_inverted_index(
-    spark: SparkSession, sf_dir: str, table: str = "documents"
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Return ``(postings, doc_stats)``, building + persisting on first use
     and loading the Parquet tables afterwards.  A manifest mismatch (the
     corpus changed and nobody called :func:`refresh_inverted_index`)
     triggers the safe full staged rebuild — a maintained index never
     silently serves stale postings."""
-    from olap_sus_spark.catalog import load_table
-
-    t = _table(sf_dir, table)
-
-    def build(staging: str) -> None:
-        postings, doc_stats = _index_frames(
-            ix.with_src(load_table(spark, sf_dir, table))
-        )
-        t.write(staging, "postings", postings)
-        t.write(staging, "docs", doc_stats)
-
-    t.load_or_build(build)
-    return _serve(spark, t.path)
+    return _serve(spark, INVERTED.load_or_build(spark, sf_dir))
 
 
 def refresh_inverted_index(
-    spark: SparkSession, sf_dir: str, table: str = "documents"
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental maintenance: re-tokenize ONLY the corpus part files
     added or rewritten since the last manifest and overwrite their
-    ``src=`` partitions — O(ingested files), never O(corpus).  Postings
-    and per-src stats are functions of a single part file (a document
-    lives entirely in one), so the refreshed index is bit-identical to a
-    fresh full build by construction.  Removed part files (or a
-    never-built index) fall back to the full staged build."""
-    t = _table(sf_dir, table)
-
-    def step(man: dict, d: ix.Diff) -> dict | None:
-        if d.removed:
-            return None
-        postings, doc_stats = _index_frames(
-            ix.with_src(spark.read.parquet(*t.file_paths(d.stale)))
-        )
-        t.write(t.path, "postings", postings, d.stale)
-        t.write(t.path, "docs", doc_stats, d.stale)
-        return {}
-
-    t.refresh(step, lambda: load_or_build_inverted_index(spark, sf_dir, table))
-    return _serve(spark, t.path)
+    ``src=`` partitions; a removed part file's partitions are dropped —
+    O(changed files), never O(corpus).  Postings and per-src stats are
+    functions of a single part file (a document lives entirely in one), so
+    the refreshed index is bit-identical to a fresh full build by
+    construction.  A never-built index runs the full staged build."""
+    return _serve(spark, INVERTED.refresh(spark, sf_dir))
 
 
 def _serve(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:

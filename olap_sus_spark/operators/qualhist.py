@@ -9,7 +9,8 @@ partition-local — appends write their own partitions, in-place rewrites
 partitions.  No maintenance case needs a full rebuild; this family is the
 simplest point on the maintained-index spectrum (vs the gram chain's
 flip handling or the semantic index's epoch-pinned codebook) precisely
-because the statistic is a per-row map + additive count.
+because the statistic is a per-row map + additive count, so the whole
+table is one ``index_store.FileMap`` declaration (:data:`QUALHIST`).
 
 Serving folds the index-sized partials (|files| × |sources| × ≤1000 bins)
 instead of re-aggregating the corpus — the cutoff side of the calibrated
@@ -18,8 +19,6 @@ the narrow map it always was.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,15 +30,6 @@ _BINS = 1000
 _ALGO_VERSION = "v1"
 
 
-def quality_hist_path(sf_dir: str) -> str:
-    import hashlib
-
-    key = hashlib.md5(
-        f"{_ALGO_VERSION}|{os.path.abspath(sf_dir)}|qualhist|{_BINS}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(ix.index_root(), f"qhist_{key}")
-
-
 def q_bin(text_col) -> F.Column:
     """The calibrated cut's score bin — MUST stay expression-identical to
     quality_calibrated_cut's so the served twin shares its oracle."""
@@ -47,34 +37,30 @@ def q_bin(text_col) -> F.Column:
     return F.least(F.floor(ratio * _BINS), F.lit(_BINS - 1)).cast("int")
 
 
-def _partials(docs: DataFrame) -> DataFrame:
+def _partials(docs: DataFrame) -> dict[str, DataFrame]:
     """(src, source, q_bin, cnt) — one narrow map + one grouped count."""
-    return (
-        docs.select(ix.SRC, "source", q_bin(F.col("text")).alias("q_bin"))
+    return {
+        "": docs.select(ix.SRC, "source", q_bin(F.col("text")).alias("q_bin"))
         .groupBy(ix.SRC, "source", "q_bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    }
 
 
-def _table(sf_dir: str) -> ix.SrcTable:
-    return ix.SrcTable(
-        quality_hist_path(sf_dir), sf_dir, "documents", {"": (("source", "q_bin"), 1)}
-    )
+QUALHIST = ix.FileMap(
+    "qhist", _ALGO_VERSION, "documents", {"": (("source", "q_bin"), 1)},
+    _partials, f"|qualhist|{_BINS}",
+)
+
+
+def quality_hist_path(sf_dir: str) -> str:
+    return QUALHIST.path(sf_dir)
 
 
 def load_or_build_quality_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve the per-source histogram partials, building on first use.
     Staleness via the corpus manifest (the caller ingested without
     :func:`refresh_quality_hist`) triggers the safe full rebuild."""
-    from olap_sus_spark.catalog import load_table
-
-    t = _table(sf_dir)
-    t.load_or_build(
-        lambda staging: t.write(
-            staging, "", _partials(ix.with_src(load_table(spark, sf_dir, "documents")))
-        )
-    )
-    return ix.serve(spark, t.path).select(ix.SRC, "source", "q_bin", "cnt")
+    return _serve(spark, QUALHIST.load_or_build(spark, sf_dir))
 
 
 def refresh_quality_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,13 +68,8 @@ def refresh_quality_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     part files recompute exactly their own partials partitions; removed
     files drop theirs.  Additivity means there is no cross-file state and
     therefore no full-rebuild case at all — idempotent by construction."""
-    t = _table(sf_dir)
+    return _serve(spark, QUALHIST.refresh(spark, sf_dir))
 
-    def step(man: dict, d: ix.Diff) -> dict:
-        if d.stale:
-            docs = ix.with_src(spark.read.parquet(*t.file_paths(d.stale)))
-            t.write(t.path, "", _partials(docs), d.stale)
-        return {}
 
-    t.refresh(step, lambda: load_or_build_quality_hist(spark, sf_dir))
-    return ix.serve(spark, t.path).select(ix.SRC, "source", "q_bin", "cnt")
+def _serve(spark: SparkSession, path: str) -> DataFrame:
+    return ix.serve(spark, path).select(ix.SRC, "source", "q_bin", "cnt")

@@ -21,6 +21,7 @@ reassociation on either side).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -972,9 +973,10 @@ def lsh_topk(
 # O(ingested files), the safe full staged rebuild otherwise.  Within each
 # src partition files stay range-sorted on the probe key ((t, bucket) /
 # centroid_id) so footer min/max stats keep pruning.  What stays here are
-# the frame builders and the exactness guards: the SRP refresh keeps the
-# built bit width, the IVF refresh requires appended ids above the
-# codebook's, and removed part files force a full rebuild.
+# the frame builders and the exactness guards.  The SRP bucket table is a
+# per-file map (index_store.FileMap): every row is a function of one part
+# file, so it needs no guard.  The IVF refresh requires appended ids above
+# the codebook's, and a removed part file forces its full rebuild.
 
 
 from olap_sus_spark.operators import index_store as ix
@@ -989,43 +991,43 @@ from olap_sus_spark.operators import index_store as ix
 _INDEX_ALGO_VERSION = "v3"
 
 
-def srp_index_path(sf_dir: str, dim: int, n_tables: int, n_bits: int) -> str:
-    import hashlib
-
-    key = hashlib.md5(
-        f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|{dim}|{n_tables}|{n_bits}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(ix.index_root(), f"srp_{key}")
+def _srp_frames(dim: int, n_tables: int, n_bits: int, emb: DataFrame) -> dict:
+    # Materialize the signature pass once: the range partitioner's sampling
+    # job would otherwise execute the (compute-heavy) signature expressions
+    # twice.  The FileMap unpersists it once written.
+    b = srp_buckets(emb, dim, n_tables, n_bits, passthrough=(ix.SRC,))
+    return {"": b.persist()}
 
 
-def ivf_index_path(sf_dir: str, num_centroids: int) -> str:
-    import hashlib
-
-    key = hashlib.md5(
-        f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|ivf|{num_centroids}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(ix.index_root(), f"ivf_{key}")
-
-
-def _srp_table(sf_dir: str, dim: int, n_tables: int, n_bits: int) -> ix.SrcTable:
-    return ix.SrcTable(
-        srp_index_path(sf_dir, dim, n_tables, n_bits),
-        sf_dir,
-        "embeddings",
-        {"": (("t", "bucket"), 4)},
+def _srp_map(dim: int, n_tables: int, n_bits: int) -> ix.FileMap:
+    """The SRP bucket table at one (dim, L, H): signatures are per-vector,
+    so it is a per-file map index and a refresh equals a fresh build."""
+    return ix.FileMap(
+        "srp", _INDEX_ALGO_VERSION, "embeddings", {"": (("t", "bucket"), 4)},
+        partial(_srp_frames, dim, n_tables, n_bits), f"|{dim}|{n_tables}|{n_bits}",
     )
 
 
+def _srp_bits(sf_dir: str, n_bits: int | None) -> int:
+    return auto_bits(ix.corpus_rows(sf_dir)) if n_bits is None else n_bits
+
+
+def srp_index_path(sf_dir: str, dim: int, n_tables: int, n_bits: int) -> str:
+    return _srp_map(dim, n_tables, n_bits).path(sf_dir)
+
+
+def ivf_index_path(sf_dir: str, num_centroids: int) -> str:
+    return ix.index_path(
+        "ivf", f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}|ivf|{num_centroids}"
+    )
+
+
+def _serve_srp(spark, path: str) -> DataFrame:
+    return ix.serve(spark, path).select("vec_id", "embedding", "t", "bucket")
+
+
 def load_or_build_srp_index(
-    spark,
-    sf_dir: str,
-    dim: int,
-    n_tables: int = 12,
-    n_bits: int | None = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark, sf_dir: str, dim: int, n_tables: int = 12, n_bits: int | None = 4
 ) -> DataFrame:
     """Return the (id, vec, t, bucket) SRP bucket table for the corpus at
     ``sf_dir``, building + persisting it on first use (index build), loading
@@ -1038,73 +1040,27 @@ def load_or_build_srp_index(
     occupancy — and therefore probe candidate-set size — stays bounded as
     the corpus grows.  The registered parity queries pass an explicit 4 to
     match their fixed oracles."""
-    from olap_sus_spark.catalog import load_table
-
-    if n_bits is None:
-        n_bits = auto_bits(ix.corpus_rows(sf_dir))
-    t = _srp_table(sf_dir, dim, n_tables, n_bits)
-
-    def build(staging: str) -> dict:
-        emb = ix.with_src(load_table(spark, sf_dir, "embeddings"))
-        # Materialize the signature pass once: the range partitioner's
-        # sampling job would otherwise execute the (compute-heavy)
-        # signature expressions twice.
-        b = srp_buckets(
-            emb, dim, n_tables, n_bits, id_col, vec_col, passthrough=(ix.SRC,)
-        ).persist()
-        t.write(staging, "", b)
-        b.unpersist()
-        return {"n_bits": n_bits}
-
-    t.load_or_build(build)
-    return ix.serve(spark, t.path).select(id_col, vec_col, "t", "bucket")
+    m = _srp_map(dim, n_tables, _srp_bits(sf_dir, n_bits))
+    return _serve_srp(spark, m.load_or_build(spark, sf_dir))
 
 
 def refresh_srp_index(
-    spark,
-    sf_dir: str,
-    dim: int,
-    n_tables: int = 12,
-    n_bits: int | None = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark, sf_dir: str, dim: int, n_tables: int = 12, n_bits: int | None = 4
 ) -> DataFrame:
     """Incremental index maintenance: re-sign ONLY the corpus part files
     added or rewritten since the last manifest and overwrite their
-    ``src=`` partitions — cost is O(ingested files), never O(corpus).
-    Signatures are per-vector, so the refreshed table is bit-identical to a
-    fresh full build by construction.  Removed part files (or a never-built
-    index) fall back to the full staged build.
+    ``src=`` partitions; a removed part file's partitions are dropped —
+    cost is O(changed files), never O(corpus).  Signatures are per-vector,
+    so the refreshed table is bit-identical to a fresh full build by
+    construction.  A never-built index runs the full staged build.
 
-    ``n_bits=None`` keeps the EXISTING index's bit width (from its
-    manifest): signatures across partitions must come from one plane
-    family — resizing for corpus growth is a full re-signature by nature
-    and happens on the next full (re)build."""
-    if n_bits is None:
-        # peer at the auto-sized path first; fall back to auto sizing when
-        # the index was never built (full build below picks the same width)
-        auto = auto_bits(ix.corpus_rows(sf_dir))
-        man = ix.read_manifest(srp_index_path(sf_dir, dim, n_tables, auto))
-        n_bits = (man or {}).get("n_bits", auto)
-    t = _srp_table(sf_dir, dim, n_tables, n_bits)
-
-    def step(man: dict, d: ix.Diff) -> dict | None:
-        if d.removed:
-            return None
-        emb = ix.with_src(spark.read.parquet(*t.file_paths(d.stale)))
-        b = srp_buckets(
-            emb, dim, n_tables, n_bits, id_col, vec_col, passthrough=(ix.SRC,)
-        )
-        t.write(t.path, "", b, d.stale)
-        return {"n_bits": n_bits}
-
-    t.refresh(
-        step,
-        lambda: load_or_build_srp_index(
-            spark, sf_dir, dim, n_tables, n_bits, id_col, vec_col
-        ),
-    )
-    return ix.serve(spark, t.path).select(id_col, vec_col, "t", "bucket")
+    ``n_bits=None`` resolves to :func:`auto_bits` of the CURRENT corpus,
+    exactly as :func:`load_or_build_srp_index` does.  The width is part of
+    the table's path, so one table's signatures always come from one plane
+    family: when growth moves the auto width, the refresh lands on the
+    never-built table at the new width and runs its full build."""
+    m = _srp_map(dim, n_tables, _srp_bits(sf_dir, n_bits))
+    return _serve_srp(spark, m.refresh(spark, sf_dir))
 
 
 def _ivf_table(sf_dir: str, num_centroids: int) -> ix.SrcTable:
@@ -1117,18 +1073,12 @@ def _ivf_table(sf_dir: str, num_centroids: int) -> ix.SrcTable:
     )
 
 
-def _serve_ivf(spark, path: str, id_col: str, vec_col: str):
-    a = ix.serve(spark, path, "assignments").select(id_col, vec_col, "centroid_id")
+def _serve_ivf(spark, path: str):
+    a = ix.serve(spark, path, "assignments").select("vec_id", "embedding", "centroid_id")
     return a, ix.serve(spark, path, "centroids")
 
 
-def load_or_build_ivf_index(
-    spark,
-    sf_dir: str,
-    num_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def load_or_build_ivf_index(spark, sf_dir: str, num_centroids: int = 16):
     """Return (assignments, centroids) for the IVF index over the corpus at
     ``sf_dir``, building + persisting both tables on first use.  Staleness
     via the corpus manifest (full rebuild on mismatch — the caller ingested
@@ -1141,18 +1091,16 @@ def load_or_build_ivf_index(
 
     def build(staging: str) -> dict:
         emb = ix.with_src(load_table(spark, sf_dir, "embeddings"))
-        centroids = emb.drop(ix.SRC).orderBy(id_col).limit(num_centroids)
+        centroids = emb.drop(ix.SRC).orderBy("vec_id").limit(num_centroids)
         # persist: the range partitioner's sampling job would otherwise run
         # the assignment scoring pass a second time.
-        assigned = assign_centroids(
-            emb, centroids, id_col, vec_col, passthrough=(ix.SRC,)
-        ).persist()
+        assigned = assign_centroids(emb, centroids, passthrough=(ix.SRC,)).persist()
         t.write(staging, "assignments", assigned)
         assigned.unpersist()
         cpath = os.path.join(staging, "centroids")
         centroids.coalesce(1).write.mode("overwrite").parquet(cpath)
         stats = spark.read.parquet(cpath).agg(
-            F.max(id_col), F.count(F.lit(1))
+            F.max("vec_id"), F.count(F.lit(1))
         ).first()
         return {
             "num_centroids": num_centroids,
@@ -1161,16 +1109,10 @@ def load_or_build_ivf_index(
         }
 
     t.load_or_build(build)
-    return _serve_ivf(spark, t.path, id_col, vec_col)
+    return _serve_ivf(spark, t.path)
 
 
-def refresh_ivf_index(
-    spark,
-    sf_dir: str,
-    num_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def refresh_ivf_index(spark, sf_dir: str, num_centroids: int = 16):
     """Incremental IVF maintenance: assign ONLY newly-appended part files
     against the EXISTING codebook and overwrite their ``src=`` partitions.
 
@@ -1187,23 +1129,18 @@ def refresh_ivf_index(
         if d.changed or d.removed or man.get("n_centroids_built", 0) < num_centroids:
             return None
         emb = ix.with_src(spark.read.parquet(*t.file_paths(d.added)))
-        min_new = emb.agg(F.min(id_col)).first()[0]
+        min_new = emb.agg(F.min("vec_id")).first()[0]
         if min_new is not None and min_new <= man["max_centroid_id"]:
             # appended ids intrude into the deterministic codebook: the
             # centroids themselves change — full rebuild.
             return None
         centroids = spark.read.parquet(os.path.join(t.path, "centroids"))
-        assigned = assign_centroids(
-            emb, centroids, id_col, vec_col, passthrough=(ix.SRC,)
-        )
+        assigned = assign_centroids(emb, centroids, passthrough=(ix.SRC,))
         t.write(t.path, "assignments", assigned, d.added)
         return {}
 
-    t.refresh(
-        step,
-        lambda: load_or_build_ivf_index(spark, sf_dir, num_centroids, id_col, vec_col),
-    )
-    return _serve_ivf(spark, t.path, id_col, vec_col)
+    t.refresh(step, lambda: load_or_build_ivf_index(spark, sf_dir, num_centroids))
+    return _serve_ivf(spark, t.path)
 
 
 # ---------------------------------------------------------------------------
@@ -1223,49 +1160,36 @@ def refresh_ivf_index(
 # larger ids).  So a refresh assigns ONLY the batch, pairs it against
 # (existing ∪ smaller-id-batch) cell-mates, and appends the new src=
 # partitions — O(batch · cell_target) work.  Id-interleaved appends,
-# rewrites, and removals all fall back to the full rebuild.  Like
-# refresh_srp_index's n_bits, the refresh keeps the BUILT codebook width:
-# re-sizing k for corpus growth is a semantic change by nature and happens
-# on the next full (re)build (manifest staleness forces one when anything
-# but a clean append occurs).
+# rewrites, and removals all fall back to the full rebuild.  The refresh
+# keeps the BUILT codebook: re-sizing k for corpus growth is a semantic
+# change by nature and happens on the next full (re)build (manifest
+# staleness forces one when anything but a clean append occurs).
 # ---------------------------------------------------------------------------
 
 
 def semantic_index_path(sf_dir: str, cell_target: int, threshold: float) -> str:
-    import hashlib
-
-    key = hashlib.md5(
-        f"{_INDEX_ALGO_VERSION}|{os.path.abspath(sf_dir)}"
-        f"|sem|{cell_target}|{threshold}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(ix.index_root(), f"sem_{key}")
+    key = f"{os.path.abspath(sf_dir)}|sem|{cell_target}|{threshold}"
+    return ix.index_path("sem", f"{_INDEX_ALGO_VERSION}|{key}")
 
 
-def _sem_table(
-    sf_dir: str, cell_target: int, threshold: float, id_col: str
-) -> ix.SrcTable:
+def _sem_table(sf_dir: str, cell_target: int, threshold: float) -> ix.SrcTable:
     return ix.SrcTable(
         semantic_index_path(sf_dir, cell_target, threshold),
         sf_dir,
         "embeddings",
-        {"assignments": (("centroid_id",), 4), "verdicts": ((id_col,), 4)},
+        {"assignments": (("centroid_id",), 4), "verdicts": (("vec_id",), 4)},
         flat=("codebook",),
     )
 
 
-def _serve_verdicts(spark, path: str, id_col: str) -> DataFrame:
+def _serve_verdicts(spark, path: str) -> DataFrame:
     return ix.serve(spark, path, "verdicts").select(
-        id_col, "centroid_id", "is_kept", "dup_of", "dup_cosine"
+        "vec_id", "centroid_id", "is_kept", "dup_of", "dup_cosine"
     )
 
 
 def load_or_build_semantic_index(
-    spark,
-    sf_dir: str,
-    cell_target: int = 64,
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark, sf_dir: str, cell_target: int = 64, threshold: float = 0.3
 ) -> DataFrame:
     """Return the maintained semantic-dedup verdict table for the corpus at
     ``sf_dir`` (vec_id, centroid_id, is_kept, dup_of, dup_cosine), building
@@ -1274,24 +1198,20 @@ def load_or_build_semantic_index(
     refresh_semantic_index` triggers the safe full rebuild."""
     from olap_sus_spark.catalog import load_table
 
-    t = _sem_table(sf_dir, cell_target, threshold, id_col)
+    t = _sem_table(sf_dir, cell_target, threshold)
 
     def build(staging: str) -> dict:
         emb = ix.with_src(load_table(spark, sf_dir, "embeddings"))
-        cb = semantic_codebook(
-            emb.drop(ix.SRC), cell_target, id_col=id_col, vec_col=vec_col
-        )
-        cells = semantic_cells(
-            emb, cell_target, id_col=id_col, vec_col=vec_col,
-            codebook=cb, passthrough=(ix.SRC,),
-        )
-        verdicts = semantic_dedup(cells, threshold, id_col, passthrough=(ix.SRC,))
+        cb = semantic_codebook(emb.drop(ix.SRC), cell_target)
+        cells = semantic_cells(emb, cell_target, codebook=cb, passthrough=(ix.SRC,))
+        verdicts = semantic_dedup(cells, threshold, passthrough=(ix.SRC,))
         t.write(
-            staging, "assignments", cells.select(id_col, vec_col, "centroid_id", ix.SRC)
+            staging, "assignments",
+            cells.select("vec_id", "embedding", "centroid_id", ix.SRC),
         )
         t.write(staging, "verdicts", verdicts)
         cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "codebook"))
-        max_id = emb.agg(F.max(id_col)).first()[0]
+        max_id = emb.agg(F.max("vec_id")).first()[0]
         return {
             "cell_target": cell_target,
             "threshold": threshold,
@@ -1299,14 +1219,13 @@ def load_or_build_semantic_index(
         }
 
     t.load_or_build(build)
-    return _serve_verdicts(spark, t.path, id_col)
+    return _serve_verdicts(spark, t.path)
 
 
 def _semantic_verdicts(
     b_frame: DataFrame,
     cand: DataFrame,
     threshold: float,
-    id_col: str,
     extra: tuple[str, ...] = (),
 ) -> DataFrame:
     """The verdict join shared by append-refresh and purge-refresh:
@@ -1320,12 +1239,12 @@ def _semantic_verdicts(
     bit-identical and the division tree is unchanged, so the refresh still
     equals the rebuild verdict-for-verdict."""
     pairs = (
-        b_frame.select("centroid_id", id_col, "bv")
+        b_frame.select("centroid_id", "vec_id", "bv")
         .withColumn("_nb", norm(F.col("bv")))
         .join(cand.withColumn("_na", norm(F.col("av"))), "centroid_id")
-        .filter(F.col("dup_of") < F.col(id_col))
+        .filter(F.col("dup_of") < F.col("vec_id"))
         .select(
-            id_col, "dup_of",
+            "vec_id", "dup_of",
             (dot(F.col("av"), F.col("bv")) / (F.col("_na") * F.col("_nb"))).alias(
                 "dup_cosine"
             ),
@@ -1336,15 +1255,15 @@ def _semantic_verdicts(
     # as semantic_dedup (exact for NaN cosines too — see semantic_dedup),
     # so refresh still equals rebuild verdict-for-verdict.
     best = (
-        best_by(pairs, [id_col], "dup_cosine", "dup_of")
+        best_by(pairs, ["vec_id"], "dup_cosine", "dup_of")
         .filter(F.col("dup_cosine") >= threshold)
-        .select(id_col, "dup_of", "dup_cosine")
+        .select("vec_id", "dup_of", "dup_cosine")
     )
     return (
-        b_frame.select(id_col, "centroid_id", *extra)
-        .join(best, id_col, "left")
+        b_frame.select("vec_id", "centroid_id", *extra)
+        .join(best, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "centroid_id",
             *extra,
             F.when(F.col("dup_of").isNull(), 1).otherwise(0).cast("int").alias("is_kept"),
@@ -1355,12 +1274,7 @@ def _semantic_verdicts(
 
 
 def refresh_semantic_index(
-    spark,
-    sf_dir: str,
-    cell_target: int = 64,
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark, sf_dir: str, cell_target: int = 64, threshold: float = 0.3
 ) -> DataFrame:
     """Absorb an append-only ingest in O(batch · cell_target): assign the
     batch against the FROZEN codebook, pair it with (existing ∪ smaller-id
@@ -1379,45 +1293,40 @@ def refresh_semantic_index(
     that), and re-clustering is the scheduled full-rebuild path — the same
     trade every production SemDeDup deployment makes (re-embedding/
     re-clustering epochs, incremental verdicts in between)."""
-    t = _sem_table(sf_dir, cell_target, threshold, id_col)
+    t = _sem_table(sf_dir, cell_target, threshold)
 
     def step(man: dict, d: ix.Diff) -> dict | None:
         if d.removed or (d.changed and d.added):
             return None
         if d.changed:  # None unless a pure removal — safe full rebuild
-            return _semantic_purge_refresh(
-                spark, t, man, d.changed, threshold, id_col, vec_col
-            )
+            return _semantic_purge_refresh(spark, t, man, d.changed, threshold)
         batch = ix.with_src(spark.read.parquet(*t.file_paths(d.added)))
-        min_new = batch.agg(F.min(id_col)).first()[0]
+        min_new = batch.agg(F.min("vec_id")).first()[0]
         max_old = man.get("max_vec_id")
         if min_new is not None and max_old is not None and min_new <= max_old:
             # an interleaved id could become a smaller-id cell-mate of an
             # EXISTING vector and flip its verdict — full rebuild.
             return None
         cb = spark.read.parquet(os.path.join(t.path, "codebook"))
-        bcells = semantic_cells(
-            batch, cell_target, id_col=id_col, vec_col=vec_col,
-            codebook=cb, passthrough=(ix.SRC,),
-        )
+        bcells = semantic_cells(batch, cell_target, codebook=cb, passthrough=(ix.SRC,))
         old = ix.serve(spark, t.path, "assignments").select(
-            F.col(id_col).alias("dup_of"),
-            F.col(vec_col).cast("array<double>").alias("av"),
+            F.col("vec_id").alias("dup_of"),
+            F.col("embedding").cast("array<double>").alias("av"),
             "centroid_id",
         )
         batch_a = bcells.select(
-            "centroid_id", F.col(id_col).alias("dup_of"), F.col("v").alias("av")
+            "centroid_id", F.col("vec_id").alias("dup_of"), F.col("v").alias("av")
         )
-        b = bcells.select("centroid_id", id_col, F.col("v").alias("bv"), ix.SRC)
+        b = bcells.select("centroid_id", "vec_id", F.col("v").alias("bv"), ix.SRC)
         verdicts_new = _semantic_verdicts(
-            b, old.unionByName(batch_a), threshold, id_col, extra=(ix.SRC,)
+            b, old.unionByName(batch_a), threshold, extra=(ix.SRC,)
         )
         t.write(
             t.path, "assignments",
-            bcells.select(id_col, vec_col, "centroid_id", ix.SRC), d.added,
+            bcells.select("vec_id", "embedding", "centroid_id", ix.SRC), d.added,
         )
         t.write(t.path, "verdicts", verdicts_new, d.added)
-        new_max = batch.agg(F.max(id_col)).first()[0]
+        new_max = batch.agg(F.max("vec_id")).first()[0]
         return {
             "max_vec_id": max(
                 x for x in (max_old, None if new_max is None else int(new_max))
@@ -1427,11 +1336,9 @@ def refresh_semantic_index(
 
     t.refresh(
         step,
-        lambda: load_or_build_semantic_index(
-            spark, sf_dir, cell_target, threshold, id_col, vec_col
-        ),
+        lambda: load_or_build_semantic_index(spark, sf_dir, cell_target, threshold),
     )
-    return _serve_verdicts(spark, t.path, id_col)
+    return _serve_verdicts(spark, t.path)
 
 
 def _semantic_purge_refresh(
@@ -1440,8 +1347,6 @@ def _semantic_purge_refresh(
     man: dict,
     changed: list[str],
     threshold: float,
-    id_col: str,
-    vec_col: str,
 ) -> dict | None:
     """O(affected) RTBF for the semantic index — the family's analogue of
     the gram chain's un-scrub.
@@ -1465,22 +1370,22 @@ def _semantic_purge_refresh(
     from olap_sus_spark.operators.purge import _drop, _match
 
     new_rows = ix.with_src(spark.read.parquet(*t.file_paths(changed))).select(
-        F.col(id_col), F.col(vec_col).alias("_nv"), ix.SRC
+        F.col("vec_id"), F.col("embedding").alias("_nv"), ix.SRC
     )
     old_changed = (
         ix.serve(spark, t.path, "assignments")
         .filter(F.col(ix.SRC).isin(list(changed)))
-        .select(id_col, vec_col, "centroid_id", ix.SRC)
+        .select("vec_id", "embedding", "centroid_id", ix.SRC)
         .localCheckpoint(eager=True)  # materialize BEFORE overwriting below
     )
-    j = old_changed.join(new_rows, [id_col, ix.SRC], "left")
+    j = old_changed.join(new_rows, ["vec_id", ix.SRC], "left")
     survivors = j.filter(F.col("_nv").isNotNull())
-    if survivors.filter(F.col("_nv") != F.col(vec_col)).count() > 0:
+    if survivors.filter(F.col("_nv") != F.col("embedding")).count() > 0:
         return None  # surviving vector mutated — not a purge
-    pids = [r[0] for r in j.filter(F.col("_nv").isNull()).select(id_col).collect()]
+    pids = [r[0] for r in j.filter(F.col("_nv").isNull()).select("vec_id").collect()]
     if (
         new_rows.join(
-            old_changed.select(id_col, ix.SRC), [id_col, ix.SRC], "left_anti"
+            old_changed.select("vec_id", ix.SRC), ["vec_id", ix.SRC], "left_anti"
         ).count()
         > 0
     ):
@@ -1489,16 +1394,16 @@ def _semantic_purge_refresh(
         return {}
 
     # (2) assignments: drop purged rows, rewrite the changed partitions only
-    surv_assign = _drop(old_changed, id_col, pids).select(
-        id_col, vec_col, "centroid_id", ix.SRC
+    surv_assign = _drop(old_changed, "vec_id", pids).select(
+        "vec_id", "embedding", "centroid_id", ix.SRC
     )
     t.write(t.path, "assignments", surv_assign, changed)
 
     # (3) orphans: surviving rows whose recorded dup_of was purged
     verd = ix.serve(spark, t.path, "verdicts")
     orphans = (
-        _drop(_match(verd, "dup_of", pids), id_col, pids)
-        .select(id_col, ix.SRC)
+        _drop(_match(verd, "dup_of", pids), "vec_id", pids)
+        .select("vec_id", ix.SRC)
         .localCheckpoint(eager=True)
     )
     orphan_srcs = [r[0] for r in orphans.select(ix.SRC).distinct().collect()]
@@ -1508,18 +1413,18 @@ def _semantic_purge_refresh(
     alive = ix.serve(spark, t.path, "assignments")
     cand = alive.select(
         "centroid_id",
-        F.col(id_col).alias("dup_of"),
-        F.col(vec_col).cast("array<double>").alias("av"),
+        F.col("vec_id").alias("dup_of"),
+        F.col("embedding").cast("array<double>").alias("av"),
     )
     b = (
-        alive.join(orphans.select(id_col), id_col)
+        alive.join(orphans.select("vec_id"), "vec_id")
         .select(
-            "centroid_id", id_col, F.col(vec_col).cast("array<double>").alias("bv"),
-            ix.SRC,
+            "centroid_id", "vec_id",
+            F.col("embedding").cast("array<double>").alias("bv"), ix.SRC,
         )
     )
-    new_verd = _semantic_verdicts(b, cand, threshold, id_col, extra=(ix.SRC,)).select(
-        id_col, "centroid_id", ix.SRC, "is_kept", "dup_of", "dup_cosine"
+    new_verd = _semantic_verdicts(b, cand, threshold, extra=(ix.SRC,)).select(
+        "vec_id", "centroid_id", ix.SRC, "is_kept", "dup_of", "dup_cosine"
     )
 
     # (4) rewrite only the touched verdict partitions: purged rows out,
@@ -1527,8 +1432,8 @@ def _semantic_purge_refresh(
     old_parts = (
         verd.filter(F.col(ix.SRC).isin(parts)).localCheckpoint(eager=True)
     )
-    carried = _drop(old_parts, id_col, pids).join(
-        orphans.select(id_col), id_col, "left_anti"
-    ).select(id_col, "centroid_id", ix.SRC, "is_kept", "dup_of", "dup_cosine")
+    carried = _drop(old_parts, "vec_id", pids).join(
+        orphans.select("vec_id"), "vec_id", "left_anti"
+    ).select("vec_id", "centroid_id", ix.SRC, "is_kept", "dup_of", "dup_cosine")
     t.write(t.path, "verdicts", carried.unionByName(new_verd), parts)
     return {}

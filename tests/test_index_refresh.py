@@ -4,7 +4,9 @@ operators/dedup.py refresh_cluster_index): an append-only ingest must be
 absorbed by re-signing ONLY the appended part files, and the refreshed
 index must be EXACTLY the table a fresh full build over the grown corpus
 would produce.  Non-append changes (rewrites, removals, id-order
-violations) must fall back to the safe full rebuild — never diverge."""
+violations) are absorbed partition-locally by the per-file maps (SRP,
+inverted index, quality histogram: every row is a function of one part
+file) and otherwise fall back to the safe full rebuild — never diverge."""
 
 from __future__ import annotations
 
@@ -93,6 +95,16 @@ def _ivf_rows(df):
     )
 
 
+def _file_ids(part_dir: str) -> dict[str, tuple[int, int]]:
+    """{file: (inode, mtime_ns)} of a partition: equal across a refresh
+    only if the refresh left the partition's files in place."""
+    return {
+        e.name: (e.inode(), e.stat().st_mtime_ns)
+        for e in os.scandir(part_dir)
+        if e.name.endswith(".parquet")
+    }
+
+
 # ---------------------------------------------------------------------------
 # SRP
 
@@ -157,6 +169,24 @@ def test_srp_rewritten_part_file_is_partition_scoped(spark, tmp_path, monkeypatc
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
     fresh = sim.load_or_build_srp_index(spark, sf, dim=_DIM, n_tables=4, n_bits=4)
     assert got == _srp_rows(fresh)
+
+
+def test_srp_removed_file_drops_only_its_partition(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    sf = _mk_corpus(spark, tmp_path)
+    _append_embeddings(spark, sf, "part-01.parquet")
+    sim.load_or_build_srp_index(spark, sf, dim=_DIM, n_tables=4, n_bits=4)
+    path = sim.srp_index_path(sf, _DIM, 4, 4)
+    kept = _file_ids(os.path.join(path, "src=part-00.parquet"))
+
+    os.remove(os.path.join(sf, "embeddings.parquet", "part-01.parquet"))
+    got = _srp_rows(sim.refresh_srp_index(spark, sf, dim=_DIM, n_tables=4, n_bits=4))
+    assert _file_ids(os.path.join(path, "src=part-00.parquet")) == kept
+    assert not os.path.exists(os.path.join(path, "src=part-01.parquet"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
+    fresh = sim.load_or_build_srp_index(spark, sf, dim=_DIM, n_tables=4, n_bits=4)
+    assert got == _srp_rows(fresh)
+    assert all(r[0] < 100000 for r in got)  # no row of the removed part survives
 
 
 def test_srp_load_full_rebuilds_when_stale(spark, tmp_path, monkeypatch):
@@ -337,16 +367,22 @@ def test_inverted_refresh_is_idempotent(spark, tmp_path, monkeypatch):
     assert first == again
 
 
-def test_inverted_removed_file_falls_back_to_rebuild(spark, tmp_path, monkeypatch):
+def test_inverted_removed_file_drops_only_its_partitions(spark, tmp_path, monkeypatch):
     from olap_sus_spark.operators import inverted as inv
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     sf = _mk_corpus(spark, tmp_path, tables=("documents",))
     _append_documents(spark, sf, "part-01.parquet")
     inv.load_or_build_inverted_index(spark, sf)
+    path = inv.inverted_index_path(sf)
+    parts = {c: os.path.join(path, c, "src=part-00.parquet") for c in ("postings", "docs")}
+    kept = {c: _file_ids(d) for c, d in parts.items()}
 
     os.remove(os.path.join(sf, "documents.parquet", "part-01.parquet"))
     got = _inv_rows(*inv.refresh_inverted_index(spark, sf))
+    for c, ids in kept.items():  # the untouched partition is not rewritten
+        assert _file_ids(parts[c]) == ids
+        assert not os.path.exists(os.path.join(path, c, "src=part-01.parquet"))
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx_fresh"))
     fresh = _inv_rows(*inv.load_or_build_inverted_index(spark, sf))
     assert got == fresh

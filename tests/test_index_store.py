@@ -294,6 +294,21 @@ def test_empty_src_component_serves_typed_empty_frame(spark, tmp_path):
     assert out.dtypes == [("gram", "bigint"), ("n_docs", "bigint")]
 
 
+def test_relative_and_absolute_corpus_dir_share_every_index(tmp_path, monkeypatch):
+    """Every maintained table's path keys the corpus LOCATION, absolute:
+    ``sf`` and ``/abs/sf`` name one table, so neither spelling builds a
+    second copy (the inverted index used to key the spelling as given)."""
+    from olap_sus_spark.maintenance import specs
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    absolute = os.path.abspath(SF_DIR)
+    monkeypatch.chdir(os.path.dirname(absolute))
+    relative = os.path.basename(absolute)
+    for spec in specs():
+        assert spec.path(relative) == spec.path(absolute), spec.name
+
+
 def test_cluster_map_views_never_share_an_index(spark, tmp_path, monkeypatch):
     """The corpus view keys the cluster map's path: a PLAIN map built
     first over the same corpus and index root must not be served as the

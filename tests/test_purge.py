@@ -103,14 +103,14 @@ def test_purge_propagates_to_inverted_and_clusters(spark, tmp_path, monkeypatch)
 
     corpus = _stage_corpus(spark, tmp_path)
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    iv.load_or_build_inverted_index(spark, corpus, "documents")
+    iv.load_or_build_inverted_index(spark, corpus)
     dd.load_or_build_cluster_index(spark, corpus, PLAIN)
 
     assert pg.purge_table_ids(
         spark, corpus, "documents", "doc_id", _PURGE
     ) == len(_PURGE)
 
-    postings, stats = iv.refresh_inverted_index(spark, corpus, "documents")
+    postings, stats = iv.refresh_inverted_index(spark, corpus)
     assert postings.filter(F.col("doc_id").isin(_PURGE)).count() == 0
     # per-src stat partials re-aggregated over the purged corpus
     assert stats.agg(F.sum("n_docs")).first()[0] == 500 - len(_PURGE)

@@ -63,6 +63,41 @@ def _table(df, limit: int = 15) -> str:
     return "".join(out)
 
 
+def slice_defaults(spark, wh: str) -> dict:
+    """The slice & dice parameters, picked like the Dash app pre-fills its
+    form: the busiest residence city and the full year span of deaths."""
+    from pyspark.sql import functions as F
+
+    from olap_sus_spark.schemas import read_table
+
+    fact = read_table(spark, wh, "fact_obitos")
+    mun = read_table(spark, wh, "dim_municipio")
+    city = (
+        fact.groupBy("chave_municipio_residencia")
+        .count()
+        .join(
+            mun.select(
+                F.col("chave_municipio").alias("chave_municipio_residencia"),
+                "nome_municipio",
+            ),
+            "chave_municipio_residencia",
+        )
+        .orderBy(F.col("count").desc())
+        .first()["nome_municipio"]
+    )
+    anos = (
+        fact.join(
+            read_table(spark, wh, "dim_data").select(
+                F.col("chave_data").alias("chave_data_obito"), "ano"
+            ),
+            "chave_data_obito",
+        )
+        .agg(F.min("ano"), F.max("ano"))
+        .first()
+    )
+    return {"city": city, "y0": int(anos[0]), "y1": int(anos[1])}
+
+
 def build_report(spark, wh: str) -> str:
     """Render the six dashboard queries to a self-contained HTML string."""
     from pyspark.sql import functions as F
@@ -97,37 +132,11 @@ def build_report(spark, wh: str) -> str:
         "estado", "quantidade_nascimentos",
     )
     # slice & dice parameters auto-picked from the warehouse (the dashboard
-    # reads them from input boxes): busiest residence city, full year span
-    from olap_sus_spark.schemas import read_table
-
-    fact = read_table(spark, wh, "fact_obitos")
-    mun = read_table(spark, wh, "dim_municipio")
-    city = (
-        fact.groupBy("chave_municipio_residencia")
-        .count()
-        .join(
-            mun.select(
-                F.col("chave_municipio").alias("chave_municipio_residencia"),
-                "nome_municipio",
-            ),
-            "chave_municipio_residencia",
-        )
-        .orderBy(F.col("count").desc())
-        .first()["nome_municipio"]
-    )
-    anos = (
-        fact.join(
-            read_table(spark, wh, "dim_data").select(
-                F.col("chave_data").alias("chave_data_obito"), "ano"
-            ),
-            "chave_data_obito",
-        )
-        .agg(F.min("ano"), F.max("ano"))
-        .first()
-    )
+    # reads them from input boxes)
+    d = slice_defaults(spark, wh)
     add(
-        f"3) Slice & dice — óbitos em {city}, {anos[0]}–{anos[1]}",
-        W.slice_dice_deaths(spark, wh, city, int(anos[0]), int(anos[1])),
+        f"3) Slice & dice — óbitos em {d['city']}, {d['y0']}–{d['y1']}",
+        W.slice_dice_deaths(spark, wh, d["city"], d["y0"], d["y1"]),
     )
     add(
         "4) Pivot — óbitos por estado por ano",

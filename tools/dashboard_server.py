@@ -33,7 +33,9 @@ from urllib.parse import parse_qs, urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.dashboard_report import _svg_bars, _table, build_report  # noqa: E402
+from tools.dashboard_report import (  # noqa: E402
+    _svg_bars, _table, build_report, slice_defaults,
+)
 
 _PAGE = (
     "<!doctype html><html><head><meta charset='utf-8'>"
@@ -138,45 +140,11 @@ class DashboardHandler(BaseHTTPRequestHandler):
             self._send(400, f"<h1>bad parameter</h1><p>{html.escape(str(exc))}</p>")
 
 
-def _defaults(spark, wh: str) -> dict:
-    """Pre-fill the form like the Dash app does: busiest city, year span."""
-    from pyspark.sql import functions as F
-
-    from olap_sus_spark.schemas import read_table
-
-    fact = read_table(spark, wh, "fact_obitos")
-    mun = read_table(spark, wh, "dim_municipio")
-    city = (
-        fact.groupBy("chave_municipio_residencia")
-        .count()
-        .join(
-            mun.select(
-                F.col("chave_municipio").alias("chave_municipio_residencia"),
-                "nome_municipio",
-            ),
-            "chave_municipio_residencia",
-        )
-        .orderBy(F.col("count").desc())
-        .first()["nome_municipio"]
-    )
-    anos = (
-        fact.join(
-            read_table(spark, wh, "dim_data").select(
-                F.col("chave_data").alias("chave_data_obito"), "ano"
-            ),
-            "chave_data_obito",
-        )
-        .agg(F.min("ano"), F.max("ano"))
-        .first()
-    )
-    return {"city": city, "y0": int(anos[0]), "y1": int(anos[1])}
-
-
 def serve(spark, wh: str, port: int = 0) -> ThreadingHTTPServer:
     """Build the server (not yet serving) — the caller decides between
     serve_forever() (CLI) and a daemon thread (tests)."""
     srv = ThreadingHTTPServer(("127.0.0.1", port), DashboardHandler)
-    srv.spark, srv.wh, srv.defaults = spark, wh, _defaults(spark, wh)
+    srv.spark, srv.wh, srv.defaults = spark, wh, slice_defaults(spark, wh)
     return srv
 
 
